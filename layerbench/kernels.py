@@ -46,7 +46,7 @@ def block_rows(index_dir: str) -> dict:
     return out
 
 
-def measure(texts: "list[str]", index_dir: str, html: "list[str] | None" = None) -> dict:
+def measure(texts: "list[str]", index_dir: str, html: "list[str]") -> dict:
     """{metric: (value, unit)} for each kernel."""
     from lucene_spark.functions.analysis import analyze_batch
     from lucene_spark.functions.bm25 import BM25Scorer
@@ -54,9 +54,8 @@ def measure(texts: "list[str]", index_dir: str, html: "list[str] | None" = None)
     from lucene_spark.functions.pfor import batch_decode_streams, batch_encode_streams
 
     m = {}
-    if html is not None:
-        mb = sum(len(h.encode()) for h in html) / 1e6
-        m["html.strip_mb_per_s"] = (_rate(lambda: html_strip_batch(html), mb), "MB/s")
+    mb = sum(len(h.encode()) for h in html) / 1e6
+    m["html.strip_mb_per_s"] = (_rate(lambda: html_strip_batch(html), mb), "MB/s")
     mb = sum(len(t.encode()) for t in texts) / 1e6
     m["analysis.analyze_mb_per_s"] = (_rate(lambda: analyze_batch(texts), mb), "MB/s")
 

@@ -6,10 +6,12 @@
 BENCHMARK.json lists ``ingest`` and ``search``; ``refresh`` runs by hand
 (see README.md).
 
-Run from the repository root. ``--trace 0`` prints the end-to-end metrics;
-``--trace 1`` records spans and Spark counters, prints the per-layer metrics
-and writes the spans to ``.bench_out/``. Indexes and Spark scratch files
-live under ``.bench_work/``, which is removed when the run ends.
+Run from the repository root. ``--trace 0`` prints the end-to-end metrics
+(``setup_s``, ``round_s``, ``index_bytes_per_text_byte``) of every workload;
+``--trace 1`` records spans and Spark counters, prints every per-layer metric
+of ``workloads.LAYER_METRICS`` and writes the spans to ``.bench_out/``.
+Indexes and Spark scratch files live under ``.bench_work/``, which is removed
+when the run ends.
 """
 
 from __future__ import annotations
@@ -113,9 +115,10 @@ def main() -> int:
         e2e, kernel_fn = workloads.WORKLOADS[args.workload](run)
         if args.trace:
             tracer.attach_jobs(spark)
-            metrics = workloads.layer_metrics(run)
-            metrics.update(kernel_fn())
-            metrics["spark.empty_job_ms"] = (workloads.empty_job_ms(spark), "ms")
+            values = workloads.layer_metrics(run)
+            values.update({k: v for k, (v, _) in kernel_fn().items()})
+            values["spark.empty_job_ms"] = workloads.empty_job_ms(spark)
+            metrics = {k: (values[k], u) for k, u in workloads.LAYER_METRICS}
             out_dir = os.path.join(os.getcwd(), ".bench_out")
             os.makedirs(out_dir, exist_ok=True)
             tracer.dump(os.path.join(out_dir, f"spans-{args.workload}-{args.seed}.jsonl"))
@@ -124,8 +127,10 @@ def main() -> int:
         else:
             metrics = e2e
     finally:
+        t_stop = time.perf_counter()
         stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
+        print(f"teardown_s {time.perf_counter() - t_stop:.2f}", file=sys.stderr)
     print(f"wall_s {time.perf_counter() - t_start:.2f}", file=sys.stderr)
     print(json.dumps({
         "correct": run.wrong == 0,
