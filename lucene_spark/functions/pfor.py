@@ -9,13 +9,19 @@ block (bpv==0 after patching) is stored as a single varint run-length.
 
 Byte layout here is our own (numpy bitpacking over a little-endian byte
 buffer), since rank/score parity depends on the decoded integers, not the
-bytes — tests require a lossless round-trip (TestPForUtil ported in
-``tests/test_pfor.py``). Exceptions' high bits must fit one byte, so like the
-reference we clamp bpv >= bits_required(max) - 8.
+bytes. Exceptions' high bits must fit one byte, so like the reference we
+clamp bpv >= bits_required(max) - 8. A block whose patched width reaches 31
+bits (e.g. >2^31 gid gaps or payload values; Lucene's docIDs are ints, our
+gids are int64) is an *escape* block: token bpv=31, then its 128 raw values
+as varints.
 
-Streams of blocks: `encode_stream`/`decode_stream` handle arbitrary-length
-int arrays as full 128-blocks plus a varint tail (Lucene writes tails as
-VInts too, Lucene90PostingsWriter.java:353-379).
+A stream is vlong(count), then full 128-blocks, then the sub-block tail as
+varints (Lucene writes tails as VInts too, Lucene90PostingsWriter.java:
+353-379). `batch_encode_streams`/`batch_decode_streams` code many streams
+per call with matrix kernels grouped by bit width. The decoder bounds every stream by its own buffer: a stream that
+ends early, runs past its buffer or leaves bytes over raises ValueError.
+A scalar decoder written from this description (``tests/pfor_spec.py``) is
+the round-trip oracle of ``tests/test_core_math.py``.
 """
 
 from __future__ import annotations
@@ -28,8 +34,6 @@ MAX_EXCEPTIONS = 7
 __all__ = [
     "BLOCK_SIZE",
     "MAX_EXCEPTIONS",
-    "encode_stream",
-    "decode_stream",
     "encode_vlongs_np",
     "decode_vlongs_np",
     "batch_encode_streams",
@@ -72,6 +76,8 @@ def decode_vlongs_np(buf: np.ndarray, count: int) -> tuple[np.ndarray, int]:
         return np.empty(0, dtype=np.uint64), 0
     buf = np.asarray(buf, dtype=np.uint8)
     is_last = (buf & 0x80) == 0
+    if is_last[:count].all():  # every value fits one byte
+        return buf[:count].astype(np.uint64), count
     # value index of each byte: 0-based running count of completed varints
     ends = np.cumsum(is_last)
     # bytes consumed: position of the count-th terminator + 1
@@ -85,164 +91,6 @@ def decode_vlongs_np(buf: np.ndarray, count: int) -> tuple[np.ndarray, int]:
     contrib = (buf & 0x7F).astype(np.uint64) << (np.uint64(7) * pos_in_value.astype(np.uint64))
     np.add.at(out, value_id, contrib)
     return out, last_pos
-
-
-def _write_vlong(out: bytearray, v: int) -> None:
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-
-
-def _read_vlong(buf: memoryview, pos: int) -> tuple[int, int]:
-    shift = 0
-    result = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if b < 0x80:
-            return result, pos
-        shift += 7
-
-
-def _bits_required(v: int) -> int:
-    return max(int(v).bit_length(), 0)
-
-
-def _pack_bits(values: np.ndarray, bpv: int) -> bytes:
-    """Bit-pack uint64 values at bpv bits each, little-endian bit order."""
-    n = len(values)
-    total_bits = n * bpv
-    nbytes = (total_bits + 7) // 8
-    # expand each value into its bits, then packbits
-    bits = np.zeros(nbytes * 8, dtype=np.uint8)
-    v = values.astype(np.uint64)
-    positions = np.arange(n, dtype=np.int64) * bpv
-    for bit in range(bpv):
-        bits[positions + bit] = (v >> np.uint64(bit)) & np.uint64(1)
-    return np.packbits(bits, bitorder="little").tobytes()
-
-
-def _unpack_bits(buf: memoryview, pos: int, n: int, bpv: int) -> tuple[np.ndarray, int]:
-    total_bits = n * bpv
-    nbytes = (total_bits + 7) // 8
-    raw = np.frombuffer(buf[pos : pos + nbytes], dtype=np.uint8)
-    bits = np.unpackbits(raw, bitorder="little")
-    out = np.zeros(n, dtype=np.uint64)
-    positions = np.arange(n, dtype=np.int64) * bpv
-    for bit in range(bpv):
-        out |= bits[positions + bit].astype(np.uint64) << np.uint64(bit)
-    return out, pos + nbytes
-
-
-def _encode_block(longs: np.ndarray, out: bytearray) -> None:
-    """Encode exactly BLOCK_SIZE non-negative ints (PFOR with <=7 patches)."""
-    vals = longs.astype(np.uint64).copy()
-    # top (MAX_EXCEPTIONS+1) values; topValue = smallest of those
-    order = np.argsort(vals, kind="stable")
-    top_idx = order[-(MAX_EXCEPTIONS + 1) :]
-    top_vals = vals[top_idx]
-    top_value = int(top_vals.min())
-    max_val = int(top_vals.max())
-
-    max_bits_required = _bits_required(max_val)
-    patched_bpv = max(_bits_required(top_value), max_bits_required - 8)
-    max_unpatched = (1 << patched_bpv) - 1
-
-    exc_pos = np.nonzero(vals > max_unpatched)[0]
-    assert len(exc_pos) <= MAX_EXCEPTIONS
-    exc_high = (vals[exc_pos] >> np.uint64(patched_bpv)).astype(np.uint64)
-    assert (exc_high <= 0xFF).all()
-    vals[exc_pos] &= np.uint64(max_unpatched)
-
-    num_exceptions = len(exc_pos)
-    if patched_bpv >= 31:
-        # escape: values too wide for the 5-bit bpv token (e.g. >2^31 gid
-        # gaps) — store the raw 128 values as vlongs. Token bpv=31 is
-        # reserved for this (a real 31-bpv packed block would be bigger
-        # than vlongs anyway). Lucene never hits this (int docIDs); our
-        # global gids are int64.
-        out.append(31)
-        for v in longs.astype(np.uint64):
-            _write_vlong(out, int(v))
-        return
-
-    all_equal = bool((vals == vals[0]).all())
-    if all_equal and max_bits_required <= 8:
-        # run-length special case: token bpv=0, value as vlong,
-        # exception high-bits pre-shifted (PForUtil.java:104-110)
-        out.append((num_exceptions << 5) & 0xFF)
-        _write_vlong(out, int(vals[0]))
-        shifted_high = (exc_high << np.uint64(patched_bpv)) & np.uint64(0xFF)
-        for p, h in zip(exc_pos, shifted_high):
-            out.append(int(p))
-            out.append(int(h))
-    else:
-        out.append(((num_exceptions << 5) | patched_bpv) & 0xFF)
-        out.extend(_pack_bits(vals, patched_bpv))
-        for p, h in zip(exc_pos, exc_high):
-            out.append(int(p))
-            out.append(int(h))
-
-
-def _decode_block(buf: memoryview, pos: int) -> tuple[np.ndarray, int]:
-    token = buf[pos]
-    pos += 1
-    bpv = token & 0x1F
-    num_exceptions = token >> 5
-    if bpv == 31:
-        out = np.empty(BLOCK_SIZE, dtype=np.uint64)
-        for i in range(BLOCK_SIZE):
-            v, pos = _read_vlong(buf, pos)
-            out[i] = v
-        return out, pos
-    if bpv == 0:
-        v, pos = _read_vlong(buf, pos)
-        out = np.full(BLOCK_SIZE, v, dtype=np.uint64)
-    else:
-        out, pos = _unpack_bits(buf, pos, BLOCK_SIZE, bpv)
-    for _ in range(num_exceptions):
-        p = buf[pos]
-        h = buf[pos + 1]
-        pos += 2
-        out[p] |= np.uint64(h) << np.uint64(bpv)
-    return out, pos
-
-
-def encode_stream(values: np.ndarray) -> bytes:
-    """Encode an arbitrary-length array of non-negative ints.
-
-    Layout: vlong count, then full 128-blocks (PFOR), then tail values as
-    vlongs. Lossless: decode_stream(encode_stream(x)) == x.
-    """
-    values = np.asarray(values, dtype=np.uint64)
-    out = bytearray()
-    n = len(values)
-    _write_vlong(out, n)
-    nblocks = n // BLOCK_SIZE
-    for i in range(nblocks):
-        _encode_block(values[i * BLOCK_SIZE : (i + 1) * BLOCK_SIZE], out)
-    tail = values[nblocks * BLOCK_SIZE :]
-    if len(tail):
-        tail_bytes, _ = encode_vlongs_np(tail)
-        out.extend(tail_bytes.tobytes())
-    return bytes(out)
-
-
-def decode_stream(data: bytes) -> np.ndarray:
-    buf = memoryview(data)
-    n, pos = _read_vlong(buf, 0)
-    out = np.empty(n, dtype=np.uint64)
-    nblocks = n // BLOCK_SIZE
-    for i in range(nblocks):
-        block, pos = _decode_block(buf, pos)
-        out[i * BLOCK_SIZE : (i + 1) * BLOCK_SIZE] = block
-    n_tail = n - nblocks * BLOCK_SIZE
-    if n_tail:
-        tail, _ = decode_vlongs_np(np.frombuffer(buf[pos:], dtype=np.uint8), n_tail)
-        out[nblocks * BLOCK_SIZE :] = tail
-    return out
 
 
 def _bits_required_np(v: np.ndarray) -> np.ndarray:
@@ -260,8 +108,7 @@ def _bits_required_np(v: np.ndarray) -> np.ndarray:
 def _pack_bits_matrix(vals: np.ndarray, bpv: int) -> np.ndarray:
     """Bit-pack a (k, BLOCK_SIZE) uint64 matrix at fixed bpv per value.
 
-    Returns a (k, ceil(128*bpv/8)) uint8 matrix, little-endian bit order —
-    the matrix twin of _pack_bits.
+    Returns a (k, ceil(128*bpv/8)) uint8 matrix, little-endian bit order.
     """
     k = vals.shape[0]
     total_bits = BLOCK_SIZE * bpv
@@ -276,8 +123,8 @@ def _pack_bits_matrix(vals: np.ndarray, bpv: int) -> np.ndarray:
 def encode_blocks_matrix(m: np.ndarray) -> list[bytes]:
     """Encode many full BLOCK_SIZE blocks at once (matrix-vectorized PFOR).
 
-    Byte-identical to per-block `_encode_block`; blocks are grouped by their
-    bit width so the packing loop runs once per distinct bpv, not per block.
+    Blocks are grouped by their bit width so the packing loop runs once per
+    distinct bpv, not per block.
     """
     m = np.ascontiguousarray(m, dtype=np.uint64)
     n = m.shape[0]
@@ -291,11 +138,16 @@ def encode_blocks_matrix(m: np.ndarray) -> list[bytes]:
     patched_bpv = np.maximum(_bits_required_np(top_value), max_bits - 8)
     out: list[bytes] = [b""] * n
 
+    # escape rows: token bpv=31, then the raw values as vlongs (a real
+    # 31-bpv packed block would be bigger than vlongs anyway)
     escape = patched_bpv >= 31
-    for i in np.nonzero(escape)[0]:
-        buf = bytearray()
-        _encode_block(m[i], buf)
-        out[i] = bytes(buf)
+    esc_idx = np.nonzero(escape)[0]
+    if len(esc_idx):
+        venc, vnb = encode_vlongs_np(m[esc_idx].ravel())
+        vends = np.cumsum(vnb.reshape(-1, BLOCK_SIZE).sum(axis=1))
+        vb = venc.tobytes()
+        for j, i in enumerate(esc_idx):
+            out[i] = b"\x1f" + vb[vends[j - 1] if j else 0 : vends[j]]
     live = ~escape
     if not live.any():
         return out
@@ -441,7 +293,7 @@ def _vlongs_at(data: np.ndarray, positions: np.ndarray) -> tuple[np.ndarray, np.
 
 def _unpack_bits_matrix(mat: np.ndarray, bpv: int) -> np.ndarray:
     """Unpack a (k, ceil(128*bpv/8)) uint8 matrix into (k, BLOCK_SIZE)
-    uint64 values — the matrix twin of _unpack_bits."""
+    uint64 values."""
     bits = np.unpackbits(mat, axis=1, bitorder="little")
     out = np.zeros((mat.shape[0], BLOCK_SIZE), dtype=np.uint64)
     positions = np.arange(BLOCK_SIZE, dtype=np.int64) * bpv
@@ -450,40 +302,51 @@ def _unpack_bits_matrix(mat: np.ndarray, bpv: int) -> np.ndarray:
     return out
 
 
+def _bad(msg: str) -> ValueError:
+    return ValueError(f"corrupt PFOR stream: {msg}")
+
+
 def batch_decode_streams(bufs: "list[bytes]") -> tuple[np.ndarray, np.ndarray]:
     """Decode many encoded streams in one vectorized pass.
 
     Returns (values uint64 — all streams' values concatenated in input
-    order, counts int64 — per-stream value counts). Equivalent to
-    ``np.concatenate([decode_stream(b) for b in bufs])`` but with NO
-    per-block Python in the common path: streams advance block-by-block in
-    lock-step rounds, each round decoding every active stream's next block
-    with matrix kernels grouped by bit width; all tails varint-decode in a
-    single flat pass. (Round-2 finding: per-block ``itertuples`` decode was
-    the residual interpreter cost in the 8v32 profile.)
+    order, counts int64 — per-stream value counts). There is no per-block
+    Python: streams advance block-by-block in lock-step rounds, each round
+    decoding every active stream's next block with matrix kernels grouped
+    by bit width; all tails varint-decode in a single flat pass.
+
+    Every stream must end exactly at the end of its own buffer: a header,
+    block or tail that runs past it, or bytes left over after the tail's
+    last varint, raise ValueError (the joined buffer would otherwise let a
+    truncated stream read its neighbour's bytes).
     """
     n_streams = len(bufs)
     if n_streams == 0:
         return np.empty(0, np.uint64), np.empty(0, np.int64)
     lens = np.fromiter((len(b) for b in bufs), np.int64, n_streams)
     data = np.frombuffer(b"".join(bufs) + b"\x00" * 10, dtype=np.uint8)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    ends = np.cumsum(lens)
+    starts = ends - lens
 
     counts_u, consumed = _vlongs_at(data, starts)
     counts = counts_u.astype(np.int64)
+    # a block takes >= 2 bytes and a tail value >= 1: bounds the allocation
+    if ((consumed == 0) | (consumed > lens) | (counts < 0) | (counts > 64 * lens)).any():
+        raise _bad("header disagrees with its buffer")
     pos = starts + consumed
-    n_blocks = counts // BLOCK_SIZE
-    tail_lens = counts - n_blocks * BLOCK_SIZE
+    remaining = counts // BLOCK_SIZE  # blocks left per stream
+    tail_lens = counts - remaining * BLOCK_SIZE
 
     out = np.empty(int(counts.sum()), dtype=np.uint64)
-    out_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    wp = out_starts.copy()  # per-stream write cursor
-    remaining = n_blocks.copy()
+    wp = np.cumsum(counts) - counts  # per-stream write cursor
+    lane = np.arange(BLOCK_SIZE)
 
     while True:
         idx = np.nonzero(remaining > 0)[0]
         if not len(idx):
             break
+        if (pos[idx] >= ends[idx]).any():
+            raise _bad("block runs past its buffer")
         tokens = data[pos[idx]]
         bpv_all = tokens & 0x1F
         nexc_all = (tokens >> 5).astype(np.int64)
@@ -491,33 +354,45 @@ def batch_decode_streams(bufs: "list[bytes]") -> tuple[np.ndarray, np.ndarray]:
             b = int(b)
             sel = idx[bpv_all == b]
             nexc = nexc_all[bpv_all == b]
+            dst = wp[sel][:, None] + lane[None, :]
             if b == 31:
-                # escape blocks (raw 128 vlongs) — rare; per-stream fallback
-                for s in sel:
-                    block, newpos = _decode_block(memoryview(data), int(pos[s]))
-                    out[wp[s] : wp[s] + BLOCK_SIZE] = block
-                    pos[s] = newpos
+                # escape: 128 raw vlongs; find each block's 128th varint
+                # terminator inside a window clipped to its stream's end
+                win = pos[sel][:, None] + 1 + np.arange(10 * BLOCK_SIZE)[None, :]
+                term = (data[np.minimum(win, len(data) - 1)] < 0x80) & (
+                    win < ends[sel][:, None])
+                seen = np.cumsum(term, axis=1)
+                if (seen[:, -1] < BLOCK_SIZE).any():
+                    raise _bad("escape block runs past its buffer")
+                vlen = np.argmax(seen >= BLOCK_SIZE, axis=1) + 1
+                src = np.repeat(pos[sel] + 1, vlen) + _ranges(vlen)
+                vals, _ = decode_vlongs_np(data[src], BLOCK_SIZE * len(sel))
+                out[dst] = vals.reshape(-1, BLOCK_SIZE)
+                pos[sel] += 1 + vlen
                 continue
             if b == 0:
                 vals1, vnb = _vlongs_at(data, pos[sel] + 1)
-                dst = wp[sel][:, None] + np.arange(BLOCK_SIZE)[None, :]
-                out[dst] = vals1[:, None]
                 exc_base = pos[sel] + 1 + vnb
-                shift = 0  # RLE stores exception high bits pre-shifted
                 blk_len = 1 + vnb + 2 * nexc
+                if ((vnb == 0) | (pos[sel] + blk_len > ends[sel])).any():
+                    raise _bad("block runs past its buffer")
+                out[dst] = vals1[:, None]
+                shift = 0  # RLE stores exception high bits pre-shifted
             else:
                 nbytes = (BLOCK_SIZE * b + 7) // 8
+                blk_len = 1 + nbytes + 2 * nexc
+                if (pos[sel] + blk_len > ends[sel]).any():
+                    raise _bad("block runs past its buffer")
                 src = pos[sel][:, None] + 1 + np.arange(nbytes)[None, :]
-                vals = _unpack_bits_matrix(data[src], b)
-                dst = wp[sel][:, None] + np.arange(BLOCK_SIZE)[None, :]
-                out[dst] = vals
+                out[dst] = _unpack_bits_matrix(data[src], b)
                 exc_base = pos[sel] + 1 + nbytes
                 shift = b
-                blk_len = 1 + nbytes + 2 * nexc
             if nexc.any():
                 rows = np.repeat(np.arange(len(sel)), nexc)
                 j = _ranges(nexc)
                 p = data[exc_base[rows] + 2 * j].astype(np.int64)
+                if (p >= BLOCK_SIZE).any():
+                    raise _bad("exception position outside its block")
                 h = data[exc_base[rows] + 2 * j + 1].astype(np.uint64)
                 # (row, p) pairs are unique within a block: no index collisions
                 out[wp[sel][rows] + p] |= h << np.uint64(shift)
@@ -525,16 +400,29 @@ def batch_decode_streams(bufs: "list[bytes]") -> tuple[np.ndarray, np.ndarray]:
         wp[idx] += BLOCK_SIZE
         remaining[idx] -= 1
 
-    # tails: whole varints at [pos_i, start_i+len_i); concatenated they form
-    # one contiguous varint sequence → a single flat decode
+    # tails: exactly tail_len whole varints (1-10 bytes each) fill
+    # [pos_i, end_i); concatenated they form one contiguous varint sequence
+    # → a single flat decode
+    t_len = ends - pos
+    if ((t_len < tail_lens) | (t_len > 10 * tail_lens)).any():
+        raise _bad("tail does not fill the rest of its buffer")
     total_tail = int(tail_lens.sum())
     if total_tail:
         has_tail = tail_lens > 0
-        t_pos, t_len = pos[has_tail], (starts + lens - pos)[has_tail]
-        src = np.repeat(t_pos, t_len) + _ranges(t_len)
-        tvals, _ = decode_vlongs_np(data[src], total_tail)
-        dst = np.repeat(wp[has_tail], tail_lens[has_tail]) + _ranges(tail_lens[has_tail])
-        out[dst] = tvals
+        t_len, t_cnt = t_len[has_tail], tail_lens[has_tail]
+        tb = data[np.repeat(pos[has_tail], t_len) + _ranges(t_len)]
+        term = tb < 0x80
+        if term.all():  # one-byte varints: a tail's bytes are its values
+            ok = (t_len == t_cnt).all()
+        else:
+            last = np.cumsum(t_len) - 1
+            ok = term[last].all() and (np.cumsum(term)[last] == np.cumsum(t_cnt)).all()
+        if not ok:
+            raise _bad("tail varint count disagrees with its header")
+        tvals, _ = decode_vlongs_np(tb, total_tail)
+        if total_tail == len(out):  # no full blocks
+            return tvals, counts
+        out[np.repeat(wp[has_tail], t_cnt) + _ranges(t_cnt)] = tvals
     return out, counts
 
 

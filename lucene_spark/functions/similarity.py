@@ -274,6 +274,22 @@ def _norm_tfn(normalization: str, c: float, mu: float, z: float,
         return tf * np.power(avgfl / ln, np.float64(np.float32(z)))
 
 
+def _check_normalization(normalization: str, c: float, mu: float,
+                         z: float) -> None:
+    """The reference constructors' parameter checks: NormalizationH1 takes
+    c >= 0, H2 c > 0, H3 mu >= 0 (all finite), Z 0 < z < 0.5."""
+    if normalization not in ("H1", "H2", "H3", "Z"):
+        raise ValueError(f"unknown normalization {normalization!r}")
+    if normalization == "H1" and not (c >= 0 and math.isfinite(c)):
+        raise ValueError(f"c must be >= 0, got {c}")
+    if normalization == "H2" and not (c > 0 and math.isfinite(c)):
+        raise ValueError(f"c must be > 0, got {c}")
+    if normalization == "H3" and not (mu >= 0 and math.isfinite(mu)):
+        raise ValueError(f"illegal mu value: {mu}, must be >= 0")
+    if normalization == "Z" and not (0.0 < z < 0.5):
+        raise ValueError(f"illegal z value: {z}, must be in the range (0, 0.5)")
+
+
 @dataclass(frozen=True)
 class DFRSim:
     """DFRSimilarity — the full divergence-from-randomness matrix
@@ -325,18 +341,7 @@ class DFRSim:
             raise ValueError(f"unknown basic model {self.basic_model!r}")
         if self.after_effect not in ("L", "B"):
             raise ValueError(f"unknown after effect {self.after_effect!r}")
-        if self.normalization not in ("H1", "H2", "H3", "Z"):
-            raise ValueError(f"unknown normalization {self.normalization!r}")
-        if self.normalization in ("H1", "H2") and not (
-            self.c > 0 and math.isfinite(self.c)
-        ):
-            raise ValueError(f"c must be > 0, got {self.c}")
-        if self.normalization == "H3" and not self.mu > 0:
-            raise ValueError(f"illegal mu value: {self.mu}, must be > 0")
-        if self.normalization == "Z" and not (0.0 < self.z < 0.5):
-            raise ValueError(
-                f"illegal z value: {self.z}, must be in the range (0, 0.5)"
-            )
+        _check_normalization(self.normalization, self.c, self.mu, self.z)
 
     def idf(self, doc_freq: int, doc_count: int) -> np.float32:
         return np.float32(1.0)
@@ -664,18 +669,7 @@ class IBSim:
             raise ValueError(f"unknown distribution {self.distribution!r}")
         if self.lambda_of not in ("DF", "TTF"):
             raise ValueError(f"unknown lambda {self.lambda_of!r}")
-        if self.normalization not in ("H1", "H2", "H3", "Z"):
-            raise ValueError(f"unknown normalization {self.normalization!r}")
-        if self.normalization in ("H1", "H2") and not (
-            self.c > 0 and math.isfinite(self.c)
-        ):
-            raise ValueError(f"c must be > 0, got {self.c}")
-        if self.normalization == "H3" and not self.mu > 0:
-            raise ValueError(f"illegal mu value: {self.mu}, must be > 0")
-        if self.normalization == "Z" and not (0.0 < self.z < 0.5):
-            raise ValueError(
-                f"illegal z value: {self.z}, must be in the range (0, 0.5)"
-            )
+        _check_normalization(self.normalization, self.c, self.mu, self.z)
 
     def idf(self, doc_freq: int, doc_count: int) -> np.float32:
         return np.float32(1.0)

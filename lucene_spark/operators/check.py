@@ -30,9 +30,11 @@ import pandas as pd
 
 from pyspark.sql import SparkSession, functions as F, types as T
 
-from ..functions.pfor import decode_stream
+from ..functions.blocks import gids_from_gaps
+from ..functions.pfor import batch_decode_streams
 from ..functions.smallfloat import int_to_byte4_np
 from .indexer import read_manifest
+from .merge import SALT_DOCS, live_units, read_delete_paths
 
 _BLOCK_REPORT = T.StructType(
     [
@@ -48,81 +50,130 @@ _BLOCK_REPORT = T.StructType(
 )
 
 
-def _check_term_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("first_gid", kind="mergesort")
-    bad_doc_count = bad_order = bad_freq = bad_impact = bad_streams = 0
-    doc_count_sum = freq_sum = 0
-    has_pos = "positions" in pdf.columns
-    has_off = "off_starts" in pdf.columns
-    has_pay = "payloads" in pdf.columns
-    all_gids = []
-    for r in pdf.itertuples(index=False):
-        gaps = decode_stream(r.gids).astype(np.int64)
-        g = np.empty(len(gaps) + 1, dtype=np.int64)
-        g[0] = r.first_gid
-        if len(gaps):
-            g[1:] = r.first_gid + np.cumsum(gaps)
-        f = decode_stream(r.freqs).astype(np.int64)
-        n = decode_stream(r.norms).astype(np.int64)
-        doc_count_sum += len(g)
-        freq_sum += int(f.sum())
-        if len(g) != int(r.doc_count) or len(f) != len(g) or len(n) != len(g):
-            bad_doc_count += 1
-        # within-block order must be strict; ACROSS blocks ranges may
-        # interleave (tiered partial merges re-cut across gid holes other
-        # live units occupy — the reader restores global order), but no doc
-        # may appear twice for one term, checked over the full set below
-        if (np.diff(g) <= 0).any():
-            bad_order += 1
-        all_gids.append(g)
-        if (f < 1).any():
-            bad_freq += 1
-        # impact frontier must dominate every (freq, norm) in the block:
-        # for each posting there is a frontier entry with freq' >= freq and
-        # norm' <= norm (CompetitiveImpactAccumulator contract)
-        imp_f = np.asarray(r.imp_freqs, dtype=np.int64)
-        imp_n = np.asarray(r.imp_norms, dtype=np.int64)
-        for freq, norm in zip(f, n):
-            if not ((imp_f >= freq) & (imp_n <= norm)).any():
-                bad_impact += 1
-                break
-        # stream alignment: positions/offsets/payloads must decode to
-        # exactly sum(freq) entries per block
-        want = int(f.sum())
-
-        def _stream_len(buf) -> int:
+def _decode_checked(bufs: list) -> "tuple[np.ndarray, np.ndarray]":
+    """``batch_decode_streams`` where a corrupt stream gets count -1 and no
+    values instead of failing its whole column: when the batch raises, the
+    column's rows are re-decoded one at a time."""
+    try:
+        return batch_decode_streams(bufs)
+    except ValueError:
+        vals, cnts = [np.empty(0, np.uint64)], [np.empty(0, np.int64)]
+        for b in bufs:
             try:
-                return len(decode_stream(buf))
-            except Exception:
-                return -1
+                v, c = batch_decode_streams([b])
+            except ValueError:
+                v, c = np.empty(0, np.uint64), np.array([-1])
+            vals.append(v)
+            cnts.append(c)
+        return np.concatenate(vals), np.concatenate(cnts)
 
-        if has_pos and r.positions is not None:
-            if _stream_len(r.positions) != want:
-                bad_streams += 1
-        if has_off and r.off_starts is not None:
-            if (_stream_len(r.off_starts) != want
-                    or _stream_len(r.off_lens) != want):
-                bad_streams += 1
-        if has_pay and r.payloads is not None:
-            if _stream_len(r.payloads) != want:
-                bad_streams += 1
-    if all_gids:
-        merged = np.concatenate(all_gids)
-        if len(np.unique(merged)) != len(merged):
-            bad_order += 1  # a doc appears twice for this term
+
+def _run_sums(vals: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Exact int64 sums of consecutive runs of ``vals``."""
+    cs = np.concatenate(([0], np.cumsum(vals, dtype=np.int64)))
+    ends = np.cumsum(lengths)
+    return cs[ends] - cs[ends - lengths]
+
+
+def _check_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Audit every block row of one bucket of terms; one report row per term.
+
+    Counts are per block (bad_order adds one per term holding a doc twice);
+    a gids/freqs/norms stream that does not decode counts as a bad stream
+    and contributes no postings.
+    """
+    pdf = pdf.sort_values(["term", "first_gid"], kind="mergesort")
+    n_rows = len(pdf)
+    terms = pdf["term"].to_numpy(object)
+    new_term = np.ones(n_rows, dtype=bool)
+    new_term[1:] = terms[1:] != terms[:-1]
+    t_row = np.cumsum(new_term) - 1
+    rows_per_term = np.bincount(t_row)
+    rows = np.arange(n_rows)
+
+    def per_term(row_vals: np.ndarray) -> np.ndarray:
+        return _run_sums(row_vals.astype(np.int64), rows_per_term)
+
+    gaps, gap_cnt = _decode_checked(list(pdf["gids"]))
+    f, f_cnt = _decode_checked(list(pdf["freqs"]))
+    n, n_cnt = _decode_checked(list(pdf["norms"]))
+    f, n = f.astype(np.int64), n.astype(np.int64)
+    g_ok = gap_cnt >= 0
+    doc_cnt = np.where(g_ok, gap_cnt + 1, 0)
+    gid = gids_from_gaps(pdf["first_gid"].to_numpy(np.int64)[g_ok], gaps, gap_cnt[g_ok])
+    gid_row = np.repeat(rows, doc_cnt)
+    f_row = np.repeat(rows, np.maximum(f_cnt, 0))
+    row_fsum = _run_sums(f, np.maximum(f_cnt, 0))
+
+    bad_doc_count = ((doc_cnt != pdf["doc_count"].to_numpy(np.int64))
+                     | (f_cnt != doc_cnt) | (n_cnt != doc_cnt))
+    bad_streams = (~g_ok | (f_cnt < 0) | (n_cnt < 0)).astype(np.int64)
+    # within-block order must be strict; ACROSS blocks ranges may
+    # interleave (tiered partial merges re-cut across gid holes other live
+    # units occupy — the reader restores global order), but no doc may
+    # appear twice for one term
+    bad_order = np.zeros(n_rows, dtype=bool)
+    step_down = (gid_row[1:] == gid_row[:-1]) & (np.diff(gid) <= 0)
+    bad_order[gid_row[1:][step_down]] = True
+    g_term = t_row[gid_row]
+    o = np.lexsort((gid, g_term))
+    twice = (g_term[o][1:] == g_term[o][:-1]) & (gid[o][1:] == gid[o][:-1])
+    dup_term = np.zeros(len(rows_per_term), dtype=np.int64)
+    dup_term[g_term[o][1:][twice]] = 1
+    bad_freq = np.zeros(n_rows, dtype=bool)
+    bad_freq[f_row[f < 1]] = True
+
+    # impact frontier must dominate every (freq, norm) in the block: some
+    # entry has freq' >= freq and norm' <= norm (CompetitiveImpactAccumulator
+    # contract). Sort entries and postings by (block, freq), postings first
+    # on ties; a posting is covered iff the least norm among the entries
+    # after it in its block is <= its norm (norms compared by rank).
+    paired = (f_cnt == n_cnt) & (f_cnt >= 0)
+    pf = f[np.repeat(paired, np.maximum(f_cnt, 0))]
+    pn = n[np.repeat(paired, np.maximum(n_cnt, 0))]
+    p_row = np.repeat(rows[paired], f_cnt[paired])
+    imp_f = [np.asarray(x, dtype=np.int64) for x in pdf["imp_freqs"]]
+    imp_n = [np.asarray(x, dtype=np.int64) for x in pdf["imp_norms"]]
+    e_len = np.array([len(x) for x in imp_f], dtype=np.int64)
+    bad_impact = e_len != np.array([len(x) for x in imp_n], dtype=np.int64)
+    e_len[bad_impact] = 0
+    ef = np.concatenate([x for x, bad in zip(imp_f, bad_impact) if not bad] + [pf[:0]])
+    en = np.concatenate([x for x, bad in zip(imp_n, bad_impact) if not bad] + [pn[:0]])
+    blk = np.concatenate((np.repeat(rows, e_len), p_row))
+    is_post = np.repeat([False, True], [len(ef), len(pf)])
+    uniq, rank = np.unique(np.concatenate((en, pn)), return_inverse=True)
+    span = len(uniq) + 1
+    o = np.lexsort((~is_post, np.concatenate((ef, pf)), blk))[::-1]
+    key = blk[o] * span + np.where(is_post[o], span - 1, rank[o])
+    least_after = np.minimum.accumulate(key) - blk[o] * span
+    uncovered = is_post[o] & (least_after > rank[o])
+    bad_impact[blk[o][uncovered]] = True
+
+    # position-aligned streams must decode to exactly sum(freq) entries
+    for names in (("positions",), ("off_starts", "off_lens"), ("payloads",)):
+        if names[0] not in pdf.columns:
+            continue
+        on = pdf[names[0]].notna().to_numpy()
+        bad = np.zeros(n_rows, dtype=bool)
+        for name in names:
+            col = pdf[name].to_numpy(object)
+            have = on & pd.notna(col)
+            cnt = np.full(n_rows, -1, dtype=np.int64)
+            cnt[have] = _decode_checked(list(col[have]))[1]
+            bad |= on & (cnt != row_fsum)
+        bad_streams += bad
+
     return pd.DataFrame(
-        [
-            {
-                "term": pdf["term"].iloc[0],
-                "doc_count_sum": doc_count_sum,
-                "freq_sum": freq_sum,
-                "bad_doc_count": bad_doc_count,
-                "bad_order": bad_order,
-                "bad_freq": bad_freq,
-                "bad_impact": bad_impact,
-                "bad_streams": bad_streams,
-            }
-        ]
+        {
+            "term": terms[new_term],
+            "doc_count_sum": per_term(doc_cnt),
+            "freq_sum": per_term(row_fsum),
+            "bad_doc_count": per_term(bad_doc_count),
+            "bad_order": per_term(bad_order) + dup_term,
+            "bad_freq": per_term(bad_freq),
+            "bad_impact": per_term(bad_impact),
+            "bad_streams": per_term(bad_streams),
+        }
     )
 
 
@@ -164,11 +215,20 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         audit_cols += ["off_starts", "off_lens"]
     if s.stats.get("with_payloads"):
         audit_cols.append("payloads")
+    # many terms per Python call: a bucket holds about SALT_DOCS postings,
+    # and there are at least as many buckets as cores
+    n_buckets = max(spark.sparkContext.defaultParallelism,
+                    -(-sum(u["n_postings"] for u in live_units(index_dir)) // SALT_DOCS))
+
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return _check_bucket(pdf)
+
     per_term = (
         s._postings_df()
         .select(*audit_cols)
-        .groupBy("term")
-        .applyInPandas(lambda pdf: _check_term_blocks(pdf), schema=_BLOCK_REPORT)
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+        .groupBy("bucket")
+        .applyInPandas(fn, schema=_BLOCK_REPORT)
     )
     terms = spark.read.parquet(os.path.join(index_dir, "terms"))
     joined = per_term.join(terms, "term", "full_outer")
@@ -212,8 +272,6 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
                 pending = []
     all_paths = purged_gid_paths + legacy_delete_paths
     if all_paths:
-        from .merge import read_delete_paths
-
         gids = read_delete_paths(index_dir, all_paths)
         ddf = spark.createDataFrame(pd.DataFrame({"gid": gids.astype("int64")}))
         docs = docs.join(F.broadcast(ddf), "gid", "left_anti")

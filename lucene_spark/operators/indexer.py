@@ -41,8 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions.analysis import analyze_batch
 from ..functions.bm25 import BM25Scorer  # noqa: F401 (re-export convenience)
-from ..functions.impacts import competitive_impacts_grouped
-from ..functions.pfor import BLOCK_SIZE, batch_encode_streams
+from ..functions.blocks import Postings, write_blocks
 from ..functions.smallfloat import int_to_byte4_np
 from ..plans.fields import DEFAULT_FIELD, FIELD_SEP
 
@@ -421,37 +420,10 @@ def invert_segment(
         n_pairs_total = n_pairs
         n_terms_total = len(term_start)
 
-        # ---- block assignment: 128 docs per (term) block
-        idx_in_term = np.arange(n_pairs) - term_start[term_id_of_pair]
-        block_ord_p = (idx_in_term // BLOCK_SIZE).astype(np.int64)
-        new_block = new_term | (block_ord_p != np.concatenate(([0], block_ord_p[:-1])))
-        new_block[0] = True
-        block_start = np.nonzero(new_block)[0]
-        n_blocks = len(block_start)
-        block_id_of_pair = np.cumsum(new_block) - 1
-        docs_per_block = np.bincount(block_id_of_pair, minlength=n_blocks).astype(np.int64)
-        block_term = tc_p[block_start]
-        block_ord = block_ord_p[block_start]
-        first_gid_b = gid_p[block_start]
-        block_end = np.concatenate((block_start[1:], [n_pairs])) - 1
-        last_gid_b = gid_p[block_end]
-
-        # ---- payloads (batch-encoded streams)
-        # doc gaps: within-block diffs (first doc stored in first_gid column)
-        gaps_all = np.empty(n_pairs, dtype=np.int64)
-        gaps_all[0] = 0
-        gaps_all[1:] = gid_p[1:] - gid_p[:-1]
-        keep = ~new_block
-        gids_payload = batch_encode_streams(gaps_all[keep].astype(np.uint64), docs_per_block - 1)
-        freqs_payload = batch_encode_streams(freq_p.astype(np.uint64), docs_per_block)
-        norms_payload = batch_encode_streams(norm_p.astype(np.uint64), docs_per_block)
+        # ---- blocks: the shared writer cuts 128 docs per term and encodes
+        streams = {}
         if with_positions:
-            # positions are token-aligned: block of a token = block of its pair
-            pos_rl = np.bincount(block_id_of_pair[pair_id], minlength=n_blocks).astype(np.int64)
-            positions_payload = batch_encode_streams(pos_delta.astype(np.uint64), pos_rl)
-        else:
-            positions_payload = [None] * n_blocks
-        off_starts_payload = off_lens_payload = None
+            streams["positions"] = pos_delta
         if with_offsets:
             # start offsets ascend with positions within a (term, doc) pair,
             # so the same delta-with-per-pair-absolute-reset encoding applies
@@ -461,45 +433,28 @@ def invert_segment(
             st_delta = st_s.copy()
             st_delta[1:] -= st_s[:-1]
             st_delta[pair_start] = st_s[pair_start]
-            off_starts_payload = batch_encode_streams(
-                st_delta.astype(np.uint64), pos_rl
-            )
-            off_lens_payload = batch_encode_streams(
-                (en_s - st_s).astype(np.uint64), pos_rl
-            )
-        payloads_payload = None
+            streams["off_starts"] = st_delta
+            streams["off_lens"] = en_s - st_s
         if with_payloads:
             # raw per-occurrence values, position-aligned — no delta (values
             # are arbitrary, not monotone; PFOR handles small ints directly)
-            payloads_payload = batch_encode_streams(
-                batch.tok_payloads[order].astype(np.uint64), pos_rl
-            )
-
-        # ---- impacts per block (vectorized across all blocks)
-        imp_freqs, imp_norms = competitive_impacts_grouped(
-            block_id_of_pair, freq_p, norm_p, n_blocks
+            streams["payloads"] = batch.tok_payloads[order]
+        block_start, blk = write_blocks(
+            tc_p, Postings(gid_p, freq_p, norm_p, streams)
         )
-
         post_cols = {
             "row_type": "post",
             "seg": np.int64(seg_id),
-            "term": pd.Series(uniq_terms[block_term], dtype="string"),
-            "block_ord": block_ord.astype(np.int32),
-            "doc_count": docs_per_block.astype(np.int32),
-            "first_gid": first_gid_b,
-            "last_gid": last_gid_b,
-            "gids": gids_payload,
-            "freqs": freqs_payload,
-            "norms": norms_payload,
-            "positions": positions_payload,
-            "imp_freqs": imp_freqs,
-            "imp_norms": imp_norms,
+            "term": pd.Series(uniq_terms[tc_p[block_start]], dtype="string"),
+            **{c: blk[c] for c in ("block_ord", "doc_count", "first_gid",
+                                   "last_gid", "gids", "freqs", "norms")},
+            "positions": blk.get("positions", [None] * len(block_start)),
+            "imp_freqs": blk["imp_freqs"],
+            "imp_norms": blk["imp_norms"],
         }
-        if with_offsets:
-            post_cols["off_starts"] = off_starts_payload
-            post_cols["off_lens"] = off_lens_payload
-        if with_payloads:
-            post_cols["payloads"] = payloads_payload
+        for c in ("off_starts", "off_lens", "payloads"):
+            if c in blk:
+                post_cols[c] = blk[c]
         post = pd.DataFrame(post_cols)
         term_rows = pd.DataFrame(
             {

@@ -34,14 +34,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..functions.impacts import competitive_impacts_grouped
-from ..functions.pfor import BLOCK_SIZE, batch_encode_streams, decode_stream
+from ..functions.blocks import Postings, read_blocks, sort_postings, write_blocks
 from .indexer import _append_manifest, finalize_index, read_manifest
 
-# force a block cut when consecutive docIDs are further apart than this:
-# far larger than any dense-region gap, far smaller than the 2^40 sparse
-# segment stride
-MAX_INTRA_BLOCK_GAP = 1 << 20
+# default postings per (term, salt) reducer group; merge and check size
+# their buckets of groups by it
+SALT_DOCS = 1_000_000
 
 MERGED_SCHEMA = T.StructType(
     [
@@ -82,147 +80,43 @@ def _empty_merged_frame() -> pd.DataFrame:
     return pd.DataFrame(data)
 
 
-def _reblock_term(rows: pd.DataFrame, with_positions: bool,
-                  deleted: "np.ndarray | None" = None,
-                  with_offsets: bool = False,
-                  with_payloads: bool = False) -> pd.DataFrame:
-    """Re-chunk one (term, salt) group's blocks into full 128-doc blocks.
+def _merge_bucket(pdf: pd.DataFrame, deleted: "np.ndarray | None",
+                  streams: "tuple[str, ...]") -> pd.DataFrame:
+    """Re-chunk every (term, salt) group of one bucket into full 128-doc
+    blocks, one batched decode and one shared-writer pass for the bucket.
 
     ``deleted``: sorted gid array — those docs' postings are DROPPED
     (purge: the SegmentMerger path that skips non-live docs,
     ``core/index/SegmentMerger.java`` via MergeState liveDocs).
-
-    ``with_offsets``: carry the char-offset streams through — their
-    per-doc delta runs are as self-contained as positions', so the same
-    permute/filter/re-cut applies.
+    ``streams``: the position-aligned columns the index stores; their
+    per-doc delta runs are self-contained, so the permuted/filtered streams
+    re-cut losslessly.
     """
-    rows = rows.sort_values("first_gid", kind="mergesort")
-    gids_l, freqs_l, norms_l, pos_l = [], [], [], []
-    offs_l, lens_l, pays_l = [], [], []
-    for r in rows.itertuples(index=False):
-        gaps = decode_stream(r.gids).astype(np.int64)
-        g = np.empty(len(gaps) + 1, dtype=np.int64)
-        g[0] = r.first_gid
-        if len(gaps):
-            g[1:] = r.first_gid + np.cumsum(gaps)
-        gids_l.append(g)
-        freqs_l.append(decode_stream(r.freqs).astype(np.int64))
-        norms_l.append(decode_stream(r.norms).astype(np.int64))
-        if with_positions:
-            pos_l.append(decode_stream(r.positions).astype(np.int64))
-        if with_offsets:
-            offs_l.append(decode_stream(r.off_starts).astype(np.int64))
-            lens_l.append(decode_stream(r.off_lens).astype(np.int64))
-        if with_payloads:
-            pays_l.append(decode_stream(r.payloads).astype(np.int64))
-    gid = np.concatenate(gids_l)
-    freq = np.concatenate(freqs_l)
-    norm = np.concatenate(norms_l)
+    pdf = pdf.sort_values(["term", "salt", "first_gid"], kind="mergesort")
+    terms = pdf["term"].to_numpy(object)
+    salts = pdf["salt"].to_numpy(np.int64)
+    new_group = np.ones(len(pdf), dtype=bool)
+    new_group[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
+    p, doc_cnt = read_blocks(pdf, streams)
+    group = np.repeat(np.cumsum(new_group) - 1, doc_cnt)
     # inputs may interleave in gid space (a prior partial merge's blocks
-    # span holes occupied by other units) — restore global sort, carrying
-    # per-doc position runs along
-    from .search import sort_postings
-
-    pos_all = np.concatenate(pos_l) if with_positions else None
-    off_all = len_all = pay_all = None
-    extra = []
-    if with_offsets:
-        off_all = np.concatenate(offs_l)
-        len_all = np.concatenate(lens_l)
-        extra += [off_all, len_all]
-    if with_payloads:
-        pay_all = np.concatenate(pays_l)
-        extra.append(pay_all)
-    if extra:
-        gid, freq, norm, pos_all, extra = sort_postings(
-            gid, freq, norm, pos_all, extra
-        )
-        if with_offsets:
-            off_all, len_all = extra[0], extra[1]
-        if with_payloads:
-            pay_all = extra[-1]
-    else:
-        gid, freq, norm, pos_all = sort_postings(gid, freq, norm, pos_all)
-    if deleted is not None and len(deleted) and len(gid):
-        di = np.minimum(np.searchsorted(deleted, gid), len(deleted) - 1)
-        live = deleted[di] != gid
-        if pos_all is not None:
-            pos_keep = np.repeat(live, freq)
-            pos_all = pos_all[pos_keep]
-            if with_offsets:
-                off_all = off_all[pos_keep]
-                len_all = len_all[pos_keep]
-            if with_payloads:
-                pay_all = pay_all[pos_keep]
-        gid, freq, norm = gid[live], freq[live], norm[live]
-    n = len(gid)
-    if n == 0:
+    # span holes occupied by other units) — restore (group, gid) order
+    p, group = sort_postings(p, group)
+    if deleted is not None and len(deleted) and len(p.gid):
+        di = np.minimum(np.searchsorted(deleted, p.gid), len(deleted) - 1)
+        live = deleted[di] != p.gid
+        pos_keep = np.repeat(live, p.freq)
+        p = Postings(p.gid[live], p.freq[live], p.norm[live],
+                     {k: v[pos_keep] for k, v in p.streams.items()})
+        group = group[live]
+    if not len(p.gid):
         return _empty_merged_frame()
-    # Re-cut into 128-doc blocks, FORCING a cut at large gid gaps (sparse
-    # hash-mode gids jump by 2^40 between segments): a block spanning such
-    # a gap covers a huge useless gid range — it can never be skipped by
-    # range pruning and its bucket explode would enumerate billions of
-    # empty buckets.
-    run_flag = np.zeros(n, dtype=bool)
-    if n:
-        run_flag[0] = True
-        run_flag[1:] = np.diff(gid) > MAX_INTRA_BLOCK_GAP
-    run_start = np.maximum.accumulate(np.where(run_flag, np.arange(n), -1))
-    idx_in_run = np.arange(n) - run_start
-    new_block = run_flag | (idx_in_run % BLOCK_SIZE == 0)
-    block_id = np.cumsum(new_block) - 1
-    n_blocks = int(block_id[-1]) + 1 if n else 0
-    docs_per_block = np.bincount(block_id, minlength=n_blocks).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(docs_per_block)[:-1]))
-    ends = np.cumsum(docs_per_block) - 1
-
-    gaps_all = np.empty(n, dtype=np.int64)
-    gaps_all[0] = 0
-    gaps_all[1:] = gid[1:] - gid[:-1]
-    keep = np.ones(n, dtype=bool)
-    keep[starts] = False
-    gids_payload = batch_encode_streams(gaps_all[keep].astype(np.uint64), docs_per_block - 1)
-    freqs_payload = batch_encode_streams(freq.astype(np.uint64), docs_per_block)
-    norms_payload = batch_encode_streams(norm.astype(np.uint64), docs_per_block)
-    if with_positions:
-        # the SORTED (and possibly purge-filtered) stream — per-doc delta
-        # runs are self-contained, so the permuted/filtered stream re-cuts
-        # losslessly
-        pos_rl = np.add.reduceat(freq, starts)
-        positions_payload = batch_encode_streams(pos_all.astype(np.uint64), pos_rl)
-    else:
-        positions_payload = [None] * n_blocks
-    if with_offsets:
-        off_starts_payload = batch_encode_streams(off_all.astype(np.uint64), pos_rl)
-        off_lens_payload = batch_encode_streams(len_all.astype(np.uint64), pos_rl)
-    else:
-        off_starts_payload = off_lens_payload = [None] * n_blocks
-    if with_payloads:
-        payloads_payload = batch_encode_streams(pay_all.astype(np.uint64), pos_rl)
-    else:
-        payloads_payload = [None] * n_blocks
-    imp_f, imp_n = competitive_impacts_grouped(block_id, freq, norm, n_blocks)
-    term = rows["term"].iloc[0]
-    return pd.DataFrame(
-        {
-            "term": term,
-            "seg": np.int64(-1),  # merged
-            "block_ord": np.arange(n_blocks, dtype=np.int32),
-            "doc_count": docs_per_block.astype(np.int32),
-            "first_gid": gid[starts],
-            "last_gid": gid[ends],
-            "gids": gids_payload,
-            "freqs": freqs_payload,
-            "norms": norms_payload,
-            "positions": positions_payload,
-            "off_starts": off_starts_payload,
-            "off_lens": off_lens_payload,
-            "payloads": payloads_payload,
-            "imp_freqs": imp_f,
-            "imp_norms": imp_n,
-            "freq_sum": np.add.reduceat(freq, starts).astype(np.int64),
-        }
-    )
+    block_start, cols = write_blocks(group, p)
+    n_blocks = len(block_start)
+    out = {"term": terms[new_group][group[block_start]], "seg": np.int64(-1)}  # merged
+    for f in MERGED_SCHEMA.fieldNames()[2:]:
+        out[f] = cols.get(f, [None] * n_blocks)
+    return pd.DataFrame(out)
 
 
 # -------------------------------------------------------------- unit model
@@ -470,30 +364,17 @@ def _merge_units(
     deleted = load_deleted_gids(index_dir) if purge else None
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
-    with_offsets = bool(stats.get("with_offsets"))
-    with_payloads = bool(stats.get("with_payloads"))
-    parts = []
-    cols = ["term", "seg", "block_ord", "doc_count", "first_gid", "last_gid",
-            "gids", "freqs", "norms", "imp_freqs", "imp_norms"]
-    if with_positions:
-        cols.append("positions")
-    if with_offsets:
-        cols += ["off_starts", "off_lens"]
-    if with_payloads:
-        cols.append("payloads")
-    for u in units:
-        p = spark.read.parquet(os.path.join(index_dir, u["path"])).select(*cols)
-        parts.append(p)
+    streams = ("positions",) * with_positions
+    if stats.get("with_offsets"):
+        streams += ("off_starts", "off_lens")
+    if stats.get("with_payloads"):
+        streams += ("payloads",)
+    cols = ["term", "first_gid", "gids", "freqs", "norms", *streams]
+    parts = [spark.read.parquet(os.path.join(index_dir, u["path"])).select(*cols)
+             for u in units]
     post = parts[0]
     for p in parts[1:]:
         post = post.unionByName(p)
-    if not with_positions:
-        post = post.withColumn("positions", F.lit(None).cast("binary"))
-    if not with_offsets:
-        post = post.withColumn("off_starts", F.lit(None).cast("binary"))
-        post = post.withColumn("off_lens", F.lit(None).cast("binary"))
-    if not with_payloads:
-        post = post.withColumn("payloads", F.lit(None).cast("binary"))
 
     # hot-term salt map from the global term stats (Zipf skew defusal)
     terms_df = spark.read.parquet(os.path.join(index_dir, "terms"))
@@ -514,14 +395,17 @@ def _merge_units(
         ).otherwise(F.lit(0))
     else:
         salt = F.lit(0)
-    post = post.withColumn("salt", salt.cast("long"))
+    # many (term, salt) groups per Python call: a bucket holds about
+    # salt_docs postings, and there are at least as many buckets as cores
+    n_buckets = max(spark.sparkContext.defaultParallelism,
+                    -(-sum(u["n_postings"] for u in units) // salt_docs))
+    post = post.withColumn("salt", salt.cast("long")).withColumn(
+        "bucket", F.pmod(F.xxhash64("term", "salt"), F.lit(n_buckets)))
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _reblock_term(pdf, with_positions, deleted=deleted,
-                             with_offsets=with_offsets,
-                             with_payloads=with_payloads)
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return _merge_bucket(pdf, deleted, streams)
 
-    merged = post.groupBy("term", "salt").applyInPandas(fn, schema=MERGED_SCHEMA)
+    merged = post.groupBy("bucket").applyInPandas(fn, schema=MERGED_SCHEMA)
     mid = _next_merge_id(index_dir)
     out_rel = f"postings_merged_m{mid}"
     out_path = os.path.join(index_dir, out_rel)
@@ -617,7 +501,7 @@ def merge_index(
     spark: SparkSession,
     index_dir: str,
     *,
-    salt_docs: int = 1_000_000,
+    salt_docs: int = SALT_DOCS,
     with_positions: bool = True,
     purge: bool = False,
 ) -> dict:
@@ -648,7 +532,7 @@ def tiered_merge(
     segs_per_tier: int = 10,
     max_merge_at_once: int = 10,
     floor_postings: int = 100_000,
-    salt_docs: int = 1_000_000,
+    salt_docs: int = SALT_DOCS,
     with_positions: bool = True,
     purge: bool = False,
 ) -> "dict | None":

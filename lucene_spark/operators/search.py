@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions.bm25 import BM25Scorer, avgdl as _avgdl, idf as _idf, norm_cache
 from ..functions.similarity import BM25Sim
-from ..functions.pfor import batch_decode_streams
+from ..functions.blocks import decode_gid_rows, read_blocks, sort_postings
 from ..plans.fields import (
     DEFAULT_FIELD, FIELD_SEP, field_of as _field_of, local_term,
 )
@@ -251,67 +251,6 @@ class TermPostings:
         )
 
 
-def sort_postings(gid: np.ndarray, freq: np.ndarray, norm: np.ndarray,
-                  pos_flat: "np.ndarray | None" = None,
-                  extra_flats: "list[np.ndarray] | None" = None):
-    """Ensure postings are gid-sorted; permute per-doc position runs along.
-
-    Needed when merge units interleave in gid space: a tiered (partial)
-    merge re-blocks its inputs into 128-doc blocks that can SPAN gid holes
-    still occupied by unmerged units, so concatenating units in first_gid
-    order is no longer globally sorted. No-op (one vectorized check) in the
-    common disjoint case.
-
-    ``extra_flats``: additional position-aligned streams (offset starts /
-    lengths) permuted with the same gather; returned as a 5th element when
-    given.
-    """
-    if len(gid) and not (np.diff(gid) > 0).all():
-        order = np.argsort(gid, kind="mergesort")
-        if pos_flat is not None or extra_flats:
-            starts = np.concatenate(([0], np.cumsum(freq)))
-            lengths = freq[order]
-            src = starts[order]
-            total = int(lengths.sum())
-            out_starts = np.cumsum(lengths) - lengths
-            ids = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(out_starts, lengths)
-                + np.repeat(src, lengths)
-            )
-            if pos_flat is not None:
-                pos_flat = pos_flat[ids]
-            if extra_flats:
-                extra_flats = [x[ids] for x in extra_flats]
-        gid, freq, norm = gid[order], freq[order], norm[order]
-    if extra_flats is None:
-        return gid, freq, norm, pos_flat
-    return gid, freq, norm, pos_flat, extra_flats
-
-
-def _decode_gid_rows(first_gids: np.ndarray, gid_bufs: "list[bytes]"):
-    """Batch-decode many rows' gid-gap streams into absolute doc ids.
-
-    Returns (gid int64 — all rows' ids concatenated, doc_cnt int64 per row).
-    """
-    gaps, gap_cnt = batch_decode_streams(gid_bufs)
-    gaps = gaps.astype(np.int64)
-    doc_cnt = gap_cnt + 1  # each row stores first_gid + gaps for the rest
-    gid = np.empty(int(doc_cnt.sum()), dtype=np.int64)
-    doc_starts = np.concatenate(([0], np.cumsum(doc_cnt)[:-1]))
-    gid[doc_starts] = first_gids
-    if len(gaps):
-        # within-row cumsum of gaps via global cumsum minus row base
-        cs = np.cumsum(gaps)
-        gap_starts = np.concatenate(([0], np.cumsum(gap_cnt)[:-1]))
-        row_base = np.where(gap_starts > 0, cs[gap_starts - 1], 0)
-        rest = np.ones(len(gid), dtype=bool)
-        rest[doc_starts] = False
-        row_of = np.repeat(np.arange(len(doc_cnt)), gap_cnt)
-        gid[rest] = first_gids[row_of] + (cs - row_base[row_of])
-    return gid, doc_cnt
-
-
 def decode_term_blocks(block_rows: pd.DataFrame, need_positions: bool = False,
                        need_offsets: bool = False,
                        need_payloads: bool = False) -> TermPostings:
@@ -319,8 +258,8 @@ def decode_term_blocks(block_rows: pd.DataFrame, need_positions: bool = False,
 
     Rows are concatenated in first_gid order; if unit gid ranges interleave
     (tiered partial merges), ``sort_postings`` restores global order.
-    Decoding is a single ``batch_decode_streams`` pass per column — no
-    per-block Python (the round-2 8v32-profile finding).
+    Decoding is the shared block reader: one ``batch_decode_streams`` pass
+    per column, no per-block Python.
 
     ``need_offsets`` additionally decodes the char-offset streams of an
     offsets-enabled index (same delta math as positions: per-doc runs are
@@ -338,65 +277,35 @@ def decode_term_blocks(block_rows: pd.DataFrame, need_positions: bool = False,
             np.empty(0, np.int64) if need_offsets else None,
             np.empty(0, np.int64) if need_payloads else None,
         )
-    gid, _ = _decode_gid_rows(
-        block_rows["first_gid"].to_numpy(np.int64), list(block_rows["gids"])
-    )
-    freqs, _ = batch_decode_streams(list(block_rows["freqs"]))
-    freqs = freqs.astype(np.int64)
-    norms, _ = batch_decode_streams(list(block_rows["norms"]))
-    norms = norms.astype(np.uint8)
-    pstarts = np.concatenate(([0], np.cumsum(freqs)[:-1]))
+    streams = ("positions",) * need_positions
+    for need, cols, what in ((need_offsets, ("off_starts", "off_lens"), "offsets"),
+                             (need_payloads, ("payloads",), "payloads")):
+        if not need:
+            continue
+        if cols[0] not in block_rows.columns or block_rows[cols[0]].isna().any():
+            raise ValueError(f"index stores no {what} (build with with_{what}=True)")
+        streams += cols
+    p, _ = sort_postings(read_blocks(block_rows, streams)[0])
+    freqs = p.freq
+    starts = np.empty(len(freqs) + 1, dtype=np.int64)
+    starts[0] = 0
+    np.cumsum(freqs, out=starts[1:])
 
-    def _undelta(bufs: "list[bytes]") -> np.ndarray:
-        # per-row delta streams are within-row running sums; a global cumsum
-        # minus the value at each doc's start reproduces per-doc values
-        # (row boundaries cancel because every doc subtracts its own base)
-        deltas, _ = batch_decode_streams(bufs)
-        cs = np.cumsum(deltas.astype(np.int64))
-        base = np.where(pstarts > 0, cs[pstarts - 1], 0)
+    def _undelta(deltas: np.ndarray) -> np.ndarray:
+        # per-doc delta runs: a global cumsum minus the value at each doc's
+        # start reproduces per-doc values
+        cs = np.cumsum(deltas)
+        base = np.where(starts[:-1] > 0, cs[starts[:-1] - 1], 0)
         return cs - np.repeat(base, freqs)
 
-    pos_flat = _undelta(list(block_rows["positions"])) if need_positions else None
+    pos_flat = _undelta(p.streams["positions"]) if need_positions else None
     off_start = off_end = None
     if need_offsets:
-        if "off_starts" not in block_rows.columns or block_rows["off_starts"].isna().any():
-            raise ValueError(
-                "index stores no offsets (build with with_offsets=True)"
-            )
-        off_start = _undelta(list(block_rows["off_starts"]))
-        lens, _ = batch_decode_streams(list(block_rows["off_lens"]))
-        off_end = off_start + lens.astype(np.int64)
-    pay_flat = None
-    if need_payloads:
-        if "payloads" not in block_rows.columns or block_rows["payloads"].isna().any():
-            raise ValueError(
-                "index stores no payloads (build with with_payloads=True)"
-            )
-        pays, _ = batch_decode_streams(list(block_rows["payloads"]))
-        pay_flat = pays.astype(np.int64)
-    extra = []
-    if need_offsets:
-        extra += [off_start, off_end]
-    if need_payloads:
-        extra.append(pay_flat)
-    if extra:
-        gid, freqs, norms, pos_flat, extra = sort_postings(
-            gid, freqs, norms, pos_flat, extra
-        )
-        if need_offsets:
-            off_start, off_end = extra[0], extra[1]
-        if need_payloads:
-            pay_flat = extra[-1]
-    else:
-        gid, freqs, norms, pos_flat = sort_postings(gid, freqs, norms, pos_flat)
-    if need_positions:
-        starts = np.empty(len(freqs) + 1, dtype=np.int64)
-        starts[0] = 0
-        np.cumsum(freqs, out=starts[1:])
-    else:
-        starts = None
-    return TermPostings(gid, freqs, norms, pos_flat, starts, off_start, off_end,
-                        pay_flat)
+        off_start = _undelta(p.streams["off_starts"])
+        off_end = off_start + p.streams["off_lens"]
+    return TermPostings(p.gid, freqs, p.norm.astype(np.uint8), pos_flat,
+                        starts if need_positions else None, off_start, off_end,
+                        p.streams.get("payloads"))
 
 
 # ------------------------------------------------------------ plan evaluation
@@ -1520,6 +1429,12 @@ def _span_side_spans(sub, postings, cands: np.ndarray):
         keys = np.sort(np.concatenate(parts)) if parts else np.empty(0, np.int64)
         return keys, keys + 1, np.zeros(len(keys), np.int64)
     if isinstance(sub, SpanNearSpansQ):
+        if not sub.in_order:
+            # unordered emission is not start-monotone: the cursor replay
+            # above does not hold for it
+            raise NotImplementedError(
+                "nested span clauses accept ordered near spans only"
+            )
         return _near_spans_chain(sub, postings, cands)
     # ordered SpanNearQ: the first-at-or-after chain of span_near_freqs,
     # keeping each accepted span's extent instead of folding to freq
@@ -1621,14 +1536,18 @@ def _near_spans_unordered_freqs(node: SpanNearSpansQ, postings: dict,
         return np.zeros(len(cands), np.float32)
     max_end = None
     tot_len = None
+    same_doc = np.ones(len(st_s), dtype=bool)
     for s, e, _w in sides:
         j = np.minimum(np.searchsorted(s, st_s), len(s) - 1)
         ce, cs_ = e[j], s[j]
+        # a clause exhausted before this doc clamps to an earlier doc's
+        # span: that state is no match
+        same_doc &= (cs_ >> _POS_SHIFT) == (st_s >> _POS_SHIFT)
         max_end = ce if max_end is None else np.maximum(max_end, ce)
         ln = ce - cs_
         tot_len = ln if tot_len is None else tot_len + ln
     span_w = max_end - st_s
-    good = (span_w - tot_len) <= node.slop
+    good = same_doc & ((span_w - tot_len) <= node.slop)
     acc = np.zeros(len(cands), dtype=np.float32)
     if good.any():
         w = (1.0 / (1.0 + span_w[good].astype(np.float64))).astype(np.float32)
@@ -3058,7 +2977,8 @@ class Searcher:
                 return BoolQ()  # an empty clause matches nothing
             cls = tuple(c.term if isinstance(c, TermQ) else c for c in cls)
             if cls != node.clauses:
-                return SpanNearSpansQ(clauses=cls, slop=node.slop)
+                return SpanNearSpansQ(clauses=cls, slop=node.slop,
+                                      in_order=node.in_order)
             return node
         if isinstance(node, SpanNotSpansQ):
             inc = (self.rewrite(node.include)
@@ -3996,7 +3916,7 @@ class Searcher:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                g, _ = _decode_gid_rows(
+                g, _ = decode_gid_rows(
                     pdf["first_gid"].to_numpy(np.int64), list(pdf["gids"])
                 )
                 yield pd.DataFrame({"gid": g})
@@ -4200,7 +4120,7 @@ class Searcher:
             )),
         )
 
-        def ub_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def ub_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             term_maxes = {}
             for t, grp in pdf.groupby("term", sort=False):
                 w = weights.get(t)
@@ -4406,7 +4326,7 @@ class Searcher:
             return pd.DataFrame({"gid": gids, "score": scores.astype(np.float32)})
 
         if dv_df is None:
-            def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
                 return kernel_body(key, pdf, None)
 
             return with_bucket.groupBy("bucket").applyInPandas(

@@ -1278,7 +1278,8 @@ def qualify_node(node, field: str):
                 return c
             return qualify_node(c, field)
         return SpanNearSpansQ(
-            clauses=tuple(_subqc(c) for c in node.clauses), slop=node.slop
+            clauses=tuple(_subqc(c) for c in node.clauses), slop=node.slop,
+            in_order=node.in_order,
         )
     if isinstance(node, SpanNotQ):
         return SpanNotQ(

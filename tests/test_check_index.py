@@ -109,3 +109,21 @@ def test_detects_truncated_payload_stream(spark, tmp_path_factory):
     report = check_index(spark, d)
     assert not report["healthy"]
     assert report["bad_streams"] >= 1
+
+
+def test_merge_and_check_infer_udf_types(spark, idx, tmp_path):
+    """Every grouped-map function merge and check hand to applyInPandas is
+    fully type-hinted, so PySpark infers its eval type without warning."""
+    import warnings
+
+    from lucene_spark.operators.merge import merge_index
+
+    d = str(tmp_path / "merged")
+    shutil.copytree(idx, d)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        merge_index(spark, d, salt_docs=50)
+        report = check_index(spark, d)
+    assert report["healthy"], report
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs

@@ -17,13 +17,27 @@ import pytest
 
 from lucene_spark.functions import bm25
 from lucene_spark.functions.impacts import competitive_impacts
-from lucene_spark.functions.pfor import BLOCK_SIZE, decode_stream, encode_stream
+import pandas as pd
+
+from lucene_spark.functions.blocks import (
+    MAX_INTRA_BLOCK_GAP,
+    Postings,
+    read_blocks,
+    write_blocks,
+)
+from lucene_spark.functions.pfor import (
+    BLOCK_SIZE,
+    batch_decode_streams,
+    batch_encode_streams,
+)
 from lucene_spark.functions.smallfloat import (
     LENGTH_TABLE,
     byte4_to_int,
     int_to_byte4,
     int_to_byte4_np,
 )
+
+from tests.pfor_spec import decode as spec_decode
 
 RNG = np.random.default_rng(42)
 
@@ -76,11 +90,18 @@ class TestSmallFloat:
 
 
 # ---------------------------------------------------------------------- PFOR
+def _encode(arr) -> bytes:
+    arr = np.asarray(arr, dtype=np.uint64)
+    return batch_encode_streams(arr, np.array([len(arr)]))[0]
+
+
 class TestPFor:
     def _round_trip(self, arr):
         arr = np.asarray(arr, dtype=np.uint64)
-        data = encode_stream(arr)
-        back = decode_stream(data)
+        data = _encode(arr)
+        assert spec_decode(data) == [int(x) for x in arr]
+        back, counts = batch_decode_streams([data])
+        assert list(counts) == [len(arr)]
         assert (back == arr).all(), arr
         return data
 
@@ -112,9 +133,14 @@ class TestPFor:
 
     def test_wide_values_escape_path(self):
         # values needing >31 bits take the vlong escape (token bpv=31)
-        self._round_trip(np.array([2**40, 1, 1] + [1] * 125, dtype=np.uint64))
-        self._round_trip(np.full(BLOCK_SIZE, 2**62, dtype=np.uint64))
-        self._round_trip(RNG.integers(0, 2**63, BLOCK_SIZE).astype(np.uint64))
+        for vals in (
+            np.array([2**40, 1, 1] + [1] * 125, dtype=np.uint64),
+            np.full(BLOCK_SIZE, 2**62, dtype=np.uint64),
+            RNG.integers(0, 2**63, BLOCK_SIZE).astype(np.uint64),
+            np.full(2 * BLOCK_SIZE + 5, 2**64 - 1, dtype=np.uint64),
+        ):
+            data = self._round_trip(vals)
+            assert data[2 if len(vals) >= 128 else 1] == 31
 
     def test_doc_gap_streams(self):
         # sorted docIDs -> gaps >= 1, multi-block + tail
@@ -125,16 +151,14 @@ class TestPFor:
 
     def test_compression_beats_raw_on_small_gaps(self):
         gaps = RNG.integers(1, 16, 4096).astype(np.uint64)
-        data = encode_stream(gaps)
+        data = _encode(gaps)
         assert len(data) < 4096 * 1.0  # ~4 bits/value expected vs 8 bytes raw
 
-    def test_batch_decode_matches_per_stream(self):
-        # every stream shape at once: empty, tail-only, all-equal RLE,
-        # exception patches, multi-block, vlong-escape wide values
-        from lucene_spark.functions.pfor import batch_decode_streams
-
-        bufs, refs = [], []
-        for i in range(200):
+    def _mixed_streams(self, n_streams: int):
+        # every stream shape: empty, tail-only, all-equal RLE, exception
+        # patches, multi-block, vlong-escape wide values
+        refs = []
+        for i in range(n_streams):
             n = int(RNG.integers(0, 600))
             kind = i % 5
             if kind == 0:
@@ -150,16 +174,124 @@ class TestPFor:
                     v[RNG.integers(0, n, k)] = RNG.integers(2**30, 2**35, k)
             else:
                 v = RNG.integers(0, 2**62, n)
-            v = v.astype(np.uint64)
-            bufs.append(encode_stream(v))
-            refs.append(v)
+            refs.append(v.astype(np.uint64))
+        lens = np.array([len(r) for r in refs])
+        return refs, batch_encode_streams(np.concatenate(refs), lens)
+
+    def test_batch_decode_matches_per_stream(self):
+        refs, bufs = self._mixed_streams(200)
         flat, counts = batch_decode_streams(bufs)
         assert (counts == np.array([len(r) for r in refs])).all()
         off = 0
-        for r in refs:
+        for r, b in zip(refs, bufs):
+            assert spec_decode(b) == [int(x) for x in r]
             assert (flat[off : off + len(r)] == r).all()
             off += len(r)
         assert off == len(flat)
+
+    def test_truncated_tail_raises(self):
+        data = _encode(RNG.integers(0, 2**20, 200))  # one block + 72-value tail
+        for cut in (len(data) - 1, len(data) - 2):
+            with pytest.raises(ValueError):
+                batch_decode_streams([data[:cut]])
+            with pytest.raises(ValueError):
+                spec_decode(data[:cut])
+
+    def test_truncated_block_raises(self):
+        for vals in (RNG.integers(0, 2**12, 300),            # packed
+                     np.full(256, 2**40, dtype=np.uint64),   # escape
+                     np.full(128, 5, dtype=np.uint64)):      # run length
+            data = _encode(vals)
+            with pytest.raises(ValueError):
+                batch_decode_streams([data[: max(2, len(data) // 2)]])
+
+    def test_truncated_stream_never_reads_its_neighbour(self):
+        refs, bufs = self._mixed_streams(40)
+        for i in range(len(bufs)):
+            for cut in sorted({1, len(bufs[i]) // 2, len(bufs[i]) - 1}):
+                if 0 < cut < len(bufs[i]):
+                    bad = bufs[:i] + [bufs[i][:cut]] + bufs[i + 1 :]
+                    with pytest.raises(ValueError):
+                        batch_decode_streams(bad)
+
+    def test_trailing_bytes_raise(self):
+        for vals in ([], [3, 4], np.arange(128)):
+            data = _encode(vals)
+            with pytest.raises(ValueError):
+                batch_decode_streams([data + b"\x01"])
+        with pytest.raises(ValueError):
+            batch_decode_streams([b""])
+
+
+# ------------------------------------------------------------ Block layout
+class TestBlocks:
+    """The shared block writer and reader, through the merge re-chunk."""
+
+    def _unit(self, gid_sets, streams, tc):
+        """Block rows of one unit: postings of group g over gid_sets[g]."""
+        group = np.repeat(np.arange(len(gid_sets)), [len(s) for s in gid_sets])
+        gid = np.concatenate(gid_sets).astype(np.int64)
+        freq = RNG.integers(1, 5, len(gid))
+        n_pos = int(freq.sum())
+        p = Postings(gid, freq, RNG.integers(0, 256, len(gid)), {
+            s: RNG.integers(0, 2**40 if s == "payloads" else 1000, n_pos)
+            for s in streams
+        })
+        start, cols = write_blocks(group, p)
+        cols["term"] = [tc[g][0] for g in group[start]]
+        cols["salt"] = np.array([tc[g][1] for g in group[start]], np.int64)
+        return pd.DataFrame(cols), p, group
+
+    def test_random_round_trip(self):
+        from lucene_spark.operators.check import _check_bucket
+        from lucene_spark.operators.merge import _merge_bucket
+
+        streams = ("positions", "off_starts", "off_lens", "payloads")
+        # (term, salt) groups; a term's salts cover disjoint gid ranges
+        tc = [("apple", 0), ("apple", 1), ("berry", 0), ("cherry", 0)]
+        units, truth = [], {}
+        for u in range(3):
+            gid_sets = []
+            for g, (_, salt) in enumerate(tc):
+                n = int(RNG.integers(0, 300))
+                # units interleave in gid space; some gaps exceed the cut
+                base = RNG.integers(0, 5000, n) * 3 + u + salt * 2**40
+                far = (RNG.random(n) < 0.05) * (MAX_INTRA_BLOCK_GAP + 7)
+                gid_sets.append(np.unique(base + np.cumsum(far)))
+            rows, p, group = self._unit(gid_sets, streams, tc)
+            units.append(rows)
+            starts = np.cumsum(p.freq) - p.freq
+            for i in range(len(p.gid)):
+                sl = slice(starts[i], starts[i] + p.freq[i])
+                truth[(tc[group[i]][0], int(p.gid[i]))] = (
+                    int(p.freq[i]), int(p.norm[i]),
+                    tuple(tuple(p.streams[s][sl]) for s in streams))
+        rows = pd.concat(units, ignore_index=True).sample(frac=1, random_state=3)
+        all_gids = np.unique([g for _, g in truth])
+        deleted = np.sort(RNG.choice(all_gids, len(all_gids) // 7, replace=False))
+        out = _merge_bucket(rows, deleted, streams)
+
+        p, doc_cnt = read_blocks(out, streams)
+        assert (doc_cnt == out["doc_count"]).all()
+        assert (out["doc_count"] <= BLOCK_SIZE).all()
+        row_of = np.repeat(np.arange(len(out)), doc_cnt)
+        in_block = row_of[1:] == row_of[:-1]
+        assert (np.diff(p.gid)[in_block] > 0).all()
+        assert (np.diff(p.gid)[in_block] <= MAX_INTRA_BLOCK_GAP).all()
+        starts = np.cumsum(p.freq) - p.freq
+        back = {}
+        for i in range(len(p.gid)):
+            sl = slice(starts[i], starts[i] + p.freq[i])
+            back[(out["term"].iloc[row_of[i]], int(p.gid[i]))] = (
+                int(p.freq[i]), int(p.norm[i]),
+                tuple(tuple(p.streams[s][sl]) for s in streams))
+        dead = set(deleted.tolist())
+        assert back == {k: v for k, v in truth.items() if k[1] not in dead}
+        assert (p.streams["payloads"] >= 2**31).any()
+
+        report = _check_bucket(out)
+        assert (report.filter(like="bad_") == 0).all().all(), report
+        assert report["doc_count_sum"].sum() == len(back)
 
 
 # ------------------------------------------------------------------- Impacts

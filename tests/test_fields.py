@@ -210,3 +210,16 @@ def test_multifield_purge_rederives_field_stats(spark, corpus_pdf, tmp_path_fact
 
     report = check_index(spark, d)
     assert report["healthy"], report
+
+
+def test_qualify_keeps_unordered_span_near(monkeypatch):
+    from lucene_spark.plans import query
+
+    node = query.SpanNearSpansQ(("a", "b"), 2, in_order=False)
+    q = query.qualify_node(node, "title")
+    assert q.in_order is False
+    assert q.clauses == (qualify("title", "a"), qualify("title", "b"))
+    # the query parser emits no span syntax: hand parse_multi_field the node
+    monkeypatch.setattr(query, "parse_query", lambda s: node)
+    multi = query.parse_multi_field("a b", ["title", "body"])
+    assert [c.in_order for c in multi.should] == [False, False]

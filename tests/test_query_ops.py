@@ -1337,7 +1337,7 @@ def test_dfr_matrix(spark):
     with _pt.raises(ValueError, match="z value"):
         DFRSim(normalization="Z", z=0.7)
     with _pt.raises(ValueError, match="mu"):
-        DFRSim(normalization="H3", mu=0.0)
+        DFRSim(normalization="H3", mu=-1.0)
 
 
 def test_ib_matrix(spark):
@@ -1373,3 +1373,18 @@ def test_ib_matrix(spark):
         IBSim(distribution="X")
     with _pt.raises(ValueError, match="lambda"):
         IBSim(lambda_of="Q")
+
+
+def test_dfr_ib_normalization_bounds():
+    """NormalizationH1 takes c >= 0 and H3 mu >= 0; H2 keeps c > 0."""
+    from lucene_spark.functions.similarity import DFRSim, IBSim
+
+    for cls in (DFRSim, IBSim):
+        cls(normalization="H1", c=0.0)
+        cls(normalization="H3", mu=0.0)
+        with pytest.raises(ValueError, match="c must be >= 0"):
+            cls(normalization="H1", c=-0.5)
+        with pytest.raises(ValueError, match="c must be > 0"):
+            cls(normalization="H2", c=0.0)
+        with pytest.raises(ValueError, match="mu"):
+            cls(normalization="H3", mu=-1.0)

@@ -224,6 +224,16 @@ def test_span_multi_inside_contain(spark, corpus_pdf, index_dir):
     assert a.values.tolist() == b.values.tolist() and len(a)
 
 
+def test_span_multi_rewrite_keeps_unordered(spark, index_dir):
+    from lucene_spark.plans.query import PrefixQ, SpanMultiQ
+
+    s = Searcher(spark, index_dir)
+    node = SpanNearSpansQ((SpanMultiQ(PrefixQ("g")), "open"), slop=2,
+                          in_order=False)
+    assert s.rewrite(node) == SpanNearSpansQ(("gamma", "open"), slop=2,
+                                             in_order=False)
+
+
 def test_span_multi_top_terms(spark, index_dir):
     from lucene_spark.plans.query import PrefixQ, SpanMultiQ
 
@@ -529,3 +539,43 @@ def test_unordered_spans_term_clauses_equal_span_near(spark, index_dir):
 def test_unordered_gap_rejected():
     with pytest.raises(ValueError, match="ordered near"):
         SpanNearSpansQ(("a", ("gap", 1), "b"), slop=3, in_order=False)
+
+
+def _postings(docs: dict):
+    """One term's postings from {gid: [positions]}."""
+    from lucene_spark.operators.search import TermPostings
+
+    gids = np.array(sorted(docs), np.int64)
+    freqs = np.array([len(docs[g]) for g in gids], np.int64)
+    return TermPostings(
+        gids, freqs, np.zeros(len(gids), np.uint8),
+        np.concatenate([np.array(docs[g], np.int64) for g in gids]),
+        np.concatenate(([0], np.cumsum(freqs))),
+    )
+
+
+def test_nested_unordered_near_spans_rejected():
+    from lucene_spark.operators.search import _span_side_spans
+
+    postings = {"a": _postings({0: [0]}), "b": _postings({0: [2]})}
+    nested = SpanNearSpansQ(("a", "b"), slop=2, in_order=False)
+    with pytest.raises(NotImplementedError, match="ordered near"):
+        _span_side_spans(nested, postings, np.array([0]))
+
+
+def test_unordered_near_spans_clause_exhausted_before_doc():
+    """Doc 1 holds x and y, so the nested ordered near clause's docs admit
+    it, but not adjacently: that clause has no span in doc 1, and doc 1
+    must not match through the clause's span in doc 0."""
+    from lucene_spark.operators.search import _near_spans_unordered_freqs
+
+    postings = {
+        "x": _postings({0: [0], 1: [0]}),
+        "y": _postings({0: [1], 1: [10]}),
+        "z": _postings({0: [3], 1: [5]}),
+    }
+    node = SpanNearSpansQ((SpanNearQ(("x", "y"), slop=0), "z"), slop=3,
+                          in_order=False)
+    freqs = _near_spans_unordered_freqs(node, postings, np.array([0, 1]))
+    assert freqs[0] > 0
+    assert freqs[1] == 0
