@@ -2098,23 +2098,23 @@ SPAN_NS_SLOP = 6
 
 
 def _q_span_not_or_topk(spark, sf_dir):
-    """General SpanNotQuery over span clauses (SpanNotSpansQ,
+    """General SpanNotQuery over span clauses (SpanNotQ,
     SpanNotQuery.java FilterSpans.accept): a SpanOr include filtered by a
     term exclude with a pre/post window."""
-    from lucene_spark.plans.query import SpanNotSpansQ, SpanOrQ
+    from lucene_spark.plans.query import SpanNotQ, SpanOrQ
 
-    node = SpanNotSpansQ(SpanOrQ(SPAN_NS_OR), SPAN_NS_T2, pre=1, post=1)
+    node = SpanNotQ(SpanOrQ(SPAN_NS_OR), SPAN_NS_T2, pre=1, post=1)
     return _topk_df(spark, sf_dir, node)
 
 
 def _q_span_near_or_topk(spark, sf_dir):
-    """General NearSpansOrdered over span CLAUSES (SpanNearSpansQ,
+    """General NearSpansOrdered over span CLAUSES (SpanNearQ,
     queries/spans/NearSpansOrdered.java stretchToOrder): a SpanOr first
     clause chained into a term clause, gap-sum matchWidth."""
-    from lucene_spark.plans.query import SpanNearSpansQ, SpanOrQ
+    from lucene_spark.plans.query import SpanNearQ, SpanOrQ
 
-    node = SpanNearSpansQ((SpanOrQ(SPAN_NS_OR), SPAN_NS_T2),
-                          slop=SPAN_NS_SLOP)
+    node = SpanNearQ((SpanOrQ(SPAN_NS_OR), SPAN_NS_T2),
+                     slop=SPAN_NS_SLOP)
     return _topk_df(spark, sf_dir, node)
 
 

@@ -17,6 +17,15 @@ reaches the index):
   - Multi-token INPUTS match runs of tokens that are position-consecutive
     (increment 1 between each), i.e. not interrupted by a stop-word hole —
     the same position algebra the phrase scorer uses.
+  - Overlapping multi-token matches resolve like the reference's: left
+    to right, the longest match at a token wins and consumes its input
+    tokens, so ``'a b'->x`` and ``'b c'->y`` inject only ``x`` on
+    ``a b c``, and ``'new york city'`` beats ``'new york'``. Documented
+    deviation: a single-token rule still fires on a token inside a longer
+    match (``'scan'->zsynscan`` beside ``'table scan'->tblscan`` stacks
+    both on ``table scan``), so a single-token synonym stays a per-token
+    alias that phrases can match through everywhere; the reference's
+    filter would consume ``scan`` into the longer match.
   - Norms: injected tokens have position increment 0, and
     ``BM25Similarity`` discounts overlaps from the length norm by default
     (``discountOverlaps``, ``core/search/similarities/BM25Similarity.java``),
@@ -24,7 +33,8 @@ reaches the index):
     score — unchanged.
 
 The expansion is vectorized: each rule is a handful of shifted numpy
-comparisons over the flat token stream; output volume is bounded by
+comparisons over the flat token stream, and the overlap pass loops over
+the matches only; output volume is bounded by
 (number of matches) x (outputs per rule).  At 100 TB this adds no shuffle
 and no driver state — it runs inside the same ``applyInPandas`` invert
 task as the analyzer.
@@ -84,6 +94,25 @@ class SynonymMap:
         return h.hexdigest()
 
 
+def _leftmost_longest(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Which rule matches fire. Multi-token matches resolve as
+    SynonymGraphFilter picks them: scanning the token stream left to
+    right, the longest match at a token wins and the tokens it consumes
+    start no other multi-token match; rules with the same input fire
+    together (the Builder merges their outputs). Single-token matches
+    always fire (see the module docstring). Matches never span documents,
+    so one pass over the global token index serves every doc; the loop
+    runs over matches, not tokens."""
+    keep = lens == 1
+    free, last = 0, None
+    for i in np.lexsort((-lens, starts)):
+        s, k = int(starts[i]), int(lens[i])
+        if k > 1 and (s >= free or (s, k) == last):
+            keep[i] = True
+            free, last = s + k, (s, k)
+    return keep
+
+
 def expand_synonyms(batch: AnalyzedBatch, smap: SynonymMap) -> AnalyzedBatch:
     """Apply the map to an analyzed batch; returns a new AnalyzedBatch.
 
@@ -98,12 +127,9 @@ def expand_synonyms(batch: AnalyzedBatch, smap: SynonymMap) -> AnalyzedBatch:
     doc = batch.tok_doc_idx
     pos = batch.tok_positions
     n = len(terms)
-    add_t: list = []
-    add_d: list = []
-    add_p: list = []
-    drop = np.zeros(n, dtype=bool)
+    found = []                       # (rule, match start indices)
     for rule in smap.rules:
-        ins, outs = rule.inputs, rule.outputs
+        ins = rule.inputs
         k = len(ins)
         if n < k:
             continue
@@ -114,11 +140,24 @@ def expand_synonyms(batch: AnalyzedBatch, smap: SynonymMap) -> AnalyzedBatch:
             m = m & (doc[j:w + j] == doc[:w])
             m = m & (pos[j:w + j] == pos[:w] + j)
         idx = np.nonzero(m)[0]
-        if not len(idx):
-            continue
+        if len(idx):
+            found.append((rule, idx))
+    if found:
+        ok = _leftmost_longest(
+            np.concatenate([idx for _, idx in found]),
+            np.concatenate([np.full(len(idx), len(r.inputs))
+                            for r, idx in found]),
+        )
+        cuts = np.cumsum([len(idx) for _, idx in found])[:-1]
+        found = [(r, idx[k]) for (r, idx), k in zip(found, np.split(ok, cuts))]
+    add_t: list = []
+    add_d: list = []
+    add_p: list = []
+    drop = np.zeros(n, dtype=bool)
+    for rule, idx in found:
         if not smap.include_orig:
             drop[idx] = True      # single-token inputs only (ctor-enforced)
-        for out in outs:
+        for out in rule.outputs:
             add_t.extend([out] * len(idx))
             add_d.extend(doc[idx].tolist())
             add_p.extend(pos[idx].tolist())

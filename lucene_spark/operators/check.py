@@ -34,7 +34,7 @@ from ..functions.blocks import gids_from_gaps
 from ..functions.pfor import batch_decode_streams
 from ..functions.smallfloat import int_to_byte4_np
 from .indexer import read_manifest
-from .merge import SALT_DOCS, live_units, read_delete_paths
+from .merge import bucket_count, live_units, read_delete_paths
 
 _BLOCK_REPORT = T.StructType(
     [
@@ -215,10 +215,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         audit_cols += ["off_starts", "off_lens"]
     if s.stats.get("with_payloads"):
         audit_cols.append("payloads")
-    # many terms per Python call: a bucket holds about SALT_DOCS postings,
-    # and there are at least as many buckets as cores
-    n_buckets = max(spark.sparkContext.defaultParallelism,
-                    -(-sum(u["n_postings"] for u in live_units(index_dir)) // SALT_DOCS))
+    n_buckets = bucket_count(spark, live_units(index_dir))
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _check_bucket(pdf)

@@ -208,7 +208,7 @@ def build_hnsw_graph(
         F.col(vec_col).alias("emb"),
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy(np.int64)
         x = np.array(list(pdf["emb"]), dtype=np.float64)
@@ -277,7 +277,8 @@ def ann_hnsw_topk(
     qid = int(query_vec_id)
     per_shard = max(int(k), 1)
 
-    def kernel(key, vpdf: pd.DataFrame, gpdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, vpdf: pd.DataFrame,
+               gpdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({
             "vec_id": pd.Series(dtype=np.int64),
             "cos": pd.Series(dtype=np.float64),

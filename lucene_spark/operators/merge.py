@@ -37,9 +37,18 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..functions.blocks import Postings, read_blocks, sort_postings, write_blocks
 from .indexer import _append_manifest, finalize_index, read_manifest
 
-# default postings per (term, salt) reducer group; merge and check size
-# their buckets of groups by it
+# default postings per (term, salt) reducer group; merge and check also
+# size their buckets of groups by it (``bucket_count``)
 SALT_DOCS = 1_000_000
+
+
+def bucket_count(spark: SparkSession, units: "list[dict]") -> int:
+    """Buckets of (term, salt) groups for one merge or CheckIndex pass:
+    about SALT_DOCS postings per Python call, and at least one bucket per
+    core. Independent of a merge's ``salt_docs``, which only splits hot
+    terms."""
+    return max(spark.sparkContext.defaultParallelism,
+               -(-sum(u["n_postings"] for u in units) // SALT_DOCS))
 
 MERGED_SCHEMA = T.StructType(
     [
@@ -395,10 +404,7 @@ def _merge_units(
         ).otherwise(F.lit(0))
     else:
         salt = F.lit(0)
-    # many (term, salt) groups per Python call: a bucket holds about
-    # salt_docs postings, and there are at least as many buckets as cores
-    n_buckets = max(spark.sparkContext.defaultParallelism,
-                    -(-sum(u["n_postings"] for u in units) // salt_docs))
+    n_buckets = bucket_count(spark, units)
     post = post.withColumn("salt", salt.cast("long")).withColumn(
         "bucket", F.pmod(F.xxhash64("term", "salt"), F.lit(n_buckets)))
 

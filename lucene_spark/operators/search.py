@@ -50,7 +50,7 @@ import json
 import math
 import os
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -86,8 +86,7 @@ from ..plans.query import (
     SpanContainingQ,
     SpanWithinQ,
     SpanMultiQ,
-    SpanNearSpansQ,
-    SpanNotSpansQ,
+    SpanGap,
     FunctionScoreQ,
     IntervalQ,
     IntervalExprQ,
@@ -98,11 +97,21 @@ from ..plans.query import (
     TermQ,
     TermSetRefQ,
     WildcardQ,
+    children,
     parse_query,
     query_terms,
+    subtree,
+    term_keys,
 )
 
 __all__ = ["Searcher", "TermPostings", "eval_plan", "decode_term_blocks"]
+
+# span nodes: one weight rule (make_ctx) and one span-source pruning rule
+_SPANS = (SpanFirstQ, SpanPositionRangeQ, SpanContainingQ, SpanWithinQ,
+          SpanNearQ, SpanNotQ, SpanOrQ, SpanPayloadCheckQ)
+# nodes scored through ScoreCtx.phrase_weights
+_PHRASE_LIKE = (PhraseQ, MultiPhraseQ, NearQ, SloppyQ, IntervalQ,
+                IntervalExprQ) + _SPANS
 
 # BooleanQuery clause cap for scoring rewrites (IndexSearcher.java:81)
 MAX_CLAUSE_COUNT = 1024
@@ -378,10 +387,6 @@ def eval_plan(node, postings: dict, ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarr
         return _eval_span_pos_range(node, postings, ctx)
     if isinstance(node, (SpanContainingQ, SpanWithinQ)):
         return _eval_span_contain(node, postings, ctx)
-    if isinstance(node, SpanNearSpansQ):
-        return _eval_span_near_spans(node, postings, ctx)
-    if isinstance(node, SpanNotSpansQ):
-        return _eval_span_not_spans(node, postings, ctx)
     if isinstance(node, SpanNotQ):
         return _eval_span_not(node, postings, ctx)
     if isinstance(node, SpanOrQ):
@@ -493,11 +498,6 @@ def _eval_boost(node: BoostQ, postings: dict, ctx: ScoreCtx) -> tuple[np.ndarray
             return np.empty(0, np.int64), np.empty(0, np.float32)
         return tp.gids, _score_term(tp, w, ctx.cache_for(child.term),
                                     ctx.sim, ctx.aux_for(child.term))
-    _PHRASE_LIKE = (PhraseQ, MultiPhraseQ, NearQ, SloppyQ, SpanNearQ,
-                    SpanFirstQ, SpanNotQ, SpanOrQ, SpanPayloadCheckQ,
-                    SpanPositionRangeQ, SpanContainingQ, SpanWithinQ,
-                    SpanNearSpansQ, SpanNotSpansQ,
-                    IntervalQ, IntervalExprQ)
     if isinstance(child, _PHRASE_LIKE + (SynonymQ, BlendedQ)):
         # temporarily rebind the child's weight to the boosted one
         sub = ScoreCtx(
@@ -1368,7 +1368,7 @@ def _eval_span_pos_range(node: SpanPositionRangeQ, postings: dict,
 
 def _span_side_docs(sub, postings) -> "np.ndarray | None":
     """Docs where a span source can match: term -> its postings docs;
-    ordered near -> conjunction of members; or -> union of members."""
+    or -> union of members; ordered near -> conjunction of its clauses."""
     if isinstance(sub, str):
         tp = postings.get(sub)
         return None if tp is None or not len(tp.gids) else tp.gids
@@ -1377,28 +1377,32 @@ def _span_side_docs(sub, postings) -> "np.ndarray | None":
               if postings.get(t) is not None and len(postings[t].gids)]
         return np.unique(np.concatenate(gs)) if gs else None
     if isinstance(sub, SpanNearQ):
-        if not sub.in_order:
-            raise NotImplementedError(
-                "SpanContaining/Within accept ordered near spans only"
-            )
-        out = None
-        for t in sub.terms:
-            tp = postings.get(t)
-            if tp is None or not len(tp.gids):
-                return None
-            out = tp.gids if out is None else np.intersect1d(out, tp.gids)
-        return out if out is not None and len(out) else None
-    if isinstance(sub, SpanNearSpansQ):
-        out = None
-        for c in sub.clauses:
-            if isinstance(c, tuple) and c and c[0] == "gap":
-                continue  # gaps match everywhere
-            d = _span_side_docs(c, postings)
-            if d is None:
-                return None
-            out = d if out is None else np.intersect1d(out, d)
-        return out if out is not None and len(out) else None
+        _require_ordered(sub)
+        return _near_docs(sub, postings)
     raise TypeError(f"unsupported span source {sub!r}")
+
+
+def _require_ordered(sub: SpanNearQ) -> None:
+    # unordered emission is not start-monotone: the cursor replays over
+    # nested spans do not hold for it
+    if not sub.in_order:
+        raise NotImplementedError(
+            "nested span clauses accept ordered near spans only"
+        )
+
+
+def _near_docs(node: SpanNearQ, postings) -> "np.ndarray | None":
+    """ConjunctionSpans: docs where every clause can match (gaps match
+    everywhere)."""
+    out = None
+    for c in node.clauses:
+        if isinstance(c, SpanGap):
+            continue
+        d = _span_side_docs(c, postings)
+        if d is None:
+            return None
+        out = d if out is None else np.intersect1d(out, d)
+    return out if out is not None and len(out) else None
 
 
 def _span_side_spans(sub, postings, cands: np.ndarray):
@@ -1407,70 +1411,33 @@ def _span_side_spans(sub, postings, cands: np.ndarray):
     monotone (start, end) sequences — the property that makes the
     reference's forward-only ContainSpans cursor replayable with one
     searchsorted (see SpanContainingQ docstring)."""
-    if isinstance(sub, str):
-        tp = postings[sub]
+    if isinstance(sub, SpanNearQ):
+        _require_ordered(sub)
+        return _near_spans_chain(sub, postings, cands)
+    if not isinstance(sub, (str, SpanOrQ)):
+        raise TypeError(f"unsupported span source {sub!r}")
+    parts = []
+    for t in term_keys(sub):
+        tp = postings.get(t)
+        if tp is None or not len(tp.gids):
+            continue
         loc = np.minimum(np.searchsorted(tp.gids, cands), len(tp.gids) - 1)
         pres = tp.gids[loc] == cands
         ords = np.nonzero(pres)[0]
         pos, c = _gather_positions(tp, loc[pres])
-        keys = (ords[c] << _POS_SHIFT) + pos + _POS_PAD
-        return keys, keys + 1, np.zeros(len(keys), np.int64)
-    if isinstance(sub, SpanOrQ):
-        parts = []
-        for t in sub.terms:
-            tp = postings.get(t)
-            if tp is None or not len(tp.gids):
-                continue
-            loc = np.minimum(np.searchsorted(tp.gids, cands), len(tp.gids) - 1)
-            pres = tp.gids[loc] == cands
-            ords = np.nonzero(pres)[0]
-            pos, c = _gather_positions(tp, loc[pres])
-            parts.append((ords[c] << _POS_SHIFT) + pos + _POS_PAD)
-        keys = np.sort(np.concatenate(parts)) if parts else np.empty(0, np.int64)
-        return keys, keys + 1, np.zeros(len(keys), np.int64)
-    if isinstance(sub, SpanNearSpansQ):
-        if not sub.in_order:
-            # unordered emission is not start-monotone: the cursor replay
-            # above does not hold for it
-            raise NotImplementedError(
-                "nested span clauses accept ordered near spans only"
-            )
-        return _near_spans_chain(sub, postings, cands)
-    # ordered SpanNearQ: the first-at-or-after chain of span_near_freqs,
-    # keeping each accepted span's extent instead of folding to freq
-    tps = [postings[t] for t in sub.terms]
-    idxs = [np.searchsorted(tp.gids, cands) for tp in tps]
-    pos0, cand0 = _gather_positions(tps[0], idxs[0])
-    keys = (cand0 << _POS_SHIFT) + pos0 + _POS_PAD
-    q = keys.copy()
-    alive = np.ones(len(keys), dtype=bool)
-    for tp, idx in zip(tps[1:], idxs[1:]):
-        p2, c2 = _gather_positions(tp, idx)
-        k2 = (c2 << _POS_SHIFT) + p2 + _POS_PAD
-        if not len(k2):
-            return (np.empty(0, np.int64),) * 3
-        loc = np.searchsorted(k2, q + 1)
-        ok = loc < len(k2)
-        loc_c = np.minimum(loc, len(k2) - 1)
-        alive &= ok & ((k2[loc_c] >> _POS_SHIFT) == (keys >> _POS_SHIFT))
-        q = np.where(alive, k2[loc_c], q)
-    width = (q - keys) - (len(tps) - 1)
-    good = alive & (width <= sub.slop)
-    return keys[good], q[good] + 1, width[good]
+        parts.append((ords[c] << _POS_SHIFT) + pos + _POS_PAD)
+    keys = np.sort(np.concatenate(parts)) if parts else np.empty(0, np.int64)
+    return keys, keys + 1, np.zeros(len(keys), np.int64)
 
 
-def _near_spans_chain(node: SpanNearSpansQ, postings: dict,
+def _near_spans_chain(node: SpanNearQ, postings: dict,
                       cands: np.ndarray):
     """NearSpansOrdered.stretchToOrder over span clauses, state-free:
     (start_keys, end_keys, widths) of accepted matches in start order.
     matchWidth sums the inter-clause gaps only (NearSpansOrdered.java:
-    48-77); a ("gap", n) clause contributes start = prev_end,
-    end = prev_end + n (GapSpans.skipToPosition)."""
-    first = node.clauses[0]
-    if isinstance(first, tuple) and first and first[0] == "gap":
-        raise ValueError("a gap cannot be the first clause (the reference "
-                         "Builder also rejects leading gaps)")
-    s0, e0, _w0 = _span_side_spans(first, postings, cands)
+    48-77); a SpanGap contributes start = prev_end, end = prev_end + width
+    (GapSpans.skipToPosition)."""
+    s0, e0, _w0 = _span_side_spans(node.clauses[0], postings, cands)
     if not len(s0):
         return (np.empty(0, np.int64),) * 3
     starts = s0
@@ -1478,8 +1445,8 @@ def _near_spans_chain(node: SpanNearSpansQ, postings: dict,
     width = np.zeros(len(s0), dtype=np.int64)
     alive = np.ones(len(s0), dtype=bool)
     for c in node.clauses[1:]:
-        if isinstance(c, tuple) and c and c[0] == "gap":
-            q_end = q_end + int(c[1])
+        if isinstance(c, SpanGap):
+            q_end = q_end + int(c.width)
             continue
         cs, ce, _cw = _span_side_spans(c, postings, cands)
         if not len(cs):
@@ -1495,7 +1462,7 @@ def _near_spans_chain(node: SpanNearSpansQ, postings: dict,
     return starts[good], q_end[good], width[good]
 
 
-def _near_spans_unordered_freqs(node: SpanNearSpansQ, postings: dict,
+def _near_spans_unordered_freqs(node: SpanNearQ, postings: dict,
                                 cands: np.ndarray) -> np.ndarray:
     """NearSpansUnordered over span CLAUSES, state-free: states are the
     merged clause spans in (start, end) pop order up to (and including)
@@ -1555,54 +1522,64 @@ def _near_spans_unordered_freqs(node: SpanNearSpansQ, postings: dict,
     return acc
 
 
-def _eval_span_near_spans(node: SpanNearSpansQ, postings: dict,
-                          ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """General SpanNearQuery over span clauses (see the plan node's
-    docstring); ordered folds 1/(1+matchWidth), unordered 1/(1+width())
-    per accepted state, float32 in start order (SpanScorer.java:106)."""
-    docs = _span_side_docs(node, postings)
-    if docs is None or not len(docs):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    cands = docs
-    if not node.in_order:
-        freqs = _near_spans_unordered_freqs(node, postings, cands)
-        norms = np.zeros(len(cands), dtype=np.uint8)
-        for t in node.terms:
-            tp = postings.get(t)
-            if tp is None or not len(tp.gids):
-                continue
-            loc = np.minimum(np.searchsorted(tp.gids, cands),
-                             len(tp.gids) - 1)
-            pres = tp.gids[loc] == cands
-            norms[pres] = tp.norms[loc[pres]]
-        return _score_positional(node, cands, freqs, norms, ctx)
-    st, en, width = _near_spans_chain(node, postings, cands)
-    freqs = np.zeros(len(cands), dtype=np.float32)
-    if len(st):
-        w = (1.0 / (1.0 + width.astype(np.float64))).astype(np.float32)
-        np.add.at(freqs, st >> _POS_SHIFT, w)
+def _fold_widths(starts: np.ndarray, widths: np.ndarray,
+                 n_cands: int) -> np.ndarray:
+    """Per-candidate span freq: float32 1/(1+width) per accepted span,
+    accumulated in start order (SpanScorer.java:106 — ``freq`` is a
+    float, so the sum is float32 step-wise); the weight is computed in
+    double then narrowed once."""
+    freqs = np.zeros(n_cands, dtype=np.float32)
+    if len(starts):
+        w = (1.0 / (1.0 + widths.astype(np.float64))).astype(np.float32)
+        np.add.at(freqs, starts >> _POS_SHIFT, w)
+    return freqs
+
+
+def _doc_norms(terms, postings: dict, cands: np.ndarray) -> np.ndarray:
+    """Per-candidate norm byte from any present term (identical per doc
+    within a field)."""
     norms = np.zeros(len(cands), dtype=np.uint8)
-    for t in node.terms:
+    for t in terms:
         tp = postings.get(t)
         if tp is None or not len(tp.gids):
             continue
         loc = np.minimum(np.searchsorted(tp.gids, cands), len(tp.gids) - 1)
         pres = tp.gids[loc] == cands
         norms[pres] = tp.norms[loc[pres]]
-    return _score_positional(node, cands, freqs, norms, ctx)
+    return norms
 
 
-def _eval_span_not_spans(node: SpanNotSpansQ, postings: dict,
-                         ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """General SpanNotQuery (FilterSpans.accept replay, SpanNotQuery.java:
+def _eval_span_near(node: SpanNearQ, postings: dict,
+                    ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
+    """SpanNearQuery (see the plan node's docstring): candidates = the
+    clauses' conjunction (ConjunctionSpans); ordered folds
+    1/(1+matchWidth), unordered 1/(1+width()) per accepted state."""
+    cands = _near_docs(node, postings)
+    if cands is None:
+        return np.empty(0, np.int64), np.empty(0, np.float32)
+    if node.in_order:
+        st, _en, width = _near_spans_chain(node, postings, cands)
+        freqs = _fold_widths(st, width, len(cands))
+    else:
+        if len(set(node.terms)) != len(node.terms):
+            raise NotImplementedError(
+                "SpanNearQ(in_order=False) requires distinct terms"
+            )
+        freqs = _near_spans_unordered_freqs(node, postings, cands)
+    return _score_positional(node, cands, freqs,
+                             _doc_norms(node.terms, postings, cands), ctx)
+
+
+def _eval_span_not(node: SpanNotQ, postings: dict,
+                   ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
+    """SpanNotQuery (FilterSpans.accept replay, SpanNotQuery.java:
     110-158): include spans survive unless the first exclude span with
     end > include.start − pre has start < include.end + post. Candidates
     come from the include side alone; with no exclude spans in a doc the
     include passes through untouched (getSpans null handling)."""
-    docs = _span_side_docs(node.include, postings)
-    if docs is None or not len(docs):
+    cands = _span_side_docs(node.include, postings)
+    if cands is None or not len(cands):
         return np.empty(0, np.int64), np.empty(0, np.float32)
-    cands = docs
     i_s, i_e, i_w = _span_side_spans(node.include, postings, cands)
     if not len(i_s):
         return np.empty(0, np.int64), np.empty(0, np.float32)
@@ -1630,19 +1607,10 @@ def _eval_span_not_spans(node: SpanNotSpansQ, postings: dict,
             same = (e_e[jc] >> _POS_SHIFT) == (i_s >> _POS_SHIFT)
             overlapping = ok & same & (e_s[jc] < i_e + int(node.post))
             keep = ~overlapping
-    freqs = np.zeros(len(cands), dtype=np.float32)
-    if keep.any():
-        w = (1.0 / (1.0 + i_w[keep].astype(np.float64))).astype(np.float32)
-        np.add.at(freqs, i_s[keep] >> _POS_SHIFT, w)
-    norms = np.zeros(len(cands), dtype=np.uint8)
-    for t in node.include_terms:
-        tp = postings.get(t)
-        if tp is None or not len(tp.gids):
-            continue
-        loc = np.minimum(np.searchsorted(tp.gids, cands), len(tp.gids) - 1)
-        pres = tp.gids[loc] == cands
-        norms[pres] = tp.norms[loc[pres]]
-    return _score_positional(node, cands, freqs, norms, ctx)
+    freqs = _fold_widths(i_s[keep], i_w[keep], len(cands))
+    return _score_positional(node, cands, freqs,
+                             _doc_norms(node.include_terms, postings, cands),
+                             ctx)
 
 
 def _eval_span_contain(node, postings: dict,
@@ -1677,160 +1645,9 @@ def _eval_span_contain(node, postings: dict,
         acc = ok & ((b_e[jc] >> _POS_SHIFT) == (l_e >> _POS_SHIFT)) \
             & (b_s[jc] <= l_s)
         emit_keys, emit_w = l_s[acc], l_w[acc]
-    freqs = np.zeros(len(cands), dtype=np.float32)
-    if len(emit_keys):
-        w = (1.0 / (1.0 + emit_w.astype(np.float64))).astype(np.float32)
-        np.add.at(freqs, emit_keys >> _POS_SHIFT, w)
-    # per-candidate field norms from any present term (identical per doc)
-    norms = np.zeros(len(cands), dtype=np.uint8)
-    for t in node.terms:
-        tp = postings.get(t)
-        if tp is None or not len(tp.gids):
-            continue
-        loc = np.minimum(np.searchsorted(tp.gids, cands), len(tp.gids) - 1)
-        pres = tp.gids[loc] == cands
-        norms[pres] = tp.norms[loc[pres]]
-    return _score_positional(node, cands, freqs, norms, ctx)
-
-
-def _eval_span_not(node: SpanNotQ, postings: dict,
-                   ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanNotQuery over term spans: include positions with no exclude
-    position in [p-pre, p+post] (SpanNotQuery.java:63-71); the exclude side
-    contributes no stats (COMPLETE_NO_SCORES). With the exclude term absent
-    every include span survives, so freq degrades to the plain tf."""
-    tp = postings.get(node.include)
-    if tp is None or not len(tp.gids):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    idx = np.arange(len(tp.gids), dtype=np.int64)
-    pos, cand = _gather_positions(tp, idx)
-    keys = (cand << _POS_SHIFT) + pos + _POS_PAD
-    te = postings.get(node.exclude)
-    if te is not None and len(te.gids):
-        # exclude positions in the include candidates' (cand, pos) key space
-        eidx = np.minimum(np.searchsorted(te.gids, tp.gids), len(te.gids) - 1)
-        pres = te.gids[eidx] == tp.gids
-        if pres.any():
-            cand_ids = np.nonzero(pres)[0]
-            epos, ecand = _gather_positions(te, eidx[pres])
-            ekeys = (cand_ids[ecand] << _POS_SHIFT) + epos + _POS_PAD
-            # _POS_PAD (2^20) keeps [key-pre, key+post] inside one cand
-            lo = np.searchsorted(ekeys, keys - int(node.pre))
-            hi = np.searchsorted(ekeys, keys + int(node.post), side="right")
-            keys = keys[hi == lo]
-            cand = keys >> _POS_SHIFT
-    freqs = np.bincount(cand, minlength=len(tp.gids))
-    return _score_positional(node, tp.gids, freqs, tp.norms, ctx)
-
-
-def span_near_freqs(tps: "list[TermPostings]", idxs: "list[np.ndarray]",
-                    slop: int) -> np.ndarray:
-    """Per-candidate NearSpansOrdered freq (float32), vectorized.
-
-    For every first-term position p0: chain q_i = first position of term i
-    at or after q_{i-1}+1 (NearSpansOrdered.stretchToOrder's forward-only
-    advancePosition, state-free because targets are monotone in p0);
-    width = q_last − p0 − (n−1); accepted spans (width ≤ slop) each add
-    float32 1/(1+width) in match order (SpanScorer.java:106 — ``freq`` is
-    a float, so the accumulation is float32 step-wise)."""
-    ncand = len(idxs[0])
-    pos0, cand0 = _gather_positions(tps[0], idxs[0])
-    keys = (cand0 << _POS_SHIFT) + pos0 + _POS_PAD
-    q = keys.copy()
-    alive = np.ones(len(keys), dtype=bool)
-    for tp, idx in zip(tps[1:], idxs[1:]):
-        p2, c2 = _gather_positions(tp, idx)
-        k2 = (c2 << _POS_SHIFT) + p2 + _POS_PAD
-        if not len(k2):
-            return np.zeros(ncand, np.float32)
-        loc = np.searchsorted(k2, q + 1)
-        ok = loc < len(k2)
-        loc_c = np.minimum(loc, len(k2) - 1)
-        alive &= ok & ((k2[loc_c] >> _POS_SHIFT) == (keys >> _POS_SHIFT))
-        q = np.where(alive, k2[loc_c], q)
-    width = (q - keys) - (len(tps) - 1)
-    good = alive & (width <= slop)
-    acc = np.zeros(ncand, dtype=np.float32)
-    if good.any():
-        # weight computed in double then narrowed once (the oracle's
-        # CAST(1.0/(1.0+width) AS FLOAT))
-        w = (1.0 / (1.0 + width[good].astype(np.float64))).astype(np.float32)
-        # keys ascend, so np.add.at applies per-candidate adds in match
-        # order with float32 intermediate rounding — SpanScorer's loop
-        np.add.at(acc, keys[good] >> _POS_SHIFT, w)
-    return acc
-
-
-def span_near_unordered_freqs(tps: "list[TermPostings]",
-                              idxs: "list[np.ndarray]",
-                              slop: int) -> np.ndarray:
-    """Per-candidate NearSpansUnordered freq (float32), vectorized.
-
-    The priority-queue window (NearSpansUnordered.java:41-93) consumes
-    per-doc positions in globally sorted order, so the visited states are
-    the merged positions up to (and including) the first term-final one;
-    at each state minStart = that merged position, every term's current
-    position = its first position >= minStart, and the running
-    maxEndPosition = 1 + max of those currents (cursors only move
-    forward). Match iff maxEnd - minStart - n <= slop (atMatch,
-    totalSpanLength = n for width-1 term spans); accepted states fold
-    1/(1 + WIDTH) as float32 in state order where width = maxEnd -
-    minStart — NearSpansUnordered.width() does NOT subtract
-    totalSpanLength, only the slop test does (NearSpansUnordered.java
-    width() vs atMatch; SpanScorer.java:106). Distinct terms assumed.
-    """
-    ncand = len(idxs[0])
-    n = len(tps)
-    keys_per_term = []
-    stop = None  # per-candidate min over terms of the term's last position
-    for tp, idx in zip(tps, idxs):
-        pos, cand = _gather_positions(tp, idx)
-        k = (cand << _POS_SHIFT) + pos + _POS_PAD
-        keys_per_term.append(k)
-        # last position of this term per candidate (pos_starts boundaries)
-        starts = tp.pos_starts
-        last = tp.pos_flat[starts[idx + 1] - 1]
-        stop = last if stop is None else np.minimum(stop, last)
-    merged = np.concatenate(keys_per_term)
-    merged.sort()
-    mc = merged >> _POS_SHIFT
-    # states: merged positions at or before the candidate's stop position
-    states = merged[merged <= (mc << _POS_SHIFT) + stop[mc] + _POS_PAD]
-    if not len(states):
-        return np.zeros(ncand, np.float32)
-    maxcur = None
-    for k in keys_per_term:
-        # first position of this term >= minStart — exists for every
-        # state because states stop at the earliest term-final position
-        cur = k[np.searchsorted(k, states)]
-        maxcur = cur if maxcur is None else np.maximum(maxcur, cur)
-    span_w = (maxcur - states) + 1          # width() = maxEnd - minStart
-    good = (span_w - n) <= slop             # atMatch subtracts totalSpanLength
-    acc = np.zeros(ncand, dtype=np.float32)
-    if good.any():
-        w = (1.0 / (1.0 + span_w[good].astype(np.float64))).astype(np.float32)
-        np.add.at(acc, states[good] >> _POS_SHIFT, w)
-    return acc
-
-
-def _eval_span_near(node: SpanNearQ, postings: dict,
-                    ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanNearQuery: candidates = the terms' conjunction
-    (ConjunctionSpans); freq from the NearSpansOrdered chain (in_order)
-    or the NearSpansUnordered window; weight = summed member idfs."""
-    c = _positional_candidates(node, postings)
-    if c is None:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    tps, gids, idxs = c
-    if getattr(node, "in_order", True):
-        freqs = span_near_freqs(tps, idxs, node.slop)
-    else:
-        if len(set(node.terms)) != len(node.terms):
-            raise ValueError(
-                "SpanNearQ(in_order=False) requires distinct terms"
-            )
-        freqs = span_near_unordered_freqs(tps, idxs, node.slop)
-    return _score_positional(node, gids, freqs, tps[0].norms[idxs[0]], ctx)
+    freqs = _fold_widths(emit_keys, emit_w, len(cands))
+    return _score_positional(node, cands, freqs,
+                             _doc_norms(node.terms, postings, cands), ctx)
 
 
 def _eval_span_payload_check(node: SpanPayloadCheckQ, postings: dict,
@@ -1876,7 +1693,8 @@ def span_near_payload_freqs(tps: "list[TermPostings]",
                             idxs: "list[np.ndarray]", slop: int,
                             payloads: "tuple[int, ...]",
                             cmp=np.equal) -> np.ndarray:
-    """:func:`span_near_freqs` with a per-position payload equality check:
+    """The ordered SpanNearQ chain over term spans (each term at its first
+    position after the previous one) with a per-position payload check:
     the greedy first-at-or-after chain picks each span's positions, and a
     span is accepted iff width <= slop AND every picked occurrence's
     payload equals its ``payloads[i]`` (SpanPayloadCheckQuery's
@@ -1981,56 +1799,16 @@ def _plan_upper_bound(node, term_maxes: dict, ctx: ScoreCtx) -> float:
         # unless the child provably matches nothing
         b = _plan_upper_bound(node.child, term_maxes, ctx)
         return b if b == float("-inf") else float("inf")
-    if isinstance(node, (SpanFirstQ, SpanNotQ, SpanPositionRangeQ)):
-        # span freq <= the include term's tf, so its max score bounds ours
-        if node.terms[0] not in term_maxes:
-            return float("-inf")
-        return float("inf")
-    if isinstance(node, SpanNotSpansQ):
-        sub = node.include
-        req = {sub} if isinstance(sub, str) else (
-            set() if isinstance(sub, SpanOrQ) else set(sub.terms)
-        )
-        if any(t not in term_maxes for t in req):
-            return float("-inf")
-        if isinstance(sub, SpanOrQ) and not any(
-            t in term_maxes for t in sub.terms
+    if isinstance(node, _SPANS):
+        # no cheap bound for span freq; impossible when a doc in range
+        # cannot hold a needed term
+        req, one_of = _span_needs(node)
+        if any(t not in term_maxes for t in req) or not all(
+            any(t in term_maxes for t in alts) for alts in one_of
         ):
             return float("-inf")
         return float("inf")
-    if isinstance(node, SpanNearSpansQ):
-        for sub in node.clauses:
-            if isinstance(sub, tuple) and sub and sub[0] == "gap":
-                continue
-            req = {sub} if isinstance(sub, str) else (
-                set() if isinstance(sub, SpanOrQ) else set(sub.terms)
-            )
-            if any(t not in term_maxes for t in req):
-                return float("-inf")
-            if isinstance(sub, SpanOrQ) and not any(
-                t in term_maxes for t in sub.terms
-            ):
-                return float("-inf")
-        return float("inf")
-    if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-        # both sides must be able to match the doc
-        for sub in (node.big, node.little):
-            req = {sub} if isinstance(sub, str) else (
-                set() if isinstance(sub, SpanOrQ) else set(sub.terms)
-            )
-            if any(t not in term_maxes for t in req):
-                return float("-inf")
-            if isinstance(sub, SpanOrQ) and not any(
-                t in term_maxes for t in sub.terms
-            ):
-                return float("-inf")
-        return float("inf")
-    if isinstance(node, SpanOrQ):
-        if not any(t in term_maxes for t in node.terms):
-            return float("-inf")
-        return float("inf")
-    if isinstance(node, (PhraseQ, NearQ, SloppyQ, SpanNearQ,
-                         SpanPayloadCheckQ)):
+    if isinstance(node, (PhraseQ, NearQ, SloppyQ)):
         if any(t not in term_maxes for t in node.terms):
             return float("-inf")
         # no cheap bound for phrase/proximity freq (the reference gives
@@ -2191,53 +1969,43 @@ def _term_block_slack(node, term_maxes: dict) -> "dict[str, float] | None":
     }
 
 
+def _span_needs(src) -> "tuple[set, list[set]]":
+    """What every match of a span source needs in its doc: the terms it
+    always contains, and sets of terms of which it contains at least one
+    (a SpanOrQ's alternatives). A SpanNotQ needs only its include side."""
+    if isinstance(src, str):
+        return {src}, []
+    if isinstance(src, SpanGap):
+        return set(), []
+    if isinstance(src, SpanOrQ):
+        alts = set(src.terms)
+        return (alts, []) if len(alts) == 1 else (set(), [alts])
+    if isinstance(src, SpanNotQ):
+        return _span_needs(src.include)
+    parts = (src.clauses if isinstance(src, SpanNearQ)
+             else (src.big, src.little)
+             if isinstance(src, (SpanContainingQ, SpanWithinQ))
+             else src.terms)  # term-span nodes and SpanPayloadCheckQ
+    req: set = set()
+    one_of: list = []
+    for part in parts:
+        r, o = _span_needs(part)
+        req |= r
+        one_of += o
+    return req, one_of
+
+
 def _req_terms(node) -> set:
     """Terms that EVERY matching doc must contain (conjunctive closure)."""
     if isinstance(node, TermQ):
         return {node.term}
-    if isinstance(node, (PhraseQ, NearQ, SloppyQ, SpanNearQ,
-                         SpanPayloadCheckQ)):
+    if isinstance(node, (PhraseQ, NearQ, SloppyQ)):
         return set(node.terms)
     if isinstance(node, MultiPhraseQ):
         # only single-alternative slots are required in every match
         return {slot[0] for slot in node.termss if len(slot) == 1}
-    if isinstance(node, (SpanFirstQ, SpanNotQ, SpanPositionRangeQ)):
-        return {node.terms[0]}
-    if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-        out: set = set()
-        for sub in (node.big, node.little):
-            if isinstance(sub, str):
-                out.add(sub)
-            elif isinstance(sub, SpanNearQ):
-                out |= set(sub.terms)
-            elif len(sub.terms) == 1:
-                out |= set(sub.terms)
-        return out
-    if isinstance(node, SpanNotSpansQ):
-        sub = node.include
-        if isinstance(sub, str):
-            return {sub}
-        if isinstance(sub, (SpanNearQ,)):
-            return set(sub.terms)
-        if isinstance(sub, SpanNearSpansQ):
-            return _req_terms(sub)
-        return set(sub.terms) if len(sub.terms) == 1 else set()
-    if isinstance(node, SpanNearSpansQ):
-        out: set = set()
-        for sub in node.clauses:
-            if isinstance(sub, str):
-                out.add(sub)
-            elif isinstance(sub, tuple):
-                continue
-            elif isinstance(sub, SpanNearQ):
-                out |= set(sub.terms)
-            elif isinstance(sub, SpanNearSpansQ):
-                out |= _req_terms(sub)
-            elif len(sub.terms) == 1:
-                out |= set(sub.terms)
-        return out
-    if isinstance(node, SpanOrQ):
-        return set(node.terms) if len(node.terms) == 1 else set()
+    if isinstance(node, _SPANS):
+        return _span_needs(node)[0]
     if isinstance(node, BoolQ):
         out: set = set()
         for c in node.must:
@@ -2382,36 +2150,13 @@ def _block_keep_filter(pdf: pd.DataFrame,
 
 def _set_refs(node) -> "list[TermSetRefQ]":
     """All TermSetRefQ nodes in a rewritten tree (dedup, stable order)."""
-    out: dict = {}
-
-    def walk(n):
-        if isinstance(n, TermSetRefQ):
-            out[n] = None
-        elif isinstance(n, BoolQ):
-            for c in n.must + n.should + n.must_not + n.filter:
-                walk(c)
-        elif isinstance(n, DisMaxQ):
-            for c in n.clauses:
-                walk(c)
-        elif isinstance(n, (ConstScoreQ, BoostQ, FunctionScoreQ)):
-            walk(n.child)
-
-    walk(node)
-    return list(out)
+    return list(dict.fromkeys(
+        n for n in subtree(node) if isinstance(n, TermSetRefQ)
+    ))
 
 
 def _contains_matchall(node) -> bool:
-    if isinstance(node, MatchAllQ):
-        return True
-    if isinstance(node, BoolQ):
-        return any(
-            _contains_matchall(c) for c in node.must + node.should + node.must_not
-        )
-    if isinstance(node, DisMaxQ):
-        return any(_contains_matchall(c) for c in node.clauses)
-    if isinstance(node, (ConstScoreQ, BoostQ, FunctionScoreQ)):
-        return _contains_matchall(node.child)
-    return False
+    return any(isinstance(n, MatchAllQ) for n in subtree(node))
 
 
 def _is_ma_clause(c) -> bool:
@@ -2941,8 +2686,7 @@ class Searcher:
         if node is None or isinstance(
             node,
             (TermQ, PhraseQ, MultiPhraseQ, NearQ, SloppyQ, SynonymQ,
-             SpanFirstQ, SpanNotQ, SpanOrQ, SpanNearQ, SpanPayloadCheckQ,
-             SpanPositionRangeQ,
+             SpanFirstQ, SpanOrQ, SpanPayloadCheckQ, SpanPositionRangeQ,
              IntervalQ, MatchAllQ, TermInSetQ, TermSetRefQ,
              BlendedQ, DocValuesRangeQ),
         ):
@@ -2967,46 +2711,29 @@ class Searcher:
             if len(terms) == 1:
                 return TermQ(terms[0])
             return SpanOrQ(terms=tuple(terms))
-        if isinstance(node, SpanNearSpansQ):
-            def _rw_clause(c):
-                if isinstance(c, SpanMultiQ):
-                    return self.rewrite(c)
-                return c
-            cls = tuple(_rw_clause(c) for c in node.clauses)
-            if any(isinstance(c, BoolQ) for c in cls):
+        if isinstance(node, SpanNearQ):
+            cls = tuple(self._rewrite_span_side(c) for c in node.clauses)
+            if None in cls:
                 return BoolQ()  # an empty clause matches nothing
-            cls = tuple(c.term if isinstance(c, TermQ) else c for c in cls)
-            if cls != node.clauses:
-                return SpanNearSpansQ(clauses=cls, slop=node.slop,
-                                      in_order=node.in_order)
-            return node
-        if isinstance(node, SpanNotSpansQ):
-            inc = (self.rewrite(node.include)
-                   if isinstance(node.include, SpanMultiQ) else node.include)
-            exc = (self.rewrite(node.exclude)
-                   if isinstance(node.exclude, SpanMultiQ) else node.exclude)
-            if isinstance(inc, BoolQ):
+            return node if cls == node.clauses else replace(node, clauses=cls)
+        if isinstance(node, SpanNotQ):
+            inc = self._rewrite_span_side(node.include)
+            exc = self._rewrite_span_side(node.exclude)
+            if inc is None:
                 return BoolQ()          # empty include matches nothing
-            inc = inc.term if isinstance(inc, TermQ) else inc
-            if isinstance(exc, BoolQ):  # empty exclude: include unfiltered
+            if exc is None:             # empty exclude: include unfiltered
                 exc = SpanOrQ(terms=())
-            exc = exc.term if isinstance(exc, TermQ) else exc
-            if inc is not node.include or exc is not node.exclude:
-                return SpanNotSpansQ(include=inc, exclude=exc,
-                                     pre=node.pre, post=node.post)
-            return node
+            if inc == node.include and exc == node.exclude:
+                return node
+            return replace(node, include=inc, exclude=exc)
         if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-            big = (self.rewrite(node.big)
-                   if isinstance(node.big, SpanMultiQ) else node.big)
-            little = (self.rewrite(node.little)
-                      if isinstance(node.little, SpanMultiQ) else node.little)
-            if isinstance(big, BoolQ) or isinstance(little, BoolQ):
+            big = self._rewrite_span_side(node.big)
+            little = self._rewrite_span_side(node.little)
+            if big is None or little is None:
                 return BoolQ()  # an empty side matches nothing
-            big = big.term if isinstance(big, TermQ) else big
-            little = little.term if isinstance(little, TermQ) else little
-            if big is not node.big or little is not node.little:
-                return type(node)(big=big, little=little)
-            return node
+            if big == node.big and little == node.little:
+                return node
+            return type(node)(big=big, little=little)
         if isinstance(node, FuzzyQ):
             pairs = self._fuzzy_candidates(node)
             if not pairs:
@@ -3089,6 +2816,17 @@ class Searcher:
                 self.rewrite(node.child), np.float32(node.boost)
             )
         raise TypeError(f"unknown node {node!r}")
+
+    def _rewrite_span_side(self, c):
+        """A span clause or side after rewrite: SpanMultiQ expands against
+        the dictionary (nested near clauses included) to a term or a
+        SpanOrQ; None when the expansion is empty."""
+        if isinstance(c, (str, SpanGap)):
+            return c
+        c = self.rewrite(c)
+        if isinstance(c, BoolQ):
+            return None
+        return c.term if isinstance(c, TermQ) else c
 
     def _distribute_boost(self, node, boost: "np.float32"):
         """BoostQuery over ANY clause: Lucene propagates boost through
@@ -3198,12 +2936,7 @@ class Searcher:
                 walk(n.child)
                 if isinstance(n.child, TermQ):
                     base = weights.get(n.child.term, np.float32(0.0))
-                elif isinstance(n.child, (PhraseQ, MultiPhraseQ, NearQ, SloppyQ,
-                                          SpanNearQ, SpanFirstQ, SpanNotQ,
-                                          SpanOrQ, SpanPayloadCheckQ,
-                                          SpanPositionRangeQ,
-                                          SpanContainingQ, SpanWithinQ,
-                                          IntervalQ, IntervalExprQ)):
+                elif isinstance(n.child, _PHRASE_LIKE):
                     base = phrase_weights.get(n.child, np.float32(0.0))
                 elif isinstance(n.child, SynonymQ):
                     base = syn_weights.get(n.child, np.float32(0.0))
@@ -3224,84 +2957,34 @@ class Searcher:
                 # function's w (1.0; BoostQ folds multiply the raw boost) —
                 # IntervalQuery never consults searcher.getSimilarity()
                 phrase_weights[n] = np.float32(1.0)
-            elif isinstance(n, (PhraseQ, MultiPhraseQ, NearQ, SloppyQ,
-                                SpanNearQ, SpanPayloadCheckQ)):
+            elif isinstance(n, _PHRASE_LIKE):
+                # for MultiPhraseQ ``terms`` flattens termArrays in order
+                # with duplicates kept — one idf per array entry, exactly
+                # MultiPhraseWeight.getStats. A span weight's getTermStates
+                # merges its clauses' term maps (a Map keyed by Term), so a
+                # repeated term counts ONCE (SpanWeight, SpanContainQuery.
+                # java:93-96), and SpanNotQuery keeps only the include
+                # side's (extractTermStates, SpanNotQuery.java:97-99)
+                ts = n.terms
+                if isinstance(n, _SPANS):
+                    ts = dict.fromkeys(n.include_terms
+                                       if isinstance(n, SpanNotQ) else ts)
                 if aux_of is not None:
                     # SimilarityBase: weight slot = boost (1.0 here; BoostQ
-                    # folds multiply it); one aux per present term state,
-                    # duplicates kept — SimilarityBase.scorer builds one
-                    # BasicSimScorer per TermStatistics entry
+                    # folds multiply it); one aux per present term state —
+                    # SimilarityBase.scorer builds one BasicSimScorer per
+                    # TermStatistics entry
                     phrase_weights[n] = np.float32(1.0)
                     phrase_aux[n] = tuple(
-                        term_aux(t) for t in n.terms if t in tstats
+                        term_aux(t) for t in ts if t in tstats
                     )
                     return
                 # idf summed as double over float per-term idfs, cast to
-                # float; for MultiPhraseQ ``terms`` flattens termArrays in
-                # order with duplicates kept — one idf per array entry,
-                # exactly MultiPhraseWeight.getStats
-                s = sum(
+                # float
+                phrase_weights[n] = np.float32(sum(
                     float(_idf(tstats[t][0], doc_count_of(t)))
-                    for t in n.terms if t in tstats
-                )
-                phrase_weights[n] = np.float32(s)
-            elif isinstance(n, SpanNotSpansQ):
-                # only the include side's term states score
-                # (SpanNotQuery.extractTermStates)
-                uniq = list(dict.fromkeys(n.include_terms))
-                if aux_of is not None:
-                    phrase_weights[n] = np.float32(1.0)
-                    phrase_aux[n] = tuple(
-                        term_aux(t) for t in uniq if t in tstats
-                    )
-                else:
-                    phrase_weights[n] = np.float32(sum(
-                        float(_idf(tstats[t][0], doc_count_of(t)))
-                        for t in uniq if t in tstats
-                    ))
-            elif isinstance(n, (SpanContainingQ, SpanWithinQ,
-                                SpanNearSpansQ)):
-                # getTermStates merges the clauses' term maps (a Map keyed
-                # by Term), so duplicate terms count ONCE in the summed
-                # idf (SpanContainQuery.java:93-96 / SpanWeight)
-                uniq = list(dict.fromkeys(n.terms))
-                if aux_of is not None:
-                    phrase_weights[n] = np.float32(1.0)
-                    phrase_aux[n] = tuple(
-                        term_aux(t) for t in uniq if t in tstats
-                    )
-                else:
-                    phrase_weights[n] = np.float32(sum(
-                        float(_idf(tstats[t][0], doc_count_of(t)))
-                        for t in uniq if t in tstats
-                    ))
-            elif isinstance(n, (SpanFirstQ, SpanNotQ, SpanPositionRangeQ)):
-                # SpanWeight.buildSimWeight over the match side's term
-                # states only — the exclude side scores nothing
-                t = n.terms[0]
-                if aux_of is not None:
-                    phrase_weights[n] = np.float32(1.0)
-                    phrase_aux[n] = (
-                        (term_aux(t),) if t in tstats else ()
-                    )
-                    return
-                phrase_weights[n] = (
-                    _idf(tstats[t][0], doc_count_of(t))
-                    if t in tstats else np.float32(0.0)
-                )
-            elif isinstance(n, SpanOrQ):
-                if aux_of is not None:
-                    phrase_weights[n] = np.float32(1.0)
-                    phrase_aux[n] = tuple(
-                        term_aux(t) for t in n.terms if t in tstats
-                    )
-                    return
-                # idf per member term state, summed (no df blending)
-                s = sum(
-                    float(_idf(tstats[t][0], doc_count_of(t)))
-                    for t in n.terms if t in tstats
-                )
-                phrase_weights[n] = np.float32(s)
+                    for t in ts if t in tstats
+                ))
             elif isinstance(n, SynonymQ):
                 # blended stats: df = max over members (SynonymQuery.java)
                 dfs = [tstats[t][0] for t in n.terms if t in tstats]
@@ -3324,14 +3007,9 @@ class Searcher:
                 )
                 if aux_of is not None:
                     blended_aux[n] = pseudo_aux(n.terms)
-            elif isinstance(n, BoolQ):
-                for c in n.must + n.should + n.must_not:
+            else:
+                for c in children(n):
                     walk(c)
-            elif isinstance(n, DisMaxQ):
-                for c in n.clauses:
-                    walk(c)
-            elif isinstance(n, (ConstScoreQ, FunctionScoreQ)):
-                walk(n.child)
 
         walk(node)
         aux = None
@@ -4341,7 +4019,8 @@ class Searcher:
             "bucket", (F.col("gid") / width).cast("long")
         )
 
-        def kernel_cg(key, pdf: pd.DataFrame, dvpdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel_cg(key: tuple, pdf: pd.DataFrame,
+                      dvpdf: pd.DataFrame) -> pd.DataFrame:
             return kernel_body(
                 key, pdf, np.unique(dvpdf["gid"].to_numpy(np.int64))
             )
@@ -5327,33 +5006,10 @@ class Searcher:
 
 
 def _has_payload_check(node) -> bool:
-    if isinstance(node, SpanPayloadCheckQ):
-        return True
-    if isinstance(node, BoolQ):
-        return any(
-            _has_payload_check(c)
-            for c in node.must + node.should + node.must_not
-        )
-    if isinstance(node, DisMaxQ):
-        return any(_has_payload_check(c) for c in node.clauses)
-    if isinstance(node, (ConstScoreQ, BoostQ, FunctionScoreQ)):
-        return _has_payload_check(node.child)
-    return False
+    return any(isinstance(n, SpanPayloadCheckQ) for n in subtree(node))
 
 
 def _has_phrase(node) -> bool:
     # SpanOrQ needs no positions: width-0 spans make freq == Σ member tfs
-    if isinstance(node, (PhraseQ, MultiPhraseQ, NearQ, SloppyQ,
-                         SpanFirstQ, SpanNotQ, SpanNearQ,
-                         SpanPayloadCheckQ, SpanPositionRangeQ,
-                         SpanContainingQ, SpanWithinQ, SpanNearSpansQ,
-                         SpanNotSpansQ,
-                         IntervalQ, IntervalExprQ)):
-        return True
-    if isinstance(node, BoolQ):
-        return any(_has_phrase(c) for c in node.must + node.should + node.must_not)
-    if isinstance(node, DisMaxQ):
-        return any(_has_phrase(c) for c in node.clauses)
-    if isinstance(node, (ConstScoreQ, BoostQ, FunctionScoreQ)):
-        return _has_phrase(node.child)
-    return False
+    return any(isinstance(n, _PHRASE_LIKE) and not isinstance(n, SpanOrQ)
+               for n in subtree(node))

@@ -856,7 +856,7 @@ nf AS (
 def span_near_or_topk_sql(or_terms: "list[str]", term2: str, slop: int,
                           k: int = 10) -> str:
     """General NearSpansOrdered with a SpanOr first clause
-    (SpanNearSpansQ((SpanOrQ(or_terms), term2), slop)): first-clause
+    (SpanNearQ((SpanOrQ(or_terms), term2), slop)): first-clause
     spans = the union of the or-terms' positions; for each, the second
     clause advances to its first position >= end (= p0 + 1); matchWidth =
     that position − (p0 + 1); accepted matches fold 1/(1+width) float32
@@ -890,7 +890,7 @@ nf AS (
 def span_not_or_topk_sql(include_terms: "list[str]", exclude: str,
                          pre: int = 0, post: int = 0, k: int = 10) -> str:
     """General SpanNotQuery with a SpanOr include
-    (SpanNotSpansQ(SpanOrQ(include_terms), exclude, pre, post)): for
+    (SpanNotQ(SpanOrQ(include_terms), exclude, pre, post)): for
     width-0 include spans the FilterSpans window test reduces to "no
     exclude position in [p - pre, p + post]"; only the include side's
     idfs weigh in (SpanNotQuery.extractTermStates)."""

@@ -14,11 +14,12 @@ analyzer).
 
 from __future__ import annotations
 
+import functools
 import math
 import re as _re
 import struct as _struct
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields, replace
 
 from ..functions.analysis import analyze_batch
 from .fields import DEFAULT_FIELD, qualify
@@ -30,21 +31,40 @@ __all__ = [
     "BlendedQ", "FunctionScoreQ", "DocValuesRangeQ",
     "SpanFirstQ", "SpanNotQ", "SpanOrQ", "SpanNearQ", "SpanPayloadCheckQ",
     "SpanPositionRangeQ", "SpanContainingQ", "SpanWithinQ", "SpanMultiQ",
-    "SpanNearSpansQ", "SpanNotSpansQ",
+    "SpanGap",
     "IntervalQ",
     "IntervalExprQ",
     "parse_query", "parse_multi_field", "query_terms", "qualify_node",
+    "map_terms", "map_keys", "children", "subtree", "term_keys",
 ]
+
+# Every field that holds keys or child nodes says so once, in its metadata,
+# and one walk (children / term_keys / map_keys) reads it; every other
+# field is carried through as given. Kinds:
+TERM = "term"          # analyzed term keys; span clauses mix in child nodes
+PATTERN = "pattern"    # un-analyzed multi-term pattern keys (None = open)
+CHILD = "child"        # child query nodes
+INTERVAL = "interval"  # an interval source tree (plans/intervals.py)
+
+
+def _walked(kind: str, **kw):
+    return field(metadata={"walk": kind}, **kw)
+
+
+@functools.cache
+def _walk_fields(cls) -> tuple:
+    return tuple((f.name, f.metadata["walk"]) for f in fields(cls)
+                 if "walk" in f.metadata)
 
 
 @dataclass(frozen=True)
 class TermQ:
-    term: str
+    term: str = _walked(TERM)
 
 
 @dataclass(frozen=True)
 class PhraseQ:
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
     # relative positions of each term in the phrase (stopword holes kept)
     offsets: tuple[int, ...]
 
@@ -70,13 +90,13 @@ class MultiPhraseQ:
     per-slot structure lives in ``termss``.
     """
 
-    termss: tuple[tuple[str, ...], ...]
+    termss: tuple[tuple[str, ...], ...] = _walked(TERM)
     # query position of each slot (stopword holes kept), like PhraseQ
     offsets: tuple[int, ...]
 
     @property
     def terms(self) -> tuple[str, ...]:
-        return tuple(t for slot in self.termss for t in slot)
+        return term_keys(self)
 
 
 @dataclass(frozen=True)
@@ -89,7 +109,7 @@ class SpanFirstQ:
     freq = the accepted-position count; weight = the term's idf
     (SpanWeight.buildSimWeight over the match side's term states)."""
 
-    term: str
+    term: str = _walked(TERM)
     end: int
 
     @property
@@ -107,17 +127,13 @@ class SpanPositionRangeQ:
     span); weight = the match term's idf (SpanPositionCheckQuery wraps
     only the match side)."""
 
-    term: str
+    term: str = _walked(TERM)
     start: int
     end: int
 
     @property
     def terms(self) -> tuple[str, ...]:
         return (self.term,)
-
-
-def _span_sub_terms(sub) -> tuple[str, ...]:
-    return (sub,) if isinstance(sub, str) else tuple(sub.terms)
 
 
 @dataclass(frozen=True)
@@ -137,12 +153,12 @@ class SpanContainingQ:
     — all span sources whose emitted (start, end) sequences are
     monotone, which is what makes the cursor replay state-free."""
 
-    big: object
-    little: object
+    big: object = _walked(TERM)
+    little: object = _walked(TERM)
 
     @property
     def terms(self) -> tuple[str, ...]:
-        return _span_sub_terms(self.big) + _span_sub_terms(self.little)
+        return term_keys(self)
 
 
 @dataclass(frozen=True)
@@ -154,81 +170,12 @@ class SpanWithinQ:
     little.end; accepted iff that big's start <= little.start. freq folds
     1/(1+little.width); weight as in SpanContainingQ."""
 
-    big: object
-    little: object
+    big: object = _walked(TERM)
+    little: object = _walked(TERM)
 
     @property
     def terms(self) -> tuple[str, ...]:
-        return _span_sub_terms(self.big) + _span_sub_terms(self.little)
-
-
-@dataclass(frozen=True)
-class SpanNearSpansQ:
-    """SpanNearQuery(inOrder=true) over arbitrary span CLAUSES — the
-    general NearSpansOrdered (queries/spans/NearSpansOrdered.java:48-77):
-    each clause is a term (str), a SpanOrQ, an ordered SpanNearQ, a
-    nested SpanNearSpansQ, or a fixed-length gap ``("gap", n)``
-    (SpanNearQuery.Builder.addGap / GapSpans.skipToPosition).
-
-    stretchToOrder semantics replayed state-free: clause i advances to
-    its first span with start >= clause i-1's END; matchWidth sums the
-    GAPS (start_i − prev_end — sub-span internal widths do NOT count);
-    the match spans [clause_0.start, clause_last.end) and folds
-    1/(1+matchWidth) into freq per accepted match. Every supported
-    clause emits monotone (start, end) sequences, which is what makes
-    the reference's forward-only cursors equal one searchsorted per
-    clause. Sim weight = idf over the DISTINCT union of clause terms
-    (SpanWeight's Map<Term, TermStates>)."""
-
-    clauses: tuple
-    slop: int = 0
-    in_order: bool = True
-
-    def __post_init__(self):
-        if not self.in_order and any(
-            isinstance(c, tuple) and c and c[0] == "gap"
-            for c in self.clauses
-        ):
-            # SpanNearQuery.Builder: gaps only on ordered queries
-            raise ValueError("Gaps can only be added to ordered near queries")
-
-    @property
-    def terms(self) -> tuple[str, ...]:
-        out: list[str] = []
-        for c in self.clauses:
-            if isinstance(c, str):
-                out.append(c)
-            elif isinstance(c, tuple) and c and c[0] == "gap":
-                continue
-            else:
-                out.extend(c.terms)
-        return tuple(out)
-
-
-@dataclass(frozen=True)
-class SpanNotSpansQ:
-    """SpanNotQuery over span CLAUSES (queries/spans/SpanNotQuery.java
-    FilterSpans.accept, the general form of the term-level SpanNotQ):
-    include spans survive unless an exclude span overlaps the widened
-    window — replaying the reference cursor: advance exclude while
-    exclude.end <= include.start − pre; reject iff that exclude's start
-    < include.end + post. Only the include side's term states score
-    (extractTermStates, SpanNotQuery.java:97-99); freq folds
-    1/(1+include_width). Sides: term / SpanOrQ / ordered SpanNearQ /
-    SpanNearSpansQ."""
-
-    include: object
-    exclude: object
-    pre: int = 0
-    post: int = 0
-
-    @property
-    def terms(self) -> tuple[str, ...]:
-        return _span_sub_terms(self.include) + _span_sub_terms(self.exclude)
-
-    @property
-    def include_terms(self) -> tuple[str, ...]:
-        return _span_sub_terms(self.include)
+        return term_keys(self)
 
 
 @dataclass(frozen=True)
@@ -243,7 +190,7 @@ class SpanMultiQ:
     the reference's priority queue tie-breaks constant-boost terms
     lexicographically)."""
 
-    pattern: object
+    pattern: object = _walked(CHILD)
     top_terms: "int | None" = None
 
     @property
@@ -252,56 +199,85 @@ class SpanMultiQ:
 
 
 @dataclass(frozen=True)
-class SpanNotQ:
-    """SpanNotQuery over term spans (queries/spans/SpanNotQuery.java:63-71):
-    matches positions of ``include`` with no ``exclude`` position within
-    ``pre`` tokens before or ``post`` tokens after (exclude pos in
-    [p-pre, p+post]). Scoring uses ONLY the include side's term states
-    (SpanNotQuery.java:110-118 builds excludeWeight with
-    COMPLETE_NO_SCORES); freq = surviving-position count as float32."""
+class SpanGap:
+    """A fixed-width gap clause of an ordered :class:`SpanNearQ`
+    (SpanNearQuery.SpanGapQuery, added by SpanNearQuery.Builder.addGap):
+    it matches everywhere, spanning ``width`` positions right after the
+    previous clause's end (GapSpans.skipToPosition)."""
 
-    include: str
-    exclude: str
+    width: int
+
+
+@dataclass(frozen=True)
+class SpanNotQ:
+    """SpanNotQuery (queries/spans/SpanNotQuery.java, FilterSpans.accept):
+    include spans survive unless an exclude span overlaps the widened
+    window — replaying the reference cursor: advance exclude while
+    exclude.end <= include.start − pre; reject iff that exclude's start
+    < include.end + post. For term sides that is: no exclude position in
+    [p-pre, p+post]. Only the include side's term states score
+    (SpanNotQuery.java:97-118 builds excludeWeight with
+    COMPLETE_NO_SCORES); freq folds 1/(1+include_width). Sides: a term, a
+    SpanOrQ or an ordered SpanNearQ."""
+
+    include: object = _walked(TERM)
+    exclude: object = _walked(TERM)
     pre: int = 0
     post: int = 0
 
     @property
     def terms(self) -> tuple[str, ...]:
-        return (self.include, self.exclude)
+        return term_keys(self)
+
+    @property
+    def include_terms(self) -> tuple[str, ...]:
+        return term_keys(self.include)
 
 
 @dataclass(frozen=True)
 class SpanNearQ:
-    """SpanNearQuery(inOrder=true) over term spans
-    (queries/spans/SpanNearQuery.java + NearSpansOrdered.java:64-120):
-    for every position p0 of the first term, the matcher greedily chains
-    q_i = first position of term i at or after q_{i-1}+1 (advancePosition
-    past the previous span's end); the span matches iff
-    width = q_last − p0 − (n−1) ≤ slop, and freq accumulates
-    1/(1+width) per accepted span in match order as float32
-    (SpanScorer.java:106). The forward-only subspan pointers make the
-    stateful matcher equivalent to this state-free first-at-or-after
-    chain. Weight = idf summed over the member terms
-    (SpanWeight.buildSimWeight).
+    """SpanNearQuery (queries/spans/SpanNearQuery.java). Each clause is a
+    term (str), a SpanOrQ, a nested ordered SpanNearQ or a
+    :class:`SpanGap`.
+
+    ``in_order=True`` is NearSpansOrdered (NearSpansOrdered.java:48-77)
+    with stretchToOrder replayed state-free: clause i advances to its
+    first span with start >= clause i-1's END; matchWidth sums the GAPS
+    (start_i − prev_end — sub-span internal widths do NOT count, so for
+    term clauses width = q_last − p0 − (n−1)); the match spans
+    [clause_0.start, clause_last.end) and folds 1/(1+matchWidth) into
+    freq per accepted match, float32 in match order (SpanScorer.java:106).
+    Every supported clause emits monotone (start, end) sequences, which is
+    what makes the reference's forward-only cursors equal one searchsorted
+    per clause.
 
     ``in_order=False`` is NearSpansUnordered (NearSpansUnordered.java:
-    29-147): the window advances by consuming the globally-minimal
-    current position (the priority-queue pop visits merged positions in
-    sorted order), stopping at the first term-final position; each state
-    k matches iff maxEnd − minStart − totalSpanLength ≤ slop with
-    minStart = the k-th merged position, maxEnd = 1 + max over terms of
-    their first position ≥ minStart (the running max end equals the
-    current max because per-term cursors only move forward), and
-    totalSpanLength = n for width-1 term spans; accepted states fold
-    1/(1 + width()) where width() = maxEnd − minStart (the slop test
-    subtracts totalSpanLength; ``NearSpansUnordered.width()`` does NOT).
-    Distinct terms only (two subspans sharing one postings cursor need
-    Lucene's repeat handling).
-    """
+    29-147): states are the merged clause spans in (start, end) pop order
+    up to each doc's first clause-final span; a state matches iff maxEnd −
+    minStart − totalSpanLength ≤ slop and folds 1/(1 + width()) with
+    width() = maxEnd − minStart (the slop test subtracts totalSpanLength;
+    ``width()`` does NOT). Its clauses must share no term (two subspans on
+    one term need Lucene's repeat handling), and it takes no gaps.
 
-    terms: tuple[str, ...]
+    Sim weight = idf over the DISTINCT clause terms (SpanWeight's
+    Map<Term, TermStates>)."""
+
+    clauses: tuple = _walked(TERM)
     slop: int = 0
     in_order: bool = True
+
+    def __post_init__(self):
+        # SpanNearQuery.Builder: gaps only on ordered queries, never first
+        if any(isinstance(c, SpanGap) for c in self.clauses):
+            if not self.in_order:
+                raise ValueError(
+                    "Gaps can only be added to ordered near queries")
+            if isinstance(self.clauses[0], SpanGap):
+                raise ValueError("a gap cannot be the first clause")
+
+    @property
+    def terms(self) -> tuple[str, ...]:
+        return term_keys(self)
 
 
 @dataclass(frozen=True)
@@ -324,7 +300,7 @@ class SpanPayloadCheckQ:
     (SpanWeight.buildSimWeight); the check needs a payloads-enabled index.
     """
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
     payloads: tuple[int, ...]
     slop: int = 0
     # MatchOperation (SpanPayloadCheckQuery.MatchOperation): EQ/LT/LTE/GT/GTE
@@ -348,7 +324,7 @@ class SpanOrQ:
     idf summed over every member's term states (SpanWeight.buildSimWeight)
     — unlike SynonymQuery there is no df blending."""
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
 
 
 @dataclass(frozen=True)
@@ -356,7 +332,7 @@ class PrefixQ:
     """PrefixQuery (core/search/PrefixQuery.java) — rewritten against the
     term dictionary before scoring (MultiTermQuery rewrite)."""
 
-    prefix: str
+    prefix: str = _walked(PATTERN)
 
 
 @dataclass(frozen=True)
@@ -364,7 +340,7 @@ class WildcardQ:
     """WildcardQuery (core/search/WildcardQuery.java): ``*`` = any run,
     ``?`` = one char."""
 
-    pattern: str
+    pattern: str = _walked(PATTERN)
 
 
 @dataclass(frozen=True)
@@ -382,7 +358,7 @@ class FuzzyQ:
     scoring-boolean OR (per-term idf) rather than Lucene's
     TopTermsBlendedFreqScoringRewrite."""
 
-    term: str
+    term: str = _walked(PATTERN)
     max_edits: int = 2
     max_expansions: int = 50
     prefix_length: int = 0
@@ -394,7 +370,7 @@ class RegexpQ:
     """RegexpQuery (core/search/RegexpQuery.java): anchored regex over the
     term dictionary, scoring-boolean rewrite."""
 
-    pattern: str
+    pattern: str = _walked(PATTERN)
 
 
 @dataclass(frozen=True)
@@ -403,8 +379,8 @@ class RangeQ:
     range; None bound = open. Rewrites to a constant-score filter (Lucene's
     default rewrite for ranges)."""
 
-    lo: "str | None"
-    hi: "str | None"
+    lo: "str | None" = _walked(PATTERN)
+    hi: "str | None" = _walked(PATTERN)
     include_lo: bool = True
     include_hi: bool = True
 
@@ -415,7 +391,7 @@ class SynonymQ:
     pseudo-term — per-doc freq = sum of member freqs, blended stats
     df = max(docFreq_i), ttf = sum(totalTermFreq_i)."""
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
 
 
 @dataclass(frozen=True)
@@ -423,7 +399,7 @@ class DisMaxQ:
     """DisjunctionMaxQuery (core/search/DisjunctionMaxQuery.java):
     score = max(clause scores) + tie * (sum - max)."""
 
-    clauses: tuple
+    clauses: tuple = _walked(CHILD)
     tie: float = 0.0
 
 
@@ -438,7 +414,7 @@ class NearQ:
     parses to :class:`SloppyQ` (Lucene's sloppy PhraseQuery), matching the
     reference QueryParser default."""
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
     slop: int = 0
 
 
@@ -454,7 +430,7 @@ class SloppyQ:
     ``offsets`` are the query positions of each term (stopword holes kept),
     exactly PhraseQuery's positions array."""
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
     offsets: tuple[int, ...]
     slop: int = 0
 
@@ -479,7 +455,7 @@ class IntervalQ:
     Term sources must be distinct (repeated sources rewrite to
     RepeatingIntervalsSource in the reference — unsupported here)."""
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
     ordered: bool = True
     max_gaps: int = -1  # -1 = no gap filter
     pivot: float = 1.0
@@ -512,7 +488,7 @@ class IntervalExprQ:
     (``IntervalScoreFunction.SaturationFunction``) with minExtent taken
     from the tree root (``IntervalScorer.java:72``)."""
 
-    root: object
+    root: object = _walked(INTERVAL)
     pivot: float = 1.0
 
     def __post_init__(self):
@@ -536,7 +512,7 @@ class BoostQ:
     BM25 folds the boost into the scorer weight as float32
     (BM25Similarity.java BM25Scorer ctor: weight = boost * idf)."""
 
-    child: object
+    child: object = _walked(CHILD)
     boost: float = 1.0
 
 
@@ -545,7 +521,7 @@ class ConstScoreQ:
     """ConstantScoreQuery (core/search/ConstantScoreQuery.java): child
     defines the match set; every hit scores ``boost``."""
 
-    child: object
+    child: object = _walked(CHILD)
     boost: float = 1.0
 
 
@@ -562,7 +538,7 @@ class TermInSetQ:
     1024-clause cap: execution is a set-membership postings scan (small
     sets) or a broadcast semi-join (large sets), never N scorer clauses."""
 
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = _walked(TERM)
     boost: float = 1.0
 
 
@@ -646,7 +622,7 @@ class FunctionScoreQ:
     node's pruning upper bound is unbounded (like span queries — Lucene
     gives function scores no impacts either)."""
 
-    child: object
+    child: object = _walked(CHILD)
     value: str = "log1p_len"
     # norms are per (doc, FIELD); the boost factor must come from one
     # declared field or a multi-field child makes it nondeterministic
@@ -675,7 +651,7 @@ class BlendedQ:
     scores combine as max + tie * (sum - max) instead of summing. The
     public builder is :func:`blended_term_query`."""
 
-    terms: tuple
+    terms: tuple = _walked(TERM)
     boosts: tuple
     dismax: bool = False
     tie: float = 0.0
@@ -714,9 +690,9 @@ def _f32_value(x: float) -> float:
 
 @dataclass(frozen=True)
 class BoolQ:
-    must: tuple = ()
-    should: tuple = ()
-    must_not: tuple = ()
+    must: tuple = _walked(CHILD, default=())
+    should: tuple = _walked(CHILD, default=())
+    must_not: tuple = _walked(CHILD, default=())
     # minimumNumberShouldMatch (BooleanQuery.Builder.setMinimumNumberShouldMatch)
     msm: int = 0
     # MatchAllDocsQuery scoring clauses, folded by the searcher
@@ -731,7 +707,7 @@ class BoolQ:
     # (BooleanWeight wraps filters in non-scoring iterators; equivalently a
     # required ConstantScore(0) clause, which is exactly how the searcher's
     # rewrite desugars them). Filters never count toward msm.
-    filter: tuple = ()
+    filter: tuple = _walked(CHILD, default=())
 
     def simplified(self):
         """1-clause collapse + duplicate-clause rewrite (BooleanQuery
@@ -1134,6 +1110,83 @@ class _Parser:
         return PhraseQ(terms=tuple(w for w, _ in toks), offsets=tuple(p for _, p in toks))
 
 
+def children(node) -> list:
+    """A node's child nodes in field order: sub-queries, span clauses and
+    sides (SpanGap included) and a SpanMultiQ's pattern. Term keys,
+    IntervalExprQ's source tree and TermSetRefQ's source are not
+    children."""
+    out: list = []
+
+    def visit(v):
+        if isinstance(v, tuple):
+            for x in v:
+                visit(x)
+        elif v is not None and not isinstance(v, str):
+            out.append(v)
+
+    for name, kind in _walk_fields(type(node)):
+        if kind != INTERVAL:
+            visit(getattr(node, name))
+    return out
+
+
+def subtree(node):
+    """``node`` and every node below it, preorder (nothing for None)."""
+    if node is not None:
+        yield node
+        for c in children(node):
+            yield from subtree(c)
+
+
+def term_keys(v) -> tuple:
+    """Analyzed term keys of a key, a node or a tuple of them, in field
+    order with duplicates kept; multi-term patterns are not term keys."""
+    if isinstance(v, str):
+        return (v,)
+    if isinstance(v, tuple):
+        return tuple(t for x in v for t in term_keys(x))
+    out: list = []
+    for name, kind in _walk_fields(type(v)):
+        if kind == INTERVAL:
+            from .intervals import tree_terms
+
+            out.extend(tree_terms(getattr(v, name)))
+        elif kind != PATTERN:
+            out.extend(term_keys(getattr(v, name)))
+    return tuple(out)
+
+
+def map_keys(node, fn, *, patterns: bool, hook=None):
+    """Rebuild a query tree with its keys mapped through ``fn``: analyzed
+    term keys always, multi-term pattern keys only when ``patterns``; every
+    other field is carried through as given. ``hook`` (node -> node), if
+    given, runs on each node before its keys map."""
+    if node is None:
+        return None
+    if hook is not None:
+        node = hook(node)
+
+    def m(v, kind):
+        if isinstance(v, str):
+            return fn(v) if kind != PATTERN or patterns else v
+        if isinstance(v, tuple):
+            return tuple(m(x, kind) for x in v)
+        if v is None:
+            return None
+        return map_keys(v, fn, patterns=patterns, hook=hook)
+
+    changes = {}
+    for name, kind in _walk_fields(type(node)):
+        v = getattr(node, name)
+        if kind == INTERVAL:
+            from .intervals import map_tree_terms
+
+            changes[name] = map_tree_terms(v, fn)
+        else:
+            changes[name] = m(v, kind)
+    return replace(node, **changes) if changes else node
+
+
 def map_terms(node, fn):
     """Apply an analyzer term mapping to a parsed tree (the position
     QueryBuilder.createFieldQuery analyzes each token at,
@@ -1145,197 +1198,27 @@ def map_terms(node, fn):
     Used with ``build_index(token_filter=...)``: queries against a
     filtered index must map their terms with the same filter.
     """
-    import dataclasses as _dc
-
     if isinstance(node, str):
         node = parse_query(node)
-    if isinstance(node, TermQ):
-        return TermQ(fn(node.term))
-    if isinstance(node, (SpanFirstQ, SpanPositionRangeQ)):
-        return _dc.replace(node, term=fn(node.term))
-    if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-        def _sub(s):
-            return fn(s) if isinstance(s, str) else map_terms(s, fn)
-        return _dc.replace(node, big=_sub(node.big), little=_sub(node.little))
-    if isinstance(node, SpanNotSpansQ):
-        def _subn(c):
-            return fn(c) if isinstance(c, str) else map_terms(c, fn)
-        return _dc.replace(node, include=_subn(node.include),
-                           exclude=_subn(node.exclude))
-    if isinstance(node, SpanNearSpansQ):
-        def _subc(c):
-            if isinstance(c, str):
-                return fn(c)
-            if isinstance(c, tuple) and c and c[0] == "gap":
-                return c
-            return map_terms(c, fn)
-        return _dc.replace(node, clauses=tuple(_subc(c) for c in node.clauses))
-    if isinstance(node, (PhraseQ, SloppyQ, NearQ, IntervalQ, SpanNearQ,
-                         SpanOrQ, SynonymQ, BlendedQ, SpanPayloadCheckQ)):
-        return _dc.replace(node, terms=tuple(fn(t) for t in node.terms))
-    if isinstance(node, IntervalExprQ):
-        from .intervals import map_tree_terms
+    return map_keys(node, fn, patterns=False)
 
-        return IntervalExprQ(root=map_tree_terms(node.root, fn),
-                             pivot=node.pivot)
-    if isinstance(node, MultiPhraseQ):
-        return _dc.replace(
-            node, termss=tuple(tuple(fn(t) for t in ts) for ts in node.termss)
-        )
-    if isinstance(node, TermInSetQ):
-        return _dc.replace(node, terms=tuple(fn(t) for t in node.terms))
-    if isinstance(node, SpanNotQ):
-        return _dc.replace(
-            node,
-            include=map_terms(node.include, fn),
-            exclude=map_terms(node.exclude, fn),
-        )
-    if isinstance(node, (BoostQ, ConstScoreQ, FunctionScoreQ)):
-        return _dc.replace(node, child=map_terms(node.child, fn))
-    if isinstance(node, DisMaxQ):
-        return _dc.replace(
-            node, clauses=tuple(map_terms(c, fn) for c in node.clauses)
-        )
-    if isinstance(node, BoolQ):
-        return _dc.replace(
-            node,
-            must=tuple(map_terms(c, fn) for c in node.must),
-            should=tuple(map_terms(c, fn) for c in node.should),
-            must_not=tuple(map_terms(c, fn) for c in node.must_not),
-            filter=tuple(map_terms(c, fn) for c in node.filter),
-        )
-    # multi-term / match-all / doc-values nodes: no analyzed terms
+
+def _close_range(node):
+    # a field-scoped range's open bounds close at the field's key span, so
+    # the term-dict scan never leaks into other fields' keys
+    if isinstance(node, RangeQ):
+        return replace(node, lo="" if node.lo is None else node.lo,
+                       hi="\uffff" if node.hi is None else node.hi)
     return node
 
 
 def qualify_node(node, field: str):
-    """Scope a query node to ``field`` by qualifying its term keys
-    (``plans/fields.py``). Positional/leaf structure is preserved; nodes
-    mixing fields are built by composing already-qualified subtrees."""
-    if node is None or isinstance(node, MatchAllQ):
-        return node
-    if isinstance(node, TermQ):
-        return TermQ(qualify(field, node.term))
-    if isinstance(node, TermInSetQ):
-        return TermInSetQ(
-            terms=tuple(qualify(field, t) for t in node.terms), boost=node.boost
-        )
-    if isinstance(node, PhraseQ):
-        return PhraseQ(
-            terms=tuple(qualify(field, t) for t in node.terms), offsets=node.offsets
-        )
-    if isinstance(node, MultiPhraseQ):
-        return MultiPhraseQ(
-            termss=tuple(
-                tuple(qualify(field, t) for t in slot) for slot in node.termss
-            ),
-            offsets=node.offsets,
-        )
-    if isinstance(node, NearQ):
-        return NearQ(terms=tuple(qualify(field, t) for t in node.terms), slop=node.slop)
-    if isinstance(node, SloppyQ):
-        return SloppyQ(
-            terms=tuple(qualify(field, t) for t in node.terms),
-            offsets=node.offsets, slop=node.slop,
-        )
-    if isinstance(node, SynonymQ):
-        return SynonymQ(terms=tuple(qualify(field, t) for t in node.terms))
-    if isinstance(node, IntervalQ):
-        return IntervalQ(
-            terms=tuple(qualify(field, t) for t in node.terms),
-            ordered=node.ordered, max_gaps=node.max_gaps, pivot=node.pivot,
-        )
-    if isinstance(node, IntervalExprQ):
-        from .intervals import map_tree_terms
-
-        return IntervalExprQ(
-            root=map_tree_terms(node.root, lambda t: qualify(field, t)),
-            pivot=node.pivot,
-        )
-    if isinstance(node, SpanFirstQ):
-        return SpanFirstQ(term=qualify(field, node.term), end=node.end)
-    if isinstance(node, SpanPositionRangeQ):
-        return SpanPositionRangeQ(
-            term=qualify(field, node.term), start=node.start, end=node.end
-        )
-    if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-        def _subq(s):
-            return qualify(field, s) if isinstance(s, str) \
-                else qualify_node(s, field)
-        return type(node)(big=_subq(node.big), little=_subq(node.little))
-    if isinstance(node, SpanNotSpansQ):
-        def _subqn(c):
-            return qualify(field, c) if isinstance(c, str) \
-                else qualify_node(c, field)
-        return SpanNotSpansQ(include=_subqn(node.include),
-                             exclude=_subqn(node.exclude),
-                             pre=node.pre, post=node.post)
-    if isinstance(node, SpanNearSpansQ):
-        def _subqc(c):
-            if isinstance(c, str):
-                return qualify(field, c)
-            if isinstance(c, tuple) and c and c[0] == "gap":
-                return c
-            return qualify_node(c, field)
-        return SpanNearSpansQ(
-            clauses=tuple(_subqc(c) for c in node.clauses), slop=node.slop,
-            in_order=node.in_order,
-        )
-    if isinstance(node, SpanNotQ):
-        return SpanNotQ(
-            include=qualify(field, node.include),
-            exclude=qualify(field, node.exclude),
-            pre=node.pre, post=node.post,
-        )
-    if isinstance(node, SpanOrQ):
-        return SpanOrQ(terms=tuple(qualify(field, t) for t in node.terms))
-    if isinstance(node, SpanNearQ):
-        return SpanNearQ(
-            terms=tuple(qualify(field, t) for t in node.terms), slop=node.slop
-        )
-    if isinstance(node, BlendedQ):
-        return BlendedQ(
-            terms=tuple(qualify(field, t) for t in node.terms),
-            boosts=node.boosts,
-        )
-    if isinstance(node, PrefixQ):
-        return PrefixQ(qualify(field, node.prefix))
-    if isinstance(node, WildcardQ):
-        return WildcardQ(qualify(field, node.pattern))
-    if isinstance(node, FuzzyQ):
-        return FuzzyQ(
-            qualify(field, node.term), node.max_edits, node.max_expansions,
-            node.prefix_length, node.transpositions,
-        )
-    if isinstance(node, RegexpQ):
-        return RegexpQ(qualify(field, node.pattern))
-    if isinstance(node, RangeQ):
-        # open bounds close at the field's key span so the term-dict scan
-        # never leaks into other fields' keys
-        return RangeQ(
-            qualify(field, node.lo if node.lo is not None else ""),
-            qualify(field, node.hi if node.hi is not None else "￿"),
-            node.include_lo, node.include_hi,
-        )
-    if isinstance(node, BoolQ):
-        return BoolQ(
-            must=tuple(qualify_node(c, field) for c in node.must),
-            should=tuple(qualify_node(c, field) for c in node.should),
-            must_not=tuple(qualify_node(c, field) for c in node.must_not),
-            msm=node.msm,
-            const_add=node.const_add,
-            n_free_opt=node.n_free_opt,
-            filter=tuple(qualify_node(c, field) for c in node.filter),
-        )
-    if isinstance(node, DisMaxQ):
-        return DisMaxQ(
-            clauses=tuple(qualify_node(c, field) for c in node.clauses), tie=node.tie
-        )
-    if isinstance(node, BoostQ):
-        return BoostQ(qualify_node(node.child, field), node.boost)
-    if isinstance(node, ConstScoreQ):
-        return ConstScoreQ(qualify_node(node.child, field), node.boost)
-    raise TypeError(f"cannot field-qualify {node!r}")
+    """Scope a query node to ``field`` by qualifying its term keys and
+    multi-term patterns (``plans/fields.py``); structure and every other
+    field are preserved. Nodes mixing fields are built by composing
+    already-qualified subtrees."""
+    return map_keys(node, lambda t: qualify(field, t), patterns=True,
+                    hook=_close_range)
 
 
 def parse_multi_field(q: str, fields: "list[str]",
@@ -1376,43 +1259,12 @@ def parse_query(q: str):
 def query_terms(node) -> set[str]:
     """All index terms a query touches (for the postings scan filter).
 
-    Multi-term nodes (PrefixQ/WildcardQ/RangeQ) must be rewritten against
-    the term dictionary first (Searcher.rewrite); they have no fixed terms.
+    Multi-term nodes (PrefixQ/WildcardQ/RangeQ/FuzzyQ/RegexpQ) must be
+    rewritten against the term dictionary first (Searcher.rewrite); they
+    have no fixed terms. TermSetRefQ matches through a DataFrame plan and
+    DocValuesRangeQ through the doc-value column: neither adds terms.
     """
-    if node is None or isinstance(node, MatchAllQ):
-        return set()
-    if isinstance(node, TermQ):
-        return {node.term}
-    if isinstance(node, (PhraseQ, MultiPhraseQ, SynonymQ, NearQ, SloppyQ,
-                         BlendedQ, SpanFirstQ, SpanNotQ, SpanOrQ, SpanNearQ,
-                         SpanPayloadCheckQ, SpanPositionRangeQ,
-                         SpanContainingQ, SpanWithinQ, SpanNearSpansQ,
-                         SpanNotSpansQ,
-                         IntervalQ, IntervalExprQ)):
-        return set(node.terms)
-    if isinstance(node, BoolQ):
-        out: set[str] = set()
-        for c in node.must + node.should + node.must_not:
-            out |= query_terms(c)
-        return out
-    if isinstance(node, DisMaxQ):
-        out = set()
-        for c in node.clauses:
-            out |= query_terms(c)
-        return out
-    if isinstance(node, (ConstScoreQ, BoostQ, FunctionScoreQ)):
-        return query_terms(node.child)
-    if isinstance(node, (PrefixQ, WildcardQ, RangeQ, FuzzyQ, RegexpQ)):
-        raise TypeError(f"{node!r} must be rewritten before planning")
-    if isinstance(node, TermInSetQ):
-        # legal as a nested constant-score clause (the blended-rewrite
-        # output); top-level instances take the gid-only semi-join fast path
-        return set(node.terms)
-    if isinstance(node, TermSetRefQ):
-        # the match set is a DataFrame plan, not fixed terms — the searcher
-        # adds its postings to the scan via a semi-join under a virtual key
-        return set()
-    if isinstance(node, DocValuesRangeQ):
-        # matches via the doc-value column, not postings
-        return set()
-    raise TypeError(f"unknown node {node!r}")
+    for n in subtree(node):
+        if any(kind == PATTERN for _, kind in _walk_fields(type(n))):
+            raise TypeError(f"{n!r} must be rewritten before planning")
+    return set(term_keys(node)) if node is not None else set()

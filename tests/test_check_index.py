@@ -127,3 +127,41 @@ def test_merge_and_check_infer_udf_types(spark, idx, tmp_path):
     assert report["healthy"], report
     msgs = [str(w.message) for w in caught]
     assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
+
+
+def test_hnsw_and_dv_kernels_infer_udf_types(spark, tmp_path):
+    """The HNSW build and query kernels and the doc-values-verify search
+    kernel (``DocValuesRangeQ(strategy="dv")``, a co-grouped bucket
+    kernel) are fully type-hinted too."""
+    import warnings
+
+    import numpy as np
+    import pandas as pd
+
+    from lucene_spark.operators.hnsw import ann_hnsw_topk
+    from lucene_spark.operators.search import Searcher
+    from lucene_spark.plans.query import BoolQ, DocValuesRangeQ, TermQ
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    rng = np.random.RandomState(3)
+    pd.DataFrame({
+        "vec_id": np.arange(40, dtype=np.int64),
+        "embedding": [rng.randn(8).tolist() for _ in range(40)],
+    }).to_parquet(str(sf / "embeddings.parquet"))
+    d = str(tmp_path / "sorted")
+    build_index(
+        spark, spark.createDataFrame(generate_pages_pdf(0, 40)), d,
+        key_col="url", text_col="text", n_segments=2,
+        sort_by="length(text)",
+    )
+    node = BoolQ(must=(TermQ("t0000"),),
+                 filter=(DocValuesRangeQ(0, 1 << 40, strategy="dv"),))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ann = ann_hnsw_topk(spark, str(sf), query_vec_id=0, k=3).collect()
+        hits = Searcher(spark, d).search(node, k=5, with_keys=False)
+    assert len(ann) == 3
+    assert len(hits)
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs

@@ -215,7 +215,7 @@ def test_multifield_purge_rederives_field_stats(spark, corpus_pdf, tmp_path_fact
 def test_qualify_keeps_unordered_span_near(monkeypatch):
     from lucene_spark.plans import query
 
-    node = query.SpanNearSpansQ(("a", "b"), 2, in_order=False)
+    node = query.SpanNearQ(("a", "b"), 2, in_order=False)
     q = query.qualify_node(node, "title")
     assert q.in_order is False
     assert q.clauses == (qualify("title", "a"), qualify("title", "b"))

@@ -426,7 +426,10 @@ def test_span_near_kernel_brute_force():
     iterate p0, advance forward-only pointers, accept width <= slop."""
     import numpy as np
 
-    from lucene_spark.operators.search import TermPostings, span_near_freqs
+    from lucene_spark.operators.search import (
+        TermPostings, _fold_widths, _near_spans_chain,
+    )
+    from lucene_spark.plans.query import SpanNearQ
 
     rng = np.random.default_rng(7)
     for trial in range(50):
@@ -448,8 +451,11 @@ def test_span_near_kernel_brute_force():
                 np.full(ndocs, 100, np.uint8),
                 np.concatenate(per_doc), starts,
             ))
-        idxs = [np.arange(ndocs, dtype=np.int64) for _ in range(nterms)]
-        got = span_near_freqs(tps, idxs, slop)
+        node = SpanNearQ(tuple(f"t{i}" for i in range(nterms)), slop)
+        cands = np.arange(ndocs, dtype=np.int64)
+        st, _en, width = _near_spans_chain(
+            node, {f"t{i}": tp for i, tp in enumerate(tps)}, cands)
+        got = _fold_widths(st, width, ndocs)
         for d in range(ndocs):
             ptrs = [0] * nterms
             freq = np.float32(0.0)
@@ -483,8 +489,9 @@ def test_span_near_unordered_kernel_brute_force():
     import numpy as np
 
     from lucene_spark.operators.search import (
-        TermPostings, span_near_unordered_freqs,
+        TermPostings, _near_spans_unordered_freqs,
     )
+    from lucene_spark.plans.query import SpanNearQ
 
     rng = np.random.default_rng(11)
     for trial in range(50):
@@ -511,8 +518,11 @@ def test_span_near_unordered_kernel_brute_force():
                 np.full(ndocs, 100, np.uint8),
                 np.concatenate(per_doc), starts,
             ))
-        idxs = [np.arange(ndocs, dtype=np.int64) for _ in range(nterms)]
-        got = span_near_unordered_freqs(tps, idxs, slop)
+        node = SpanNearQ(tuple(f"t{i}" for i in range(nterms)), slop,
+                         in_order=False)
+        got = _near_spans_unordered_freqs(
+            node, {f"t{i}": tp for i, tp in enumerate(tps)},
+            np.arange(ndocs, dtype=np.int64))
         for d in range(ndocs):
             heap = []  # (startpos, term_idx, ptr)
             max_end = -1

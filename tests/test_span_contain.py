@@ -228,9 +228,9 @@ def test_span_multi_rewrite_keeps_unordered(spark, index_dir):
     from lucene_spark.plans.query import PrefixQ, SpanMultiQ
 
     s = Searcher(spark, index_dir)
-    node = SpanNearSpansQ((SpanMultiQ(PrefixQ("g")), "open"), slop=2,
+    node = SpanNearQ((SpanMultiQ(PrefixQ("g")), "open"), slop=2,
                           in_order=False)
-    assert s.rewrite(node) == SpanNearSpansQ(("gamma", "open"), slop=2,
+    assert s.rewrite(node) == SpanNearQ(("gamma", "open"), slop=2,
                                              in_order=False)
 
 
@@ -254,14 +254,14 @@ def test_span_multi_empty_expansion(spark, index_dir):
 
 
 # ---------------------------------------------------------------------------
-# SpanNearSpansQ — general ordered near over span clauses (+ gaps)
+# SpanNearQ — ordered near over span clauses (+ gaps)
 # ---------------------------------------------------------------------------
 
-from lucene_spark.plans.query import SpanNearSpansQ
+from lucene_spark.plans.query import SpanGap
 
 
 def _clause_spans(c, pos_of):
-    if isinstance(c, SpanNearSpansQ):
+    if isinstance(c, SpanNearQ):
         return _near_spans_replay(c, pos_of)
     return _sub_spans(c, pos_of)
 
@@ -274,8 +274,8 @@ def _near_spans_replay(node, pos_of):
     for (s0, e0, _w) in firsts:
         q, width, ok = e0, 0, True
         for c in node.clauses[1:]:
-            if isinstance(c, tuple) and c[0] == "gap":
-                q += c[1]
+            if isinstance(c, SpanGap):
+                q += c.width
                 continue
             nxt = [sp for sp in _clause_spans(c, pos_of) if sp[0] >= q]
             if not nxt:
@@ -318,12 +318,12 @@ def _brute_near_spans(corpus_pdf, node):
 
 
 NEAR_SPANS_CASES = [
-    SpanNearSpansQ((SpanOrQ(("alpha", "beta")), "gamma"), slop=4),
-    SpanNearSpansQ(("open", SpanOrQ(("mid", "beta")), "close"), slop=8),
-    SpanNearSpansQ((SpanNearQ(("alpha", "beta"), slop=3), "delta"), slop=6),
-    SpanNearSpansQ(("open", ("gap", 2), "close"), slop=5),
-    SpanNearSpansQ(
-        (SpanNearSpansQ(("alpha", "gamma"), slop=5), SpanOrQ(("mid", "delta"))),
+    SpanNearQ((SpanOrQ(("alpha", "beta")), "gamma"), slop=4),
+    SpanNearQ(("open", SpanOrQ(("mid", "beta")), "close"), slop=8),
+    SpanNearQ((SpanNearQ(("alpha", "beta"), slop=3), "delta"), slop=6),
+    SpanNearQ(("open", SpanGap(2), "close"), slop=5),
+    SpanNearQ(
+        (SpanNearQ(("alpha", "gamma"), slop=5), SpanOrQ(("mid", "delta"))),
         slop=9,
     ),
 ]
@@ -344,7 +344,7 @@ def test_near_spans_term_clauses_equal_span_near(spark, index_dir):
     classic chain's q_last - p0 - (n-1), so scores are float32-identical
     to SpanNearQ (idf dedup aside: terms here are distinct)."""
     a = _got(spark, index_dir,
-             SpanNearSpansQ(("open", "mid", "close"), slop=7))
+             SpanNearQ(("open", "mid", "close"), slop=7))
     b = _got(spark, index_dir, SpanNearQ(("open", "mid", "close"), slop=7))
     assert a == b and a
 
@@ -352,15 +352,15 @@ def test_near_spans_term_clauses_equal_span_near(spark, index_dir):
 def test_near_spans_leading_gap_rejected(spark, index_dir):
     s = Searcher(spark, index_dir)
     with pytest.raises(Exception, match="gap"):
-        s.search(SpanNearSpansQ((("gap", 1), "open"), slop=3), k=5,
+        s.search(SpanNearQ((SpanGap(1), "open"), slop=3), k=5,
                  with_keys=False)
 
 
 # ---------------------------------------------------------------------------
-# SpanNotSpansQ — general SpanNot over span clauses
+# SpanNotQ — SpanNot over span clauses
 # ---------------------------------------------------------------------------
 
-from lucene_spark.plans.query import SpanNotQ, SpanNotSpansQ
+from lucene_spark.plans.query import SpanNotQ
 
 
 def _not_spans_replay(node, pos_of):
@@ -409,11 +409,11 @@ def _brute_not_spans(corpus_pdf, node):
 
 
 NOT_SPANS_CASES = [
-    SpanNotSpansQ(SpanNearQ(("open", "close"), slop=8), "mid"),
-    SpanNotSpansQ(SpanOrQ(("alpha", "beta")), SpanNearQ(("gamma", "delta"),
+    SpanNotQ(SpanNearQ(("open", "close"), slop=8), "mid"),
+    SpanNotQ(SpanOrQ(("alpha", "beta")), SpanNearQ(("gamma", "delta"),
                                                         slop=4), pre=1, post=1),
-    SpanNotSpansQ("alpha", SpanOrQ(("beta", "gamma")), pre=2, post=2),
-    SpanNotSpansQ(SpanNearSpansQ((SpanOrQ(("open", "alpha")), "close"),
+    SpanNotQ("alpha", SpanOrQ(("beta", "gamma")), pre=2, post=2),
+    SpanNotQ(SpanNearQ((SpanOrQ(("open", "alpha")), "close"),
                                  slop=6), "mid", post=1),
 ]
 
@@ -429,19 +429,19 @@ def test_not_spans_vs_replay(spark, corpus_pdf, index_dir, node):
 
 
 def test_not_spans_term_sides_equal_span_not(spark, index_dir):
-    a = _got(spark, index_dir, SpanNotSpansQ("alpha", "beta", pre=1, post=2))
+    a = _got(spark, index_dir, SpanNotQ("alpha", "beta", pre=1, post=2))
     b = _got(spark, index_dir, SpanNotQ("alpha", "beta", pre=1, post=2))
     assert a == b and a
 
 
 def test_not_spans_absent_exclude_passthrough(spark, index_dir):
-    a = _got(spark, index_dir, SpanNotSpansQ("alpha", "zzzmissing"))
+    a = _got(spark, index_dir, SpanNotQ("alpha", "zzzmissing"))
     b = _got(spark, index_dir, SpanOrQ(("alpha",)))
     assert a == b and a
 
 
 # ---------------------------------------------------------------------------
-# SpanNearSpansQ unordered (NearSpansUnordered over clauses)
+# SpanNearQ unordered (NearSpansUnordered over clauses)
 # ---------------------------------------------------------------------------
 
 import heapq
@@ -508,13 +508,13 @@ def _brute_unordered(corpus_pdf, node):
 
 
 UNORDERED_CASES = [
-    SpanNearSpansQ((SpanOrQ(("alpha", "beta")), "gamma"), slop=4,
+    SpanNearQ((SpanOrQ(("alpha", "beta")), "gamma"), slop=4,
                    in_order=False),
-    SpanNearSpansQ(("close", SpanOrQ(("mid", "delta")), "open"), slop=8,
+    SpanNearQ(("close", SpanOrQ(("mid", "delta")), "open"), slop=8,
                    in_order=False),
-    SpanNearSpansQ((SpanNearQ(("alpha", "beta"), slop=3), "delta"), slop=6,
+    SpanNearQ((SpanNearQ(("alpha", "beta"), slop=3), "delta"), slop=6,
                    in_order=False),
-    SpanNearSpansQ(("gamma", "open"), slop=2, in_order=False),
+    SpanNearQ(("gamma", "open"), slop=2, in_order=False),
 ]
 
 
@@ -530,7 +530,7 @@ def test_unordered_spans_vs_replay(spark, corpus_pdf, index_dir, node):
 
 def test_unordered_spans_term_clauses_equal_span_near(spark, index_dir):
     a = _got(spark, index_dir,
-             SpanNearSpansQ(("open", "mid", "close"), slop=7, in_order=False))
+             SpanNearQ(("open", "mid", "close"), slop=7, in_order=False))
     b = _got(spark, index_dir,
              SpanNearQ(("open", "mid", "close"), slop=7, in_order=False))
     assert a == b and a
@@ -538,7 +538,7 @@ def test_unordered_spans_term_clauses_equal_span_near(spark, index_dir):
 
 def test_unordered_gap_rejected():
     with pytest.raises(ValueError, match="ordered near"):
-        SpanNearSpansQ(("a", ("gap", 1), "b"), slop=3, in_order=False)
+        SpanNearQ(("a", SpanGap(1), "b"), slop=3, in_order=False)
 
 
 def _postings(docs: dict):
@@ -558,7 +558,7 @@ def test_nested_unordered_near_spans_rejected():
     from lucene_spark.operators.search import _span_side_spans
 
     postings = {"a": _postings({0: [0]}), "b": _postings({0: [2]})}
-    nested = SpanNearSpansQ(("a", "b"), slop=2, in_order=False)
+    nested = SpanNearQ(("a", "b"), slop=2, in_order=False)
     with pytest.raises(NotImplementedError, match="ordered near"):
         _span_side_spans(nested, postings, np.array([0]))
 
@@ -574,8 +574,130 @@ def test_unordered_near_spans_clause_exhausted_before_doc():
         "y": _postings({0: [1], 1: [10]}),
         "z": _postings({0: [3], 1: [5]}),
     }
-    node = SpanNearSpansQ((SpanNearQ(("x", "y"), slop=0), "z"), slop=3,
+    node = SpanNearQ((SpanNearQ(("x", "y"), slop=0), "z"), slop=3,
                           in_order=False)
     freqs = _near_spans_unordered_freqs(node, postings, np.array([0, 1]))
     assert freqs[0] > 0
     assert freqs[1] == 0
+
+
+# ---------------------------------------------------------------------------
+# Repeated terms: a span weight counts each distinct term once
+# ---------------------------------------------------------------------------
+
+def test_repeated_term_near_weight_is_distinct(spark, corpus_pdf, index_dir):
+    node = SpanNearQ(("open", "open"), 3)
+    want = _brute_near_spans(corpus_pdf, node)
+    got = _got(spark, index_dir, node)
+    assert got == want and want
+
+
+def test_repeated_term_or_weight_is_distinct(spark, corpus_pdf, index_dir):
+    node = SpanOrQ(("open", "open"))
+    want = _brute_spans(corpus_pdf, node)
+    got = _got(spark, index_dir, node)
+    assert got == want and want
+
+
+# ---------------------------------------------------------------------------
+# Random span trees vs the replays, pruned and exhaustive
+# ---------------------------------------------------------------------------
+
+def _brute_spans(corpus_pdf, node):
+    """Per-doc float32 scores of any span node the generator below builds,
+    via the matching replay; weight = idf over the distinct scoring terms
+    (SpanNotQ: its include side only)."""
+    from lucene_spark.functions.bm25 import avgdl, idf, norm_cache
+    from lucene_spark.functions.smallfloat import int_to_byte4
+
+    def widths(pos_of):
+        if isinstance(node, SpanNotQ):
+            return [w for _s, _e, w in _not_spans_replay(node, pos_of)]
+        if isinstance(node, SpanNearQ) and not node.in_order:
+            return _unordered_replay(node, pos_of)
+        return [w for _s, _e, w in _clause_spans(node, pos_of)]
+
+    n_docs = len(corpus_pdf)
+    dls, dfs, tok_lists = [], {}, []
+    for text in corpus_pdf["text"]:
+        pos_of = _positions(text)
+        tok_lists.append(pos_of)
+        dls.append(sum(len(v) for v in pos_of.values()))
+        for t in pos_of:
+            dfs[t] = dfs.get(t, 0) + 1
+    cache = norm_cache(avgdl(sum(dls), n_docs))
+    scoring = node.include_terms if isinstance(node, SpanNotQ) else node.terms
+    uniq = list(dict.fromkeys(scoring))
+    w = np.float32(sum(float(idf(dfs[t], n_docs)) for t in uniq if t in dfs))
+    out = {}
+    for gid, pos_of, dl in zip(corpus_pdf["gid"], tok_lists, dls):
+        freq = np.float32(0.0)
+        for width in widths(pos_of):
+            freq = np.float32(freq + np.float32(1.0 / np.float64(1.0 + width)))
+        if freq == np.float32(0.0):
+            continue
+        score = w - w / (np.float32(1.0) + np.float32(freq)
+                         * cache[int_to_byte4(dl)])
+        out[int(gid)] = float(np.float32(score))
+    return out
+
+
+WORDS = ["alpha", "beta", "gamma", "delta", "open", "close", "mid"]
+
+
+def _gen_side(rng, depth):
+    """A span source: a term, a SpanOrQ or an ordered SpanNearQ; terms
+    repeat freely."""
+    r = rng.random()
+    if r < 0.45:
+        return rng.choice(WORDS)
+    if r < 0.75 or depth == 0:
+        return SpanOrQ(tuple(rng.choice(WORDS)
+                             for _ in range(rng.randint(1, 3))))
+    return _gen_near(rng, depth - 1)
+
+
+def _gen_near(rng, depth, in_order=True):
+    clauses = [_gen_side(rng, depth)]
+    for _ in range(rng.randint(1, 2)):
+        if in_order and rng.random() < 0.2:
+            clauses.append(SpanGap(rng.randint(1, 3)))
+        clauses.append(_gen_side(rng, depth))
+    return SpanNearQ(tuple(clauses), rng.randint(0, 6), in_order)
+
+
+def _gen_span_tree(rng):
+    kind = rng.choice(["near", "near", "unordered", "not", "or"])
+    if kind == "near":
+        return _gen_near(rng, 1)
+    if kind == "unordered":
+        # an unordered near takes no gaps and no nested unordered near, and
+        # its clauses share no term
+        w = rng.sample(WORDS, 5)
+        clauses = [w[0], SpanOrQ((w[1], w[2])), SpanNearQ((w[3], w[4]), 2)]
+        rng.shuffle(clauses)
+        return SpanNearQ(tuple(clauses[:rng.randint(2, 3)]),
+                         rng.randint(0, 6), in_order=False)
+    if kind == "not":
+        return SpanNotQ(_gen_side(rng, 1), _gen_side(rng, 1),
+                        pre=rng.randint(0, 3), post=rng.randint(0, 3))
+    return SpanOrQ(tuple(rng.choice(WORDS) for _ in range(rng.randint(1, 3))))
+
+
+def _topk(scores, k):
+    return sorted(scores.items(), key=lambda gs: (-gs[1], gs[0]))[:k]
+
+
+def test_random_span_trees_vs_replay(spark, corpus_pdf, index_dir):
+    import random
+
+    rng = random.Random(20261019)
+    s = Searcher(spark, index_dir)
+    for i in range(20):
+        node = _gen_span_tree(rng)
+        want = _brute_spans(corpus_pdf, node)
+        for prune, k in ((True, 10), (False, N_DOCS)):
+            pdf = s.search(node, k=k, prune=prune, with_keys=False)
+            got = [(int(g), float(sc))
+                   for g, sc in zip(pdf["gid"], pdf["score"])]
+            assert got == _topk(want, k), (i, node, prune)

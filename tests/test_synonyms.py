@@ -57,6 +57,29 @@ def test_replace_without_orig():
         SynonymMap({"a b": "c"}, include_orig=False)
 
 
+def test_overlapping_rules_leftmost_wins():
+    """SynonymGraphFilter matches left to right and consumes its input:
+    on ``alpha beta gamma`` the rule starting at alpha wins and beta can
+    no longer start ``beta gamma``."""
+    b = analyze_batch(["alpha beta gamma"])
+    out = expand_synonyms(
+        b, SynonymMap({"alpha beta": "x", "beta gamma": "y"})
+    )
+    assert _stream(out) == [
+        (0, 0, "alpha"), (0, 0, "x"), (0, 1, "beta"), (0, 2, "gamma"),
+    ]
+
+
+def test_overlapping_rules_longest_wins():
+    b = analyze_batch(["new york city", "new york state"])
+    out = expand_synonyms(
+        b, SynonymMap({"new york": "ny", "new york city": "nyc"})
+    )
+    injected = [(d, p, t) for d, p, t in _stream(out)
+                if t in ("ny", "nyc")]
+    assert injected == [(0, 0, "nyc"), (1, 0, "ny")]
+
+
 def test_fingerprint_stable():
     a = SynonymMap({"x": "y", "a b": ("c", "d")})
     b = SynonymMap({"a b": ["c", "d"], "x": ("y",)})
