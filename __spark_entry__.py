@@ -17,7 +17,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-INDEX_FORMAT_VERSION = "v3"  # v3: + terms_rev (rterm-sorted suffix seeks)
+from lucene_spark.operators.commit import FORMAT_VERSION
+
+# gate index caches are keyed by the index format, so a cache built by
+# code of another format is never reused
+INDEX_FORMAT_VERSION = f"v{FORMAT_VERSION}"
 
 # query terms chosen from the documents corpus vocabulary
 T_HOT = "merge"

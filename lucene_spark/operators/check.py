@@ -14,7 +14,7 @@ Verifies, distributed (one pass over postings + docs, no collect of data):
      sum of freqs == terms.total_term_freq;
   3. docs table: gids unique, norm_b == int_to_byte4(doc_len);
   4. collection stats: stats.json doc_count/sum_ttf match the docs table;
-  5. manifest: every committed batch directory exists.
+  5. manifest: every committed batch and merge-output directory exists.
 
 Returns a dict of violation counts (all zeros == healthy). Runs after
 merges and on resume (the north rule's lineage/metrics audit hook).
@@ -22,7 +22,6 @@ merges and on resume (the north rule's lineage/metrics audit hook).
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -33,8 +32,8 @@ from pyspark.sql import SparkSession, functions as F, types as T
 from ..functions.blocks import gids_from_gaps
 from ..functions.pfor import batch_decode_streams
 from ..functions.smallfloat import int_to_byte4_np
-from .indexer import read_manifest
-from .merge import bucket_count, live_units, read_delete_paths
+from .commit import batch_path, read_gids
+from .merge import bucket_count
 
 _BLOCK_REPORT = T.StructType(
     [
@@ -181,20 +180,15 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
     from .search import Searcher
 
     s = Searcher(spark, index_dir)
+    commit = s.commit
     report: dict = {}
 
     # 0: manifest ↔ directories FIRST — the postings scan reads each live
     # unit's path directly (no glob), so a missing dir must be diagnosed
     # here, not crash the audit below
-    missing = 0
-    for rec in read_manifest(index_dir):
-        if rec.get("status") == "committed" and rec.get("batch") is not None:
-            if not os.path.isdir(os.path.join(index_dir, "segments", f"batch={rec['batch']}")):
-                missing += 1
-        if rec.get("type") == "merge" and rec.get("status") == "committed":
-            out = rec.get("out", "postings_merged")
-            if not os.path.isdir(os.path.join(index_dir, out)):
-                missing += 1
+    dirs = [batch_path(b) for b in commit.batches]
+    dirs += [r["out"] for r in commit.merges.values()]
+    missing = sum(not os.path.isdir(os.path.join(index_dir, d)) for d in dirs)
     report["missing_batch_dirs"] = missing
     if missing:
         report.update(
@@ -215,7 +209,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         audit_cols += ["off_starts", "off_lens"]
     if s.stats.get("with_payloads"):
         audit_cols.append("payloads")
-    n_buckets = bucket_count(spark, live_units(index_dir))
+    n_buckets = bucket_count(spark, commit.live_units)
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _check_bucket(pdf)
@@ -227,8 +221,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         .groupBy("bucket")
         .applyInPandas(fn, schema=_BLOCK_REPORT)
     )
-    terms = spark.read.parquet(os.path.join(index_dir, "terms"))
-    joined = per_term.join(terms, "term", "full_outer")
+    joined = per_term.join(s.terms_table(), "term", "full_outer")
     agg = joined.agg(
         F.sum("bad_doc_count").alias("bad_doc_count"),
         F.sum("bad_order").alias("bad_order"),
@@ -248,28 +241,13 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
 
     # 3: docs table. Doc rows of PURGED deletes still exist on disk (only
     # postings + stats were reclaimed), so exclude exactly the docs purging
-    # merges reclaimed before comparing against stats.json; unpurged
-    # deletes still count in stats (Lucene pre-merge semantics). New-format
-    # purge records carry their exact ``purged_gids``; legacy full-merge
-    # purges (no such record) consumed every delete set committed before
-    # them.
+    # merges reclaimed (their ``purged_gids``) before comparing against
+    # stats.json; unpurged deletes still count in stats (Lucene pre-merge
+    # semantics). Every merge is in some live unit's input chain.
     docs = s.doc_rows()
-    purged_gid_paths: list = []
-    legacy_delete_paths: list = []
-    pending: list = []
-    for rec in read_manifest(index_dir):
-        if rec.get("type") == "delete" and rec.get("status") == "committed":
-            pending.append(rec["path"])
-        if (rec.get("type") == "merge" and rec.get("status") == "committed"
-                and rec.get("purged")):
-            if rec.get("purged_gids"):
-                purged_gid_paths.append(rec["purged_gids"])
-            else:
-                legacy_delete_paths.extend(pending)
-                pending = []
-    all_paths = purged_gid_paths + legacy_delete_paths
-    if all_paths:
-        gids = read_delete_paths(index_dir, all_paths)
+    purged = commit.purged_gid_paths(commit.live_units)
+    if purged:
+        gids = read_gids(index_dir, purged)
         ddf = spark.createDataFrame(pd.DataFrame({"gid": gids.astype("int64")}))
         docs = docs.join(F.broadcast(ddf), "gid", "left_anti")
     n_docs = docs.count()

@@ -33,8 +33,6 @@ term_stats probe), never postings.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -136,9 +134,7 @@ def combined_field_topk(
         )
     extra = [f for f in fields if f != DEFAULT_FIELD]
     if extra:
-        fdoc = searcher.spark.read.parquet(os.path.join(
-            searcher.index_dir, "segments", "batch=*", "row_type=fdoc"
-        ))
+        fdoc = searcher.fdoc_rows()
         for f in extra:
             norm_parts.append(
                 fdoc.filter(F.col("term") == f).select(

@@ -1,0 +1,353 @@
+"""The index commit: ``manifest.jsonl`` and ``stats.json`` parsed once.
+
+The manifest (the ``segments_N`` / ``core/index/SegmentInfos.java`` analog)
+is an append-only JSONL log, one fsynced line per record:
+
+  * build batch  ``{"batch": N, "status": "committed", "per_segment": ...}``
+    — postings, term, doc and stat rows under ``segments/batch=N``;
+  * append job   ``{"type": "append_job", "batch_offset", "seg_offset",
+    "n_batches"}`` — the batch range an append claims, so a crashed append
+    resumes at its own offsets;
+  * merge        ``{"type": "merge", "status": "committed", "merge_id": K,
+    "inputs": [uid, ...], "out": "postings_merged_mK", "unit_doc_stats",
+    "unit_field_stats", "purged_gids", ...}``;
+  * delete       ``{"type": "delete", "status": "committed", "path": ...}``
+    — a parquet of deleted gids (the ``.liv`` analog).
+
+Unit model. A merge *unit* is either a committed build batch ("b<N>",
+postings at segments/batch=N/row_type=post) or a committed merge output
+("m<K>", postings at postings_merged_m<K>). A unit is LIVE until a later
+committed merge lists it in ``inputs`` — the SegmentInfos view of the index.
+The searcher reads exactly the live units; tiered_merge folds one tier of
+live units at a time (TieredMergePolicy.java:89-95 analog), so a
+continuously appended index pays O(tier) per refresh, never O(index).
+
+``stats.json`` holds what finalize derives from the live units (collection
+and per-field stats, ``max_gid``), the build config fixed at creation
+(``BUILD_CONFIG_KEYS``) and the format number; it is replaced atomically.
+An index whose ``stats.json`` carries another format is refused.
+
+Every index table is read through ``read_table`` with its schema pinned, so
+no read runs a parquet footer-inference job.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+from dataclasses import dataclass
+from functools import cached_property
+
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import DataFrame, SparkSession, types as T
+
+# v4: stats.json carries "format"; merge records always carry merge_id,
+# inputs, out, unit_doc_stats and unit_field_stats
+FORMAT_VERSION = 4
+
+# stats.json keys set at creation that every finalize carries over
+BUILD_CONFIG_KEYS = (
+    "index_sort", "with_offsets", "with_payloads", "char_filter",
+    "synonyms_fp", "stream_filter_fp",
+)
+
+STAGING_SCHEMA = T.StructType(
+    [
+        T.StructField("row_type", T.StringType()),
+        T.StructField("seg", T.LongType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("block_ord", T.IntegerType()),
+        T.StructField("doc_count", T.IntegerType()),
+        T.StructField("first_gid", T.LongType()),
+        T.StructField("last_gid", T.LongType()),
+        T.StructField("gids", T.BinaryType()),
+        T.StructField("freqs", T.BinaryType()),
+        T.StructField("norms", T.BinaryType()),
+        T.StructField("positions", T.BinaryType()),
+        # offsets mode (IndexOptions ..._AND_OFFSETS): per-token start-offset
+        # delta stream + raw token-length stream, position-aligned; null
+        # when the index stores no offsets
+        T.StructField("off_starts", T.BinaryType()),
+        T.StructField("off_lens", T.BinaryType()),
+        # payloads mode: per-occurrence integer payload stream, position-
+        # aligned (PayloadAttribute / .pay file analog); null when the
+        # index stores no payloads
+        T.StructField("payloads", T.BinaryType()),
+        T.StructField("imp_freqs", T.ArrayType(T.LongType())),
+        T.StructField("imp_norms", T.ArrayType(T.IntegerType())),
+        T.StructField("gid", T.LongType()),
+        T.StructField("key", T.StringType()),
+        T.StructField("doc_len", T.IntegerType()),
+        T.StructField("norm_b", T.IntegerType()),
+        T.StructField("doc_freq", T.LongType()),
+        T.StructField("total_term_freq", T.LongType()),
+        # segstat rows: one per segment, so manifest metrics + collection
+        # stats need no extra Spark jobs (driver reads a handful of rows)
+        T.StructField("s_n_docs", T.LongType()),
+        T.StructField("s_doc_count", T.LongType()),
+        T.StructField("s_sum_dl", T.LongType()),
+        T.StructField("s_max_gid", T.LongType()),
+        T.StructField("s_n_terms", T.LongType()),
+        T.StructField("s_n_postings", T.LongType()),
+        # doc rows of a sort_by index: the doc's index-sort key
+        # (IndexWriterConfig.setIndexSort analog); null elsewhere
+        T.StructField("sort_val", T.LongType()),
+    ]
+)
+
+
+def _pick(schema: T.StructType, *names: str) -> T.StructType:
+    return T.StructType([schema[n] for n in names])
+
+
+# block rows every live unit carries: a batch's row_type=post and a merge
+# output alike
+POSTINGS_SCHEMA = _pick(
+    STAGING_SCHEMA, "term", "seg", "block_ord", "doc_count", "first_gid",
+    "last_gid", "gids", "freqs", "norms", "positions", "off_starts",
+    "off_lens", "payloads", "imp_freqs", "imp_norms",
+)
+# merge output: plus the per-block freq sum, so survivor term stats
+# (totalTermFreq) re-derive from merged postings without decoding
+MERGED_SCHEMA = T.StructType(
+    POSTINGS_SCHEMA.fields + [T.StructField("freq_sum", T.LongType())]
+)
+# a batch's row_type=term rows and the global terms table
+TERMS_SCHEMA = _pick(STAGING_SCHEMA, "term", "doc_freq", "total_term_freq")
+TERMS_REV_SCHEMA = T.StructType(
+    [T.StructField("rterm", T.StringType())] + TERMS_SCHEMA.fields
+)
+DOC_SCHEMA = _pick(STAGING_SCHEMA, "seg", "gid", "key", "doc_len", "norm_b", "sort_val")
+# per-(doc, extra field) lengths; the term column holds the field name
+FDOC_SCHEMA = _pick(STAGING_SCHEMA, "gid", "term", "doc_len")
+# delete files (gid) and purged-gid files (gid, doc_len)
+GID_SCHEMA = _pick(STAGING_SCHEMA, "gid")
+PURGED_SCHEMA = _pick(STAGING_SCHEMA, "gid", "doc_len")
+
+
+def read_table(spark: SparkSession, index_dir: str, rel_paths, schema: T.StructType) -> DataFrame:
+    """One scan over the index tables at ``rel_paths``, schema pinned."""
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(index_dir, p) for p in rel_paths]
+    )
+
+
+def read_gids(index_dir: str, rel_paths) -> "np.ndarray | None":
+    """Sorted unique gids of the given delete / purged-gid files (driver)."""
+    if not rel_paths:
+        return None
+    import pyarrow.dataset as ds
+
+    arrs = [
+        ds.dataset(os.path.join(index_dir, p), format="parquet")
+        .to_table(columns=["gid"]).column("gid").to_numpy()
+        for p in rel_paths
+    ]
+    return np.unique(np.concatenate(arrs)).astype(np.int64)
+
+
+def batch_path(batch: int, row_type: "str | None" = None) -> str:
+    path = os.path.join("segments", f"batch={int(batch)}")
+    return path if row_type is None else os.path.join(path, f"row_type={row_type}")
+
+
+def read_segstats(path: str) -> pd.DataFrame:
+    """Driver-side read of a batch dir's tiny segstat rows (one per segment)."""
+    import pyarrow.dataset as ds
+
+    cols = ["seg", "s_n_docs", "s_doc_count", "s_sum_dl", "s_max_gid", "s_n_terms", "s_n_postings"]
+    return (ds.dataset(os.path.join(path, "row_type=segstat"), format="parquet")
+            .to_table(columns=cols).to_pandas())
+
+
+def _read_fieldstats(path: str) -> pd.DataFrame:
+    """Driver-side read of a batch dir's per-(segment, field) stat rows."""
+    import pyarrow.dataset as ds
+
+    return (ds.dataset(os.path.join(path, "row_type=fieldstat"), format="parquet")
+            .to_table(columns=["term", "s_doc_count", "s_sum_dl"]).to_pandas())
+
+
+# ------------------------------------------------------------------ manifest
+
+
+def _manifest_path(index_dir: str) -> str:
+    return os.path.join(index_dir, "manifest.jsonl")
+
+
+def read_manifest(index_dir: str) -> list[dict]:
+    path = _manifest_path(index_dir)
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def append_manifest(index_dir: str, record: dict) -> None:
+    os.makedirs(index_dir, exist_ok=True)
+    with open(_manifest_path(index_dir), "a") as f:
+        f.write(json.dumps(record) + "\n")
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def write_stats(index_dir: str, stats: dict) -> None:
+    """Replace ``stats.json`` atomically (temp file + fsync + rename)."""
+    path = os.path.join(index_dir, "stats.json")
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(stats, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _sum_into(into: dict, add: dict) -> None:
+    for k, v in add.items():
+        into[k] = into.get(k, 0) + int(v)
+
+
+@dataclass(frozen=True)
+class Commit:
+    """One point-in-time view of an index: its committed records and stats."""
+
+    index_dir: str
+    batches: dict  # batch id -> committed batch record, commit order
+    merges: dict  # uid "m<K>" -> committed merge record, commit order
+    delete_paths: tuple  # committed delete files (rel paths), commit order
+    append_jobs: tuple
+    stats: "dict | None"  # None until the first finalize
+
+    @classmethod
+    def load(cls, index_dir: str) -> "Commit":
+        stats = None
+        stats_path = os.path.join(index_dir, "stats.json")
+        if os.path.exists(stats_path):
+            with open(stats_path) as f:
+                stats = json.load(f)
+            if stats.get("format") != FORMAT_VERSION:
+                raise ValueError(
+                    f"{index_dir} has index format {stats.get('format')}; this "
+                    f"code reads format {FORMAT_VERSION} only — rebuild the index"
+                )
+        batches, merges, deletes, jobs = {}, {}, [], []
+        for r in read_manifest(index_dir):
+            kind = r.get("type")
+            if kind == "append_job":
+                jobs.append(r)
+            elif r.get("status") != "committed":
+                continue
+            elif kind == "merge":
+                merges[f"m{r['merge_id']}"] = r
+            elif kind == "delete":
+                deletes.append(r["path"])
+            elif r.get("batch") is not None:
+                batches[r["batch"]] = r
+        return cls(index_dir, batches, merges, tuple(deletes), tuple(jobs), stats)
+
+    @cached_property
+    def live_units(self) -> "list[dict]":
+        """Live merge units with sizes: [{uid, path, n_postings}], batches
+        first, each in commit order."""
+        consumed = {u for r in self.merges.values() for u in r["inputs"]}
+        units = [
+            {
+                "uid": f"b{b}",
+                "path": batch_path(b, "post"),
+                "n_postings": sum(int(s["n_postings"]) for s in r["per_segment"].values()),
+            }
+            for b, r in self.batches.items() if f"b{b}" not in consumed
+        ]
+        units += [
+            {"uid": uid, "path": r["out"], "n_postings": int(r["n_postings"])}
+            for uid, r in self.merges.items() if uid not in consumed
+        ]
+        return units
+
+    def _chain(self, uids):
+        """The given unit ids and, transitively, every merge input."""
+        for uid in uids:
+            yield uid
+            if uid in self.merges:
+                yield from self._chain(self.merges[uid]["inputs"])
+
+    def covered_batches(self, units) -> "list[int]":
+        """Batches the units cover, transitively through merge inputs."""
+        return sorted(int(u[1:]) for u in self._chain(x["uid"] for x in units)
+                      if u.startswith("b"))
+
+    def purged_gid_paths(self, units) -> "list[str]":
+        """purged_gids files of every purging merge in the units' input
+        chains: the docs those merges already reclaimed."""
+        return [self.merges[u]["purged_gids"]
+                for u in self._chain(x["uid"] for x in units)
+                if u in self.merges and self.merges[u]["purged_gids"]]
+
+    def unit_doc_stats(self, unit: dict) -> dict:
+        """{n_rows, doc_count, sum_dl} one live unit contributes: a batch's
+        segstat rows, a merge's recorded sum (minus what it purged)."""
+        if unit["uid"] in self.merges:
+            return dict(self.merges[unit["uid"]]["unit_doc_stats"])
+        seg = read_segstats(os.path.join(self.index_dir, batch_path(int(unit["uid"][1:]))))
+        return {
+            "n_rows": int(seg["s_n_docs"].sum()),
+            "doc_count": int(seg["s_doc_count"].sum()),
+            "sum_dl": int(seg["s_sum_dl"].sum()),
+        }
+
+    def unit_field_stats(self, unit: dict) -> "dict[str, dict]":
+        """{field: {doc_count, sum_ttf}} one live unit contributes."""
+        if unit["uid"] in self.merges:
+            fs = self.merges[unit["uid"]]["unit_field_stats"]
+            return {str(k): dict(v) for k, v in fs.items()}
+        fagg = _read_fieldstats(os.path.join(self.index_dir, batch_path(int(unit["uid"][1:]))))
+        return {
+            str(field): {
+                "doc_count": int(grp["s_doc_count"].sum()),
+                "sum_ttf": int(grp["s_sum_dl"].sum()),
+            }
+            for field, grp in fagg.groupby("term")
+        }
+
+    def doc_stats(self, units) -> dict:
+        out = {"n_rows": 0, "doc_count": 0, "sum_dl": 0}
+        for u in units:
+            _sum_into(out, self.unit_doc_stats(u))
+        return out
+
+    def field_stats(self, units) -> "dict[str, dict]":
+        out: dict = {}
+        for u in units:
+            for f, s in self.unit_field_stats(u).items():
+                _sum_into(out.setdefault(f, {}), s)
+        return out
+
+    def max_gid(self) -> int:
+        return max(
+            (int(read_segstats(os.path.join(self.index_dir, batch_path(b)))["s_max_gid"].max())
+             for b in self.batches),
+            default=-1,
+        )
+
+    def doc_paths(self) -> "list[str]":
+        """Doc rows of every committed batch (merges leave them in place)."""
+        return [batch_path(b, "doc") for b in self.batches]
+
+    def fdoc_paths(self, batches) -> "list[str]":
+        """The batches' extra-field length rows (multi-field indexes only)."""
+        return [p for p in (batch_path(b, "fdoc") for b in batches)
+                if os.path.isdir(os.path.join(self.index_dir, p))]
+
+    @property
+    def next_merge_id(self) -> int:
+        return 1 + max((int(r["merge_id"]) for r in self.merges.values()), default=-1)
+
+    @property
+    def next_delete_path(self) -> str:
+        return os.path.join("deletes", f"del_{len(self.delete_paths)}")
+
+    @property
+    def segments(self) -> "list[int]":
+        return sorted({int(s) for r in self.batches.values() for s in r["per_segment"]})

@@ -29,7 +29,6 @@ in-segment sort by key mirrors Lucene's index-time docID assignment
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from typing import Iterable
@@ -37,170 +36,18 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.analysis import analyze_batch
 from ..functions.bm25 import BM25Scorer  # noqa: F401 (re-export convenience)
 from ..functions.blocks import Postings, write_blocks
 from ..functions.smallfloat import int_to_byte4_np
 from ..plans.fields import DEFAULT_FIELD, FIELD_SEP
-
-STAGING_SCHEMA = T.StructType(
-    [
-        T.StructField("row_type", T.StringType()),
-        T.StructField("seg", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("block_ord", T.IntegerType()),
-        T.StructField("doc_count", T.IntegerType()),
-        T.StructField("first_gid", T.LongType()),
-        T.StructField("last_gid", T.LongType()),
-        T.StructField("gids", T.BinaryType()),
-        T.StructField("freqs", T.BinaryType()),
-        T.StructField("norms", T.BinaryType()),
-        T.StructField("positions", T.BinaryType()),
-        # offsets mode (IndexOptions ..._AND_OFFSETS): per-token start-offset
-        # delta stream + raw token-length stream, position-aligned; null
-        # when the index stores no offsets
-        T.StructField("off_starts", T.BinaryType()),
-        T.StructField("off_lens", T.BinaryType()),
-        # payloads mode: per-occurrence integer payload stream, position-
-        # aligned (PayloadAttribute / .pay file analog); null when the
-        # index stores no payloads
-        T.StructField("payloads", T.BinaryType()),
-        T.StructField("imp_freqs", T.ArrayType(T.LongType())),
-        T.StructField("imp_norms", T.ArrayType(T.IntegerType())),
-        T.StructField("gid", T.LongType()),
-        T.StructField("key", T.StringType()),
-        T.StructField("doc_len", T.IntegerType()),
-        T.StructField("norm_b", T.IntegerType()),
-        T.StructField("doc_freq", T.LongType()),
-        T.StructField("total_term_freq", T.LongType()),
-        # segstat rows: one per segment, so manifest metrics + collection
-        # stats need no extra Spark jobs (driver reads a handful of rows)
-        T.StructField("s_n_docs", T.LongType()),
-        T.StructField("s_doc_count", T.LongType()),
-        T.StructField("s_sum_dl", T.LongType()),
-        T.StructField("s_max_gid", T.LongType()),
-        T.StructField("s_n_terms", T.LongType()),
-        T.StructField("s_n_postings", T.LongType()),
-        # doc rows of a sort_by index: the doc's index-sort key
-        # (IndexWriterConfig.setIndexSort analog); null elsewhere
-        T.StructField("sort_val", T.LongType()),
-    ]
+from .commit import (  # noqa: F401 (read_manifest re-exported)
+    BUILD_CONFIG_KEYS, FORMAT_VERSION, GID_SCHEMA, MERGED_SCHEMA, STAGING_SCHEMA,
+    TERMS_SCHEMA, Commit, append_manifest, batch_path, read_manifest,
+    read_segstats, read_table, write_stats,
 )
-
-# Per-column Arrow types for the direct parquet writer — must stay
-# read-compatible with what Spark's own writer produces for STAGING_SCHEMA
-# (int32 for IntegerType etc.), since both layouts coexist under
-# ``segments/batch=*``.
-_ARROW_TYPES: "dict[str, object]" = {}
-
-
-def _arrow_types():
-    if not _ARROW_TYPES:
-        import pyarrow as pa
-
-        _ARROW_TYPES.update(
-            {
-                "seg": pa.int64(),
-                "term": pa.string(),
-                "block_ord": pa.int32(),
-                "doc_count": pa.int32(),
-                "first_gid": pa.int64(),
-                "last_gid": pa.int64(),
-                "gids": pa.binary(),
-                "freqs": pa.binary(),
-                "norms": pa.binary(),
-                "positions": pa.binary(),
-                "off_starts": pa.binary(),
-                "off_lens": pa.binary(),
-                "payloads": pa.binary(),
-                "imp_freqs": pa.list_(pa.int64()),
-                "imp_norms": pa.list_(pa.int32()),
-                "gid": pa.int64(),
-                "key": pa.string(),
-                "doc_len": pa.int32(),
-                "norm_b": pa.int32(),
-                "doc_freq": pa.int64(),
-                "total_term_freq": pa.int64(),
-                "s_n_docs": pa.int64(),
-                "s_doc_count": pa.int64(),
-                "s_sum_dl": pa.int64(),
-                "s_max_gid": pa.int64(),
-                "s_n_terms": pa.int64(),
-                "s_n_postings": pa.int64(),
-                "sort_val": pa.int64(),
-            }
-        )
-    return _ARROW_TYPES
-
-
-def write_segment_parquet(frames: "list[pd.DataFrame]", out_path: str, seg: int) -> int:
-    """Write one segment's staging frames straight to parquet from the
-    Python worker (the direct-write path): one file per row_type under
-    ``out_path/row_type=X/``, each with only that row_type's columns.
-
-    Skips the Arrow-IPC hop back into the JVM and Spark's union-schema
-    write. NOTE: measured slower than the Spark writer in local mode (see
-    ``build_index(direct_write=...)``) because the default path overlaps
-    Python compute with JVM parquet encoding; kept as an opt-in for
-    worker-owned-file deployments.
-    Atomicity: each file lands via write-to-temp + rename with a
-    deterministic final name per (seg, row_type), so task retries and
-    speculative attempts are idempotent (last writer wins with identical
-    bytes); batch visibility is gated by the manifest commit exactly as
-    before. Returns the total row count written."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    types = _arrow_types()
-    by_type: "dict[str, list[pd.DataFrame]]" = {}
-    for f in frames:
-        if not len(f):
-            continue
-        rt = str(f["row_type"].iloc[0])
-        by_type.setdefault(rt, []).append(f)
-    total = 0
-    for rt, fs in by_type.items():
-        tabs = []
-        for f in fs:
-            cols = [c for c in f.columns if c != "row_type"]
-            arrays = []
-            for c in cols:
-                s = f[c]
-                if str(s.dtype) == "string":
-                    arr = pa.Array.from_pandas(s, type=types[c])
-                elif s.dtype == object:
-                    arr = pa.array(list(s), type=types[c])
-                else:
-                    arr = pa.array(s.to_numpy()).cast(types[c])
-                arrays.append(arr)
-            tabs.append(pa.table(dict(zip(cols, arrays))))
-        tab = tabs[0] if len(tabs) == 1 else pa.concat_tables(tabs)
-        d = os.path.join(out_path, f"row_type={rt}")
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".seg-{seg:05d}-{uuid.uuid4().hex}.tmp")
-        # dictionary-encode / collect stats only on the small scalar
-        # columns: hashing multi-KB posting payloads into dictionaries and
-        # min/max-ing them is pure overhead (the JVM writer's fallback
-        # heuristics hide this; here we opt out explicitly)
-        small = [
-            c for c in tab.column_names
-            if not (
-                pa.types.is_binary(tab.schema.field(c).type)
-                or pa.types.is_list(tab.schema.field(c).type)
-            )
-        ]
-        pq.write_table(
-            tab, tmp, compression="snappy",
-            use_dictionary=small, write_statistics=small,
-        )
-        os.replace(tmp, os.path.join(d, f"part-seg{seg:05d}.parquet"))
-        total += len(tab)
-    return total
-
 
 def _resolve_char_filters(char_filter):
     """Normalize the ``char_filter`` argument into a chain of
@@ -245,7 +92,6 @@ def invert_segment(
     texts: pd.Series,
     with_positions: bool = True,
     field: str = DEFAULT_FIELD,
-    as_frames: bool = False,
     sort_vals: "np.ndarray | None" = None,
     with_offsets: bool = False,
     with_payloads: bool = False,
@@ -253,7 +99,7 @@ def invert_segment(
     char_filter: "str | None" = None,
     synonyms=None,
     stream_filter=None,
-) -> "pd.DataFrame | list[pd.DataFrame]":
+) -> pd.DataFrame:
     """Analyze + invert one segment's docs into union-schema staging rows.
 
     ``synonyms``: optional ``functions/synonyms.SynonymMap`` — index-time
@@ -277,10 +123,6 @@ def invert_segment(
     position of PorterStemFilter in EnglishAnalyzer.createComponents).
     Queries against such an index must map their terms with the same
     filter (``plans/query.py map_terms``), the analyzer contract.
-
-    ``as_frames=True`` returns the per-row_type frames BEFORE union-schema
-    padding (for the direct parquet writer, which stores each row_type
-    with its own columns and skips the null-padded union entirely).
 
     Pure pandas/numpy — runs inside applyInPandas but unit-testable without
     Spark. ``gids`` must be sorted ascending (docID order within segment).
@@ -527,8 +369,6 @@ def invert_segment(
         }
     )
     rows.append(field_stat)
-    if as_frames:
-        return rows
     # Assemble the union-schema frame column-by-column, bypassing pd.concat:
     # object-None padded columns made concat run elementwise NA checks over
     # every cell (~14% of invert wall). Integer columns become nullable
@@ -567,31 +407,6 @@ def invert_segment(
 
 
 # --------------------------------------------------------------------- build
-
-
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "manifest.jsonl")
-
-
-def read_manifest(index_dir: str) -> list[dict]:
-    path = _manifest_path(index_dir)
-    if not os.path.exists(path):
-        return []
-    out = []
-    with open(path) as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                out.append(json.loads(line))
-    return out
-
-
-def _append_manifest(index_dir: str, record: dict) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    with open(_manifest_path(index_dir), "a") as f:
-        f.write(json.dumps(record) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
 
 
 SEG_SHIFT = 40  # sparse gid = (seg << SEG_SHIFT) | rank_within_segment
@@ -678,7 +493,6 @@ def build_index(
     append: bool = False,
     fail_after_batches: int | None = None,
     extra_fields: "dict[str, str] | None" = None,
-    direct_write: bool | None = None,
     sort_by: "str | None" = None,
     sort_ascending: bool = True,
     token_filter=None,
@@ -700,18 +514,6 @@ def build_index(
     ``synonyms``: a ``functions/synonyms.SynonymMap`` applied at invert
     time (index-time SynonymGraphFilter); its fingerprint is recorded in
     stats.json and appends must present the same map (analyzer contract).
-
-    ``direct_write``: workers write each segment's parquet files directly
-    via pyarrow (one atomic-renamed file per row_type) and return only
-    per-segment counts, skipping the Arrow-IPC hop back into the JVM and
-    Spark's write stage. MEASURED SLOWER at every tried setting (A/B on
-    the 2M-doc bench corpus at local[32]: 154-186s direct vs 94-150s
-    Spark writer, interleaved reps): the default path pipelines Python
-    invert compute with the JVM's parquet encode across groups, and that
-    overlap is worth more than the saved IPC copy. Default False (Spark
-    writer) everywhere; the option remains for shared-FS deployments that
-    want worker-owned files and for re-measuring on real clusters, and
-    requires the index dir reachable by path from every worker.
 
     ``extra_fields``: additional indexed text fields, ``{field: column}``
     (``text_col`` is the default field). Each field gets its own postings
@@ -750,83 +552,55 @@ def build_index(
             "them"
         )
     t_start = time.time()
-    # the index sort is fixed at creation (IndexWriterConfig.setIndexSort):
-    # reject a mismatched append BEFORE any batch is built/committed
-    stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            _prior_stats = json.load(f)
-        prior_sort = _prior_stats.get("index_sort")
-        if bool(_prior_stats.get("with_offsets")) != bool(with_offsets):
+    # stats.json build config: fixed at creation (IndexOptions per field,
+    # the analyzer chain, IndexWriterConfig.setIndexSort), so a mismatched
+    # append is rejected BEFORE any batch is built/committed
+    config = {k: v for k, v in {
+        "index_sort": sort_by is not None and {
+            "field": sort_by, "ascending": bool(sort_ascending)},
+        "with_offsets": bool(with_offsets),
+        "with_payloads": bool(with_payloads),
+        "char_filter": char_filter_fingerprint(char_filter),
+        "synonyms_fp": synonyms is not None and synonyms.fingerprint(),
+        "stream_filter_fp": stream_filter is not None and stream_filter.fingerprint(),
+    }.items() if v}
+    commit = Commit.load(index_dir)
+    prior = commit.stats
+    if prior is not None:
+        for key, arg in (("with_offsets", "with_offsets"), ("with_payloads", "with_payloads"),
+                         ("char_filter", "char_filter"), ("synonyms_fp", "synonyms"),
+                         ("stream_filter_fp", "stream_filter")):
+            if prior.get(key) != config.get(key):
+                raise ValueError(
+                    f"{arg} must match the existing index (IndexOptions and the "
+                    "analyzer chain are fixed at creation)"
+                )
+        if prior.get("index_sort") != config.get("index_sort"):
             raise ValueError(
-                "with_offsets must match the existing index (IndexOptions "
-                "are fixed per field at creation, FieldInfos)"
+                f"index is sorted by {prior.get('index_sort')}; this call sorts "
+                f"by {config.get('index_sort')}: sort_by/sort_ascending must "
+                "match (IndexWriterConfig.setIndexSort is fixed at creation)"
             )
-        if bool(_prior_stats.get("with_payloads")) != bool(with_payloads):
-            raise ValueError(
-                "with_payloads must match the existing index (IndexOptions "
-                "are fixed per field at creation, FieldInfos)"
-            )
-        if _prior_stats.get("char_filter") != char_filter_fingerprint(char_filter):
-            raise ValueError(
-                "char_filter must match the existing index (the analyzer "
-                "chain is fixed at creation)"
-            )
-        _syn_fp = synonyms.fingerprint() if synonyms is not None else None
-        if _prior_stats.get("synonyms_fp") != _syn_fp:
-            raise ValueError(
-                "synonyms must match the existing index (the analyzer "
-                "chain is fixed at creation)"
-            )
-        _sf_fp = stream_filter.fingerprint() if stream_filter is not None else None
-        if _prior_stats.get("stream_filter_fp") != _sf_fp:
-            raise ValueError(
-                "stream_filter must match the existing index (the analyzer "
-                "chain is fixed at creation)"
-            )
-        if prior_sort is not None and (
-            prior_sort.get("field") != sort_by
-            or bool(prior_sort.get("ascending", True)) != bool(sort_ascending)
-        ):
-            raise ValueError(
-                f"index is sorted by {prior_sort}; append must pass the "
-                "same sort_by/sort_ascending (IndexWriterConfig."
-                "setIndexSort is fixed at index creation)"
-            )
-        if prior_sort is None and sort_by is not None:
-            raise ValueError(
-                "existing index is unsorted; sort_by cannot be added after "
-                "creation (IndexWriterConfig.setIndexSort is fixed)"
-            )
-    committed_recs = [
-        rec
-        for rec in read_manifest(index_dir)
-        if rec.get("status") == "committed" and rec.get("batch") is not None
-    ]
     batch_offset = 0
     seg_offset = 0
-    if append and committed_recs:
+    if append and commit.batches:
         if batch_segments is None:
             batch_segments_eff = n_segments
         else:
             batch_segments_eff = batch_segments
         n_batches_job = -(-n_segments // batch_segments_eff)
-        jobs = [r for r in read_manifest(index_dir) if r.get("type") == "append_job"]
-        committed_ids = {r["batch"] for r in committed_recs}
-        last = jobs[-1] if jobs else None
+        last = commit.append_jobs[-1] if commit.append_jobs else None
         if last is not None and not all(
-            b in committed_ids
+            b in commit.batches
             for b in range(last["batch_offset"], last["batch_offset"] + last["n_batches"])
         ):
             # resume the crashed append job at its original offsets
             batch_offset = last["batch_offset"]
             seg_offset = last["seg_offset"]
         else:
-            batch_offset = max(r["batch"] for r in committed_recs) + 1
-            seg_offset = 1 + max(
-                int(s) for r in committed_recs for s in r.get("per_segment", {"-1": 0})
-            )
-            _append_manifest(
+            batch_offset = max(commit.batches) + 1
+            seg_offset = 1 + max(commit.segments, default=-1)
+            append_manifest(
                 index_dir,
                 {
                     "type": "append_job",
@@ -849,16 +623,16 @@ def build_index(
     if batch_segments is None:
         batch_segments = n_segments
 
-    committed = {r["batch"] for r in committed_recs}
     seg_batches = [
         (batch_offset + bi, [seg_offset + s for s in range(b, min(b + batch_segments, n_segments))])
         for bi, b in enumerate(range(0, n_segments, batch_segments))
     ]
 
-    def make_builder(with_positions: bool, mode: str, direct_out: "str | None" = None):
+    def make_builder(with_positions: bool, mode: str):
         fields = sorted((extra_fields or {}).keys())
 
-        def invert_all(pdf: pd.DataFrame, seg: int, as_frames: bool):
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            seg = int(pdf["seg"].iloc[0])
             if sort_by is not None:
                 # index sort: docID order within the segment = sort order
                 pdf = pdf.sort_values(
@@ -878,71 +652,40 @@ def build_index(
                 pdf["sv"].to_numpy(dtype=np.int64)
                 if sort_by is not None else None
             )
-            frames = invert_segment(
+            frames = [invert_segment(
                 seg, gids, keys, pdf["text"],
-                with_positions=with_positions, as_frames=as_frames,
+                with_positions=with_positions,
                 sort_vals=sv, with_offsets=with_offsets,
                 with_payloads=with_payloads, token_filter=token_filter,
                 char_filter=char_filter, synonyms=synonyms,
                 stream_filter=stream_filter,
-            )
-            frames = frames if as_frames else [frames]
+            )]
             for f in fields:
-                more = invert_segment(
+                frames.append(invert_segment(
                     seg, gids, keys, pdf[f"xf_{f}"],
-                    with_positions=with_positions, field=f, as_frames=as_frames,
+                    with_positions=with_positions, field=f,
                     with_offsets=with_offsets, with_payloads=with_payloads,
                     token_filter=token_filter, char_filter=char_filter,
                     synonyms=synonyms, stream_filter=stream_filter,
-                )
-                frames.extend(more if as_frames else [more])
-            return frames
-
-        if direct_out is not None:
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                seg = int(pdf["seg"].iloc[0])
-                frames = invert_all(pdf, seg, as_frames=True)
-                n = write_segment_parquet(frames, direct_out, seg)
-                return pd.DataFrame({"seg": [np.int64(seg)], "n_rows": [np.int64(n)]})
-        else:
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                frames = invert_all(pdf, int(pdf["seg"].iloc[0]), as_frames=False)
-                return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+                ))
+            return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
         return fn
 
-    if direct_write is None:
-        direct_write = False
-    if direct_write and "://" in index_dir:
-        raise ValueError("direct_write requires a path-reachable index dir")
     total_new = 0
     for bi, segs in seg_batches:
-        if bi in committed:
+        if bi in commit.batches:
             continue
         t0 = time.time()
         sub = df.filter(F.col("seg").isin([int(s) for s in segs]))
-        out_path = os.path.join(index_dir, "segments", f"batch={bi}")
-        if direct_write:
-            # overwrite semantics: clear any partial output from a crashed
-            # attempt, then the workers write + atomically rename per-seg
-            # files; the manifest line below is still the commit point
-            if os.path.exists(out_path):
-                import shutil
-
-                shutil.rmtree(out_path)
-            os.makedirs(out_path, exist_ok=True)
-            builder = make_builder(with_positions, mode, direct_out=out_path)
-            sub.groupBy("seg").applyInPandas(
-                builder, schema="seg long, n_rows long"
-            ).collect()
-        else:
-            builder = make_builder(with_positions, mode)
-            staged = sub.groupBy("seg").applyInPandas(builder, schema=STAGING_SCHEMA)
-            staged.write.mode("overwrite").partitionBy("row_type").parquet(out_path)
+        out_path = os.path.join(index_dir, batch_path(bi))
+        builder = make_builder(with_positions, mode)
+        staged = sub.groupBy("seg").applyInPandas(builder, schema=STAGING_SCHEMA)
+        staged.write.mode("overwrite").partitionBy("row_type").parquet(out_path)
         wall = time.time() - t0
         # lineage + metrics from the tiny segstat rows (driver-side pyarrow
         # read of a handful of rows — no extra Spark job)
-        seg_pdf = _read_segstats(out_path)
+        seg_pdf = read_segstats(out_path)
         seg_stats = {
             int(r.seg): {
                 "n_docs": int(r.s_n_docs),
@@ -952,7 +695,7 @@ def build_index(
             for r in seg_pdf.itertuples(index=False)
         }
         n_docs_batch = sum(s["n_docs"] for s in seg_stats.values())
-        _append_manifest(
+        append_manifest(
             index_dir,
             {
                 "batch": bi,
@@ -970,78 +713,13 @@ def build_index(
         if fail_after_batches is not None and bi + 1 >= fail_after_batches:
             raise RuntimeError(f"injected failure after batch {bi}")
 
-    finalize_index(spark, index_dir)
-    if (sort_by is not None or with_offsets or with_payloads or char_filter
-            or synonyms is not None or stream_filter is not None):
-        with open(stats_path) as f:
-            stats = json.load(f)
-        if sort_by is not None:
-            stats["index_sort"] = {
-                "field": sort_by, "ascending": bool(sort_ascending),
-            }
-        if with_offsets:
-            stats["with_offsets"] = True
-        if with_payloads:
-            stats["with_payloads"] = True
-        if char_filter:
-            stats["char_filter"] = char_filter_fingerprint(char_filter)
-        if synonyms is not None:
-            stats["synonyms_fp"] = synonyms.fingerprint()
-        if stream_filter is not None:
-            stats["stream_filter_fp"] = stream_filter.fingerprint()
-        with open(stats_path, "w") as f:
-            json.dump(stats, f)
+    _finalize(spark, index_dir, config)
     return {
         "n_docs_new": total_new,
         "n_batches": len(seg_batches),
         "wall_sec": time.time() - t_start,
         "meta": meta,
     }
-
-
-def _sum_field_stats(into: "dict[str, dict]", add: "dict[str, dict]") -> None:
-    for f, s in add.items():
-        cur = into.setdefault(f, {"doc_count": 0, "sum_ttf": 0})
-        cur["doc_count"] += int(s["doc_count"])
-        cur["sum_ttf"] += int(s["sum_ttf"])
-
-
-def _batch_field_stats(index_dir: str, batch: int) -> "dict[str, dict]":
-    """Per-field stats of one build batch, from its fieldstat rows."""
-    fagg = _read_fieldstats(
-        os.path.join(index_dir, "segments", f"batch={int(batch)}")
-    )
-    return {
-        str(field): {
-            "doc_count": int(grp["s_doc_count"].sum()),
-            "sum_ttf": int(grp["s_sum_dl"].sum()),
-        }
-        for field, grp in fagg.groupby("term")
-    }
-
-
-def unit_field_stats(index_dir: str, unit: dict) -> "dict[str, dict]":
-    """Per-field stat contribution of one live unit.
-
-    Batch units read their fieldstat rows; merge units carry
-    ``unit_field_stats`` in their manifest record (inputs' sum, minus the
-    purged docs' per-field contribution for purging merges). Legacy merge
-    records without the field fall back to their covered batches' sums —
-    exact for them, since legacy purges rejected multi-field indexes and
-    the default field is overridden from global doc stats anyway.
-    """
-    from .merge import _merge_rec_by_uid
-
-    if unit["uid"].startswith("b"):
-        return _batch_field_stats(index_dir, int(unit["uid"][1:]))
-    rec = _merge_rec_by_uid(index_dir, unit["uid"]) or {}
-    fs = rec.get("unit_field_stats")
-    if fs is not None:
-        return {str(k): dict(v) for k, v in fs.items()}
-    out: dict[str, dict] = {}
-    for b in rec.get("merged_batches", []):
-        _sum_field_stats(out, _batch_field_stats(index_dir, int(b)))
-    return out
 
 
 def _write_terms_tables(terms, index_dir: str) -> None:
@@ -1065,18 +743,16 @@ def _write_terms_tables(terms, index_dir: str) -> None:
     vocab table, O(|vocab|) with no shuffle."""
     import shutil
 
-    def _commit(df, name: str) -> str:
+    def _commit(df, name: str) -> None:
         tmp = os.path.join(index_dir, f"{name}_new")
         df.write.mode("overwrite").parquet(tmp)
         final = os.path.join(index_dir, name)
         shutil.rmtree(final, ignore_errors=True)
         os.rename(tmp, final)
-        return final
 
-    terms_path = _commit(terms, "terms")
-    spark = terms.sparkSession
+    _commit(terms, "terms")
     rev = (
-        spark.read.parquet(terms_path)
+        read_table(terms.sparkSession, index_dir, ["terms"], TERMS_SCHEMA)
         .withColumn("rterm", F.reverse(F.col("term")))
         .select("rterm", "term", "doc_freq", "total_term_freq")
         .sortWithinPartitions("rterm")
@@ -1084,55 +760,47 @@ def _write_terms_tables(terms, index_dir: str) -> None:
     _commit(rev, "terms_rev")
 
 
-def _finalize_from_live_units(spark: SparkSession, index_dir: str) -> None:
-    """Live-unit stats view (used once any purged merge exists).
+def finalize_index(spark: SparkSession, index_dir: str) -> None:
+    """Re-derive the global terms table and ``stats.json`` from the live
+    units, keeping the build config of the prior ``stats.json``."""
+    _finalize(spark, index_dir, {})
 
-    Every live unit contributes its own term rows / survivor aggregates,
-    its doc stats, and its per-field stats: batch units from their
-    term/fieldstat rows (deleted-but-unpurged docs still count — Lucene
-    pre-merge semantics), merged units from their block metadata and
-    manifest-recorded ``unit_doc_stats`` / ``unit_field_stats``.
+
+def _finalize(spark: SparkSession, index_dir: str, config: dict) -> None:
+    """Global term stats + collection stats (idf/avgdl inputs are GLOBAL),
+    over the LIVE units (the SegmentInfos view).
+
+    Batch units contribute their per-segment term rows, segstat and
+    fieldstat rows (deleted-but-unpurged docs still count — Lucene
+    pre-merge semantics); merge units contribute survivor aggregates of
+    their block metadata and their recorded ``unit_doc_stats`` /
+    ``unit_field_stats``. A non-purging merge keeps every posting, so its
+    view equals its inputs'; a purging one drops the docs it reclaimed.
+
+    The terms table is the only Spark job (one groupBy shuffle), written
+    sorted-within-partition so Parquet row-group min/max stats act as the
+    term index (the FST analog). ``stats.json`` is written once, atomically:
+    the prior file's build-config keys, then ``config`` (the caller's build
+    config), then the derived stats and the format number.
     """
-    from .merge import _merge_rec_by_uid, live_units
-
-    units = live_units(index_dir)
-    term_parts = []
-    doc_stats = {"n_rows": 0, "doc_count": 0, "sum_dl": 0}
-    field_stats: dict[str, dict] = {}
-    for u in units:
-        if u["uid"].startswith("b"):
-            p = os.path.join(
-                index_dir, "segments",
-                f"batch={int(u['uid'][1:])}", "row_type=term",
+    commit = Commit.load(index_dir)
+    units = commit.live_units
+    batches = [batch_path(int(u["uid"][1:]), "term") for u in units if u["uid"].startswith("b")]
+    merged = [u["path"] for u in units if u["uid"] in commit.merges]
+    parts = []
+    if batches:
+        parts.append(read_table(spark, index_dir, batches, TERMS_SCHEMA))
+    if merged:
+        parts.append(
+            read_table(spark, index_dir, merged, MERGED_SCHEMA).select(
+                "term",
+                F.col("doc_count").cast("long").alias("doc_freq"),
+                F.col("freq_sum").alias("total_term_freq"),
             )
-            term_parts.append(
-                spark.read.parquet(p).select("term", "doc_freq", "total_term_freq")
-            )
-            from .merge import _batch_doc_stats
-
-            s = _batch_doc_stats(index_dir, int(u["uid"][1:]))
-        else:
-            mp = os.path.join(index_dir, u["path"])
-            term_parts.append(
-                spark.read.parquet(mp)
-                .groupBy("term")
-                .agg(
-                    F.sum("doc_count").cast("long").alias("doc_freq"),
-                    F.sum("freq_sum").cast("long").alias("total_term_freq"),
-                )
-            )
-            rec = _merge_rec_by_uid(index_dir, u["uid"])
-            s = (rec or {}).get("unit_doc_stats") or {
-                "n_rows": 0, "doc_count": 0, "sum_dl": 0
-            }
-        _sum_field_stats(field_stats, unit_field_stats(index_dir, u))
-        for k in doc_stats:
-            doc_stats[k] += s[k]
-    df = term_parts[0]
-    for p in term_parts[1:]:
-        df = df.unionByName(p)
+        )
+    rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     terms = (
-        df.groupBy("term")
+        rows.groupBy("term")
         .agg(
             F.sum("doc_freq").alias("doc_freq"),
             F.sum("total_term_freq").alias("total_term_freq"),
@@ -1141,67 +809,21 @@ def _finalize_from_live_units(spark: SparkSession, index_dir: str) -> None:
     )
     _write_terms_tables(terms, index_dir)
 
-    stats_path = os.path.join(index_dir, "stats.json")
-    stats = {}
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            stats = json.load(f)
-    max_gid = stats.get("max_gid", -1)
-    for d in sorted(os.listdir(os.path.join(index_dir, "segments"))):
-        if d.startswith("batch="):
-            seg = _read_segstats(os.path.join(index_dir, "segments", d))
-            if len(seg):
-                max_gid = max(max_gid, int(seg["s_max_gid"].max()))
+    prior = commit.stats or {}
+    stats = {k: prior[k] for k in BUILD_CONFIG_KEYS if k in prior}
+    stats.update(config)
+    doc_stats = commit.doc_stats(units)
     stats.update(
         {
+            "format": FORMAT_VERSION,
             "n_rows": doc_stats["n_rows"],
             "doc_count": doc_stats["doc_count"],
             "sum_total_term_freq": doc_stats["sum_dl"],
-            "max_gid": int(max_gid),
+            "max_gid": commit.max_gid(),
+            "fields": commit.field_stats(units),
         }
     )
-    from ..plans.fields import DEFAULT_FIELD
-
-    fields = field_stats if field_stats else dict(stats.get("fields") or {})
-    # the default field's doc rows are the authoritative survivor view
-    fields[DEFAULT_FIELD] = {
-        "doc_count": stats["doc_count"],
-        "sum_ttf": stats["sum_total_term_freq"],
-    }
-    stats["fields"] = fields
-    with open(stats_path, "w") as f:
-        json.dump(stats, f)
-
-
-def _read_segstats(path: str) -> pd.DataFrame:
-    """Driver-side read of the tiny segstat rows (one per segment)."""
-    import pyarrow.dataset as ds
-
-    sub = os.path.join(path, "row_type=segstat")
-    cols = ["seg", "s_n_docs", "s_doc_count", "s_sum_dl", "s_max_gid", "s_n_terms", "s_n_postings"]
-    return ds.dataset(sub, format="parquet").to_table(columns=cols).to_pandas()
-
-
-def _read_fieldstats(path: str) -> pd.DataFrame:
-    """Driver-side read of the per-(segment, field) stat rows."""
-    import pyarrow.dataset as ds
-
-    sub = os.path.join(path, "row_type=fieldstat")
-    if not os.path.isdir(sub):  # pre-multi-field index layout
-        return pd.DataFrame(columns=["term", "s_doc_count", "s_sum_dl"])
-    cols = ["term", "s_doc_count", "s_sum_dl"]
-    return ds.dataset(sub, format="parquet").to_table(columns=cols).to_pandas()
-
-
-def fdoc_paths(index_dir: str, batches: "Iterable[int]") -> "list[str]":
-    """Existing per-(doc, extra-field) length row dirs for the batches
-    (absent on single-field indexes and pre-fdoc layouts)."""
-    out = []
-    for b in batches:
-        p = os.path.join(index_dir, "segments", f"batch={int(b)}", "row_type=fdoc")
-        if os.path.isdir(p):
-            out.append(p)
-    return out
+    write_stats(index_dir, stats)
 
 
 def delete_docs(
@@ -1226,10 +848,7 @@ def delete_docs(
 
     if (gids is None) == (query is None):
         raise ValueError("exactly one of gids / query required")
-    recs = read_manifest(index_dir)
-    n_prev = sum(1 for r in recs if r.get("type") == "delete")
-    rel = os.path.join("deletes", f"del_{n_prev}")
-    out_path = os.path.join(index_dir, rel)
+    rel = Commit.load(index_dir).next_delete_path
     if gids is not None:
         df = spark.createDataFrame([(int(g),) for g in gids], "gid long")
     else:
@@ -1240,14 +859,13 @@ def delete_docs(
 
             node = parse_query(query)
         df = s.candidates(node, k=1 << 62, prune=False).select("gid").distinct()
-    return _commit_delete_df(spark, index_dir, df, rel, out_path)
+    return _commit_delete_df(spark, index_dir, df, rel)
 
 
-def _commit_delete_df(spark, index_dir: str, df: DataFrame, rel: str,
-                      out_path: str) -> dict:
+def _commit_delete_df(spark, index_dir: str, df: DataFrame, rel: str) -> dict:
     """Write a gid DataFrame as a committed delete record (.liv analog)."""
-    df.write.mode("overwrite").parquet(out_path)
-    n = spark.read.parquet(out_path).count()
+    df.write.mode("overwrite").parquet(os.path.join(index_dir, rel))
+    n = read_table(spark, index_dir, [rel], GID_SCHEMA).count()
     rec = {
         "type": "delete",
         "status": "committed",
@@ -1255,7 +873,7 @@ def _commit_delete_df(spark, index_dir: str, df: DataFrame, rel: str,
         "n_docs": int(n),
         "ts": time.time(),
     }
-    _append_manifest(index_dir, rec)
+    append_manifest(index_dir, rec)
     return rec
 
 
@@ -1297,18 +915,15 @@ def update_documents(
     keys = docs.select(
         F.col(key_col).cast("string").alias("key")
     ).distinct()
+    searcher = Searcher(spark, index_dir)
     old_gids = (
-        Searcher(spark, index_dir)
-        .doc_rows()
+        searcher.doc_rows()
         .join(F.broadcast(keys), on="key", how="left_semi")
         .select("gid")
         .distinct()
     )
-    recs = read_manifest(index_dir)
-    n_prev = sum(1 for r in recs if r.get("type") == "delete")
-    rel = os.path.join("deletes", f"del_{n_prev}")
     del_rec = _commit_delete_df(
-        spark, index_dir, old_gids, rel, os.path.join(index_dir, rel)
+        spark, index_dir, old_gids, searcher.commit.next_delete_path
     )
     add_stats = build_index(
         spark, docs, index_dir,
@@ -1319,70 +934,3 @@ def update_documents(
         sort_by=sort_by, sort_ascending=sort_ascending,
     )
     return {"n_deleted": del_rec["n_docs"], "add": add_stats}
-
-
-def finalize_index(spark: SparkSession, index_dir: str) -> None:
-    """Global term stats + collection stats (idf/avgdl inputs are GLOBAL).
-
-    The terms table is the only Spark job (a groupBy shuffle over per-segment
-    term rows); collection stats aggregate the per-segment segstat rows on
-    the driver. Term rows are written sorted-within-partition so Parquet
-    row-group min/max stats act as the term index (the FST analog) without a
-    range-partitioner sampling pass.
-
-    Once a PURGED merge exists, the all-batches aggregation would resurrect
-    reclaimed docs' stats, so finalize switches to the live-unit view:
-    batch units contribute their term rows (deleted-but-unpurged docs still
-    count — Lucene pre-merge semantics), merged units contribute survivor
-    aggregates from their block metadata.
-    """
-    purged_ever = any(
-        r.get("type") == "merge" and r.get("status") == "committed" and r.get("purged")
-        for r in read_manifest(index_dir)
-    )
-    if purged_ever:
-        _finalize_from_live_units(spark, index_dir)
-        return
-    term_glob = os.path.join(index_dir, "segments", "batch=*", "row_type=term")
-    terms = (
-        spark.read.parquet(term_glob)
-        .groupBy("term")
-        .agg(
-            F.sum("doc_freq").alias("doc_freq"),
-            F.sum("total_term_freq").alias("total_term_freq"),
-        )
-        .sortWithinPartitions("term")
-    )
-    _write_terms_tables(terms, index_dir)
-
-    batch_dirs = [
-        os.path.join(index_dir, "segments", d)
-        for d in sorted(os.listdir(os.path.join(index_dir, "segments")))
-        if d.startswith("batch=")
-    ]
-    agg = pd.concat([_read_segstats(d) for d in batch_dirs], ignore_index=True)
-    stats = {}
-    prior_stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(prior_stats_path):
-        # preserve build-time metadata (index_sort) across re-finalizes
-        with open(prior_stats_path) as f:
-            stats = {
-                k: v for k, v in json.load(f).items() if k == "index_sort"
-            }
-    stats.update({
-        "n_rows": int(agg["s_n_docs"].sum()),
-        "doc_count": int(agg["s_doc_count"].sum()),
-        "sum_total_term_freq": int(agg["s_sum_dl"].sum()),
-        "max_gid": int(agg["s_max_gid"].max()) if len(agg) else -1,
-    })
-    fagg = pd.concat([_read_fieldstats(d) for d in batch_dirs], ignore_index=True)
-    if len(fagg):
-        stats["fields"] = {
-            str(field): {
-                "doc_count": int(grp["s_doc_count"].sum()),
-                "sum_ttf": int(grp["s_sum_dl"].sum()),
-            }
-            for field, grp in fagg.groupby("term")
-        }
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump(stats, f)

@@ -25,17 +25,22 @@ merge; the searcher reads merged postings plus any batches committed after.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..functions.blocks import Postings, read_blocks, sort_postings, write_blocks
-from .indexer import _append_manifest, finalize_index, read_manifest
+from ..plans.fields import DEFAULT_FIELD
+from .commit import (
+    DOC_SCHEMA, FDOC_SCHEMA, GID_SCHEMA, MERGED_SCHEMA, POSTINGS_SCHEMA,
+    PURGED_SCHEMA, TERMS_SCHEMA, Commit, append_manifest, batch_path, read_gids,
+    read_table,
+)
+from .indexer import finalize_index
 
 # default postings per (term, salt) reducer group; merge and check also
 # size their buckets of groups by it (``bucket_count``)
@@ -49,31 +54,6 @@ def bucket_count(spark: SparkSession, units: "list[dict]") -> int:
     terms."""
     return max(spark.sparkContext.defaultParallelism,
                -(-sum(u["n_postings"] for u in units) // SALT_DOCS))
-
-MERGED_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("seg", T.LongType()),
-        T.StructField("block_ord", T.IntegerType()),
-        T.StructField("doc_count", T.IntegerType()),
-        T.StructField("first_gid", T.LongType()),
-        T.StructField("last_gid", T.LongType()),
-        T.StructField("gids", T.BinaryType()),
-        T.StructField("freqs", T.BinaryType()),
-        T.StructField("norms", T.BinaryType()),
-        T.StructField("positions", T.BinaryType()),
-        # offsets mode: char-offset delta + length streams (null otherwise)
-        T.StructField("off_starts", T.BinaryType()),
-        T.StructField("off_lens", T.BinaryType()),
-        # payloads mode: per-occurrence integer payload stream (null otherwise)
-        T.StructField("payloads", T.BinaryType()),
-        T.StructField("imp_freqs", T.ArrayType(T.LongType())),
-        T.StructField("imp_norms", T.ArrayType(T.IntegerType())),
-        # per-block freq sum: lets survivor term stats (totalTermFreq) be
-        # re-derived from merged postings without decoding payloads
-        T.StructField("freq_sum", T.LongType()),
-    ]
-)
 
 
 def _empty_merged_frame() -> pd.DataFrame:
@@ -128,155 +108,14 @@ def _merge_bucket(pdf: pd.DataFrame, deleted: "np.ndarray | None",
     return pd.DataFrame(out)
 
 
-# -------------------------------------------------------------- unit model
-#
-# A merge *unit* is either a committed build batch ("b<N>", postings at
-# segments/batch=N/row_type=post) or a committed merge output ("m<K>",
-# postings at postings_merged_m<K>). A unit is LIVE until a later committed
-# merge lists it in `inputs` — the SegmentInfos view of the index. The
-# searcher reads exactly the live units; tiered_merge folds one tier of
-# live units at a time (TieredMergePolicy.java:89-95 analog), so a
-# continuously appended index pays O(tier) per refresh, never O(index).
-
-
 def live_units(index_dir: str) -> "list[dict]":
-    """Live merge units with sizes: [{uid, path, n_postings}]."""
-    manifest = read_manifest(index_dir)
-    consumed: set = set()
-    merges = []
-    for i, rec in enumerate(manifest):
-        if rec.get("type") == "merge" and rec.get("status") == "committed":
-            inputs = rec.get("inputs")
-            if inputs is None:  # legacy full-merge record
-                inputs = [f"b{b}" for b in rec.get("merged_batches", [])]
-            consumed |= set(inputs)
-            merges.append(
-                {
-                    "uid": f"m{rec.get('merge_id', i)}",
-                    "path": rec.get("out", "postings_merged"),
-                    "n_postings": int(rec.get("n_postings", 0)),
-                }
-            )
-    units = []
-    for rec in manifest:
-        if rec.get("status") == "committed" and rec.get("batch") is not None:
-            uid = f"b{rec['batch']}"
-            if uid in consumed:
-                continue
-            n_post = sum(
-                int(s.get("n_postings", 0)) for s in rec.get("per_segment", {}).values()
-            )
-            units.append(
-                {
-                    "uid": uid,
-                    "path": os.path.join("segments", f"batch={rec['batch']}", "row_type=post"),
-                    "n_postings": n_post,
-                }
-            )
-    units.extend(m for m in merges if m["uid"] not in consumed)
-    return units
-
-
-def _next_merge_id(index_dir: str) -> int:
-    """Next collision-free merge id.
-
-    Legacy merge records (no ``merge_id`` field) take their MANIFEST INDEX
-    as uid suffix in ``live_units``; a new id must clear those too, or two
-    units could share a uid and `inputs` consumption would silently drop a
-    live unit from every search."""
-    ids = [-1]
-    for i, r in enumerate(read_manifest(index_dir)):
-        if r.get("type") == "merge" and r.get("status") == "committed":
-            ids.append(int(r.get("merge_id", i)))
-    return max(ids) + 1
-
-
-def read_delete_paths(index_dir: str, paths: "list[str]") -> "np.ndarray | None":
-    """Sorted unique gid array from the given delete-record paths."""
-    if not paths:
-        return None
-    import pyarrow.dataset as ds
-
-    arrs = [
-        ds.dataset(os.path.join(index_dir, p), format="parquet")
-        .to_table(columns=["gid"]).column("gid").to_numpy()
-        for p in paths
-    ]
-    return np.unique(np.concatenate(arrs)).astype(np.int64)
-
-
-def load_deleted_gids(index_dir: str) -> "np.ndarray | None":
-    """Sorted array of deleted gids from ALL committed delete records
-    (the single source of truth for searchers, merges, and audits)."""
-    from .indexer import read_manifest
-
-    return read_delete_paths(index_dir, [
-        r["path"] for r in read_manifest(index_dir)
-        if r.get("type") == "delete" and r.get("status") == "committed"
-    ])
-
-
-def _covered_batches(index_dir: str, units: "list[dict]") -> "list[int]":
-    """Batches covered TRANSITIVELY by the given units (a merge-of-merges
-    input expands through its own inputs)."""
-    recs = {}
-    for i, r in enumerate(read_manifest(index_dir)):
-        if r.get("type") == "merge" and r.get("status") == "committed":
-            recs[f"m{r.get('merge_id', i)}"] = r
-    out: set[int] = set()
-
-    def walk(uid: str) -> None:
-        if uid.startswith("b"):
-            out.add(int(uid[1:]))
-            return
-        rec = recs.get(uid, {})
-        inputs = rec.get("inputs")
-        if inputs is None:
-            out.update(int(b) for b in rec.get("merged_batches", []))
-            return
-        for u in inputs:
-            walk(u)
-
-    for u in units:
-        walk(u["uid"])
-    return sorted(out)
-
-
-def _prior_purged_paths(index_dir: str, units: "list[dict]") -> "list[str]":
-    """purged_gids parquet rel-paths of every purging merge in the units'
-    transitive input chains — docs those purges reclaimed must not be
-    subtracted (or dropped from stats) a second time."""
-    recs = {}
-    for i, r in enumerate(read_manifest(index_dir)):
-        if r.get("type") == "merge" and r.get("status") == "committed":
-            recs[f"m{r.get('merge_id', i)}"] = r
-    paths: list[str] = []
-
-    def walk(uid: str) -> None:
-        rec = recs.get(uid)
-        if rec is None:
-            return
-        if rec.get("purged") and rec.get("purged_gids"):
-            paths.append(rec["purged_gids"])
-        for u in rec.get("inputs") or []:
-            walk(u)
-
-    for u in units:
-        walk(u["uid"])
-    return paths
-
-
-def _sum_unit_field_stats(index_dir: str, units: "list[dict]") -> "dict[str, dict]":
-    from .indexer import _sum_field_stats, unit_field_stats
-
-    out: dict[str, dict] = {}
-    for u in units:
-        _sum_field_stats(out, unit_field_stats(index_dir, u))
-    return out
+    """Live merge units with sizes: [{uid, path, n_postings}] (see
+    ``commit.py`` for the unit model)."""
+    return list(Commit.load(index_dir).live_units)
 
 
 def _purge_delta(
-    spark: SparkSession, index_dir: str, units: "list[dict]", mid: int
+    spark: SparkSession, commit: Commit, units: "list[dict]", mid: int
 ) -> "tuple[str, dict, dict]":
     """Identify + record the docs this purging merge actually reclaims.
 
@@ -288,32 +127,22 @@ def _purge_delta(
     the per-field delta for EXTRA fields comes from the batches' fdoc
     rows (one metadata row per (doc, field), no postings decode).
     """
-    from .indexer import fdoc_paths
-
-    cov = _covered_batches(index_dir, units)
-    del_paths = [
-        os.path.join(index_dir, r["path"])
-        for r in read_manifest(index_dir)
-        if r.get("type") == "delete" and r.get("status") == "committed"
-    ]
+    index_dir = commit.index_dir
+    cov = commit.covered_batches(units)
     rel = f"purged_gids_m{mid}"
-    out_path = os.path.join(index_dir, rel)
-    doc_dirs = [
-        os.path.join(index_dir, "segments", f"batch={b}", "row_type=doc")
-        for b in cov
-    ]
-    docs = spark.read.parquet(*doc_dirs).select("gid", "doc_len")
-    if del_paths:
-        dels = spark.read.parquet(*del_paths).select("gid").distinct()
+    docs = read_table(
+        spark, index_dir, [batch_path(b, "doc") for b in cov], DOC_SCHEMA
+    ).select("gid", "doc_len")
+    if commit.delete_paths:
+        dels = read_table(spark, index_dir, commit.delete_paths, GID_SCHEMA).distinct()
         newly = docs.join(dels, "gid", "left_semi")
     else:
         newly = docs.limit(0)
-    prior = _prior_purged_paths(index_dir, units)
+    prior = commit.purged_gid_paths(units)
     if prior:
-        pg = spark.read.parquet(*[os.path.join(index_dir, p) for p in prior])
-        newly = newly.join(pg.select("gid"), "gid", "left_anti")
-    newly.write.mode("overwrite").parquet(out_path)
-    newly = spark.read.parquet(out_path)
+        newly = newly.join(read_table(spark, index_dir, prior, GID_SCHEMA), "gid", "left_anti")
+    newly.write.mode("overwrite").parquet(os.path.join(index_dir, rel))
+    newly = read_table(spark, index_dir, [rel], PURGED_SCHEMA)
     agg = newly.agg(
         F.count("*").alias("n_rows"),
         F.coalesce(F.sum((F.col("doc_len") > 0).cast("long")), F.lit(0)).alias("dc"),
@@ -324,15 +153,13 @@ def _purge_delta(
         "doc_count": int(agg["dc"]),
         "sum_dl": int(agg["dl"]),
     }
-    from ..plans.fields import DEFAULT_FIELD
-
     fdelta: dict[str, dict] = {
         DEFAULT_FIELD: {"doc_count": ddelta["doc_count"], "sum_ttf": ddelta["sum_dl"]}
     }
-    fd = fdoc_paths(index_dir, cov)
+    fd = commit.fdoc_paths(cov)
     if fd and ddelta["n_rows"]:
         frows = (
-            spark.read.parquet(*fd)
+            read_table(spark, index_dir, fd, FDOC_SCHEMA)
             .select(F.col("term").alias("field"), "gid", "doc_len")
             .join(newly.select("gid"), "gid", "left_semi")
             .groupBy("field")
@@ -351,7 +178,7 @@ def _purge_delta(
 
 def _merge_units(
     spark: SparkSession,
-    index_dir: str,
+    commit: Commit,
     units: "list[dict]",
     *,
     salt_docs: int,
@@ -370,23 +197,21 @@ def _merge_units(
     ``purged_gids`` records.
     """
     t0 = time.time()
-    deleted = load_deleted_gids(index_dir) if purge else None
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
+    index_dir = commit.index_dir
+    stats = commit.stats
+    deleted = read_gids(index_dir, commit.delete_paths) if purge else None
     streams = ("positions",) * with_positions
     if stats.get("with_offsets"):
         streams += ("off_starts", "off_lens")
     if stats.get("with_payloads"):
         streams += ("payloads",)
     cols = ["term", "first_gid", "gids", "freqs", "norms", *streams]
-    parts = [spark.read.parquet(os.path.join(index_dir, u["path"])).select(*cols)
-             for u in units]
-    post = parts[0]
-    for p in parts[1:]:
-        post = post.unionByName(p)
+    post = read_table(
+        spark, index_dir, [u["path"] for u in units], POSTINGS_SCHEMA
+    ).select(*cols)
 
     # hot-term salt map from the global term stats (Zipf skew defusal)
-    terms_df = spark.read.parquet(os.path.join(index_dir, "terms"))
+    terms_df = read_table(spark, index_dir, ["terms"], TERMS_SCHEMA)
     hot = (
         terms_df.filter(F.col("doc_freq") > salt_docs)
         .select("term", "doc_freq")
@@ -412,7 +237,7 @@ def _merge_units(
         return _merge_bucket(pdf, deleted, streams)
 
     merged = post.groupBy("bucket").applyInPandas(fn, schema=MERGED_SCHEMA)
-    mid = _next_merge_id(index_dir)
+    mid = commit.next_merge_id
     out_rel = f"postings_merged_m{mid}"
     out_path = os.path.join(index_dir, out_rel)
     merged.sortWithinPartitions("term", "first_gid").write.mode("overwrite").parquet(out_path)
@@ -420,12 +245,12 @@ def _merge_units(
     # driver arithmetic: the unit's stat contribution = Σ inputs' (minus,
     # for a purge, exactly the docs this merge reclaimed) — keeps finalize
     # able to re-derive global stats from live units without re-scanning
-    unit_doc_stats = _sum_unit_doc_stats(index_dir, units)
-    unit_fields = _sum_unit_field_stats(index_dir, units)
+    unit_doc_stats = commit.doc_stats(units)
+    unit_fields = commit.field_stats(units)
     purged_rel = None
     n_newly = 0
     if purge:
-        purged_rel, ddelta, fdelta = _purge_delta(spark, index_dir, units, mid)
+        purged_rel, ddelta, fdelta = _purge_delta(spark, commit, units, mid)
         n_newly = ddelta["n_rows"]
         for k in unit_doc_stats:
             unit_doc_stats[k] -= ddelta[k]
@@ -443,7 +268,7 @@ def _merge_units(
         "out": out_rel,
         "n_postings": int(sum(u["n_postings"] for u in units)),
         # batches covered transitively (merge-of-merges inputs expanded)
-        "merged_batches": _covered_batches(index_dir, units),
+        "merged_batches": commit.covered_batches(units),
         "salt_docs": salt_docs,
         "n_hot_terms": len(n_salts),
         "purged": bool(purge),
@@ -454,53 +279,12 @@ def _merge_units(
         "wall_sec": round(wall, 3),
         "ts": time.time(),
     }
-    _append_manifest(index_dir, rec)
+    append_manifest(index_dir, rec)
     if purge:
         # global terms table + collection/field stats re-derive from the
         # post-merge live units (idf/avgdl drop the reclaimed docs)
         finalize_index(spark, index_dir)
     return rec
-
-
-def _batch_doc_stats(index_dir: str, batch: int) -> dict:
-    from .indexer import _read_segstats
-
-    seg = _read_segstats(os.path.join(index_dir, "segments", f"batch={batch}"))
-    return {
-        "n_rows": int(seg["s_n_docs"].sum()),
-        "doc_count": int(seg["s_doc_count"].sum()),
-        "sum_dl": int(seg["s_sum_dl"].sum()),
-    }
-
-
-def _merge_rec_by_uid(index_dir: str, uid: str) -> "dict | None":
-    from .indexer import read_manifest
-
-    for i, r in enumerate(read_manifest(index_dir)):
-        if r.get("type") == "merge" and r.get("status") == "committed":
-            if f"m{r.get('merge_id', i)}" == uid:
-                return r
-    return None
-
-
-def _sum_unit_doc_stats(index_dir: str, units: "list[dict]") -> dict:
-    out = {"n_rows": 0, "doc_count": 0, "sum_dl": 0}
-    for u in units:
-        if u["uid"].startswith("b"):
-            s = _batch_doc_stats(index_dir, int(u["uid"][1:]))
-        else:
-            rec = _merge_rec_by_uid(index_dir, u["uid"])
-            s = (rec or {}).get("unit_doc_stats")
-            if s is None:
-                # legacy merge record: its covered batches' stats
-                s = {"n_rows": 0, "doc_count": 0, "sum_dl": 0}
-                for b in (rec or {}).get("merged_batches", []):
-                    bs = _batch_doc_stats(index_dir, int(b))
-                    for k in s:
-                        s[k] += bs[k]
-        for k in out:
-            out[k] += s[k]
-    return out
 
 
 def merge_index(
@@ -522,11 +306,12 @@ def merge_index(
     Multi-field indexes purge too: per-field docCount/sumTotalTermFreq
     deltas come from the batches' fdoc metadata rows.
     """
-    units = live_units(index_dir)
+    commit = Commit.load(index_dir)
+    units = commit.live_units
     if not units:
         raise ValueError("nothing to merge: no committed batches")
     return _merge_units(
-        spark, index_dir, units, salt_docs=salt_docs,
+        spark, commit, units, salt_docs=salt_docs,
         with_positions=with_positions, purge=purge,
     )
 
@@ -557,7 +342,8 @@ def tiered_merge(
     (every Lucene merge reclaims its segments' deletes); deletes in
     untouched units keep counting toward stats until their own merge.
     """
-    units = live_units(index_dir)
+    commit = Commit.load(index_dir)
+    units = commit.live_units
     if len(units) < segs_per_tier:
         return None
     import math
@@ -575,7 +361,7 @@ def tiered_merge(
             group.sort(key=lambda u: u["n_postings"])
             picked = group[:max_merge_at_once]
             return _merge_units(
-                spark, index_dir, picked,
+                spark, commit, picked,
                 salt_docs=salt_docs, with_positions=with_positions,
                 purge=purge,
             )

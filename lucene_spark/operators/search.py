@@ -46,9 +46,7 @@ Spark shape of Lucene's search lifecycle (SURVEY.md §3b):
 from __future__ import annotations
 
 import heapq
-import json
 import math
-import os
 import uuid
 from dataclasses import dataclass, replace
 
@@ -102,6 +100,10 @@ from ..plans.query import (
     query_terms,
     subtree,
     term_keys,
+)
+from .commit import (
+    DOC_SCHEMA, FDOC_SCHEMA, GID_SCHEMA, POSTINGS_SCHEMA, TERMS_REV_SCHEMA,
+    TERMS_SCHEMA, Commit, read_gids, read_table,
 )
 
 __all__ = ["Searcher", "TermPostings", "eval_plan", "decode_term_blocks"]
@@ -2228,18 +2230,19 @@ class Searcher:
         self.sim = similarity if similarity is not None else BM25Sim(float(k1), float(b))
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+        # point-in-time, like Lucene's IndexSearcher over one IndexReader:
+        # the commit (live units, deletes, stats) is loaded once here, and
+        # commits made after it are seen by a new Searcher only
+        self.commit = Commit.load(index_dir)
+        if self.commit.stats is None:
+            raise FileNotFoundError(f"{index_dir} holds no finalized index")
+        self.stats = self.commit.stats
+        # warm-query caches: the scan DataFrames and per-term stats are
+        # pinned per searcher
         self._terms_df = None
-        self._terms_rev_df = _UNSET
-        # warm-query caches (IndexSearcher is point-in-time, like Lucene's
-        # searcher over a fixed IndexReader): re-calling spark.read.parquet
-        # per query costs a file-listing job each time, so the scan
-        # DataFrames and per-term stats are pinned per searcher. The
-        # postings cache is additionally keyed by the live-unit signature
-        # so a merge committed under this searcher is picked up.
+        self._terms_rev_df = None
         self._tstats_cache: dict = {}  # term -> (df, ttf) | None (absent)
-        self._postings_cache: "tuple | None" = None  # (units_sig, DataFrame)
+        self._postings = None
         self._docs_raw = None
         # scale knobs (defaults sized for cluster runs; tests shrink them to
         # exercise the multi-bucket + seeded-θ paths on tiny corpora)
@@ -2268,7 +2271,7 @@ class Searcher:
     # ---- planning -----------------------------------------------------
     def deleted_gids(self) -> "np.ndarray | None":
         """Sorted array of deleted docIDs, or None when the index has no
-        deletes (the common case costs one manifest scan). Deletes are
+        deletes. Deletes are
         memory-resident like Lucene's per-segment live-docs bitsets; at 8
         bytes per deleted doc the budget matches Lucene's own RAM model —
         but ONLY driver-side paths read this. Kernels take
@@ -2277,9 +2280,7 @@ class Searcher:
         r3 scale-killer at north-rule delete volumes)."""
         if self._deleted is not _UNSET:
             return self._deleted
-        from ..operators.merge import load_deleted_gids
-
-        self._deleted = load_deleted_gids(self.index_dir)
+        self._deleted = read_gids(self.index_dir, self.commit.delete_paths)
         return self._deleted
 
     def deleted_bc(self):
@@ -2295,30 +2296,19 @@ class Searcher:
         )
         return self._deleted_bc
 
-    def _delete_paths(self) -> "list[str]":
-        from ..operators.indexer import read_manifest
-
-        return [
-            os.path.join(self.index_dir, r["path"])
-            for r in read_manifest(self.index_dir)
-            if r.get("type") == "delete" and r.get("status") == "committed"
-        ]
-
     def has_deletes(self) -> bool:
         """Manifest-only check — never materializes the delete set."""
-        if self._deleted is not _UNSET:
-            return self._deleted is not None
-        return bool(self._delete_paths())
+        return bool(self.commit.delete_paths)
 
     def deleted_df(self) -> "DataFrame | None":
         """Deleted gids as a DataFrame straight off the delete-record
         parquet (no driver round-trip), for DataFrame-level live filters."""
         if self._deleted_df is not _UNSET:
             return self._deleted_df
-        paths = self._delete_paths()
+        paths = self.commit.delete_paths
         self._deleted_df = (
             None if not paths
-            else self.spark.read.parquet(*paths).select("gid").distinct()
+            else read_table(self.spark, self.index_dir, paths, GID_SCHEMA).distinct()
         )
         return self._deleted_df
 
@@ -2326,13 +2316,10 @@ class Searcher:
         """Postings scan over the LIVE merge units (SegmentInfos view):
         committed merge outputs + batches no merge has consumed yet. With
         tiered merging the unit count stays O(segs_per_tier · log(total)),
-        so this union is bounded on a continuously appended index."""
-        from ..operators.merge import live_units
-
-        units = live_units(self.index_dir)
-        sig = tuple(u["path"] for u in units)
-        if self._postings_cache is not None and self._postings_cache[0] == sig:
-            return self._postings_cache[1]
+        so this one multi-path scan is bounded on a continuously appended
+        index."""
+        if self._postings is not None:
+            return self._postings
         cols = [
             "term", "seg", "block_ord", "doc_count", "first_gid", "last_gid",
             "gids", "freqs", "norms", "positions", "imp_freqs", "imp_norms",
@@ -2341,19 +2328,11 @@ class Searcher:
             cols += ["off_starts", "off_lens"]
         if self.stats.get("with_payloads"):
             cols.append("payloads")
-        if not units:
-            path = os.path.join(self.index_dir, "segments", "batch=*", "row_type=post")
-            df = self.spark.read.parquet(path).select(*cols)
-        else:
-            parts = [
-                self.spark.read.parquet(os.path.join(self.index_dir, u["path"])).select(*cols)
-                for u in units
-            ]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        self._postings_cache = (sig, df)
-        return df
+        self._postings = read_table(
+            self.spark, self.index_dir,
+            [u["path"] for u in self.commit.live_units], POSTINGS_SCHEMA,
+        ).select(*cols)
+        return self._postings
 
     def term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
         """(doc_freq, total_term_freq) per term, driver-cached per searcher
@@ -2384,8 +2363,8 @@ class Searcher:
     # ---- multi-term rewrite (MultiTermQuery.java rewrite methods) ------
     def terms_table(self) -> DataFrame:
         if self._terms_df is None:
-            self._terms_df = self.spark.read.parquet(
-                os.path.join(self.index_dir, "terms")
+            self._terms_df = read_table(
+                self.spark, self.index_dir, ["terms"], TERMS_SCHEMA
             )
         return self._terms_df
 
@@ -2394,17 +2373,11 @@ class Searcher:
         total_term_freq), sorted by rterm: leading-wildcard / suffix
         patterns push a StartsWith(reverse(suffix)) into it — the Spark
         analog of Lucene's solr.ReversedWildcardFilter trade (index the
-        reversed form; a ``*ing`` seek becomes a prefix seek). Pre-rev
-        indexes fall back to deriving rterm on the fly (correct, no
-        row-group pruning)."""
-        if self._terms_rev_df is _UNSET:
-            path = os.path.join(self.index_dir, "terms_rev")
-            try:
-                self._terms_rev_df = self.spark.read.parquet(path)
-            except Exception:
-                self._terms_rev_df = self.terms_table().withColumn(
-                    "rterm", F.reverse(F.col("term"))
-                )
+        reversed form; a ``*ing`` seek becomes a prefix seek)."""
+        if self._terms_rev_df is None:
+            self._terms_rev_df = read_table(
+                self.spark, self.index_dir, ["terms_rev"], TERMS_REV_SCHEMA
+            )
         return self._terms_rev_df
 
     def matched_terms_df(self, node) -> DataFrame:
@@ -2868,9 +2841,9 @@ class Searcher:
 
     def field_stats(self, field: str) -> tuple[int, int]:
         """(docCount, sumTotalTermFreq) of one field — the idf/avgdl inputs
-        (per-field CollectionStatistics; falls back to the legacy top-level
-        stats for single-field indexes)."""
-        fs = self.stats.get("fields") or {}
+        (per-field CollectionStatistics). A query may name a field the index
+        does not have; that falls back to the collection stats."""
+        fs = self.stats["fields"]
         if field in fs:
             return int(fs[field]["doc_count"]), int(fs[field]["sum_ttf"])
         return int(self.stats["doc_count"]), int(self.stats["sum_total_term_freq"])
@@ -3062,19 +3035,24 @@ class Searcher:
         return out[["gid", "key", "score"]]
 
     def _docs_raw_df(self) -> DataFrame:
-        """The raw stored-fields/norms scan, pinned per searcher (each
-        spark.read.parquet call re-lists the batch partitions — one whole
-        Spark job — so warm queries reuse the plan)."""
+        """The raw stored-fields/norms scan over every committed batch,
+        pinned per searcher so warm queries reuse the plan."""
         if self._docs_raw is None:
-            path = os.path.join(
-                self.index_dir, "segments", "batch=*", "row_type=doc"
+            self._docs_raw = read_table(
+                self.spark, self.index_dir, self.commit.doc_paths(), DOC_SCHEMA
             )
-            self._docs_raw = self.spark.read.parquet(path)
         return self._docs_raw
 
     def doc_rows(self) -> DataFrame:
         """The docs/norms table: (seg, gid, key, doc_len, norm_b)."""
         return self._docs_raw_df().select("seg", "gid", "key", "doc_len", "norm_b")
+
+    def fdoc_rows(self) -> DataFrame:
+        """Per-(doc, extra field) lengths: (gid, term = field, doc_len)."""
+        return read_table(
+            self.spark, self.index_dir,
+            self.commit.fdoc_paths(self.commit.batches), FDOC_SCHEMA,
+        )
 
     # ---- IndexOrDocValuesQuery (numeric doc-value range) ---------------
     def _dv_minmax(self) -> tuple:
@@ -3640,13 +3618,12 @@ class Searcher:
         return max(width, -(-span // (1 << 18)))
 
     def _cache_generation(self) -> tuple:
-        """Cache-key generation component: live merge units + committed
-        delete files (the IndexReader.CacheKey analog — any commit, merge
-        or delete changes it, so stale entries miss and age out via LRU)."""
-        from ..operators.merge import live_units
-
-        units = tuple(u["path"] for u in live_units(self.index_dir))
-        return (self.index_dir, units, tuple(self._delete_paths()))
+        """Cache-key generation component of this searcher's commit: live
+        merge units + committed delete files (the IndexReader.CacheKey
+        analog — any commit, merge or delete changes it, so stale entries
+        miss and age out via LRU)."""
+        units = tuple(u["path"] for u in self.commit.live_units)
+        return (self.index_dir, units, self.commit.delete_paths)
 
     def _matching_gids(self, node) -> "np.ndarray | None":
         """Full (non-truncated, live-doc-masked) matching-gid set of one
@@ -4626,14 +4603,9 @@ class Searcher:
                 "sorted_index_topk requires an index built with sort_by "
                 "(stats.json has no index_sort)"
             )
-        from ..operators.indexer import SEG_SHIFT, read_manifest
+        from ..operators.indexer import SEG_SHIFT
 
-        segs = sorted({
-            int(s)
-            for rec in read_manifest(self.index_dir)
-            if rec.get("status") == "committed" and rec.get("per_segment")
-            for s in rec["per_segment"]
-        })
+        segs = self.commit.segments
         deleted = self.deleted_gids()
         ranges = []
         for s in segs:

@@ -295,32 +295,3 @@ def test_manifest_lineage_metrics(index_dir):
         assert "per_segment" in rec and rec["per_segment"]
         for seg_stats in rec["per_segment"].values():
             assert set(seg_stats) == {"n_docs", "n_terms", "n_postings"}
-
-
-def test_direct_write_index_is_search_identical(spark, tmp_path):
-    """The opt-in pyarrow direct-write path must produce an index whose
-    terms, postings metadata, and query results are identical to the
-    default Spark-writer path (the layouts may differ in file framing,
-    never in content)."""
-    from lucene_spark.operators.indexer import build_index
-    from lucene_spark.operators.search import Searcher
-    from lucene_spark.plans.query import parse_query
-    from lucene_spark.sources.webtext import pages_df
-
-    pages = pages_df(spark, 300, n_partitions=4)
-    a, b = str(tmp_path / "idx_spark"), str(tmp_path / "idx_direct")
-    build_index(spark, pages, a, key_col="url", text_col="text",
-                n_segments=4, direct_write=False)
-    build_index(spark, pages, b, key_col="url", text_col="text",
-                n_segments=4, direct_write=True)
-    sa, sb = Searcher(spark, a), Searcher(spark, b)
-    ta = sa.terms_table().orderBy("term").toPandas()
-    tb = sb.terms_table().orderBy("term").toPandas()
-    assert ta.equals(tb)
-    def pdf(x):
-        return x.toPandas() if hasattr(x, "toPandas") else x
-
-    for q in ["t0000", "t0001 AND t0002", '"t0000 t0001"~2', "t000*"]:
-        ra = pdf(sa.search(parse_query(q), k=10))
-        rb = pdf(sb.search(parse_query(q), k=10))
-        assert ra.equals(rb), q

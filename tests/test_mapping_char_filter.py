@@ -110,7 +110,7 @@ def test_invert_with_mapping_chain():
     # offsets point into the ORIGINAL html: 'color' corrects to 'colour'
     fr = indexer.invert_segment(
         0, gids, keys, pd.Series(html), char_filter=["html", cmap],
-        with_offsets=True, as_frames=True,
+        with_offsets=True,
     )
     assert fr is not None  # smoke: chain + offsets path executes
 
