@@ -148,6 +148,71 @@ def read_gids(index_dir: str, rel_paths) -> "np.ndarray | None":
     return np.unique(np.concatenate(arrs)).astype(np.int64)
 
 
+@dataclass(frozen=True)
+class GidRowGroups:
+    """The footer ``gid`` range of every row group of some parquet tables,
+    for driver reads of a few rows by gid (the searcher-side
+    ``StoredFieldsReader`` analog). Doc rows are written per segment in gid
+    order, so the ranges are narrow: a top-k read touches a handful of row
+    groups whatever the index size."""
+
+    files: tuple  # absolute parquet file paths
+    file: np.ndarray  # per row group: index into files
+    rg: np.ndarray  # per row group: its index in the file
+    lo: np.ndarray  # per row group: min gid (int64 min when unknown)
+    hi: np.ndarray  # per row group: max gid (int64 max when unknown)
+
+    @classmethod
+    def load(cls, index_dir: str, rel_paths) -> "GidRowGroups":
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+
+        files, rows = [], []
+        for p in rel_paths:
+            for f in ds.dataset(os.path.join(index_dir, p), format="parquet").files:
+                md = pq.read_metadata(f)
+                col = md.schema.names.index("gid")
+                for i in range(md.num_row_groups):
+                    g = md.row_group(i)
+                    if g.num_rows == 0:
+                        continue
+                    st = g.column(col).statistics
+                    known = st is not None and st.has_min_max
+                    rows.append((len(files), i,
+                                 st.min if known else np.iinfo(np.int64).min,
+                                 st.max if known else np.iinfo(np.int64).max))
+                files.append(f)
+        a = np.array(rows, dtype=np.int64).reshape(-1, 4)
+        return cls(tuple(files), a[:, 0], a[:, 1], a[:, 2], a[:, 3])
+
+    def holding(self, gids: np.ndarray) -> np.ndarray:
+        """Positions of the row groups whose gid range holds one of the
+        sorted ``gids``."""
+        return np.flatnonzero(
+            np.searchsorted(gids, self.hi, side="right")
+            > np.searchsorted(gids, self.lo, side="left")
+        )
+
+    def read(self, gids, columns) -> pd.DataFrame:
+        """``columns`` of the rows whose gid is in ``gids``, read from the
+        row groups that can hold them only."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        gids = np.unique(np.asarray(gids, dtype=np.int64))
+        hit = self.holding(gids)
+        parts = []
+        for f in np.unique(self.file[hit]):
+            with pq.ParquetFile(self.files[f]) as pf:
+                parts.append(pf.read_row_groups(
+                    self.rg[hit][self.file[hit] == f].tolist(), columns=list(columns)))
+        if not parts:
+            return pd.DataFrame({c: pd.Series([], dtype="int64" if c == "gid" else object)
+                                 for c in columns})
+        out = pa.concat_tables(parts).to_pandas()
+        return out[out["gid"].isin(gids)].reset_index(drop=True)
+
+
 def batch_path(batch: int, row_type: "str | None" = None) -> str:
     path = os.path.join("segments", f"batch={int(batch)}")
     return path if row_type is None else os.path.join(path, f"row_type={row_type}")

@@ -48,6 +48,7 @@ from __future__ import annotations
 import heapq
 import math
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, replace
 
 import numpy as np
@@ -103,10 +104,23 @@ from ..plans.query import (
 )
 from .commit import (
     DOC_SCHEMA, FDOC_SCHEMA, GID_SCHEMA, POSTINGS_SCHEMA, TERMS_REV_SCHEMA,
-    TERMS_SCHEMA, Commit, read_gids, read_table,
+    TERMS_SCHEMA, Commit, GidRowGroups, read_gids, read_table,
 )
 
 __all__ = ["Searcher", "TermPostings", "eval_plan", "decode_term_blocks"]
+
+
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Describe the Spark jobs run inside as ``label``; the previous
+    description is restored on exit. Sets a local property only: no job."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 # span nodes: one weight rule (make_ctx) and one span-source pruning rule
 _SPANS = (SpanFirstQ, SpanPositionRangeQ, SpanContainingQ, SpanWithinQ,
@@ -2244,6 +2258,7 @@ class Searcher:
         self._tstats_cache: dict = {}  # term -> (df, ttf) | None (absent)
         self._postings = None
         self._docs_raw = None
+        self._doc_groups = None  # GidRowGroups of the doc rows, first key fetch
         # scale knobs (defaults sized for cluster runs; tests shrink them to
         # exercise the multi-bucket + seeded-θ paths on tiny corpora)
         self.target_bucket_postings = int(target_bucket_postings)
@@ -2351,7 +2366,9 @@ class Searcher:
                 tdf = tdf.join(F.broadcast(probe), "term", "left_semi")
             for t in missing:
                 self._tstats_cache[t] = None
-            for r in tdf.collect():
+            with job_label(self.spark, "search.term_stats"):
+                rows = tdf.collect()
+            for r in rows:
                 self._tstats_cache[r["term"]] = (
                     int(r["doc_freq"]), int(r["total_term_freq"])
                 )
@@ -2728,11 +2745,12 @@ class Searcher:
             # Bigger sets stay a DataFrame plan (TermSetRefQ): the matched
             # terms semi-join into the postings scan, never materializing on
             # the driver (the r3 scale-killer at billion-term dictionaries).
-            head = [
-                r["term"]
-                for r in self.matched_terms_df(node)
-                .select("term").limit(BOOL_REWRITE_TERM_LIMIT + 1).collect()
-            ]
+            with job_label(self.spark, "search.expand"):
+                head = [
+                    r["term"]
+                    for r in self.matched_terms_df(node)
+                    .select("term").limit(BOOL_REWRITE_TERM_LIMIT + 1).collect()
+                ]
             if len(head) <= BOOL_REWRITE_TERM_LIMIT:
                 return ConstScoreQ(TermInSetQ(tuple(sorted(head))), boost=1.0)
             return ConstScoreQ(TermSetRefQ(source=node), boost=1.0)
@@ -3013,24 +3031,25 @@ class Searcher:
                with_keys: bool = True) -> pd.DataFrame:
         """Top-k. Returns pandas (gid, key, score) ordered score desc, gid asc.
 
-        ``with_keys=False`` skips the stored-field fetch (the second job that
-        joins urls/keys by gid) — (gid, score) only, for scoring-only paths.
+        Keys are read on the driver from the doc-row parquet of this
+        searcher's commit: the first call caches every doc file's row-group
+        gid range from the footers, and each call reads ``gid``/``key`` of
+        only the row groups holding a hit — no Spark job.
+        ``with_keys=False`` skips that read and returns (gid, score) only.
         """
         node = parse_query(query) if isinstance(query, str) else query
         candidates = self.candidates(node, k=k, prune=prune)
-        top = (
-            candidates.orderBy(F.desc("score"), F.asc("gid")).limit(k).toPandas()
-        )
+        with job_label(self.spark, "search.topk"):
+            top = (
+                candidates.orderBy(F.desc("score"), F.asc("gid")).limit(k).toPandas()
+            )
         if not with_keys:
             return top[["gid", "score"]]
         if top.empty:
             return pd.DataFrame({"gid": [], "key": [], "score": []})
-        keys = (
-            self._docs_raw_df()
-            .filter(F.col("gid").isin([int(g) for g in top["gid"]]))
-            .select("gid", "key")
-            .toPandas()
-        )
+        if self._doc_groups is None:
+            self._doc_groups = GidRowGroups.load(self.index_dir, self.commit.doc_paths())
+        keys = self._doc_groups.read(top["gid"].to_numpy(), ["gid", "key"])
         out = top.merge(keys, on="gid", how="left")
         return out[["gid", "key", "score"]]
 
@@ -3565,22 +3584,26 @@ class Searcher:
         return self._gid_union_const(scan, boost)
 
     def _gid_union_const(self, scan: DataFrame, boost: float) -> DataFrame:
-        """Decode doc-gap streams of the scan's blocks, dedupe docs matching
-        several set terms, and emit the constant score."""
+        """Decode doc-gap streams of the scan's blocks, drop deleted docs,
+        dedupe docs matching several set terms, and emit the constant
+        score."""
+        dbc = self.deleted_bc()  # broadcast handle: tiny in the closure
 
         def kernel(batches):
+            deleted = dbc.value if dbc is not None else None
             for pdf in batches:
                 if pdf.empty:
                     continue
                 g, _ = decode_gid_rows(
                     pdf["first_gid"].to_numpy(np.int64), list(pdf["gids"])
                 )
+                g, _ = _live_mask(g, g, deleted)
                 yield pd.DataFrame({"gid": g})
 
         gids = scan.mapInPandas(kernel, schema="gid long").distinct()
-        return self._anti_join_deleted(gids.select(
+        return gids.select(
             "gid", F.lit(float(np.float32(boost))).cast("float").alias("score")
-        ))
+        )
 
     def _anti_join_deleted(self, df: DataFrame) -> DataFrame:
         """DataFrame-level liveDocs filter for non-pruned paths: anti-join

@@ -103,8 +103,8 @@ def test_searcher_is_point_in_time(spark, base_idx, tmp_path):
     assert fresh.count(node) == n - 1
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs one call runs (job ids are allocated sequentially)."""
+def _job_ids(spark, fn) -> set:
+    """Ids of the Spark jobs one call runs."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
@@ -112,23 +112,31 @@ def _jobs(spark, fn) -> int:
     before = set(tracker.getJobIdsForGroup())
     fn()
     bus.waitUntilEmpty()
-    return len(set(tracker.getJobIdsForGroup()) - before)
+    return set(tracker.getJobIdsForGroup()) - before
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs one call runs (job ids are allocated sequentially)."""
+    return len(_job_ids(spark, fn))
 
 
 # jobs per public call on the fixed 4 x 100-doc index below, local[4];
 # before the schema-pinned index reads they were build batch 9, delete 4,
-# purge merge 21, check 24 and first term query 6
+# purge merge 21, check 24 and first term query 6; the first term query
+# ran 3 before stored keys were read on the driver
 JOB_BUDGET = {
     "build_batch": 7,
     "delete": 3,
     "purge_merge": 11,
     "check": 21,
-    "first_term_query": 3,
+    "first_term_query": 2,
 }
 
 
-def test_job_budget_per_public_call(spark, tmp_path):
-    d = str(tmp_path / "idx")
+@pytest.fixture(scope="module")
+def budget_idx(spark, tmp_path_factory):
+    """The fixed index, and the jobs each public call took to make it."""
+    d = str(tmp_path_factory.mktemp("budget") / "idx")
     frames = _frames(spark, 4)
     for i, df in enumerate(frames[:3]):
         build_index(spark, df, d, append=i > 0, **KW)
@@ -140,6 +148,43 @@ def test_job_budget_per_public_call(spark, tmp_path):
         "first_term_query": _jobs(
             spark, lambda: Searcher(spark, d).search(parse_query("t0000"), k=10)),
     }
+    return d, got
+
+
+def test_job_budget_per_public_call(spark, budget_idx):
+    d, got = budget_idx
     assert check_index(spark, d)["healthy"]
     over = {k: (v, JOB_BUDGET[k]) for k, v in got.items() if v > JOB_BUDGET[k]}
     assert not over, f"jobs over budget (got, budget): {over}; all: {got}"
+
+
+# jobs of a warm query (its terms already in term_stats' cache) on the same
+# index: the top-k action (an AQE shuffle-map job plus the result stage
+# when the plan shuffles), plus the prefix expansion collect
+WARM_JOBS = {
+    "t0000": 1,
+    "t0000 OR t0001": 2,
+    "t0000 AND t0001": 2,
+    '"t0000 t0002"': 2,
+    "t000*": 3,
+}
+
+
+def test_warm_query_jobs_per_kind(spark, budget_idx):
+    d, _ = budget_idx
+    s = Searcher(spark, d)
+    got = {}
+    for q in WARM_JOBS:
+        node = parse_query(q)
+        s.search(node, k=10)
+        got[q] = _jobs(spark, lambda: s.search(node, k=10))
+    over = {q: (v, WARM_JOBS[q]) for q, v in got.items() if v > WARM_JOBS[q]}
+    assert not over, f"warm jobs over budget (got, budget): {over}; all: {got}"
+    # every job of a warm query says which search step ran it
+    store = spark.sparkContext._jsc.sc().statusStore()
+    ids = _job_ids(spark, lambda: s.search(parse_query("t0000 OR t0001"), k=10))
+    assert len(ids) == got["t0000 OR t0001"]
+    descs = [store.job(j).description() for j in sorted(ids)]
+    labels = [x.get() if x.isDefined() else None for x in descs]
+    assert all(lab and lab.startswith("search.") for lab in labels), labels
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
