@@ -32,7 +32,7 @@ from pyspark.sql import SparkSession, functions as F, types as T
 from ..functions.blocks import gids_from_gaps
 from ..functions.pfor import batch_decode_streams
 from ..functions.smallfloat import int_to_byte4_np
-from .commit import batch_path, read_gids
+from .commit import batch_path, labelled, read_gids
 from .merge import bucket_count
 
 _BLOCK_REPORT = T.StructType(
@@ -176,6 +176,7 @@ def _check_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+@labelled("check.check")
 def check_index(spark: SparkSession, index_dir: str) -> dict:
     from .search import Searcher
 

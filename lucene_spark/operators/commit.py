@@ -33,8 +33,10 @@ no read runs a parquet footer-inference job.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import cached_property
 
@@ -42,6 +44,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, types as T
+
+from ..plans.fields import FIELD_SEP
 
 # v4: stats.json carries "format"; merge records always carry merge_id,
 # inputs, out, unit_doc_stats and unit_field_stats
@@ -148,6 +152,66 @@ def read_gids(index_dir: str, rel_paths) -> "np.ndarray | None":
     return np.unique(np.concatenate(arrs)).astype(np.int64)
 
 
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Describe the Spark jobs run inside as ``label``; the previous
+    description is restored on exit. Sets a local property only: no job."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def labelled(label: str):
+    """Decorate a public ``fn(spark, ...)`` call so every Spark job it runs
+    is described as ``label`` (``job_label``)."""
+    def wrap(fn):
+        @functools.wraps(fn)
+        def call(spark, *args, **kwargs):
+            with job_label(spark, label):
+                return fn(spark, *args, **kwargs)
+        return call
+    return wrap
+
+
+def _row_group_ranges(index_dir: str, rel_paths, column: str):
+    """Footer min/max of ``column`` for every non-empty row group of the
+    parquet tables at ``rel_paths``: (files, [(file index, row group index,
+    min, max)]), min and max None where the footer holds no statistics."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    files, rows = [], []
+    for p in rel_paths:
+        for f in ds.dataset(os.path.join(index_dir, p), format="parquet").files:
+            md = pq.read_metadata(f)
+            col = md.schema.names.index(column)
+            for i in range(md.num_row_groups):
+                g = md.row_group(i)
+                if g.num_rows == 0:
+                    continue
+                st = g.column(col).statistics
+                known = st is not None and st.has_min_max
+                rows.append((len(files), i, st.min if known else None,
+                             st.max if known else None))
+            files.append(f)
+    return tuple(files), rows
+
+
+def _read_row_groups(files, file: np.ndarray, rg: np.ndarray, columns):
+    """Arrow tables of the given row groups, one per file, in file order."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in np.unique(file):
+        with pq.ParquetFile(files[f]) as pf:
+            out.append(pf.read_row_groups(rg[file == f].tolist(), columns=list(columns)))
+    return out
+
+
 @dataclass(frozen=True)
 class GidRowGroups:
     """The footer ``gid`` range of every row group of some parquet tables,
@@ -164,26 +228,11 @@ class GidRowGroups:
 
     @classmethod
     def load(cls, index_dir: str, rel_paths) -> "GidRowGroups":
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-
-        files, rows = [], []
-        for p in rel_paths:
-            for f in ds.dataset(os.path.join(index_dir, p), format="parquet").files:
-                md = pq.read_metadata(f)
-                col = md.schema.names.index("gid")
-                for i in range(md.num_row_groups):
-                    g = md.row_group(i)
-                    if g.num_rows == 0:
-                        continue
-                    st = g.column(col).statistics
-                    known = st is not None and st.has_min_max
-                    rows.append((len(files), i,
-                                 st.min if known else np.iinfo(np.int64).min,
-                                 st.max if known else np.iinfo(np.int64).max))
-                files.append(f)
-        a = np.array(rows, dtype=np.int64).reshape(-1, 4)
-        return cls(tuple(files), a[:, 0], a[:, 1], a[:, 2], a[:, 3])
+        files, rows = _row_group_ranges(index_dir, rel_paths, "gid")
+        i64 = np.iinfo(np.int64)
+        a = np.array([(f, i, i64.min if lo is None else lo, i64.max if hi is None else hi)
+                      for f, i, lo, hi in rows], dtype=np.int64).reshape(-1, 4)
+        return cls(files, a[:, 0], a[:, 1], a[:, 2], a[:, 3])
 
     def holding(self, gids: np.ndarray) -> np.ndarray:
         """Positions of the row groups whose gid range holds one of the
@@ -197,20 +246,117 @@ class GidRowGroups:
         """``columns`` of the rows whose gid is in ``gids``, read from the
         row groups that can hold them only."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         gids = np.unique(np.asarray(gids, dtype=np.int64))
         hit = self.holding(gids)
-        parts = []
-        for f in np.unique(self.file[hit]):
-            with pq.ParquetFile(self.files[f]) as pf:
-                parts.append(pf.read_row_groups(
-                    self.rg[hit][self.file[hit] == f].tolist(), columns=list(columns)))
+        parts = _read_row_groups(self.files, self.file[hit], self.rg[hit], columns)
         if not parts:
             return pd.DataFrame({c: pd.Series([], dtype="int64" if c == "gid" else object)
                                  for c in columns})
         out = pa.concat_tables(parts).to_pandas()
         return out[out["gid"].isin(gids)].reset_index(drop=True)
+
+
+@dataclass(frozen=True)
+class TermDictionary:
+    """The footer ``term`` range of every row group of ``terms/``: term
+    stats and bounded expansions read on the driver, no Spark job (the
+    terms-index seek of ``BlockTreeTermsReader``, at row-group grain).
+
+    ``terms/`` is sorted within each file, so a row group covers a term
+    range and a probe reads the ``term, doc_freq, total_term_freq`` columns
+    of only the row groups whose range can hold it. Terms compare as
+    Python strings, which is the code point order and so the UTF-8 byte
+    order of the footer statistics."""
+
+    COLUMNS = ("term", "doc_freq", "total_term_freq")
+
+    files: tuple  # absolute parquet file paths
+    file: np.ndarray  # per row group: index into files
+    rg: np.ndarray  # per row group: its index in the file
+    lo: np.ndarray  # per row group: min term (object; "" when unknown)
+    hi: np.ndarray  # per row group: max term (object; "" when unknown)
+    known: np.ndarray  # per row group: the footer holds min/max
+
+    @classmethod
+    def load(cls, index_dir: str, rel_paths=("terms",)) -> "TermDictionary":
+        files, rows = _row_group_ranges(index_dir, rel_paths, "term")
+        file, rg, lo, hi = zip(*rows) if rows else ((), (), (), ())
+        return cls(files, np.array(file, np.int64), np.array(rg, np.int64),
+                   np.array([t or "" for t in lo], dtype=object),
+                   np.array([t or "" for t in hi], dtype=object),
+                   np.array([t is not None for t in lo], dtype=bool))
+
+    def _overlapping(self, lo: "str | None", hi: "str | None") -> np.ndarray:
+        """Positions of the row groups whose term range meets [lo, hi]
+        (None: unbounded), in file then row-group order."""
+        ok = np.ones(len(self.rg), dtype=bool)
+        if lo is not None:
+            ok &= self.hi >= lo
+        if hi is not None:
+            ok &= self.lo <= hi
+        return np.flatnonzero(ok | ~self.known)
+
+    def stats(self, terms) -> "dict[str, tuple[int, int]]":
+        """(doc_freq, total_term_freq) of each of ``terms`` the dictionary
+        holds; absent terms are left out."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        probe = np.array(sorted(set(terms)), dtype=object)
+        if not len(probe) or not len(self.rg):
+            return {}
+        hit = np.flatnonzero(
+            (np.searchsorted(probe, self.hi, side="right")
+             > np.searchsorted(probe, self.lo, side="left")) | ~self.known
+        )
+        parts = _read_row_groups(self.files, self.file[hit], self.rg[hit], self.COLUMNS)
+        if not parts:
+            return {}
+        t = pa.concat_tables(parts)
+        t = t.filter(pc.is_in(t["term"], value_set=pa.array(probe.tolist(), pa.string())))
+        return {
+            term: (int(df), int(ttf))
+            for term, df, ttf in zip(*(t[c].to_pylist() for c in self.COLUMNS))
+        }
+
+    def expand(self, node, limit: int) -> "list[str] | None":
+        """Sorted terms a ``PrefixQ`` or ``RangeQ`` matches, or None once
+        more than ``limit`` match: row groups are read one at a time and
+        the read stops at the first ``limit + 1`` matches. A pattern that
+        names no field matches default-field terms only, as
+        ``Searcher.matched_terms_df`` does."""
+        import pyarrow.compute as pc
+
+        from ..plans.query import PrefixQ
+
+        term = pc.field("term")
+        if isinstance(node, PrefixQ):
+            probe = node.prefix
+            pos = self._overlapping(probe, None)
+            # a row group whose first term sorts past every term with the
+            # prefix holds none of them
+            first = self.lo[pos]
+            pos = pos[~self.known[pos] | (first <= probe)
+                      | np.array([t.startswith(probe) for t in first], dtype=bool)]
+            match = pc.starts_with(term, probe)
+        else:
+            probe = (node.lo or "") + (node.hi or "")
+            pos = self._overlapping(node.lo, node.hi)
+            match = pc.scalar(True)
+            if node.lo is not None:
+                match &= term >= node.lo if node.include_lo else term > node.lo
+            if node.hi is not None:
+                match &= term <= node.hi if node.include_hi else term < node.hi
+        if FIELD_SEP not in probe:
+            match &= ~pc.match_substring(term, FIELD_SEP)
+        found: set = set()
+        for p in pos:
+            (t,) = _read_row_groups(self.files, self.file[[p]], self.rg[[p]], ["term"])
+            found.update(t.filter(match)["term"].to_pylist())
+            if len(found) > limit:
+                return None
+        return sorted(found)
 
 
 def batch_path(batch: int, row_type: "str | None" = None) -> str:

@@ -45,7 +45,7 @@ from ..functions.smallfloat import int_to_byte4_np
 from ..plans.fields import DEFAULT_FIELD, FIELD_SEP
 from .commit import (  # noqa: F401 (read_manifest re-exported)
     BUILD_CONFIG_KEYS, FORMAT_VERSION, GID_SCHEMA, MERGED_SCHEMA, STAGING_SCHEMA,
-    TERMS_SCHEMA, Commit, append_manifest, batch_path, read_manifest,
+    TERMS_SCHEMA, Commit, append_manifest, batch_path, labelled, read_manifest,
     read_segstats, read_table, write_stats,
 )
 
@@ -476,6 +476,7 @@ def prepare_corpus(
     return df, meta
 
 
+@labelled("indexer.build")
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -760,6 +761,7 @@ def _write_terms_tables(terms, index_dir: str) -> None:
     _commit(rev, "terms_rev")
 
 
+@labelled("indexer.finalize")
 def finalize_index(spark: SparkSession, index_dir: str) -> None:
     """Re-derive the global terms table and ``stats.json`` from the live
     units, keeping the build config of the prior ``stats.json``."""
@@ -826,6 +828,7 @@ def _finalize(spark: SparkSession, index_dir: str, config: dict) -> None:
     write_stats(index_dir, stats)
 
 
+@labelled("indexer.delete")
 def delete_docs(
     spark: SparkSession,
     index_dir: str,

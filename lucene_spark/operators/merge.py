@@ -37,10 +37,10 @@ from ..functions.blocks import Postings, read_blocks, sort_postings, write_block
 from ..plans.fields import DEFAULT_FIELD
 from .commit import (
     DOC_SCHEMA, FDOC_SCHEMA, GID_SCHEMA, MERGED_SCHEMA, POSTINGS_SCHEMA,
-    PURGED_SCHEMA, TERMS_SCHEMA, Commit, append_manifest, batch_path, read_gids,
-    read_table,
+    PURGED_SCHEMA, TERMS_SCHEMA, Commit, append_manifest, batch_path, labelled,
+    read_gids, read_table,
 )
-from .indexer import finalize_index
+from .indexer import _finalize
 
 # default postings per (term, salt) reducer group; merge and check also
 # size their buckets of groups by it (``bucket_count``)
@@ -283,10 +283,11 @@ def _merge_units(
     if purge:
         # global terms table + collection/field stats re-derive from the
         # post-merge live units (idf/avgdl drop the reclaimed docs)
-        finalize_index(spark, index_dir)
+        _finalize(spark, index_dir, {})
     return rec
 
 
+@labelled("merge.merge")
 def merge_index(
     spark: SparkSession,
     index_dir: str,
@@ -316,6 +317,7 @@ def merge_index(
     )
 
 
+@labelled("merge.tiered")
 def tiered_merge(
     spark: SparkSession,
     index_dir: str,

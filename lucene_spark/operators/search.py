@@ -4,11 +4,15 @@ Spark shape of Lucene's search lifecycle (SURVEY.md §3b):
 
   1. Driver plans the query (parse + rewrite, ``plans/query.py``) and pins
      GLOBAL stats — docCount/avgdl from ``stats.json``, per-term docFreq from
-     the ``terms`` table (TermStates.build analog). idf/avgdl therefore match
-     a single-index Lucene search exactly.
+     the ``terms`` table (TermStates.build analog), read on the driver from
+     the row groups whose footer term range can hold the term
+     (``commit.TermDictionary``). idf/avgdl therefore match a single-index
+     Lucene search exactly.
   2. The postings scan is a plain DataFrame filter ``term IN (...)`` over the
      block-row Parquet — predicate pushdown + column pruning do the term-
-     dictionary seek (positions column only read for phrase queries).
+     dictionary seek (positions column only read for phrase queries). A
+     ``search`` whose scan holds at most one bucket of postings collects it
+     in one JVM-only job and runs the kernels below on the driver.
   3. Scoring runs in vectorized Arrow kernels:
        - single-term: ``mapInPandas`` straight over block rows (no shuffle);
        - boolean/phrase: blocks are exploded onto gid-range *buckets* and
@@ -39,8 +43,9 @@ Spark shape of Lucene's search lifecycle (SURVEY.md §3b):
      changes results (CheckHits contract, tested pruned == exhaustive).
   5. Global top-k = orderBy(score desc, gid asc).limit(k) — Spark's
      TakeOrdered is exactly TopDocs.merge with Lucene's tie-break
-     (HitQueue.java:78-84: score desc, docID asc). searchAfter threads the
-     cursor into the kernels, so deep pages stay pruned.
+     (HitQueue.java:78-84: score desc, docID asc); a driver-scored plan
+     sorts the same way. searchAfter threads the cursor into the kernels,
+     so deep pages stay pruned.
 """
 
 from __future__ import annotations
@@ -48,7 +53,6 @@ from __future__ import annotations
 import heapq
 import math
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass, replace
 
 import numpy as np
@@ -104,23 +108,12 @@ from ..plans.query import (
 )
 from .commit import (
     DOC_SCHEMA, FDOC_SCHEMA, GID_SCHEMA, POSTINGS_SCHEMA, TERMS_REV_SCHEMA,
-    TERMS_SCHEMA, Commit, GidRowGroups, read_gids, read_table,
+    TERMS_SCHEMA, Commit, GidRowGroups, TermDictionary, job_label, read_gids,
+    read_table,
 )
 
 __all__ = ["Searcher", "TermPostings", "eval_plan", "decode_term_blocks"]
 
-
-@contextmanager
-def job_label(spark: SparkSession, label: str):
-    """Describe the Spark jobs run inside as ``label``; the previous
-    description is restored on exit. Sets a local property only: no job."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
 
 # span nodes: one weight rule (make_ctx) and one span-source pruning rule
 _SPANS = (SpanFirstQ, SpanPositionRangeQ, SpanContainingQ, SpanWithinQ,
@@ -143,6 +136,11 @@ BOOL_REWRITE_TERM_LIMIT = 16
 # buckets are pure overhead
 TARGET_BUCKET_POSTINGS = 1 << 19
 MIN_BUCKET_POSTINGS = 1 << 10
+
+# a postings scan names at most this many terms in an IN filter; more go
+# through a broadcast semi-join (an In expression with 100k literals blows
+# up plan build, like TermInSetQuery's bulk path)
+MAX_IN_TERMS = 64
 
 _UNSET = object()  # deleted-gids cache sentinel
 
@@ -2226,6 +2224,54 @@ RESULT_SCHEMA = T.StructType(
 _ALL_K = 1 << 62
 
 
+def _check_k(k: int) -> None:
+    """TopScoreDocCollector requires numHits > 0."""
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
+
+
+@dataclass(frozen=True)
+class _ScanPlan:
+    """A query planned down to one postings scan and one kernel: handed to
+    Spark by ``Searcher.candidates``, or run on the driver by
+    ``Searcher.search`` when ``local``."""
+
+    node: object  # the rewritten node the kernel scores
+    cols: tuple  # postings columns the scan reads
+    terms: tuple  # terms the scan reads
+    refs: tuple  # lazy term sets (TermSetRefQ) the scan semi-joins
+    ctx: "ScoreCtx | None"  # None: a constant-score term set
+    boost: float  # the constant score of a term set
+    k: int
+    prune: bool = True
+    after: "tuple[float, int] | None" = None
+    need_positions: bool = False
+    need_payloads: bool = False
+    keep_bcs: tuple = ()  # cached FILTER gid sets (broadcasts)
+    dv_df: "DataFrame | None" = None  # doc-value verify rows (dv strategy)
+    cache_fill: bool = False  # complete filter-only docs from the masks
+    local: bool = False  # at most one bucket of postings: score on the driver
+
+
+def _bucket_groups(pdf: pd.DataFrame, width: int):
+    """(bucket, block rows) of the scan's blocks exploded onto gid-range
+    buckets of ``width``, in ascending bucket order: the driver-side twin of
+    the ``explode(sequence(first_gid / width, last_gid / width))`` Spark
+    plan (same double division, same truncation)."""
+    if pdf.empty:
+        return
+    b0 = (pdf["first_gid"].to_numpy(np.float64) / width).astype(np.int64)
+    b1 = (pdf["last_gid"].to_numpy(np.float64) / width).astype(np.int64)
+    n = b1 - b0 + 1
+    row = np.repeat(np.arange(len(pdf)), n)
+    bucket = np.repeat(b0 - (np.cumsum(n) - n), n) + np.arange(int(n.sum()))
+    order = np.argsort(bucket, kind="stable")
+    row, bucket = row[order], bucket[order]
+    cuts = np.flatnonzero(np.diff(bucket)) + 1
+    for r, b in zip(np.split(row, cuts), bucket[np.r_[0, cuts]]):
+        yield int(b), pdf.iloc[r]
+
+
 class Searcher:
     """Searches one finalized index directory."""
 
@@ -2255,8 +2301,10 @@ class Searcher:
         # pinned per searcher
         self._terms_df = None
         self._terms_rev_df = None
+        self._term_dict = None  # TermDictionary of terms/, first stats read
         self._tstats_cache: dict = {}  # term -> (df, ttf) | None (absent)
         self._postings = None
+        self._scans: dict = {}  # column tuple -> pinned postings projection
         self._docs_raw = None
         self._doc_groups = None  # GidRowGroups of the doc rows, first key fetch
         # scale knobs (defaults sized for cluster runs; tests shrink them to
@@ -2321,9 +2369,11 @@ class Searcher:
         if self._deleted_df is not _UNSET:
             return self._deleted_df
         paths = self.commit.delete_paths
+        # duplicate gids (two deletes naming one doc) change nothing on
+        # the right of a left_anti join, so no distinct (and no shuffle)
         self._deleted_df = (
             None if not paths
-            else read_table(self.spark, self.index_dir, paths, GID_SCHEMA).distinct()
+            else read_table(self.spark, self.index_dir, paths, GID_SCHEMA)
         )
         return self._deleted_df
 
@@ -2349,29 +2399,28 @@ class Searcher:
         ).select(*cols)
         return self._postings
 
+    def term_dict(self) -> TermDictionary:
+        """Footer term ranges of this searcher's ``terms/`` row groups,
+        read once on first use."""
+        if self._term_dict is None:
+            self._term_dict = TermDictionary.load(self.index_dir)
+        return self._term_dict
+
     def term_stats(self, terms: set[str]) -> dict[str, tuple[int, int]]:
-        """(doc_freq, total_term_freq) per term, driver-cached per searcher
-        (TermStates-style snapshot: Lucene resolves term states once per
-        query against a point-in-time reader; here repeated terms skip the
-        cluster entirely — absent terms are cached as misses too)."""
+        """(doc_freq, total_term_freq) per term present in the index.
+
+        Read on the driver from the ``terms/`` row groups whose footer term
+        range can hold a probe (``commit.TermDictionary``): no Spark job.
+        Results are cached per searcher, misses included (TermStates-style
+        snapshot: Lucene resolves term states once per query against a
+        point-in-time reader)."""
         if not terms:
             return {}
-        missing = sorted(t for t in terms if t not in self._tstats_cache)
+        missing = [t for t in terms if t not in self._tstats_cache]
         if missing:
-            tdf = self.terms_table()
-            if len(missing) <= 64:
-                tdf = tdf.filter(F.col("term").isin(missing))
-            else:
-                probe = self.spark.createDataFrame(pd.DataFrame({"term": missing}))
-                tdf = tdf.join(F.broadcast(probe), "term", "left_semi")
+            found = self.term_dict().stats(missing)
             for t in missing:
-                self._tstats_cache[t] = None
-            with job_label(self.spark, "search.term_stats"):
-                rows = tdf.collect()
-            for r in rows:
-                self._tstats_cache[r["term"]] = (
-                    int(r["doc_freq"]), int(r["total_term_freq"])
-                )
+                self._tstats_cache[t] = found.get(t)
         return {
             t: self._tstats_cache[t] for t in terms
             if self._tstats_cache.get(t) is not None
@@ -2737,21 +2786,28 @@ class Searcher:
                 boosts=tuple(b for _, b in pairs),
             )
         if isinstance(node, (PrefixQ, WildcardQ, RegexpQ, RangeQ)):
-            # bounded enumeration probe: collect at most LIMIT+1 terms (a
-            # 17-row collect can never OOM the driver). Small sets become a
-            # TermInSet whose IN-filter pushes into the Parquet scan —
-            # AbstractMultiTermQueryConstantScoreWrapper's
+            # bounded enumeration probe: at most LIMIT+1 matches. Small sets
+            # become a TermInSet whose IN-filter pushes into the Parquet
+            # scan — AbstractMultiTermQueryConstantScoreWrapper's
             # BOOLEAN_REWRITE_TERM_COUNT_THRESHOLD=16 boolean rewrite.
             # Bigger sets stay a DataFrame plan (TermSetRefQ): the matched
             # terms semi-join into the postings scan, never materializing on
             # the driver (the r3 scale-killer at billion-term dictionaries).
-            with job_label(self.spark, "search.expand"):
-                head = [
-                    r["term"]
-                    for r in self.matched_terms_df(node)
-                    .select("term").limit(BOOL_REWRITE_TERM_LIMIT + 1).collect()
-                ]
-            if len(head) <= BOOL_REWRITE_TERM_LIMIT:
+            # Prefix and range probes read the term dictionary's footers on
+            # the driver; wildcard and regexp keep a Spark probe, because
+            # Java and Python regex differ.
+            if isinstance(node, (PrefixQ, RangeQ)):
+                head = self.term_dict().expand(node, BOOL_REWRITE_TERM_LIMIT)
+            else:
+                with job_label(self.spark, "search.expand"):
+                    head = [
+                        r["term"]
+                        for r in self.matched_terms_df(node)
+                        .select("term").limit(BOOL_REWRITE_TERM_LIMIT + 1).collect()
+                    ]
+                if len(head) > BOOL_REWRITE_TERM_LIMIT:
+                    head = None
+            if head is not None:
                 return ConstScoreQ(TermInSetQ(tuple(sorted(head))), boost=1.0)
             return ConstScoreQ(TermSetRefQ(source=node), boost=1.0)
         if isinstance(node, BoolQ):
@@ -3031,18 +3087,37 @@ class Searcher:
                with_keys: bool = True) -> pd.DataFrame:
         """Top-k. Returns pandas (gid, key, score) ordered score desc, gid asc.
 
+        Planning runs on the driver: term stats, and prefix/range
+        expansions of at most ``BOOL_REWRITE_TERM_LIMIT`` terms, come from
+        the footers of ``terms/`` (``term_stats``). A plan of one IN-filtered
+        postings scan whose volume (Σ docFreq, Σ totalTermFreq when
+        positions are read) is at most ``target_bucket_postings`` — one
+        bucket task's worth — runs ONE JVM-only Spark job that collects the
+        pruned scan (``search.scan``), and the driver scores it with the
+        kernels Spark would run: same deleted-doc, cached-filter and θ
+        logic. Bigger plans, doc-value filters, cache fills, MatchAll, lazy
+        term sets (``TermSetRefQ``) and desugared negations run distributed
+        (``candidates`` + ``orderBy(score desc, gid asc).limit(k)``, the
+        ``search.topk`` job). Both give the same gids, float32 scores and
+        order.
+
         Keys are read on the driver from the doc-row parquet of this
         searcher's commit: the first call caches every doc file's row-group
         gid range from the footers, and each call reads ``gid``/``key`` of
         only the row groups holding a hit — no Spark job.
         ``with_keys=False`` skips that read and returns (gid, score) only.
+        ``k`` must be at least 1 (TopScoreDocCollector's ``numHits > 0``).
         """
+        _check_k(k)
         node = parse_query(query) if isinstance(query, str) else query
-        candidates = self.candidates(node, k=k, prune=prune)
-        with job_label(self.spark, "search.topk"):
-            top = (
-                candidates.orderBy(F.desc("score"), F.asc("gid")).limit(k).toPandas()
-            )
+        plan = self._plan(node, k, prune)
+        if isinstance(plan, _ScanPlan) and plan.local:
+            top = self._run_local(plan)
+        else:
+            if isinstance(plan, _ScanPlan):
+                plan = self._run_distributed(plan)
+            with job_label(self.spark, "search.topk"):
+                top = plan.orderBy(F.desc("score"), F.asc("gid")).limit(k).toPandas()
         if not with_keys:
             return top[["gid", "score"]]
         if top.empty:
@@ -3241,8 +3316,10 @@ class Searcher:
         The cursor itself drives pruning: kernels drop candidates at or
         above the cursor BEFORE the per-bucket top-k and θ offers, so no
         ``depth`` hint is needed (the round-1 exhaustive fallback is gone;
-        ``depth`` is accepted for API compat and ignored).
+        ``depth`` is accepted for API compat and ignored). ``k`` must be at
+        least 1.
         """
+        _check_k(k)
         node = parse_query(query) if isinstance(query, str) else query
         cursor = (float(after[0]), int(after[1]))
         cand = self.candidates(node, k=k, prune=True, after=cursor)
@@ -3264,6 +3341,15 @@ class Searcher:
         when materializing a cache entry, so a clause never caches through
         itself).
         """
+        plan = self._plan(node, k, prune, after, use_cache)
+        return plan if isinstance(plan, DataFrame) else self._run_distributed(plan)
+
+    def _plan(self, node, k: int, prune: bool,
+              after: "tuple[float, int] | None" = None,
+              use_cache: bool = True) -> "DataFrame | _ScanPlan":
+        """Plan a query on the driver: the candidate DataFrame of the plans
+        that are not one postings scan plus a kernel (MatchAll, doc-value
+        ranges, lazy term sets, desugared negations), else a ``_ScanPlan``."""
         if node is None:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         node = self.rewrite(node)
@@ -3313,9 +3399,9 @@ class Searcher:
             )
             return self._anti_join_deleted(out)
         if isinstance(node, TermInSetQ):
-            return self._term_in_set(node, node.boost)
+            return self._term_in_set(node, node.boost, k)
         if isinstance(node, ConstScoreQ) and isinstance(node.child, TermInSetQ):
-            return self._term_in_set(node.child, node.boost)
+            return self._term_in_set(node.child, node.boost, k)
         if isinstance(node, TermSetRefQ):
             return self._term_set_scan(node, node.boost)
         if isinstance(node, ConstScoreQ) and isinstance(node.child, TermSetRefQ):
@@ -3347,7 +3433,7 @@ class Searcher:
                 # every SHOULD term is unknown to the index: the match set
                 # is exactly the filter-only docs at const_add
                 return self._cache_fill_df(None, keep_bcs, node, None)
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _ScanPlan(node, (), (), (), ctx, 1.0, k, local=True)
         need_positions = _has_phrase(node)
         need_payloads = _has_payload_check(node)
         if need_payloads and not self.stats.get("with_payloads"):
@@ -3358,55 +3444,171 @@ class Searcher:
         cols = ["seg", "term", "first_gid", "last_gid", "doc_count", "gids", "freqs", "norms",
                 "imp_freqs", "imp_norms"] + (["positions"] if need_positions else []) \
             + (["payloads"] if need_payloads else [])
-        parts = []
-        if terms:
-            scan = self._postings_df().select(*cols)
-            if len(terms) <= 64:
-                # IN-filter pushes into the Parquet scan (row-group pruning)
-                scan = scan.filter(F.col("term").isin(list(terms)))
-            else:
-                # huge explicit term sets: an In expression with 100k
-                # literals blows up plan build — broadcast semi-join like
-                # TermInSetQuery's bulk path
-                tdf = self.spark.createDataFrame(
-                    pd.DataFrame({"term": sorted(terms)})
-                )
-                scan = scan.join(F.broadcast(tdf), "term", "left_semi")
-            parts.append(scan)
         # nested lazy term sets: each ref's member postings enter the scan
-        # through a semi-join against its matched-terms PLAN (no driver
-        # materialization), re-keyed to the ref's virtual name so kernels
-        # see one pre-unioned pseudo-term per set
-        width_terms = set(terms)
+        # re-keyed to the ref's virtual name; its df sizes the buckets
         for ref in refs:
-            matched = self.matched_terms_df(ref.source)
-            agg = matched.agg(
+            agg = self.matched_terms_df(ref.source).agg(
                 F.coalesce(F.sum("doc_freq"), F.lit(0)).alias("df")
             ).collect()[0]
             ctx.doc_freqs[ref.name] = int(agg["df"])
-            width_terms.add(ref.name)
-            sdf = (
-                self._postings_df().select(*cols)
-                .join(matched.select("term"), "term", "left_semi")
+        return _ScanPlan(
+            node, tuple(cols), tuple(sorted(terms)), tuple(refs), ctx, 1.0, k,
+            prune, after, need_positions, need_payloads, tuple(keep_bcs), dv_df,
+            cache_fill,
+            local=(after is None and dv_df is None and not cache_fill and not refs
+                   and self._fits_one_bucket(terms, need_positions)),
+        )
+
+    def _fits_one_bucket(self, terms, positions: bool) -> bool:
+        """True when an IN-filtered scan of ``terms`` reads at most one
+        bucket task's worth of postings (``target_bucket_postings``):
+        Σ docFreq, or Σ totalTermFreq when positions are read."""
+        if len(terms) > MAX_IN_TERMS:
+            return False
+        stats = self.term_stats(set(terms))
+        volume = sum(st[1 if positions else 0] for st in stats.values())
+        return volume <= self.target_bucket_postings
+
+    def _scan_cols(self, cols: tuple) -> DataFrame:
+        """The live-unit postings scan projected to ``cols``, pinned per
+        searcher and column set."""
+        if cols not in self._scans:
+            self._scans[cols] = self._postings_df().select(*cols)
+        return self._scans[cols]
+
+    def _scan(self, plan: "_ScanPlan") -> DataFrame:
+        """The plan's postings scan: its terms through an IN filter that
+        pushes into the Parquet scan (a broadcast semi-join past
+        ``MAX_IN_TERMS``), then each lazy term set's members
+        through a semi-join against its matched-terms PLAN (no driver
+        materialization), re-keyed to the set's virtual name so kernels
+        see one pre-unioned pseudo-term per set."""
+        parts = []
+        if plan.terms:
+            scan = self._scan_cols(plan.cols)
+            if len(plan.terms) <= MAX_IN_TERMS:
+                scan = scan.filter(F.col("term").isin(list(plan.terms)))
+            else:
+                tdf = self.spark.createDataFrame(
+                    pd.DataFrame({"term": list(plan.terms)})
+                )
+                scan = scan.join(F.broadcast(tdf), "term", "left_semi")
+            parts.append(scan)
+        for ref in plan.refs:
+            parts.append(
+                self._scan_cols(plan.cols)
+                .join(self.matched_terms_df(ref.source).select("term"), "term", "left_semi")
                 .withColumn("term", F.lit(ref.name))
             )
-            parts.append(sdf)
         scan = parts[0]
         for p in parts[1:]:
             scan = scan.unionByName(p)
+        return scan
 
+    def _run_distributed(self, plan: "_ScanPlan") -> DataFrame:
+        """The plan's candidate DataFrame: its kernel handed to Spark."""
+        if not plan.terms and not plan.refs:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
+        scan = self._scan(plan)
+        if plan.ctx is None:
+            return self._gid_union_const(scan, plan.boost)
+        node, ctx, k = plan.node, plan.ctx, plan.k
+        keeps = [kb.value for kb in plan.keep_bcs] or None
+        seed = plan.prune and plan.after is None
         qid = uuid.uuid4().hex
-        if isinstance(node, TermQ) and dv_df is None:
-            return self._single_term(scan, node, ctx, k, prune, qid, after,
-                                     keep_bcs=keep_bcs)
-        out = self._bucketed(scan, node, ctx, k, prune, qid, need_positions,
-                             width_terms, after, keep_bcs=keep_bcs,
-                             need_payloads=need_payloads, dv_df=dv_df)
-        if cache_fill:
+        if isinstance(node, TermQ) and plan.dv_df is None:
+            theta0 = float("-inf")
+            if seed and ctx.doc_freqs.get(node.term, 0) >= self.seed_min_df:
+                theta0 = self._seed_theta(
+                    scan, node, ctx, k, self._bucket_width(ctx, {node.term}),
+                    False, keeps=keeps)
+            return scan.mapInPandas(self._term_kernel(plan, qid, theta0),
+                                    schema=RESULT_SCHEMA)
+        width_terms = set(plan.terms) | {r.name for r in plan.refs}
+        width = self._bucket_width(ctx, width_terms)
+        doc_count = max(int(self.stats.get("n_rows") or self.stats.get("doc_count", 1)), 1)
+        theta0 = float("-inf")
+        # seed only when there's real postings volume to prune: the seed
+        # costs two extra (tiny) jobs, which dominates sub-seed_min_df
+        # queries where every bucket decodes in milliseconds anyway.
+        # dv-strategy verify disables the seed: the seed bucket's scores
+        # would ignore the doc-value filter, and an unfiltered θ could
+        # prune docs that DO survive the filter (θ still accumulates
+        # safely from the kernels' own post-filter offers).
+        if (seed and plan.dv_df is None
+                and sum(ctx.doc_freqs.get(t, 0) for t in width_terms) >= self.seed_min_df
+                and -(-doc_count // width) >= self.seed_min_buckets):
+            theta0 = self._seed_theta(
+                scan, node, ctx, k, width, plan.need_positions, keeps=keeps,
+                need_payloads=plan.need_payloads)
+        body = self._bucket_kernel(plan, qid, width, theta0)
+        with_bucket = scan.withColumn(
+            "bucket",
+            F.explode(
+                F.sequence(
+                    (F.col("first_gid") / width).cast("long"),
+                    (F.col("last_gid") / width).cast("long"),
+                )
+            ),
+        )
+        if plan.dv_df is None:
+            def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+                return body(key, pdf, None)
+
+            out = with_bucket.groupBy("bucket").applyInPandas(
+                kernel, schema=RESULT_SCHEMA
+            )
+        else:
+            # dv strategy (IndexOrDocValuesQuery's doc-values side): co-group
+            # the range-filtered doc rows into each gid-range bucket — every
+            # kernel verifies against only ITS slice of the doc-value column
+            # (the per-leaf doc-values reader), nothing driver-resident.
+            dv_b = plan.dv_df.withColumn(
+                "bucket", (F.col("gid") / width).cast("long")
+            )
+
+            def kernel_cg(key: tuple, pdf: pd.DataFrame,
+                          dvpdf: pd.DataFrame) -> pd.DataFrame:
+                return body(key, pdf, np.unique(dvpdf["gid"].to_numpy(np.int64)))
+
+            out = (
+                with_bucket.groupBy("bucket")
+                .cogroup(dv_b.groupBy("bucket"))
+                .applyInPandas(kernel_cg, schema=RESULT_SCHEMA)
+            )
+        if plan.cache_fill:
             out = out.unionByName(
-                self._cache_fill_df(out, keep_bcs, node, dv_df)
+                self._cache_fill_df(out, plan.keep_bcs, node, plan.dv_df)
             )
         return out
+
+    def _run_local(self, plan: "_ScanPlan") -> pd.DataFrame:
+        """Top-k (gid, score) of a one-bucket plan: one JVM-only job
+        collects the pruned postings scan and the driver runs the plan's
+        kernel over it — single term, gid-range buckets in ascending order,
+        or a constant-score term set."""
+        gids, scores = np.empty(0, np.int64), np.empty(0, np.float32)
+        if plan.terms:
+            with job_label(self.spark, "search.scan"):
+                pdf = self._scan(plan).toArrow().to_pandas()
+            if plan.ctx is None:
+                outs = list(self._gid_kernel()([pdf]))
+            elif isinstance(plan.node, TermQ):
+                outs = list(self._term_kernel(plan, uuid.uuid4().hex, float("-inf"))([pdf]))
+            else:
+                width = self._bucket_width(plan.ctx, set(plan.terms))
+                body = self._bucket_kernel(plan, uuid.uuid4().hex, width, float("-inf"))
+                outs = [body((b,), grp, None) for b, grp in _bucket_groups(pdf, width)]
+            if outs:
+                gids = np.concatenate([o["gid"].to_numpy(np.int64) for o in outs])
+                if plan.ctx is None:
+                    gids = np.unique(gids)
+                    scores = np.full(len(gids), np.float32(plan.boost), np.float32)
+                else:
+                    scores = np.concatenate([o["score"].to_numpy(np.float32) for o in outs])
+        # TopDocs order: score desc, gid asc
+        top = np.lexsort((gids, -scores.astype(np.float64)))[:plan.k]
+        return pd.DataFrame({"gid": gids[top], "score": scores[top]})
 
     def _split_neg_wrappers(self, node: BoolQ, k: int, prune: bool,
                             after: "tuple[float, int] | None",
@@ -3546,27 +3748,21 @@ class Searcher:
         )
         return base.unionByName(fill)
 
-    def _term_in_set(self, node: TermInSetQ, boost: float) -> DataFrame:
+    def _term_in_set(self, node: TermInSetQ, boost: float, k: int) -> "_ScanPlan":
         """TermInSetQuery execution (core/search/TermInSetQuery.java): a
         constant-score semi-join on the postings scan — NOT a scoring
         boolean, so the 1024-clause cap doesn't apply.
 
         Small sets push an IN-filter into the Parquet scan; large sets
-        broadcast-semi-join a terms DataFrame (an In expression with 100k
-        literals would blow up plan build at real id-list sizes). Matched
-        blocks decode doc gaps ONLY (no freqs/norms/positions read) and a
-        single distinct dedupes docs matching several set terms.
+        broadcast-semi-join a terms DataFrame (``_scan``). Matched blocks
+        decode doc gaps ONLY (no freqs/norms/positions read) and one
+        distinct dedupes docs matching several set terms.
         """
-        terms = list(dict.fromkeys(node.terms))
-        if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        scan = self._postings_df().select("term", "first_gid", "gids")
-        if len(terms) <= 64:
-            scan = scan.filter(F.col("term").isin(terms))
-        else:
-            tdf = self.spark.createDataFrame([(t,) for t in terms], "term string")
-            scan = scan.join(F.broadcast(tdf), "term", "left_semi")
-        return self._gid_union_const(scan, boost)
+        terms = tuple(dict.fromkeys(node.terms))
+        return _ScanPlan(
+            node, ("term", "first_gid", "gids"), terms, (), None, boost, k,
+            local=self._fits_one_bucket(terms, False),
+        )
 
     def _term_set_scan(self, ref: TermSetRefQ, boost: float) -> DataFrame:
         """Top-level lazy-set execution: the matched-terms PLAN (a filter
@@ -3583,10 +3779,9 @@ class Searcher:
         scan = scan.join(matched, "term", "left_semi")
         return self._gid_union_const(scan, boost)
 
-    def _gid_union_const(self, scan: DataFrame, boost: float) -> DataFrame:
-        """Decode doc-gap streams of the scan's blocks, drop deleted docs,
-        dedupe docs matching several set terms, and emit the constant
-        score."""
+    def _gid_kernel(self):
+        """mapInPandas kernel of a constant-score term set: decode the
+        doc-gap streams of the scan's blocks and drop deleted docs."""
         dbc = self.deleted_bc()  # broadcast handle: tiny in the closure
 
         def kernel(batches):
@@ -3600,7 +3795,12 @@ class Searcher:
                 g, _ = _live_mask(g, g, deleted)
                 yield pd.DataFrame({"gid": g})
 
-        gids = scan.mapInPandas(kernel, schema="gid long").distinct()
+        return kernel
+
+    def _gid_union_const(self, scan: DataFrame, boost: float) -> DataFrame:
+        """``_gid_kernel`` over the scan, deduped (docs matching several
+        set terms), at the constant score."""
+        gids = scan.mapInPandas(self._gid_kernel(), schema="gid long").distinct()
         return gids.select(
             "gid", F.lit(float(np.float32(boost))).cast("float").alias("score")
         )
@@ -3847,18 +4047,17 @@ class Searcher:
             return float("-inf")
         return float(np.partition(scores.astype(np.float64), len(scores) - k)[len(scores) - k])
 
-    def _single_term(self, scan, node, ctx, k, prune, qid, after=None,
-                     keep_bcs: tuple = ()) -> DataFrame:
+    def _term_kernel(self, plan: "_ScanPlan", qid: str, theta0: float):
+        """mapInPandas kernel of a single-term plan: block-max pruning
+        against θ = max(theta0, the process-local top-k heap), then decode,
+        score, deleted-doc / cached-filter / cursor masks."""
+        node, ctx, k, prune, after = plan.node, plan.ctx, plan.k, plan.prune, plan.after
+        keep_bcs = plan.keep_bcs
         weight = ctx.weights[node.term]
         cache = ctx.cache_for(node.term)
         sim = ctx.sim
         aux0 = ctx.aux_for(node.term)
         auxes = ctx.aux
-        theta0 = float("-inf")
-        if prune and after is None and ctx.doc_freqs.get(node.term, 0) >= self.seed_min_df:
-            theta0 = self._seed_theta(
-                scan, node, ctx, k, self._bucket_width(ctx, {node.term}),
-                False, keeps=[kb.value for kb in keep_bcs] or None)
         metrics = self.metrics
         dbc = self.deleted_bc()  # broadcast handle: tiny in the closure
 
@@ -3891,39 +4090,17 @@ class Searcher:
                     _offer(qid, k, scores)
                 yield pd.DataFrame({"gid": gids, "score": scores.astype(np.float32)})
 
-        return scan.mapInPandas(kernel, schema=RESULT_SCHEMA)
+        return kernel
 
-    def _bucketed(self, scan, node, ctx, k, prune, qid, need_positions,
-                  terms: set, after=None, keep_bcs: tuple = (),
-                  need_payloads: bool = False, dv_df=None) -> DataFrame:
-        width = self._bucket_width(ctx, terms)
-        doc_count = max(int(self.stats.get("n_rows") or self.stats.get("doc_count", 1)), 1)
-        n_buckets_est = -(-doc_count // width)
-        total_df = sum(ctx.doc_freqs.get(t, 0) for t in terms)
-        theta0 = float("-inf")
-        # seed only when there's real postings volume to prune: the seed
-        # costs two extra (tiny) jobs, which dominates sub-seed_min_df
-        # queries where every bucket decodes in milliseconds anyway.
-        # dv-strategy verify disables the seed: the seed bucket's scores
-        # would ignore the doc-value filter, and an unfiltered θ could
-        # prune docs that DO survive the filter (θ still accumulates
-        # safely from the kernels' own post-filter offers).
-        if (prune and after is None and dv_df is None
-                and total_df >= self.seed_min_df
-                and n_buckets_est >= self.seed_min_buckets):
-            theta0 = self._seed_theta(
-                scan, node, ctx, k, width, need_positions,
-                keeps=[kb.value for kb in keep_bcs] or None,
-                need_payloads=need_payloads)
-        with_bucket = scan.withColumn(
-            "bucket",
-            F.explode(
-                F.sequence(
-                    (F.col("first_gid") / width).cast("long"),
-                    (F.col("last_gid") / width).cast("long"),
-                )
-            ),
-        )
+    def _bucket_kernel(self, plan: "_ScanPlan", qid: str, width: int, theta0: float):
+        """Per-bucket kernel of a boolean/phrase plan, ``body(key, pdf,
+        dv_gids)``: the blocks of one gid-range bucket aligned per term,
+        pruned (block-grain leapfrog, plan upper bound and per-term slack
+        against θ), decoded, scored by ``eval_plan``, masked and cut to the
+        bucket's top k (ties at the kth score kept)."""
+        node, ctx, k, prune, after = plan.node, plan.ctx, plan.k, plan.prune, plan.after
+        keep_bcs = plan.keep_bcs
+        need_positions, need_payloads = plan.need_positions, plan.need_payloads
         weights = ctx.weights
         term_caches = {t: ctx.cache_for(t) for t in weights}
         sim = ctx.sim
@@ -4003,33 +4180,7 @@ class Searcher:
                 _offer(qid, k, scores)
             return pd.DataFrame({"gid": gids, "score": scores.astype(np.float32)})
 
-        if dv_df is None:
-            def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                return kernel_body(key, pdf, None)
-
-            return with_bucket.groupBy("bucket").applyInPandas(
-                kernel, schema=RESULT_SCHEMA
-            )
-
-        # dv strategy (IndexOrDocValuesQuery's doc-values side): co-group
-        # the range-filtered doc rows into each gid-range bucket — every
-        # kernel verifies against only ITS slice of the doc-value column
-        # (the per-leaf doc-values reader), nothing driver-resident.
-        dv_b = dv_df.withColumn(
-            "bucket", (F.col("gid") / width).cast("long")
-        )
-
-        def kernel_cg(key: tuple, pdf: pd.DataFrame,
-                      dvpdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel_body(
-                key, pdf, np.unique(dvpdf["gid"].to_numpy(np.int64))
-            )
-
-        return (
-            with_bucket.groupBy("bucket")
-            .cogroup(dv_b.groupBy("bucket"))
-            .applyInPandas(kernel_cg, schema=RESULT_SCHEMA)
-        )
+        return kernel_body
 
     def explain(self, term: str, gid: "int | None" = None) -> pd.DataFrame:
         """IndexSearcher.explain analog for a TermQuery: the searcher

@@ -123,14 +123,30 @@ def _jobs(spark, fn) -> int:
 # jobs per public call on the fixed 4 x 100-doc index below, local[4];
 # before the schema-pinned index reads they were build batch 9, delete 4,
 # purge merge 21, check 24 and first term query 6; the first term query
-# ran 3 before stored keys were read on the driver
+# ran 3 before stored keys were read on the driver and 2 before term stats
+# came from the term dictionary and small plans were scored on the driver
 JOB_BUDGET = {
     "build_batch": 7,
     "delete": 3,
     "purge_merge": 11,
     "check": 21,
-    "first_term_query": 2,
+    "first_term_query": 1,
 }
+
+# the description every job of each call carries (``commit.job_label``)
+JOB_LABEL = {
+    "build_batch": "indexer.build",
+    "delete": "indexer.delete",
+    "purge_merge": "merge.merge",
+    "check": "check.check",
+    "first_term_query": "search.scan",
+}
+
+
+def _labels(spark, ids) -> list:
+    store = spark.sparkContext._jsc.sc().statusStore()
+    descs = [store.job(j).description() for j in sorted(ids)]
+    return [x.get() if x.isDefined() else None for x in descs]
 
 
 @pytest.fixture(scope="module")
@@ -140,33 +156,39 @@ def budget_idx(spark, tmp_path_factory):
     frames = _frames(spark, 4)
     for i, df in enumerate(frames[:3]):
         build_index(spark, df, d, append=i > 0, **KW)
-    got = {
-        "build_batch": _jobs(spark, lambda: build_index(spark, frames[3], d, append=True, **KW)),
-        "delete": _jobs(spark, lambda: delete_docs(spark, d, gids=list(range(0, 400, 7)))),
-        "purge_merge": _jobs(spark, lambda: merge_index(spark, d, purge=True)),
-        "check": _jobs(spark, lambda: check_index(spark, d)),
-        "first_term_query": _jobs(
+    ids = {
+        "build_batch": _job_ids(spark, lambda: build_index(spark, frames[3], d, append=True, **KW)),
+        "delete": _job_ids(spark, lambda: delete_docs(spark, d, gids=list(range(0, 400, 7)))),
+        "purge_merge": _job_ids(spark, lambda: merge_index(spark, d, purge=True)),
+        "check": _job_ids(spark, lambda: check_index(spark, d)),
+        "first_term_query": _job_ids(
             spark, lambda: Searcher(spark, d).search(parse_query("t0000"), k=10)),
     }
-    return d, got
+    return d, ids
 
 
 def test_job_budget_per_public_call(spark, budget_idx):
-    d, got = budget_idx
+    d, ids = budget_idx
+    got = {k: len(v) for k, v in ids.items()}
     assert check_index(spark, d)["healthy"]
     over = {k: (v, JOB_BUDGET[k]) for k, v in got.items() if v > JOB_BUDGET[k]}
     assert not over, f"jobs over budget (got, budget): {over}; all: {got}"
+    # every job names the public call that ran it
+    for call, label in JOB_LABEL.items():
+        assert _labels(spark, ids[call]) == [label] * got[call], call
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
 
 
-# jobs of a warm query (its terms already in term_stats' cache) on the same
-# index: the top-k action (an AQE shuffle-map job plus the result stage
-# when the plan shuffles), plus the prefix expansion collect
+# jobs of a warm query on the same index: term stats and the prefix
+# expansion are read from the term dictionary's footers, and each plan is
+# below one bucket of postings, so one scan job collects it for the driver
+# to score (before: OR/AND/phrase 2, prefix 3)
 WARM_JOBS = {
     "t0000": 1,
-    "t0000 OR t0001": 2,
-    "t0000 AND t0001": 2,
-    '"t0000 t0002"': 2,
-    "t000*": 3,
+    "t0000 OR t0001": 1,
+    "t0000 AND t0001": 1,
+    '"t0000 t0002"': 1,
+    "t000*": 1,
 }
 
 
@@ -181,10 +203,8 @@ def test_warm_query_jobs_per_kind(spark, budget_idx):
     over = {q: (v, WARM_JOBS[q]) for q, v in got.items() if v > WARM_JOBS[q]}
     assert not over, f"warm jobs over budget (got, budget): {over}; all: {got}"
     # every job of a warm query says which search step ran it
-    store = spark.sparkContext._jsc.sc().statusStore()
     ids = _job_ids(spark, lambda: s.search(parse_query("t0000 OR t0001"), k=10))
     assert len(ids) == got["t0000 OR t0001"]
-    descs = [store.job(j).description() for j in sorted(ids)]
-    labels = [x.get() if x.isDefined() else None for x in descs]
+    labels = _labels(spark, ids)
     assert all(lab and lab.startswith("search.") for lab in labels), labels
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None

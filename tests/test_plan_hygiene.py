@@ -62,7 +62,7 @@ def test_term_in_set_large_set_uses_broadcast_semi_join(searcher):
     from lucene_spark.plans.query import TermInSetQ
 
     big = tuple(["merge", "window"] + [f"zz{i}" for i in range(3000)])
-    df = searcher._term_in_set(TermInSetQ(terms=big), 1.0)
+    df = searcher.candidates(TermInSetQ(terms=big))
     plan = _explain(df)
     # large sets must NOT build a 3000-literal In filter; a broadcast
     # LeftSemi join carries the set instead

@@ -139,8 +139,9 @@ def test_nested_set_ref_plan_semijoin(searcher):
 
 
 def test_rewrite_never_collects_big_sets(searcher, monkeypatch):
-    """rewrite() must collect at most LIMIT+1 probe rows from the matched-
-    terms plan — never the full match set (the r3 driver-OOM path)."""
+    """rewrite() never collects the full match set (the r3 driver-OOM
+    path): a prefix probe reads the term dictionary's footer-pruned row
+    groups on the driver, stops at LIMIT+1 matches and runs no collect."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     real_collect = DataFrame.collect
@@ -154,7 +155,8 @@ def test_rewrite_never_collects_big_sets(searcher, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     node = searcher.rewrite(PrefixQ("t0"))
     assert isinstance(node.child, TermSetRefQ)
-    assert sizes and max(sizes) <= BOOL_REWRITE_TERM_LIMIT + 1
+    assert sizes == []
+    assert searcher.term_dict().expand(PrefixQ("t0"), BOOL_REWRITE_TERM_LIMIT) is None
 
 
 # --------------------------------------------------------------- deletes
