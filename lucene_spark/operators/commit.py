@@ -180,7 +180,8 @@ def labelled(label: str):
 def _row_group_ranges(index_dir: str, rel_paths, column: str):
     """Footer min/max of ``column`` for every non-empty row group of the
     parquet tables at ``rel_paths``: (files, [(file index, row group index,
-    min, max)]), min and max None where the footer holds no statistics."""
+    min, max, uncompressed bytes)]), min and max None where the footer
+    holds no statistics."""
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
@@ -196,7 +197,7 @@ def _row_group_ranges(index_dir: str, rel_paths, column: str):
                 st = g.column(col).statistics
                 known = st is not None and st.has_min_max
                 rows.append((len(files), i, st.min if known else None,
-                             st.max if known else None))
+                             st.max if known else None, g.total_byte_size))
             files.append(f)
     return tuple(files), rows
 
@@ -231,7 +232,7 @@ class GidRowGroups:
         files, rows = _row_group_ranges(index_dir, rel_paths, "gid")
         i64 = np.iinfo(np.int64)
         a = np.array([(f, i, i64.min if lo is None else lo, i64.max if hi is None else hi)
-                      for f, i, lo, hi in rows], dtype=np.int64).reshape(-1, 4)
+                      for f, i, lo, hi, _ in rows], dtype=np.int64).reshape(-1, 4)
         return cls(files, a[:, 0], a[:, 1], a[:, 2], a[:, 3])
 
     def holding(self, gids: np.ndarray) -> np.ndarray:
@@ -257,6 +258,14 @@ class GidRowGroups:
         return out[out["gid"].isin(gids)].reset_index(drop=True)
 
 
+# a driver read of terms/ row groups (term stats, a bounded expansion) reads
+# at most this many uncompressed bytes; a probe whose candidate row groups
+# hold more runs as a Spark filter instead. terms/ is hash-partitioned and
+# sorted within each file, so at scale every file's row groups span the
+# whole term range and footer pruning alone cannot bound the read.
+MAX_DRIVER_READ_BYTES = 32 << 20
+
+
 @dataclass(frozen=True)
 class TermDictionary:
     """The footer ``term`` range of every row group of ``terms/``: term
@@ -265,9 +274,11 @@ class TermDictionary:
 
     ``terms/`` is sorted within each file, so a row group covers a term
     range and a probe reads the ``term, doc_freq, total_term_freq`` columns
-    of only the row groups whose range can hold it. Terms compare as
-    Python strings, which is the code point order and so the UTF-8 byte
-    order of the footer statistics."""
+    of only the row groups whose range can hold it, one row group at a
+    time. A probe whose row groups hold more than ``MAX_DRIVER_READ_BYTES``
+    is refused (None) and left to Spark. Terms compare as Python strings,
+    which is the code point order and so the UTF-8 byte order of the
+    footer statistics."""
 
     COLUMNS = ("term", "doc_freq", "total_term_freq")
 
@@ -277,15 +288,17 @@ class TermDictionary:
     lo: np.ndarray  # per row group: min term (object; "" when unknown)
     hi: np.ndarray  # per row group: max term (object; "" when unknown)
     known: np.ndarray  # per row group: the footer holds min/max
+    nbytes: np.ndarray  # per row group: uncompressed bytes
 
     @classmethod
     def load(cls, index_dir: str, rel_paths=("terms",)) -> "TermDictionary":
         files, rows = _row_group_ranges(index_dir, rel_paths, "term")
-        file, rg, lo, hi = zip(*rows) if rows else ((), (), (), ())
+        file, rg, lo, hi, nbytes = zip(*rows) if rows else ((),) * 5
         return cls(files, np.array(file, np.int64), np.array(rg, np.int64),
                    np.array([t or "" for t in lo], dtype=object),
                    np.array([t or "" for t in hi], dtype=object),
-                   np.array([t is not None for t in lo], dtype=bool))
+                   np.array([t is not None for t in lo], dtype=bool),
+                   np.array(nbytes, np.int64))
 
     def _overlapping(self, lo: "str | None", hi: "str | None") -> np.ndarray:
         """Positions of the row groups whose term range meets [lo, hi]
@@ -297,35 +310,54 @@ class TermDictionary:
             ok &= self.lo <= hi
         return np.flatnonzero(ok | ~self.known)
 
-    def stats(self, terms) -> "dict[str, tuple[int, int]]":
+    def _each(self, pos: np.ndarray, columns):
+        """``columns`` of the row groups at ``pos`` (file then row-group
+        order), one Arrow table per row group; None when they hold more
+        than ``MAX_DRIVER_READ_BYTES``."""
+        import pyarrow.parquet as pq
+
+        if int(self.nbytes[pos].sum()) > MAX_DRIVER_READ_BYTES:
+            return None
+
+        def tables():
+            for f in dict.fromkeys(self.file[pos].tolist()):
+                with pq.ParquetFile(self.files[f]) as pf:
+                    for i in self.rg[pos][self.file[pos] == f].tolist():
+                        yield pf.read_row_group(i, columns=list(columns))
+
+        return tables()
+
+    def stats(self, terms) -> "dict[str, tuple[int, int]] | None":
         """(doc_freq, total_term_freq) of each of ``terms`` the dictionary
-        holds; absent terms are left out."""
+        holds (absent terms are left out); None when the row groups that
+        can hold them exceed the driver read cap."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         probe = np.array(sorted(set(terms)), dtype=object)
-        if not len(probe) or not len(self.rg):
-            return {}
         hit = np.flatnonzero(
             (np.searchsorted(probe, self.hi, side="right")
              > np.searchsorted(probe, self.lo, side="left")) | ~self.known
-        )
-        parts = _read_row_groups(self.files, self.file[hit], self.rg[hit], self.COLUMNS)
-        if not parts:
-            return {}
-        t = pa.concat_tables(parts)
-        t = t.filter(pc.is_in(t["term"], value_set=pa.array(probe.tolist(), pa.string())))
-        return {
-            term: (int(df), int(ttf))
-            for term, df, ttf in zip(*(t[c].to_pylist() for c in self.COLUMNS))
-        }
+        ) if len(probe) else np.empty(0, np.int64)
+        tables = self._each(hit, self.COLUMNS)
+        if tables is None:
+            return None
+        value_set = pa.array(probe.tolist(), pa.string())
+        out = {}
+        for t in tables:
+            t = t.filter(pc.is_in(t["term"], value_set=value_set))
+            out.update((term, (int(df), int(ttf)))
+                       for term, df, ttf in zip(*(t[c].to_pylist() for c in self.COLUMNS)))
+        return out
 
     def expand(self, node, limit: int) -> "list[str] | None":
-        """Sorted terms a ``PrefixQ`` or ``RangeQ`` matches, or None once
-        more than ``limit`` match: row groups are read one at a time and
-        the read stops at the first ``limit + 1`` matches. A pattern that
-        names no field matches default-field terms only, as
-        ``Searcher.matched_terms_df`` does."""
+        """Sorted terms a ``PrefixQ`` or ``RangeQ`` matches, cut at
+        ``limit + 1`` (more than ``limit`` match: which ones is unspecified):
+        row groups are read one at a time, each one's matches truncated to
+        the remaining budget, and the read stops once ``limit + 1`` are
+        found. None when the candidate row groups exceed the driver read
+        cap. A pattern that names no field matches default-field terms
+        only, as ``Searcher.matched_terms_df`` does."""
         import pyarrow.compute as pc
 
         from ..plans.query import PrefixQ
@@ -350,12 +382,14 @@ class TermDictionary:
                 match &= term <= node.hi if node.include_hi else term < node.hi
         if FIELD_SEP not in probe:
             match &= ~pc.match_substring(term, FIELD_SEP)
-        found: set = set()
-        for p in pos:
-            (t,) = _read_row_groups(self.files, self.file[[p]], self.rg[[p]], ["term"])
-            found.update(t.filter(match)["term"].to_pylist())
+        tables = self._each(pos, ["term"])
+        if tables is None:
+            return None
+        found: list = []
+        for t in tables:
+            found += t.filter(match)["term"].slice(0, limit + 1 - len(found)).to_pylist()
             if len(found) > limit:
-                return None
+                break
         return sorted(found)
 
 

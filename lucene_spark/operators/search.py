@@ -11,8 +11,9 @@ Spark shape of Lucene's search lifecycle (SURVEY.md §3b):
   2. The postings scan is a plain DataFrame filter ``term IN (...)`` over the
      block-row Parquet — predicate pushdown + column pruning do the term-
      dictionary seek (positions column only read for phrase queries). A
-     ``search`` whose scan holds at most one bucket of postings collects it
-     in one JVM-only job and runs the kernels below on the driver.
+     ``search`` whose scan holds at most ``DRIVER_PLAN_POSTINGS`` postings
+     collects it in one JVM-only job and runs the kernels below on the
+     driver.
   3. Scoring runs in vectorized Arrow kernels:
        - single-term: ``mapInPandas`` straight over block rows (no shuffle);
        - boolean/phrase: blocks are exploded onto gid-range *buckets* and
@@ -136,6 +137,16 @@ BOOL_REWRITE_TERM_LIMIT = 16
 # buckets are pure overhead
 TARGET_BUCKET_POSTINGS = 1 << 19
 MIN_BUCKET_POSTINGS = 1 << 10
+
+# Searcher.search scores a plan on the driver when its postings volume
+# (Σ docFreq, Σ totalTermFreq when positions are read) is at most this: one
+# JVM-only scan job, then the kernel runs locally. On a 4-core host
+# (local[4]) that beat the distributed plan at every volume measured: single
+# term plans up to 1.3e5 postings, OR and phrase plans up to 4.7e5 (CHANGES.md
+# has the figures); the layerbench ``search`` queries reach 7.5e4. Larger
+# volumes are unmeasured and stay distributed. It is independent of
+# ``target_bucket_postings``, which sizes buckets only.
+DRIVER_PLAN_POSTINGS = 1 << 17
 
 # a postings scan names at most this many terms in an IN filter; more go
 # through a broadcast semi-join (an In expression with 100k literals blows
@@ -2250,7 +2261,7 @@ class _ScanPlan:
     keep_bcs: tuple = ()  # cached FILTER gid sets (broadcasts)
     dv_df: "DataFrame | None" = None  # doc-value verify rows (dv strategy)
     cache_fill: bool = False  # complete filter-only docs from the masks
-    local: bool = False  # at most one bucket of postings: score on the driver
+    local: bool = False  # at most DRIVER_PLAN_POSTINGS: score on the driver
 
 
 def _bucket_groups(pdf: pd.DataFrame, width: int):
@@ -2411,14 +2422,21 @@ class Searcher:
 
         Read on the driver from the ``terms/`` row groups whose footer term
         range can hold a probe (``commit.TermDictionary``): no Spark job.
-        Results are cached per searcher, misses included (TermStates-style
-        snapshot: Lucene resolves term states once per query against a
-        point-in-time reader)."""
+        A probe whose row groups exceed the dictionary's driver read cap
+        collects the matching rows of a filtered ``terms/`` scan instead
+        (the ``search.term_stats`` job). Results are cached per searcher,
+        misses included (TermStates-style snapshot: Lucene resolves term
+        states once per query against a point-in-time reader)."""
         if not terms:
             return {}
-        missing = [t for t in terms if t not in self._tstats_cache]
+        missing = sorted(t for t in terms if t not in self._tstats_cache)
         if missing:
             found = self.term_dict().stats(missing)
+            if found is None:
+                with job_label(self.spark, "search.term_stats"):
+                    rows = self._in_terms(self.terms_table(), missing).collect()
+                found = {r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
+                         for r in rows}
             for t in missing:
                 self._tstats_cache[t] = found.get(t)
         return {
@@ -2795,19 +2813,19 @@ class Searcher:
             # the driver (the r3 scale-killer at billion-term dictionaries).
             # Prefix and range probes read the term dictionary's footers on
             # the driver; wildcard and regexp keep a Spark probe, because
-            # Java and Python regex differ.
+            # Java and Python regex differ, and so does a prefix or range
+            # probe past the dictionary's driver read cap.
+            head = None
             if isinstance(node, (PrefixQ, RangeQ)):
                 head = self.term_dict().expand(node, BOOL_REWRITE_TERM_LIMIT)
-            else:
+            if head is None:
                 with job_label(self.spark, "search.expand"):
                     head = [
                         r["term"]
                         for r in self.matched_terms_df(node)
                         .select("term").limit(BOOL_REWRITE_TERM_LIMIT + 1).collect()
                     ]
-                if len(head) > BOOL_REWRITE_TERM_LIMIT:
-                    head = None
-            if head is not None:
+            if len(head) <= BOOL_REWRITE_TERM_LIMIT:
                 return ConstScoreQ(TermInSetQ(tuple(sorted(head))), boost=1.0)
             return ConstScoreQ(TermSetRefQ(source=node), boost=1.0)
         if isinstance(node, BoolQ):
@@ -3089,11 +3107,12 @@ class Searcher:
 
         Planning runs on the driver: term stats, and prefix/range
         expansions of at most ``BOOL_REWRITE_TERM_LIMIT`` terms, come from
-        the footers of ``terms/`` (``term_stats``). A plan of one IN-filtered
-        postings scan whose volume (Σ docFreq, Σ totalTermFreq when
-        positions are read) is at most ``target_bucket_postings`` — one
-        bucket task's worth — runs ONE JVM-only Spark job that collects the
-        pruned scan (``search.scan``), and the driver scores it with the
+        the footers of ``terms/`` (``term_stats``), unless the row groups
+        that can hold them exceed the dictionary's driver read cap. A plan
+        of one IN-filtered postings scan whose volume (Σ docFreq,
+        Σ totalTermFreq when positions are read) is at most
+        ``DRIVER_PLAN_POSTINGS`` runs ONE JVM-only Spark job that collects
+        the pruned scan (``search.scan``), and the driver scores it with the
         kernels Spark would run: same deleted-doc, cached-filter and θ
         logic. Bigger plans, doc-value filters, cache fills, MatchAll, lazy
         term sets (``TermSetRefQ``) and desugared negations run distributed
@@ -3456,18 +3475,18 @@ class Searcher:
             prune, after, need_positions, need_payloads, tuple(keep_bcs), dv_df,
             cache_fill,
             local=(after is None and dv_df is None and not cache_fill and not refs
-                   and self._fits_one_bucket(terms, need_positions)),
+                   and self._fits_driver(terms, need_positions)),
         )
 
-    def _fits_one_bucket(self, terms, positions: bool) -> bool:
-        """True when an IN-filtered scan of ``terms`` reads at most one
-        bucket task's worth of postings (``target_bucket_postings``):
-        Σ docFreq, or Σ totalTermFreq when positions are read."""
+    def _fits_driver(self, terms, positions: bool) -> bool:
+        """True when an IN-filtered scan of ``terms`` reads at most
+        ``DRIVER_PLAN_POSTINGS`` postings: Σ docFreq, or Σ totalTermFreq
+        when positions are read."""
         if len(terms) > MAX_IN_TERMS:
             return False
         stats = self.term_stats(set(terms))
         volume = sum(st[1 if positions else 0] for st in stats.values())
-        return volume <= self.target_bucket_postings
+        return volume <= DRIVER_PLAN_POSTINGS
 
     def _scan_cols(self, cols: tuple) -> DataFrame:
         """The live-unit postings scan projected to ``cols``, pinned per
@@ -3476,24 +3495,24 @@ class Searcher:
             self._scans[cols] = self._postings_df().select(*cols)
         return self._scans[cols]
 
+    def _in_terms(self, df: DataFrame, terms) -> DataFrame:
+        """``df``'s rows whose ``term`` is one of ``terms``: an IN filter
+        that pushes into the Parquet scan, or a broadcast semi-join past
+        ``MAX_IN_TERMS``."""
+        if len(terms) <= MAX_IN_TERMS:
+            return df.filter(F.col("term").isin(list(terms)))
+        probe = self.spark.createDataFrame(pd.DataFrame({"term": list(terms)}))
+        return df.join(F.broadcast(probe), "term", "left_semi")
+
     def _scan(self, plan: "_ScanPlan") -> DataFrame:
-        """The plan's postings scan: its terms through an IN filter that
-        pushes into the Parquet scan (a broadcast semi-join past
-        ``MAX_IN_TERMS``), then each lazy term set's members
+        """The plan's postings scan: its terms through ``_in_terms``, then
+        each lazy term set's members
         through a semi-join against its matched-terms PLAN (no driver
         materialization), re-keyed to the set's virtual name so kernels
         see one pre-unioned pseudo-term per set."""
         parts = []
         if plan.terms:
-            scan = self._scan_cols(plan.cols)
-            if len(plan.terms) <= MAX_IN_TERMS:
-                scan = scan.filter(F.col("term").isin(list(plan.terms)))
-            else:
-                tdf = self.spark.createDataFrame(
-                    pd.DataFrame({"term": list(plan.terms)})
-                )
-                scan = scan.join(F.broadcast(tdf), "term", "left_semi")
-            parts.append(scan)
+            parts.append(self._in_terms(self._scan_cols(plan.cols), plan.terms))
         for ref in plan.refs:
             parts.append(
                 self._scan_cols(plan.cols)
@@ -3583,7 +3602,7 @@ class Searcher:
         return out
 
     def _run_local(self, plan: "_ScanPlan") -> pd.DataFrame:
-        """Top-k (gid, score) of a one-bucket plan: one JVM-only job
+        """Top-k (gid, score) of a driver-sized plan: one JVM-only job
         collects the pruned postings scan and the driver runs the plan's
         kernel over it — single term, gid-range buckets in ascending order,
         or a constant-score term set."""
@@ -3761,7 +3780,7 @@ class Searcher:
         terms = tuple(dict.fromkeys(node.terms))
         return _ScanPlan(
             node, ("term", "first_gid", "gids"), terms, (), None, boost, k,
-            local=self._fits_one_bucket(terms, False),
+            local=self._fits_driver(terms, False),
         )
 
     def _term_set_scan(self, ref: TermSetRefQ, boost: float) -> DataFrame:

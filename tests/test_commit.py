@@ -181,7 +181,7 @@ def test_job_budget_per_public_call(spark, budget_idx):
 
 # jobs of a warm query on the same index: term stats and the prefix
 # expansion are read from the term dictionary's footers, and each plan is
-# below one bucket of postings, so one scan job collects it for the driver
+# within DRIVER_PLAN_POSTINGS, so one scan job collects it for the driver
 # to score (before: OR/AND/phrase 2, prefix 3)
 WARM_JOBS = {
     "t0000": 1,

@@ -2,6 +2,8 @@
 survivors UNCHANGED (stats include deleted docs until merge — exact
 Lucene pre-merge semantics)."""
 
+from contextlib import nullcontext
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -11,6 +13,7 @@ from lucene_spark.operators.oracle import BruteForceIndex
 from lucene_spark.operators.search import Searcher
 from lucene_spark.plans.query import BoolQ, MatchAllQ, TermInSetQ, TermQ
 from lucene_spark.sources.webtext import generate_pages_pdf
+from tests.paths import distributed
 
 N_DOCS = 300
 DEL_MOD = 5
@@ -50,14 +53,16 @@ def _want(oracle, node, k):
 
 def _check(searcher, oracle, node, k=10, msg=""):
     want = _want(oracle, node, k)
-    for prune in (False, True):
-        got = searcher.search(node, k=k, with_keys=False, prune=prune)
-        assert list(got["gid"].astype(int)) == [g for g, _ in want], (
-            f"{msg} prune={prune}"
-        )
-        for gs, (_, ws) in zip(got["score"], want):
-            # survivors score EXACTLY as before the delete
-            assert np.float32(gs) == np.float32(ws), f"{msg} prune={prune}"
+    for path in (distributed, nullcontext):  # Spark kernels, then the driver
+        for prune in (False, True):
+            with path():
+                got = searcher.search(node, k=k, with_keys=False, prune=prune)
+            assert list(got["gid"].astype(int)) == [g for g, _ in want], (
+                f"{msg} prune={prune} {path.__name__}"
+            )
+            for gs, (_, ws) in zip(got["score"], want):
+                # survivors score EXACTLY as before the delete
+                assert np.float32(gs) == np.float32(ws), f"{msg} prune={prune}"
 
 
 def test_deleted_docs_excluded_scores_unchanged(searcher, oracle):

@@ -22,6 +22,7 @@ from lucene_spark.plans.query import (
     TermInSetQ,
     TermQ,
 )
+from tests.paths import distributed
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -162,7 +163,8 @@ def test_cache_under_pruned_multibucket_execution(spark, index_dir):
     )
     want = plain.search(node, k=10, with_keys=False)
     for _ in range(2):
-        got = s.search(node, k=10, with_keys=False)
+        with distributed():
+            got = s.search(node, k=10, with_keys=False)
         assert list(got.gid) == list(want.gid)
         assert list(got.score) == list(want.score)
     assert cache.hit_count >= 1

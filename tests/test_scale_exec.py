@@ -7,6 +7,8 @@ identical to the brute-force oracle (CheckHits contract) — pruning may only
 ever change WORK, never results.
 """
 
+from contextlib import nullcontext
+
 import numpy as np
 import pytest
 
@@ -23,6 +25,7 @@ from lucene_spark.plans.query import (
     parse_query,
 )
 from lucene_spark.sources.webtext import generate_pages_pdf
+from tests.paths import distributed
 
 N_DOCS = 400
 
@@ -66,13 +69,15 @@ def _terms_by_df(oracle):
 
 def _check(searcher, oracle, node, k=10, msg=""):
     want = oracle.search(node, k)
-    for prune in (False, True):
-        got = searcher.search(node, k=k, prune=prune)
-        assert list(got["gid"].astype(int)) == [g for g, _, _ in want], (
-            f"{msg} prune={prune}"
-        )
-        for gs, (_, _, ws) in zip(got["score"], want):
-            assert np.float32(gs) == np.float32(ws), f"{msg} prune={prune}"
+    for path in (distributed, nullcontext):  # Spark kernels, then the driver
+        for prune in (False, True):
+            with path():
+                got = searcher.search(node, k=k, prune=prune)
+            assert list(got["gid"].astype(int)) == [g for g, _, _ in want], (
+                f"{msg} prune={prune} {path.__name__}"
+            )
+            for gs, (_, _, ws) in zip(got["score"], want):
+                assert np.float32(gs) == np.float32(ws), f"{msg} prune={prune}"
 
 
 def test_multibucket_seeded_matches_oracle(tiny_searcher, oracle):

@@ -141,7 +141,8 @@ def test_nested_set_ref_plan_semijoin(searcher):
 def test_rewrite_never_collects_big_sets(searcher, monkeypatch):
     """rewrite() never collects the full match set (the r3 driver-OOM
     path): a prefix probe reads the term dictionary's footer-pruned row
-    groups on the driver, stops at LIMIT+1 matches and runs no collect."""
+    groups on the driver and returns at most LIMIT+1 matches, or, above the
+    driver read cap, collects at most LIMIT+1 probe rows."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     real_collect = DataFrame.collect
@@ -156,7 +157,16 @@ def test_rewrite_never_collects_big_sets(searcher, monkeypatch):
     node = searcher.rewrite(PrefixQ("t0"))
     assert isinstance(node.child, TermSetRefQ)
     assert sizes == []
-    assert searcher.term_dict().expand(PrefixQ("t0"), BOOL_REWRITE_TERM_LIMIT) is None
+    assert len(searcher.term_dict().expand(PrefixQ("t0"), BOOL_REWRITE_TERM_LIMIT)) \
+        == BOOL_REWRITE_TERM_LIMIT + 1
+    # above the dictionary's driver read cap the probe runs on Spark and
+    # collects at most LIMIT+1 rows
+    from lucene_spark.operators import commit
+
+    monkeypatch.setattr(commit, "MAX_DRIVER_READ_BYTES", 0)
+    node = searcher.rewrite(PrefixQ("t0"))
+    assert isinstance(node.child, TermSetRefQ)
+    assert sizes and max(sizes) <= BOOL_REWRITE_TERM_LIMIT + 1
 
 
 # --------------------------------------------------------------- deletes
