@@ -575,7 +575,7 @@ def _q_span_payload_topk(spark, sf_dir):
     from lucene_spark.plans.query import SpanPayloadCheckQ
 
     s = Searcher(spark, _index_for_payloads(spark, sf_dir))
-    node = SpanPayloadCheckQ((T_HOT,), (SPC_PAY,))
+    node = SpanPayloadCheckQ(T_HOT, (SPC_PAY,))
     pdf = s.search(node, k=10, with_keys=False)
     out = pdf[["gid", "score"]].rename(columns={"gid": "doc_id"})
     out["doc_id"] = out["doc_id"].astype("int64")
@@ -588,11 +588,11 @@ def _q_span_payload_near_topk(spark, sf_dir):
     MatchOperation.GTE): an adjacent ordered span survives only when BOTH
     positions' payloads clear the threshold."""
     from lucene_spark.operators.search import Searcher
-    from lucene_spark.plans.query import SpanPayloadCheckQ
+    from lucene_spark.plans.query import SpanNearQ, SpanPayloadCheckQ
 
     s = Searcher(spark, _index_for_payloads(spark, sf_dir))
     node = SpanPayloadCheckQ(
-        ("table", T_B), (SPC_NEAR_P, SPC_NEAR_P), slop=0, op="gte"
+        SpanNearQ(("table", T_B), slop=0), (SPC_NEAR_P, SPC_NEAR_P), op="gte"
     )
     pdf = s.search(node, k=10, with_keys=False)
     out = pdf[["gid", "score"]].rename(columns={"gid": "doc_id"})
@@ -1987,7 +1987,7 @@ def _q_page2(spark, sf_dir):
     q = f"{T_HOT} OR {T_MID}"
     page1 = s.search(q, k=10, with_keys=False)
     cursor = (float(page1["score"].iloc[-1]), int(page1["gid"].iloc[-1]))
-    page2 = s.search_after(q, cursor, k=10, depth=10)
+    page2 = s.search_after(q, cursor, k=10)
     out = page2.rename(columns={"gid": "doc_id"})
     out["doc_id"] = out["doc_id"].astype("int64")
     out["score"] = out["score"].astype("float64")

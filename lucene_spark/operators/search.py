@@ -54,7 +54,7 @@ from __future__ import annotations
 import heapq
 import math
 import uuid
-from dataclasses import dataclass, replace
+from dataclasses import dataclass, fields, replace
 
 import numpy as np
 import pandas as pd
@@ -116,7 +116,9 @@ from .commit import (
 __all__ = ["Searcher", "TermPostings", "eval_plan", "decode_term_blocks"]
 
 
-# span nodes: one weight rule (make_ctx) and one span-source pruning rule
+# span nodes: one evaluation (_eval_span; SpanOrQ keeps a position-free
+# fast path), one rewrite arm, one weight rule (_span_terms in make_ctx)
+# and one span-source pruning rule (_span_needs)
 _SPANS = (SpanFirstQ, SpanPositionRangeQ, SpanContainingQ, SpanWithinQ,
           SpanNearQ, SpanNotQ, SpanOrQ, SpanPayloadCheckQ)
 # nodes scored through ScoreCtx.phrase_weights
@@ -406,20 +408,10 @@ def eval_plan(node, postings: dict, ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarr
         return _eval_interval_expr(node, postings, ctx)
     if isinstance(node, MultiPhraseQ):
         return _eval_multiphrase(node, postings, ctx)
-    if isinstance(node, SpanFirstQ):
-        return _eval_span_first(node, postings, ctx)
-    if isinstance(node, SpanPositionRangeQ):
-        return _eval_span_pos_range(node, postings, ctx)
-    if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-        return _eval_span_contain(node, postings, ctx)
-    if isinstance(node, SpanNotQ):
-        return _eval_span_not(node, postings, ctx)
     if isinstance(node, SpanOrQ):
         return _eval_span_or(node, postings, ctx)
-    if isinstance(node, SpanNearQ):
-        return _eval_span_near(node, postings, ctx)
-    if isinstance(node, SpanPayloadCheckQ):
-        return _eval_span_payload_check(node, postings, ctx)
+    if isinstance(node, _SPANS):
+        return _eval_span(node, postings, ctx)
     if isinstance(node, BoolQ):
         return _eval_bool(node, postings, ctx)
     if isinstance(node, SynonymQ):
@@ -690,32 +682,15 @@ _POS_SHIFT = 33
 _POS_PAD = 1 << 20
 
 
-def _gather_positions(tp: TermPostings, idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Flat positions of the selected docs + their candidate indices.
+def _gather_positions(tp: TermPostings, idx: np.ndarray):
+    """Flat positions of the selected docs, their candidate indices and
+    their indices into ``pos_flat`` (which also align the payload stream
+    ``pay_flat``).
 
     Vectorized gather: no per-doc Python. Returned positions are globally
     sorted by (candidate, position) because ``idx`` is ascending and
     positions ascend within a doc.
     """
-    starts = tp.pos_starts
-    lengths = starts[idx + 1] - starts[idx]
-    total = int(lengths.sum())
-    if total == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    out_starts = np.cumsum(lengths) - lengths
-    flat_ids = (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(out_starts, lengths)
-        + np.repeat(starts[idx], lengths)
-    )
-    cand = np.repeat(np.arange(len(idx), dtype=np.int64), lengths)
-    return tp.pos_flat[flat_ids], cand
-
-
-def _gather_positions_flat(tp: TermPostings, idx: np.ndarray):
-    """Like :func:`_gather_positions` but also returns the flat indices
-    into ``pos_flat`` — the alignment needed to read the per-occurrence
-    payload (``pay_flat``) or offset streams for the gathered positions."""
     starts = tp.pos_starts
     lengths = starts[idx + 1] - starts[idx]
     total = int(lengths.sum())
@@ -742,7 +717,7 @@ def phrase_freqs(tps: "list[TermPostings]", idxs: "list[np.ndarray]",
     ncand = len(idxs[0])
     keys = None
     for tp, idx, off in zip(tps, idxs, offsets):
-        pos, cand = _gather_positions(tp, idx)
+        pos, cand, _ = _gather_positions(tp, idx)
         k = (cand << _POS_SHIFT) + (pos - int(off) + _POS_PAD)
         if keys is None:
             keys = k
@@ -765,14 +740,14 @@ def near_freqs(tps: "list[TermPostings]", idxs: "list[np.ndarray]", slop: int) -
     ending there; one prefix-sum + two searchsorteds per level
     (NearSpansOrdered's advance, de-looped)."""
     ncand = len(idxs[0])
-    pos, cand = _gather_positions(tps[0], idxs[0])
+    pos, cand, _ = _gather_positions(tps[0], idxs[0])
     keys = (cand << _POS_SHIFT) + pos + _POS_PAD
     cnt = np.ones(len(keys), dtype=np.int64)
     for tp, idx in zip(tps[1:], idxs[1:]):
         if not len(keys):
             return np.zeros(ncand, np.int64)
         csum = np.concatenate(([0], np.cumsum(cnt)))
-        p2, c2 = _gather_positions(tp, idx)
+        p2, c2, _ = _gather_positions(tp, idx)
         k2 = (c2 << _POS_SHIFT) + p2 + _POS_PAD
         lo = np.searchsorted(keys, k2 - (slop + 1))
         hi = np.searchsorted(keys, k2 - 1, side="right")
@@ -806,7 +781,7 @@ def sloppy_freqs(tps: "list[TermPostings]", idxs: "list[np.ndarray]",
     lim = np.empty((n, ncand), np.int64)
     cur = np.empty((n, ncand), np.int64)
     for i, (tp, idx, off) in enumerate(zip(tps, idxs, offsets)):
-        pos, _ = _gather_positions(tp, idx)
+        pos, _, _ = _gather_positions(tp, idx)
         lengths = tp.pos_starts[idx + 1] - tp.pos_starts[idx]
         cstart = np.concatenate(([0], np.cumsum(lengths)))
         flats.append(pos - int(off))  # pp.position = tpPos - offset
@@ -1019,7 +994,7 @@ def interval_freqs(tps: "list[TermPostings]", idxs: "list[np.ndarray]",
         return freqs
     keys: list[np.ndarray] = []
     for tp, idx in zip(tps, idxs):
-        pos, cand = _gather_positions(tp, idx)
+        pos, cand, _ = _gather_positions(tp, idx)
         keys.append((cand << _POS_SHIFT) + pos)
     if ordered:
         starts = keys[0]
@@ -1269,7 +1244,7 @@ def _eval_interval_expr(node: IntervalExprQ, postings: dict,
         idx = np.minimum(np.searchsorted(tp.gids, gids), len(tp.gids) - 1)
         pres = tp.gids[idx] == gids
         cand_ids = np.nonzero(pres)[0]
-        pos, sub = _gather_positions(tp, idx[pres])
+        pos, sub, _ = _gather_positions(tp, idx[pres])
         k = (cand_ids[sub] << _POS_SHIFT) + pos
         term_streams[t] = (k, k.copy(), np.zeros(len(k), np.int64))
     ks, ke, _ = eval_stream(node.root, term_streams)
@@ -1305,7 +1280,7 @@ def _slot_union(tps: "list[TermPostings]", gids: np.ndarray,
         cand_ids = np.nonzero(pres)[0]
         present[cand_ids] = True
         norms[cand_ids] = tp.norms[idx[pres]]
-        pos, sub_cand = _gather_positions(tp, idx[pres])
+        pos, sub_cand, _ = _gather_positions(tp, idx[pres])
         parts.append(
             (cand_ids[sub_cand] << _POS_SHIFT) + (pos - int(offset) + _POS_PAD)
         )
@@ -1361,39 +1336,36 @@ def _eval_multiphrase(node: MultiPhraseQ, postings: dict,
     return _score_positional(node, gids, freqs, norms0, ctx)
 
 
-def _eval_span_first(node: SpanFirstQ, postings: dict,
-                     ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanFirstQuery(term span, end): accepted spans are positions with
-    pos+1 <= end (SpanFirstQuery.java:38-44); freq = accepted count as
-    float32 (SpanScorer.java:106 with width 0); weight = the term's idf."""
-    tp = postings.get(node.term)
-    if tp is None or not len(tp.gids):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    idx = np.arange(len(tp.gids), dtype=np.int64)
-    pos, cand = _gather_positions(tp, idx)
-    keep = pos <= node.end - 1
-    freqs = np.bincount(cand[keep], minlength=len(tp.gids))
-    return _score_positional(node, tp.gids, freqs, tp.norms, ctx)
+_NO_SPANS = (np.empty(0, np.int64),) * 3 + (None,)
 
 
-def _eval_span_pos_range(node: SpanPositionRangeQ, postings: dict,
-                         ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanPositionRangeQuery (acceptPosition: start <= pos and pos+1 <=
-    end for a width-0 term span); SpanFirst generalized with a lower
-    bound. freq = accepted count as float32; weight = the term's idf."""
-    tp = postings.get(node.term)
-    if tp is None or not len(tp.gids):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    idx = np.arange(len(tp.gids), dtype=np.int64)
-    pos, cand = _gather_positions(tp, idx)
-    keep = (pos >= node.start) & (pos <= node.end - 1)
-    freqs = np.bincount(cand[keep], minlength=len(tp.gids))
-    return _score_positional(node, tp.gids, freqs, tp.norms, ctx)
+def _span_parts(src) -> tuple:
+    """The span sources a span node matches through: a near's clauses,
+    both containment sides, a SpanNotQ's include side (its exclude only
+    filters) and a filter's ``match``."""
+    if isinstance(src, SpanNearQ):
+        return src.clauses
+    if isinstance(src, (SpanContainingQ, SpanWithinQ)):
+        return (src.big, src.little)
+    if isinstance(src, SpanNotQ):
+        return (src.include,)
+    return (src.match,)
+
+
+def _span_terms(src) -> tuple:
+    """Scoring term keys of a span source, in order with repeats: a term,
+    a SpanOrQ's members, a gap none, any other node its parts' — so a
+    SpanNotQ anywhere counts its include side only (SpanNotQuery.java:
+    97-99 builds the exclude weight with COMPLETE_NO_SCORES) and a filter
+    its source."""
+    if isinstance(src, (str, SpanOrQ, SpanGap)):
+        return term_keys(src)
+    return tuple(t for part in _span_parts(src) for t in _span_terms(part))
 
 
 def _span_side_docs(sub, postings) -> "np.ndarray | None":
-    """Docs where a span source can match: term -> its postings docs;
-    or -> union of members; ordered near -> conjunction of its clauses."""
+    """Docs where a span source can match: a term's postings docs, a
+    SpanOrQ's union, any other node the conjunction of its parts."""
     if isinstance(sub, str):
         tp = postings.get(sub)
         return None if tp is None or not len(tp.gids) else tp.gids
@@ -1403,8 +1375,7 @@ def _span_side_docs(sub, postings) -> "np.ndarray | None":
         return np.unique(np.concatenate(gs)) if gs else None
     if isinstance(sub, SpanNearQ):
         _require_ordered(sub)
-        return _near_docs(sub, postings)
-    raise TypeError(f"unsupported span source {sub!r}")
+    return _conj_docs(_span_parts(sub), postings)
 
 
 def _require_ordered(sub: SpanNearQ) -> None:
@@ -1416,11 +1387,11 @@ def _require_ordered(sub: SpanNearQ) -> None:
         )
 
 
-def _near_docs(node: SpanNearQ, postings) -> "np.ndarray | None":
-    """ConjunctionSpans: docs where every clause can match (gaps match
+def _conj_docs(parts, postings) -> "np.ndarray | None":
+    """ConjunctionSpans: docs where every part can match (gaps match
     everywhere)."""
     out = None
-    for c in node.clauses:
+    for c in parts:
         if isinstance(c, SpanGap):
             continue
         d = _span_side_docs(c, postings)
@@ -1430,18 +1401,48 @@ def _near_docs(node: SpanNearQ, postings) -> "np.ndarray | None":
     return out if out is not None and len(out) else None
 
 
-def _span_side_spans(sub, postings, cands: np.ndarray):
-    """(start_keys, end_keys, widths) of ``sub``'s spans over candidate
-    ordinals, in emission (start) order. All supported sources emit
-    monotone (start, end) sequences — the property that makes the
-    reference's forward-only ContainSpans cursor replayable with one
-    searchsorted (see SpanContainingQ docstring)."""
+def _span_side_spans(sub, postings, cands: np.ndarray, pays: bool = False):
+    """(start_keys, end_keys, widths, payloads) of ``sub``'s spans over
+    candidate ordinals, in emission (start) order. ``payloads`` is None
+    unless ``pays`` and a span matched; then row i holds the payloads
+    span i collected, in collection order. Every source emits a
+    (start, end)-monotone sequence — the property that makes the
+    reference's forward-only cursors (the near chain, the SpanNot exclude
+    cursor, ContainSpans) replayable with one searchsorted each."""
+    if isinstance(sub, (str, SpanOrQ)):
+        return _term_spans(sub, postings, cands, pays)
     if isinstance(sub, SpanNearQ):
         _require_ordered(sub)
-        return _near_spans_chain(sub, postings, cands)
-    if not isinstance(sub, (str, SpanOrQ)):
-        raise TypeError(f"unsupported span source {sub!r}")
-    parts = []
+        return _near_spans_chain(sub, postings, cands, pays)
+    if isinstance(sub, SpanNotQ):
+        return _not_spans(sub, postings, cands, pays)
+    if isinstance(sub, (SpanContainingQ, SpanWithinQ)):
+        if pays:
+            raise NotImplementedError(
+                "payload checks over containing/within spans are not "
+                "supported: they collect both sides' positions"
+            )
+        return _contain_spans(sub, postings, cands)
+    check = isinstance(sub, SpanPayloadCheckQ)
+    s, e, w, p = _span_side_spans(sub.match, postings, cands, pays or check)
+    if not len(s):
+        return _NO_SPANS
+    if check:
+        # PayloadChecker over the span as matched: every collected payload
+        # compares true against its position's value
+        keep = _PAY_OPS[sub.op](p, np.asarray(sub.payloads)).all(axis=1)
+    else:
+        # SpanPositionCheckQuery.acceptPosition; SpanFirstQ is start=0
+        lo = sub.start if isinstance(sub, SpanPositionRangeQ) else 0
+        base = ((s >> _POS_SHIFT) << _POS_SHIFT) + _POS_PAD
+        keep = (s - base >= lo) & (e - base <= sub.end)
+    return s[keep], e[keep], w[keep], p[keep] if pays else None
+
+
+def _term_spans(sub, postings, cands: np.ndarray, pays: bool):
+    """Width-0 spans of a term, or of a SpanOrQ's members merged in start
+    order (members tied at one position keep member order)."""
+    keys, rows = [], []
     for t in term_keys(sub):
         tp = postings.get(t)
         if tp is None or not len(tp.gids):
@@ -1449,33 +1450,49 @@ def _span_side_spans(sub, postings, cands: np.ndarray):
         loc = np.minimum(np.searchsorted(tp.gids, cands), len(tp.gids) - 1)
         pres = tp.gids[loc] == cands
         ords = np.nonzero(pres)[0]
-        pos, c = _gather_positions(tp, loc[pres])
-        parts.append((ords[c] << _POS_SHIFT) + pos + _POS_PAD)
-    keys = np.sort(np.concatenate(parts)) if parts else np.empty(0, np.int64)
-    return keys, keys + 1, np.zeros(len(keys), np.int64)
+        pos, c, fids = _gather_positions(tp, loc[pres])
+        keys.append((ords[c] << _POS_SHIFT) + pos + _POS_PAD)
+        if pays:
+            if tp.pay_flat is None:
+                raise ValueError(
+                    "SpanPayloadCheckQ needs a payloads-enabled index")
+            rows.append(tp.pay_flat[fids])
+    if not keys:
+        return _NO_SPANS
+    keys = np.concatenate(keys)
+    p = None
+    if pays:
+        order = np.argsort(keys, kind="stable")
+        keys, p = keys[order], np.concatenate(rows)[order][:, None]
+    else:
+        keys = np.sort(keys)
+    return keys, keys + 1, np.zeros(len(keys), np.int64), p
 
 
 def _near_spans_chain(node: SpanNearQ, postings: dict,
-                      cands: np.ndarray):
+                      cands: np.ndarray, pays: bool = False):
     """NearSpansOrdered.stretchToOrder over span clauses, state-free:
-    (start_keys, end_keys, widths) of accepted matches in start order.
-    matchWidth sums the inter-clause gaps only (NearSpansOrdered.java:
-    48-77); a SpanGap contributes start = prev_end, end = prev_end + width
-    (GapSpans.skipToPosition)."""
-    s0, e0, _w0 = _span_side_spans(node.clauses[0], postings, cands)
+    (start_keys, end_keys, widths, payloads) of accepted matches in start
+    order. matchWidth sums the inter-clause gaps only (NearSpansOrdered.
+    java:48-77); a SpanGap contributes start = prev_end, end = prev_end +
+    width (GapSpans.skipToPosition). A match collects each clause's
+    payloads at the clause span the chain picked (``jc``)."""
+    s0, e0, _w0, p0 = _span_side_spans(node.clauses[0], postings, cands,
+                                       pays)
     if not len(s0):
-        return (np.empty(0, np.int64),) * 3
+        return _NO_SPANS
     starts = s0
     q_end = e0.copy()
     width = np.zeros(len(s0), dtype=np.int64)
     alive = np.ones(len(s0), dtype=bool)
+    picked = [p0]
     for c in node.clauses[1:]:
         if isinstance(c, SpanGap):
             q_end = q_end + int(c.width)
             continue
-        cs, ce, _cw = _span_side_spans(c, postings, cands)
+        cs, ce, _cw, cp = _span_side_spans(c, postings, cands, pays)
         if not len(cs):
-            return (np.empty(0, np.int64),) * 3
+            return _NO_SPANS
         j = np.searchsorted(cs, q_end)
         ok = j < len(cs)
         jc = np.minimum(j, len(cs) - 1)
@@ -1483,8 +1500,68 @@ def _near_spans_chain(node: SpanNearQ, postings: dict,
         alive &= ok & same
         width = np.where(alive, width + (cs[jc] - q_end), width)
         q_end = np.where(alive, ce[jc], q_end)
+        if pays:
+            picked.append(cp[jc])
     good = alive & (width <= node.slop)
-    return starts[good], q_end[good], width[good]
+    return (starts[good], q_end[good], width[good],
+            np.hstack(picked)[good] if pays else None)
+
+
+def _not_spans(node: SpanNotQ, postings: dict, cands: np.ndarray,
+               pays: bool):
+    """SpanNotQuery (FilterSpans.accept replay, SpanNotQuery.java:
+    110-158): include spans survive unless the first exclude span with
+    end > include.start − pre has start < include.end + post; in a doc
+    with no exclude span the include passes through untouched (getSpans
+    null handling)."""
+    i_s, i_e, i_w, i_p = _span_side_spans(node.include, postings, cands,
+                                          pays)
+    if not len(i_s):
+        return _NO_SPANS
+    e_s, e_e, _ew, _ep = _span_side_spans(node.exclude, postings, cands)
+    if not len(e_s):
+        return i_s, i_e, i_w, i_p
+    # first exclude with end > include.start - pre (key space; exclude
+    # ends are monotone for every source)
+    j = np.searchsorted(e_e, i_s - int(node.pre), side="right")
+    ok = j < len(e_s)
+    jc = np.minimum(j, len(e_s) - 1)
+    same = (e_e[jc] >> _POS_SHIFT) == (i_s >> _POS_SHIFT)
+    keep = ~(ok & same & (e_s[jc] < i_e + int(node.post)))
+    return i_s[keep], i_e[keep], i_w[keep], i_p[keep] if pays else None
+
+
+def _contain_spans(node, postings: dict, cands: np.ndarray):
+    """SpanContainingQuery / SpanWithinQuery — the reference's streaming
+    ContainSpans matchers (see the plan nodes' docstrings for the exact
+    cursor semantics replayed here): Containing emits the accepted big
+    spans, Within the accepted little ones."""
+    b_s, b_e, b_w, _bp = _span_side_spans(node.big, postings, cands)
+    l_s, l_e, l_w, _lp = _span_side_spans(node.little, postings, cands)
+    if not len(b_s) or not len(l_s):
+        return _NO_SPANS
+    if isinstance(node, SpanContainingQ):
+        # little cursor: first little with start >= big.start (same doc)
+        j = np.searchsorted(l_s, b_s)
+        ok = j < len(l_s)
+        jc = np.minimum(j, len(l_s) - 1)
+        acc = ok & ((l_s[jc] >> _POS_SHIFT) == (b_s >> _POS_SHIFT)) \
+            & (b_e >= l_e[jc])
+        return b_s[acc], b_e[acc], b_w[acc], None
+    # big cursor: first big with end >= little.end (same doc)
+    j = np.searchsorted(b_e, l_e)
+    ok = j < len(b_e)
+    jc = np.minimum(j, len(b_e) - 1)
+    acc = ok & ((b_e[jc] >> _POS_SHIFT) == (l_e >> _POS_SHIFT)) \
+        & (b_s[jc] <= l_s)
+    return l_s[acc], l_e[acc], l_w[acc], None
+
+
+_PAY_OPS = {
+    # SpanPayloadCheckQuery.MatchOperation, vectorized
+    "eq": np.equal, "lt": np.less, "lte": np.less_equal,
+    "gt": np.greater, "gte": np.greater_equal,
+}
 
 
 def _near_spans_unordered_freqs(node: SpanNearQ, postings: dict,
@@ -1499,7 +1576,7 @@ def _near_spans_unordered_freqs(node: SpanNearQ, postings: dict,
     totalSpanLength <= slop (atMatch); freq folds 1/(1 + width()) with
     width() = maxEnd - minStart (NearSpansUnordered.java width vs
     atMatch)."""
-    sides = [_span_side_spans(c, postings, cands) for c in node.clauses]
+    sides = [_span_side_spans(c, postings, cands)[:3] for c in node.clauses]
     if any(not len(s) for s, _e, _w in sides):
         return np.zeros(len(cands), np.float32)
     flags = []
@@ -1574,180 +1651,31 @@ def _doc_norms(terms, postings: dict, cands: np.ndarray) -> np.ndarray:
     return norms
 
 
-def _eval_span_near(node: SpanNearQ, postings: dict,
-                    ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanNearQuery (see the plan node's docstring): candidates = the
-    clauses' conjunction (ConjunctionSpans); ordered folds
-    1/(1+matchWidth), unordered 1/(1+width()) per accepted state."""
-    cands = _near_docs(node, postings)
+def _eval_span(node, postings: dict,
+               ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
+    """Every span node but SpanOrQ: candidates (_span_side_docs), spans
+    (_span_side_spans), per-doc freq (_fold_widths), norms and the
+    positional score. A top-level unordered near is the one node that is
+    no span source (its emission is not start-monotone): its candidates
+    are its clauses' conjunction and it folds 1/(1+width()) per accepted
+    state itself."""
+    unordered = isinstance(node, SpanNearQ) and not node.in_order
+    cands = (_conj_docs(node.clauses, postings) if unordered
+             else _span_side_docs(node, postings))
     if cands is None:
         return np.empty(0, np.int64), np.empty(0, np.float32)
-    if node.in_order:
-        st, _en, width = _near_spans_chain(node, postings, cands)
-        freqs = _fold_widths(st, width, len(cands))
-    else:
+    if unordered:
         if len(set(node.terms)) != len(node.terms):
             raise NotImplementedError(
                 "SpanNearQ(in_order=False) requires distinct terms"
             )
         freqs = _near_spans_unordered_freqs(node, postings, cands)
-    return _score_positional(node, cands, freqs,
-                             _doc_norms(node.terms, postings, cands), ctx)
-
-
-def _eval_span_not(node: SpanNotQ, postings: dict,
-                   ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanNotQuery (FilterSpans.accept replay, SpanNotQuery.java:
-    110-158): include spans survive unless the first exclude span with
-    end > include.start − pre has start < include.end + post. Candidates
-    come from the include side alone; with no exclude spans in a doc the
-    include passes through untouched (getSpans null handling)."""
-    cands = _span_side_docs(node.include, postings)
-    if cands is None or not len(cands):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    i_s, i_e, i_w = _span_side_spans(node.include, postings, cands)
-    if not len(i_s):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    ex_docs = _span_side_docs(node.exclude, postings)
-    keep = np.ones(len(i_s), dtype=bool)
-    if ex_docs is not None and len(ex_docs):
-        # exclude sources may be absent from some include docs: enumerate
-        # their spans over the PRESENT subset, then remap candidate
-        # ordinals back into the include candidate space
-        loc = np.minimum(np.searchsorted(ex_docs, cands), len(ex_docs) - 1)
-        present = ex_docs[loc] == cands
-        sub_cands = cands[present]
-        ord_map = np.nonzero(present)[0]
-        e_s, e_e, _ = _span_side_spans(node.exclude, postings, sub_cands)
-        if len(e_s):
-            shift_fix = (ord_map[e_s >> _POS_SHIFT]
-                         - (e_s >> _POS_SHIFT)) << _POS_SHIFT
-            e_s = e_s + shift_fix
-            e_e = e_e + shift_fix
-            # first exclude with end > include.start - pre (key space;
-            # exclude ends are monotone for every supported source)
-            j = np.searchsorted(e_e, i_s - int(node.pre), side="right")
-            ok = j < len(e_s)
-            jc = np.minimum(j, len(e_s) - 1)
-            same = (e_e[jc] >> _POS_SHIFT) == (i_s >> _POS_SHIFT)
-            overlapping = ok & same & (e_s[jc] < i_e + int(node.post))
-            keep = ~overlapping
-    freqs = _fold_widths(i_s[keep], i_w[keep], len(cands))
-    return _score_positional(node, cands, freqs,
-                             _doc_norms(node.include_terms, postings, cands),
-                             ctx)
-
-
-def _eval_span_contain(node, postings: dict,
-                       ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanContainingQuery / SpanWithinQuery — the reference's streaming
-    ContainSpans matchers (see the plan nodes' docstrings for the exact
-    cursor semantics replayed here)."""
-    bd = _span_side_docs(node.big, postings)
-    ld = _span_side_docs(node.little, postings)
-    if bd is None or ld is None:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    cands = np.intersect1d(bd, ld)
-    if not len(cands):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    b_s, b_e, b_w = _span_side_spans(node.big, postings, cands)
-    l_s, l_e, l_w = _span_side_spans(node.little, postings, cands)
-    if not len(b_s) or not len(l_s):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    if isinstance(node, SpanContainingQ):
-        # little cursor: first little with start >= big.start (same doc)
-        j = np.searchsorted(l_s, b_s)
-        ok = j < len(l_s)
-        jc = np.minimum(j, len(l_s) - 1)
-        acc = ok & ((l_s[jc] >> _POS_SHIFT) == (b_s >> _POS_SHIFT)) \
-            & (b_e >= l_e[jc])
-        emit_keys, emit_w = b_s[acc], b_w[acc]
     else:
-        # big cursor: first big with end >= little.end (same doc)
-        j = np.searchsorted(b_e, l_e)
-        ok = j < len(b_e)
-        jc = np.minimum(j, len(b_e) - 1)
-        acc = ok & ((b_e[jc] >> _POS_SHIFT) == (l_e >> _POS_SHIFT)) \
-            & (b_s[jc] <= l_s)
-        emit_keys, emit_w = l_s[acc], l_w[acc]
-    freqs = _fold_widths(emit_keys, emit_w, len(cands))
+        st, _en, width, _p = _span_side_spans(node, postings, cands)
+        freqs = _fold_widths(st, width, len(cands))
     return _score_positional(node, cands, freqs,
-                             _doc_norms(node.terms, postings, cands), ctx)
-
-
-def _eval_span_payload_check(node: SpanPayloadCheckQ, postings: dict,
-                             ctx: ScoreCtx) -> tuple[np.ndarray, np.ndarray]:
-    """SpanPayloadCheckQuery (queries/payloads/SpanPayloadCheckQuery.java,
-    MatchOperation.EQ): spans of the wrapped term/ordered-near query
-    survive only when each position's collected payload equals the
-    corresponding ``payloads[i]``. The check applies to the span AS
-    MATCHED by the greedy NearSpansOrdered chain — Lucene's PayloadChecker
-    tests the payloads of the positions the span iterator actually
-    visited, never alternative stretches.
-    """
-    cmp = _PAY_OPS[node.op]
-    if len(node.terms) == 1:
-        tp = postings.get(node.terms[0])
-        if tp is None or not len(tp.gids):
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        if tp.pay_flat is None:
-            raise ValueError("SpanPayloadCheckQ needs a payloads-enabled index")
-        idx = np.arange(len(tp.gids), dtype=np.int64)
-        _, cand, fids = _gather_positions_flat(tp, idx)
-        ok = cmp(tp.pay_flat[fids], node.payloads[0])
-        freqs = np.bincount(cand[ok], minlength=len(tp.gids))
-        return _score_positional(node, tp.gids, freqs, tp.norms, ctx)
-    c = _positional_candidates(node, postings)
-    if c is None:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    tps, gids, idxs = c
-    if any(tp.pay_flat is None for tp in tps):
-        raise ValueError("SpanPayloadCheckQ needs a payloads-enabled index")
-    freqs = span_near_payload_freqs(tps, idxs, node.slop, node.payloads, cmp)
-    return _score_positional(node, gids, freqs, tps[0].norms[idxs[0]], ctx)
-
-
-_PAY_OPS = {
-    # SpanPayloadCheckQuery.MatchOperation, vectorized
-    "eq": np.equal, "lt": np.less, "lte": np.less_equal,
-    "gt": np.greater, "gte": np.greater_equal,
-}
-
-
-def span_near_payload_freqs(tps: "list[TermPostings]",
-                            idxs: "list[np.ndarray]", slop: int,
-                            payloads: "tuple[int, ...]",
-                            cmp=np.equal) -> np.ndarray:
-    """The ordered SpanNearQ chain over term spans (each term at its first
-    position after the previous one) with a per-position payload check:
-    the greedy first-at-or-after chain picks each span's positions, and a
-    span is accepted iff width <= slop AND every picked occurrence's
-    payload equals its ``payloads[i]`` (SpanPayloadCheckQuery's
-    checkPostings over the matched span)."""
-    ncand = len(idxs[0])
-    pos0, cand0, f0 = _gather_positions_flat(tps[0], idxs[0])
-    keys = (cand0 << _POS_SHIFT) + pos0 + _POS_PAD
-    q = keys.copy()
-    alive = np.ones(len(keys), dtype=bool)
-    paymatch = cmp(tps[0].pay_flat[f0], payloads[0])
-    for i, (tp, idx) in enumerate(zip(tps[1:], idxs[1:]), start=1):
-        p2, c2, f2 = _gather_positions_flat(tp, idx)
-        k2 = (c2 << _POS_SHIFT) + p2 + _POS_PAD
-        if not len(k2):
-            return np.zeros(ncand, np.float32)
-        loc = np.searchsorted(k2, q + 1)
-        ok = loc < len(k2)
-        loc_c = np.minimum(loc, len(k2) - 1)
-        alive &= ok & ((k2[loc_c] >> _POS_SHIFT) == (keys >> _POS_SHIFT))
-        q = np.where(alive, k2[loc_c], q)
-        paymatch &= cmp(tp.pay_flat[f2[loc_c]], payloads[i])
-    width = (q - keys) - (len(tps) - 1)
-    good = alive & (width <= slop) & paymatch
-    acc = np.zeros(ncand, dtype=np.float32)
-    if good.any():
-        w = (1.0 / (1.0 + width[good].astype(np.float64))).astype(np.float32)
-        np.add.at(acc, keys[good] >> _POS_SHIFT, w)
-    return acc
+                             _doc_norms(_span_terms(node), postings, cands),
+                             ctx)
 
 
 def _eval_span_or(node: SpanOrQ, postings: dict,
@@ -1997,7 +1925,8 @@ def _term_block_slack(node, term_maxes: dict) -> "dict[str, float] | None":
 def _span_needs(src) -> "tuple[set, list[set]]":
     """What every match of a span source needs in its doc: the terms it
     always contains, and sets of terms of which it contains at least one
-    (a SpanOrQ's alternatives). A SpanNotQ needs only its include side."""
+    (a SpanOrQ's alternatives). Any other node needs what all its parts
+    need (_span_parts: a SpanNotQ's include side only)."""
     if isinstance(src, str):
         return {src}, []
     if isinstance(src, SpanGap):
@@ -2005,15 +1934,9 @@ def _span_needs(src) -> "tuple[set, list[set]]":
     if isinstance(src, SpanOrQ):
         alts = set(src.terms)
         return (alts, []) if len(alts) == 1 else (set(), [alts])
-    if isinstance(src, SpanNotQ):
-        return _span_needs(src.include)
-    parts = (src.clauses if isinstance(src, SpanNearQ)
-             else (src.big, src.little)
-             if isinstance(src, (SpanContainingQ, SpanWithinQ))
-             else src.terms)  # term-span nodes and SpanPayloadCheckQ
     req: set = set()
     one_of: list = []
-    for part in parts:
+    for part in _span_parts(src):
         r, o = _span_needs(part)
         req |= r
         one_of += o
@@ -2743,8 +2666,7 @@ class Searcher:
         if node is None or isinstance(
             node,
             (TermQ, PhraseQ, MultiPhraseQ, NearQ, SloppyQ, SynonymQ,
-             SpanFirstQ, SpanOrQ, SpanPayloadCheckQ, SpanPositionRangeQ,
-             IntervalQ, MatchAllQ, TermInSetQ, TermSetRefQ,
+             SpanOrQ, IntervalQ, MatchAllQ, TermInSetQ, TermSetRefQ,
              BlendedQ, DocValuesRangeQ),
         ):
             return node
@@ -2768,29 +2690,24 @@ class Searcher:
             if len(terms) == 1:
                 return TermQ(terms[0])
             return SpanOrQ(terms=tuple(terms))
-        if isinstance(node, SpanNearQ):
-            cls = tuple(self._rewrite_span_side(c) for c in node.clauses)
-            if None in cls:
-                return BoolQ()  # an empty clause matches nothing
-            return node if cls == node.clauses else replace(node, clauses=cls)
-        if isinstance(node, SpanNotQ):
-            inc = self._rewrite_span_side(node.include)
-            exc = self._rewrite_span_side(node.exclude)
-            if inc is None:
-                return BoolQ()          # empty include matches nothing
-            if exc is None:             # empty exclude: include unfiltered
-                exc = SpanOrQ(terms=())
-            if inc == node.include and exc == node.exclude:
-                return node
-            return replace(node, include=inc, exclude=exc)
-        if isinstance(node, (SpanContainingQ, SpanWithinQ)):
-            big = self._rewrite_span_side(node.big)
-            little = self._rewrite_span_side(node.little)
-            if big is None or little is None:
-                return BoolQ()  # an empty side matches nothing
-            if big == node.big and little == node.little:
-                return node
-            return type(node)(big=big, little=little)
+        if isinstance(node, _SPANS):
+            # every span-source field rewrites, so a SpanMultiQ expands
+            # under any span node. An empty source matches nothing, except
+            # a SpanNotQ's exclude: the include then passes unfiltered
+            changes = {}
+            for f in fields(node):
+                if "walk" not in f.metadata:
+                    continue
+                v = getattr(node, f.name)
+                nv = (tuple(map(self._rewrite_span_side, v))
+                      if isinstance(v, tuple) else self._rewrite_span_side(v))
+                if nv is None and f.name == "exclude":
+                    nv = SpanOrQ(terms=())
+                if nv is None or (isinstance(nv, tuple) and None in nv):
+                    return BoolQ()
+                if nv != v:
+                    changes[f.name] = nv
+            return replace(node, **changes) if changes else node
         if isinstance(node, FuzzyQ):
             pairs = self._fuzzy_candidates(node)
             if not pairs:
@@ -3026,14 +2943,11 @@ class Searcher:
                 # for MultiPhraseQ ``terms`` flattens termArrays in order
                 # with duplicates kept — one idf per array entry, exactly
                 # MultiPhraseWeight.getStats. A span weight's getTermStates
-                # merges its clauses' term maps (a Map keyed by Term), so a
+                # merges its parts' term maps (a Map keyed by Term), so a
                 # repeated term counts ONCE (SpanWeight, SpanContainQuery.
-                # java:93-96), and SpanNotQuery keeps only the include
-                # side's (extractTermStates, SpanNotQuery.java:97-99)
-                ts = n.terms
-                if isinstance(n, _SPANS):
-                    ts = dict.fromkeys(n.include_terms
-                                       if isinstance(n, SpanNotQ) else ts)
+                # java:93-96); _span_terms is the extractTermStates walk
+                ts = (dict.fromkeys(_span_terms(n)) if isinstance(n, _SPANS)
+                      else n.terms)
                 if aux_of is not None:
                     # SimilarityBase: weight slot = boost (1.0 here; BoostQ
                     # folds multiply it); one aux per present term state —
@@ -3326,17 +3240,15 @@ class Searcher:
         )
         return tuple(keep_extra), dv_df
 
-    def search_after(self, query, after: "tuple[float, int]", k: int = 10,
-                     depth: "int | None" = None) -> pd.DataFrame:
+    def search_after(self, query, after: "tuple[float, int]",
+                     k: int = 10) -> pd.DataFrame:
         """Deep paging (IndexSearcher.searchAfter / TopScoreDocCollector's
         after-doc): top-k strictly after the (score, gid) cursor in
         (score desc, gid asc) order.
 
         The cursor itself drives pruning: kernels drop candidates at or
         above the cursor BEFORE the per-bucket top-k and θ offers, so no
-        ``depth`` hint is needed (the round-1 exhaustive fallback is gone;
-        ``depth`` is accepted for API compat and ignored). ``k`` must be at
-        least 1.
+        depth hint is needed. ``k`` must be at least 1.
         """
         _check_k(k)
         node = parse_query(query) if isinstance(query, str) else query

@@ -101,39 +101,42 @@ class MultiPhraseQ:
 
 @dataclass(frozen=True)
 class SpanFirstQ:
-    """SpanFirstQuery over a term span (queries/spans/SpanFirstQuery.java:
-    38-44): matches positions of ``term`` whose span ends at or before
-    ``end`` — startPosition < end and endPosition (pos+1) <= end, i.e.
-    pos <= end-1. freq = float32 sum of 1/(1+width) over accepted spans
-    (SpanScorer.java:106; term spans have width 0, TermSpans.java:107), so
-    freq = the accepted-position count; weight = the term's idf
-    (SpanWeight.buildSimWeight over the match side's term states)."""
+    """SpanFirstQuery (queries/spans/SpanFirstQuery.java:38-44): the spans
+    of the ``match`` source that end at or before ``end`` — the start=0
+    case of :class:`SpanPositionRangeQ`, evaluated by the same filter.
+    freq folds 1/(1+width) per accepted span (SpanScorer.java:106);
+    weight = idf over the source's scoring terms (SpanWeight.buildSimWeight
+    over the match side's term states)."""
 
-    term: str = _walked(TERM)
+    match: object = _walked(TERM)
     end: int
 
     @property
     def terms(self) -> tuple[str, ...]:
-        return (self.term,)
+        return term_keys(self)
 
 
 @dataclass(frozen=True)
 class SpanPositionRangeQ:
-    """SpanPositionRangeQuery over a term span
-    (queries/spans/SpanPositionRangeQuery.java acceptPosition): accepted
-    spans have startPosition >= start AND endPosition <= end — for a
-    width-0 term span, start <= pos <= end-1. SpanFirstQuery is the
-    start=0 special case. freq = accepted count (SpanScorer 1/(1+0) per
-    span); weight = the match term's idf (SpanPositionCheckQuery wraps
-    only the match side)."""
+    """SpanPositionRangeQuery (queries/spans/SpanPositionRangeQuery.java
+    acceptPosition): the spans of the ``match`` source with startPosition
+    >= start AND endPosition <= end — for a width-0 term span, start <=
+    pos <= end-1. freq folds 1/(1+width) per accepted span; weight = idf
+    over the source's scoring terms (SpanPositionCheckQuery wraps only the
+    match side).
 
-    term: str = _walked(TERM)
+    ``match``, here and in every span filter: a term (str), a SpanOrQ, an
+    ordered SpanNearQ or any span filter node (SpanFirstQ,
+    SpanPositionRangeQ, SpanNotQ, SpanContainingQ, SpanWithinQ,
+    SpanPayloadCheckQ)."""
+
+    match: object = _walked(TERM)
     start: int
     end: int
 
     @property
     def terms(self) -> tuple[str, ...]:
-        return (self.term,)
+        return term_keys(self)
 
 
 @dataclass(frozen=True)
@@ -149,9 +152,9 @@ class SpanContainingQ:
     the sim weight sums idf over the DISTINCT union of both sides' terms
     (getTermStates merges both weights' term maps).
 
-    ``big``/``little``: a term (str), an ordered SpanNearQ, or a SpanOrQ
-    — all span sources whose emitted (start, end) sequences are
-    monotone, which is what makes the cursor replay state-free."""
+    ``big``/``little``: any span source (see :class:`SpanPositionRangeQ`)
+    — every one emits a (start, end)-monotone sequence, which is what
+    makes the cursor replay state-free."""
 
     big: object = _walked(TERM)
     little: object = _walked(TERM)
@@ -217,8 +220,8 @@ class SpanNotQ:
     < include.end + post. For term sides that is: no exclude position in
     [p-pre, p+post]. Only the include side's term states score
     (SpanNotQuery.java:97-118 builds excludeWeight with
-    COMPLETE_NO_SCORES); freq folds 1/(1+include_width). Sides: a term, a
-    SpanOrQ or an ordered SpanNearQ."""
+    COMPLETE_NO_SCORES); freq folds 1/(1+include_width). Sides: any span
+    source (see :class:`SpanPositionRangeQ`)."""
 
     include: object = _walked(TERM)
     exclude: object = _walked(TERM)
@@ -229,16 +232,12 @@ class SpanNotQ:
     def terms(self) -> tuple[str, ...]:
         return term_keys(self)
 
-    @property
-    def include_terms(self) -> tuple[str, ...]:
-        return term_keys(self.include)
-
 
 @dataclass(frozen=True)
 class SpanNearQ:
     """SpanNearQuery (queries/spans/SpanNearQuery.java). Each clause is a
-    term (str), a SpanOrQ, a nested ordered SpanNearQ or a
-    :class:`SpanGap`.
+    span source (see :class:`SpanPositionRangeQ`; a nested near must be
+    ordered) or a :class:`SpanGap`.
 
     ``in_order=True`` is NearSpansOrdered (NearSpansOrdered.java:48-77)
     with stretchToOrder replayed state-free: clause i advances to its
@@ -259,8 +258,9 @@ class SpanNearQ:
     ``width()`` does NOT). Its clauses must share no term (two subspans on
     one term need Lucene's repeat handling), and it takes no gaps.
 
-    Sim weight = idf over the DISTINCT clause terms (SpanWeight's
-    Map<Term, TermStates>)."""
+    Sim weight = idf over the DISTINCT scoring terms of the clauses
+    (SpanWeight's Map<Term, TermStates>; a SpanNotQ clause brings its
+    include side's only)."""
 
     clauses: tuple = _walked(TERM)
     slop: int = 0
@@ -282,38 +282,54 @@ class SpanNearQ:
 
 @dataclass(frozen=True)
 class SpanPayloadCheckQ:
-    """SpanPayloadCheckQuery over a term span or an ordered near-span
-    (queries/src/java/org/apache/lucene/queries/payloads/
-    SpanPayloadCheckQuery.java, MatchOperation.EQ): the wrapped span
-    matches only where the payload collected at each of its positions
-    equals ``payloads[i]`` (one integer payload per member term, in span
-    order — PayloadChecker collects per-position payloads as the span
-    iterates).
+    """SpanPayloadCheckQuery (queries/src/java/org/apache/lucene/queries/
+    payloads/SpanPayloadCheckQuery.java): the spans of the ``match``
+    source (see :class:`SpanPositionRangeQ`) survive only where the
+    payload collected at each of the span's positions compares true under
+    ``op`` with ``payloads[i]`` — PayloadChecker collects one integer
+    payload per term position, in clause order, as the span iterates
+    (a SpanOrQ's span collects its matching member's; a gap collects
+    none; a SpanNotQ collects its include side's), and a count mismatch
+    never matches, so it is refused here.
 
-    Single term (``len(terms)==1``): each width-0 occurrence whose payload
-    equals ``payloads[0]`` adds 1.0 to freq. Multiple terms: the
-    NearSpansOrdered greedy chain (see :class:`SpanNearQ`) picks each
-    span's positions; the payload check applies to exactly those picked
-    occurrences (Lucene checks the span AS MATCHED — it does not retry a
-    longer stretch when a payload mismatches), and accepted spans add
-    1/(1+width) as float32. Weight = idf summed over the member terms
-    (SpanWeight.buildSimWeight); the check needs a payloads-enabled index.
+    The check applies to the span AS MATCHED: for an ordered near, the
+    greedy NearSpansOrdered chain (see :class:`SpanNearQ`) picks each
+    span's positions, and a mismatch does not retry a longer stretch.
+    Accepted spans fold 1/(1+width) into freq as float32; weight = idf
+    over the source's scoring terms (SpanWeight.buildSimWeight); the check
+    needs a payloads-enabled index. A source holding a SpanContainingQ or
+    SpanWithinQ collects positions of both sides, which is not tracked.
     """
 
-    terms: tuple[str, ...] = _walked(TERM)
+    match: object = _walked(TERM)
     payloads: tuple[int, ...]
-    slop: int = 0
     # MatchOperation (SpanPayloadCheckQuery.MatchOperation): EQ/LT/LTE/GT/GTE
     # applied positionwise between the collected payload and payloads[i]
     op: str = "eq"
 
     def __post_init__(self):
-        if len(self.terms) != len(self.payloads):
+        if len(self.payloads) != _collected(self.match):
             raise ValueError("one payload per span position required")
-        if not self.terms:
-            raise ValueError("empty span")
         if self.op not in ("eq", "lt", "lte", "gt", "gte"):
             raise ValueError(f"unknown payload match operation: {self.op}")
+
+    @property
+    def terms(self) -> tuple[str, ...]:
+        return term_keys(self)
+
+
+def _collected(src) -> int:
+    """Positions a span of ``src`` collects (PayloadChecker.collectLeaf
+    calls): a term or a SpanOrQ one, a gap none, a SpanNotQ its include
+    side's, every other node the sum over its sources."""
+    if isinstance(src, tuple):
+        return sum(_collected(c) for c in src)
+    if isinstance(src, (str, SpanOrQ, SpanMultiQ)):
+        return 1
+    if isinstance(src, SpanNotQ):
+        return _collected(src.include)
+    return sum(_collected(getattr(src, name))
+               for name, _ in _walk_fields(type(src)))
 
 
 @dataclass(frozen=True)

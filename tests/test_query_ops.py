@@ -453,7 +453,7 @@ def test_span_near_kernel_brute_force():
             ))
         node = SpanNearQ(tuple(f"t{i}" for i in range(nterms)), slop)
         cands = np.arange(ndocs, dtype=np.int64)
-        st, _en, width = _near_spans_chain(
+        st, _en, width, _pay = _near_spans_chain(
             node, {f"t{i}": tp for i, tp in enumerate(tps)}, cands)
         got = _fold_widths(st, width, ndocs)
         for d in range(ndocs):

@@ -48,7 +48,7 @@ NODES = [
     GAPPED,
     Q.SpanNearQ(("alpha", Q.SpanOrQ(("delta", "eta")), NEAR), slop=3,
                 in_order=False),
-    Q.SpanPayloadCheckQ(("alpha", "beta"), (1, 2), slop=1, op="gte"),
+    Q.SpanPayloadCheckQ(Q.SpanNearQ(("alpha", "beta"), 1), (1, 2), op="gte"),
     Q.SpanPositionRangeQ("alpha", 1, 4),
     Q.SpanContainingQ(NEAR, Q.SpanOrQ(("gamma", "delta"))),
     Q.SpanWithinQ(NEAR, "delta"),
@@ -131,3 +131,24 @@ def test_children_and_term_keys():
     # TermSetRefQ's source is opaque: no children, no terms
     ref = Q.TermSetRefQ(Q.PrefixQ("al"))
     assert Q.children(ref) == [] and Q.query_terms(ref) == set()
+
+
+# span filters over a composite source: the walk reaches the nested keys
+SOURCE = Q.SpanNearQ(("alpha", Q.SpanOrQ(("beta", "gamma"))), 2)
+WRAPPERS = [
+    Q.SpanFirstQ(SOURCE, 5),
+    Q.SpanPositionRangeQ(SOURCE, 1, 6),
+    Q.SpanPayloadCheckQ(SOURCE, (1, 2), op="lt"),
+]
+
+
+@pytest.mark.parametrize("q", WRAPPERS, ids=lambda q: type(q).__name__)
+def test_span_filters_reach_nested_keys(q):
+    assert Q.term_keys(q) == ("alpha", "beta", "gamma")
+    up = Q.map_terms(q, str.upper)
+    assert up == dataclasses.replace(q, match=Q.SpanNearQ(
+        ("ALPHA", Q.SpanOrQ(("BETA", "GAMMA"))), 2))
+    titled = Q.qualify_node(q, "title")
+    assert Q.term_keys(titled) == tuple(
+        qualify("title", t) for t in ("alpha", "beta", "gamma"))
+    assert titled.match.slop == 2 and Q.children(titled) == [titled.match]

@@ -18,6 +18,7 @@ from lucene_spark.plans.query import (
     SpanContainingQ,
     SpanFirstQ,
     SpanNearQ,
+    SpanNotQ,
     SpanOrQ,
     SpanPositionRangeQ,
     SpanWithinQ,
@@ -90,7 +91,8 @@ def _sub_spans(sub, pos_of):
 
 
 def _contain_matches(big_spans, little_spans, within):
-    """ContainSpans cursor replay: returns accepted (start, width) list."""
+    """ContainSpans cursor replay: returns the accepted (start, end,
+    width) spans — little ones for within, big ones for containing."""
     acc = []
     if within:
         bi = 0
@@ -100,7 +102,7 @@ def _contain_matches(big_spans, little_spans, within):
             if bi >= len(big_spans):
                 break
             if big_spans[bi][0] <= ls:
-                acc.append((ls, lw))
+                acc.append((ls, le, lw))
     else:
         li = 0
         for (bs, be, bw) in big_spans:
@@ -109,7 +111,20 @@ def _contain_matches(big_spans, little_spans, within):
             if li >= len(little_spans):
                 break
             if be >= little_spans[li][1]:
-                acc.append((bs, bw))
+                acc.append((bs, be, bw))
+    return acc
+
+
+def _position_check(spans, lo, hi):
+    """SpanPositionCheckQuery.acceptPosition replay (SpanFirstQ: lo=0):
+    YES when start >= lo and end <= hi; a span starting at or past hi ends
+    the doc (NO_MORE_IN_CURRENT_DOC)."""
+    acc = []
+    for (s, e, w) in spans:
+        if s >= hi:
+            break
+        if s >= lo and e <= hi:
+            acc.append((s, e, w))
     return acc
 
 
@@ -135,19 +150,11 @@ def _brute_scores(corpus_pdf, node):
     ))
     out = {}
     for gid, pos_of, dl in zip(corpus_pdf["gid"], tok_lists, dls):
-        if isinstance(node, SpanPositionRangeQ):
-            spans = [(p, 0) for p in pos_of.get(node.term, [])
-                     if node.start <= p <= node.end - 1]
-        else:
-            bigs = _sub_spans(node.big, pos_of)
-            littles = _sub_spans(node.little, pos_of)
-            spans = _contain_matches(
-                bigs, littles, isinstance(node, SpanWithinQ)
-            )
+        spans = _clause_spans(node, pos_of)
         if not spans:
             continue
         freq = np.float32(0.0)
-        for _, width in spans:
+        for _s, _e, width in spans:
             freq = np.float32(
                 freq + np.float32(1.0 / np.float64(1.0 + width))
             )
@@ -224,6 +231,25 @@ def test_span_multi_inside_contain(spark, corpus_pdf, index_dir):
     assert a.values.tolist() == b.values.tolist() and len(a)
 
 
+def test_span_multi_inside_filters(spark, index_dir):
+    from lucene_spark.plans.query import BoolQ, PrefixQ, SpanMultiQ
+
+    s = Searcher(spark, index_dir)
+    wraps = [
+        lambda src: SpanFirstQ(src, 10),
+        lambda src: SpanPositionRangeQ(src, 2, 12),
+        lambda src: SpanNotQ(SpanNearQ(("open", src), 4), "beta"),
+        lambda src: SpanWithinQ(SpanNearQ(("open", "close"), 9),
+                                SpanFirstQ(src, 30)),
+    ]
+    for wrap in wraps:
+        assert s.rewrite(wrap(SpanMultiQ(PrefixQ("m")))) == wrap("mid")
+        assert s.rewrite(wrap(SpanMultiQ(PrefixQ("zzz")))) == BoolQ()
+    # an empty exclude filters nothing
+    assert s.rewrite(SpanNotQ("open", SpanMultiQ(PrefixQ("zzz")))) == \
+        SpanNotQ("open", SpanOrQ(()))
+
+
 def test_span_multi_rewrite_keeps_unordered(spark, index_dir):
     from lucene_spark.plans.query import PrefixQ, SpanMultiQ
 
@@ -261,9 +287,44 @@ from lucene_spark.plans.query import SpanGap
 
 
 def _clause_spans(c, pos_of):
+    """Emitted (start, end, width) spans of any span source, start
+    order: the replays of the near chain, SpanNot's FilterSpans, the
+    ContainSpans cursors and the position checks over their sources."""
     if isinstance(c, SpanNearQ):
         return _near_spans_replay(c, pos_of)
+    if isinstance(c, SpanNotQ):
+        return _not_spans_replay(c, pos_of)
+    if isinstance(c, (SpanContainingQ, SpanWithinQ)):
+        return _contain_matches(_clause_spans(c.big, pos_of),
+                                _clause_spans(c.little, pos_of),
+                                isinstance(c, SpanWithinQ))
+    if isinstance(c, SpanFirstQ):
+        return _position_check(_clause_spans(c.match, pos_of), 0, c.end)
+    if isinstance(c, SpanPositionRangeQ):
+        return _position_check(_clause_spans(c.match, pos_of), c.start,
+                               c.end)
     return _sub_spans(c, pos_of)
+
+
+def _scoring_terms(node):
+    """The term states a span weight scores with (extractTermStates): a
+    SpanNotQ brings its include side only, every other node all of its
+    sources'."""
+    if isinstance(node, str):
+        return (node,)
+    if isinstance(node, SpanOrQ):
+        return node.terms
+    if isinstance(node, SpanGap):
+        return ()
+    if isinstance(node, SpanNotQ):
+        return _scoring_terms(node.include)
+    if isinstance(node, SpanNearQ):
+        parts = node.clauses
+    elif isinstance(node, (SpanContainingQ, SpanWithinQ)):
+        parts = (node.big, node.little)
+    else:
+        parts = (node.match,)
+    return tuple(t for p in parts for t in _scoring_terms(p))
 
 
 def _near_spans_replay(node, pos_of):
@@ -360,8 +421,6 @@ def test_near_spans_leading_gap_rejected(spark, index_dir):
 # SpanNotQ — SpanNot over span clauses
 # ---------------------------------------------------------------------------
 
-from lucene_spark.plans.query import SpanNotQ
-
 
 def _not_spans_replay(node, pos_of):
     """FilterSpans.accept replay: include spans survive unless the first
@@ -392,7 +451,7 @@ def _brute_not_spans(corpus_pdf, node):
         for t in pos_of:
             dfs[t] = dfs.get(t, 0) + 1
     cache = norm_cache(avgdl(sum(dls), n_docs))
-    uniq = list(dict.fromkeys(node.include_terms))
+    uniq = list(dict.fromkeys(_scoring_terms(node)))
     w = np.float32(sum(float(idf(dfs[t], n_docs)) for t in uniq if t in dfs))
     out = {}
     for gid, pos_of, dl in zip(corpus_pdf["gid"], tok_lists, dls):
@@ -563,6 +622,12 @@ def test_nested_unordered_near_spans_rejected():
         _span_side_spans(nested, postings, np.array([0]))
 
 
+def test_nested_unordered_near_in_filter_rejected(spark, index_dir):
+    node = SpanFirstQ(SpanNearQ(("alpha", "beta"), 2, in_order=False), 30)
+    with pytest.raises(NotImplementedError, match="ordered near"):
+        Searcher(spark, index_dir).search(node, k=5, with_keys=False)
+
+
 def test_unordered_near_spans_clause_exhausted_before_doc():
     """Doc 1 holds x and y, so the nested ordered near clause's docs admit
     it, but not adjacently: that clause has no span in doc 1, and doc 1
@@ -606,13 +671,11 @@ def test_repeated_term_or_weight_is_distinct(spark, corpus_pdf, index_dir):
 def _brute_spans(corpus_pdf, node):
     """Per-doc float32 scores of any span node the generator below builds,
     via the matching replay; weight = idf over the distinct scoring terms
-    (SpanNotQ: its include side only)."""
+    (a SpanNotQ, at any depth, brings its include side only)."""
     from lucene_spark.functions.bm25 import avgdl, idf, norm_cache
     from lucene_spark.functions.smallfloat import int_to_byte4
 
     def widths(pos_of):
-        if isinstance(node, SpanNotQ):
-            return [w for _s, _e, w in _not_spans_replay(node, pos_of)]
         if isinstance(node, SpanNearQ) and not node.in_order:
             return _unordered_replay(node, pos_of)
         return [w for _s, _e, w in _clause_spans(node, pos_of)]
@@ -626,8 +689,7 @@ def _brute_spans(corpus_pdf, node):
         for t in pos_of:
             dfs[t] = dfs.get(t, 0) + 1
     cache = norm_cache(avgdl(sum(dls), n_docs))
-    scoring = node.include_terms if isinstance(node, SpanNotQ) else node.terms
-    uniq = list(dict.fromkeys(scoring))
+    uniq = list(dict.fromkeys(_scoring_terms(node)))
     w = np.float32(sum(float(idf(dfs[t], n_docs)) for t in uniq if t in dfs))
     out = {}
     for gid, pos_of, dl in zip(corpus_pdf["gid"], tok_lists, dls):
@@ -657,19 +719,50 @@ def _gen_side(rng, depth):
     return _gen_near(rng, depth - 1)
 
 
-def _gen_near(rng, depth, in_order=True):
-    clauses = [_gen_side(rng, depth)]
+def _gen_clause(rng, depth):
+    """An ordered-near clause: mostly a plain source, else a span filter
+    (SpanNotQ, containing, within, first, position range) over them."""
+    if depth == 0 or rng.random() < 0.6:
+        return _gen_side(rng, depth)
+    return _gen_filter(rng, depth - 1)
+
+
+def _gen_filter(rng, depth):
+    """A span filter over a source: an ordered near (whose clauses may be
+    filters again) half the time when ``depth`` allows, else a term or a
+    SpanOrQ."""
+    kind = rng.choice(["not", "containing", "within", "first", "range"])
+    src = (_gen_near(rng, depth - 1) if depth and rng.random() < 0.5
+           else _gen_side(rng, 0))
+    if kind == "not":
+        return SpanNotQ(src, _gen_side(rng, depth), pre=rng.randint(0, 3),
+                        post=rng.randint(0, 3))
+    if kind == "containing":
+        return SpanContainingQ(src, _gen_side(rng, depth))
+    if kind == "within":
+        return SpanWithinQ(_gen_side(rng, depth), src)
+    if kind == "first":
+        return SpanFirstQ(src, rng.randint(1, 30))
+    lo = rng.randint(0, 20)
+    return SpanPositionRangeQ(src, lo, lo + rng.randint(1, 20))
+
+
+def _gen_near(rng, depth):
+    clauses = [_gen_clause(rng, depth)]
     for _ in range(rng.randint(1, 2)):
-        if in_order and rng.random() < 0.2:
+        if rng.random() < 0.2:
             clauses.append(SpanGap(rng.randint(1, 3)))
-        clauses.append(_gen_side(rng, depth))
-    return SpanNearQ(tuple(clauses), rng.randint(0, 6), in_order)
+        clauses.append(_gen_clause(rng, depth))
+    return SpanNearQ(tuple(clauses), rng.randint(0, 6))
 
 
 def _gen_span_tree(rng):
-    kind = rng.choice(["near", "near", "unordered", "not", "or"])
+    kind = rng.choice(["near", "near", "unordered", "not", "or", "filter",
+                       "filter"])
     if kind == "near":
         return _gen_near(rng, 1)
+    if kind == "filter":
+        return _gen_filter(rng, 2)
     if kind == "unordered":
         # an unordered near takes no gaps and no nested unordered near, and
         # its clauses share no term
@@ -693,7 +786,7 @@ def test_random_span_trees_vs_replay(spark, corpus_pdf, index_dir):
 
     rng = random.Random(20261019)
     s = Searcher(spark, index_dir)
-    for i in range(20):
+    for i in range(40):
         node = _gen_span_tree(rng)
         want = _brute_spans(corpus_pdf, node)
         for prune, k in ((True, 10), (False, N_DOCS)):
